@@ -426,7 +426,9 @@ def cluster_pairs(
 
     gate = _DRIVER_CC_LIMIT if driver_limit is None else driver_limit
     n_sym = sym.count()  # cheap: sym is checkpointed
-    if n_sym <= gate and isinstance(sym.schema["u"].dataType, IntegralType):
+    if 0 < gate and n_sym <= gate and isinstance(
+        sym.schema["u"].dataType, IntegralType
+    ):
         return _cluster_pairs_driver(sym, n_sym)
     nodes = sym.select("u").distinct()
     edges = (

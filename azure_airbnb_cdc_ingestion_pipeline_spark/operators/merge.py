@@ -82,7 +82,6 @@ def merge_dataframes(
     source: DataFrame,
     keys: Sequence[str],
     order_by: Sequence[str | Column] | None = None,
-    broadcast_source_keys: bool = True,
     event_time_wins: bool = False,
 ) -> DataFrame:
     """WHEN MATCHED UPDATE ALL / WHEN NOT MATCHED INSERT ALL (no delete).
@@ -112,9 +111,7 @@ def merge_dataframes(
             raise ValueError("event_time_wins requires order_by")
         return resolve_event_time(target, source, keys, order_by)
     src = latest_per_key(source, keys, order_by).select(*target.columns)
-    src_keys = src.select(*keys).dropDuplicates(keys)
-    if broadcast_source_keys:
-        src_keys = F.broadcast(src_keys)
+    src_keys = F.broadcast(src.select(*keys).dropDuplicates(keys))
     untouched = target.join(src_keys, on=keys, how="left_anti")
     return src.unionByName(untouched)
 
@@ -161,7 +158,6 @@ def scd2_apply(
     eff_from: str = "effective_from",
     eff_to: str = "effective_to",
     current_col: str = "is_current",
-    broadcast_change_keys: bool = True,
 ) -> DataFrame:
     """SCD Type 2: apply a change batch to a versioned dimension,
     KEEPING history — the engine extension of the reference's Type-1
@@ -186,9 +182,7 @@ def scd2_apply(
     keys = list(keys)
     attr_cols = list(attr_cols)
     out_cols = keys + attr_cols + [eff_from, eff_to, current_col]
-    chg_keys = changes.select(*keys).dropDuplicates(keys)
-    if broadcast_change_keys:
-        chg_keys = F.broadcast(chg_keys)
+    chg_keys = F.broadcast(changes.select(*keys).dropDuplicates(keys))
     untouched = history.join(chg_keys, on=keys, how="left_anti").select(*out_cols)
     affected = history.join(chg_keys, on=keys, how="left_semi")
     seq = affected.select(*keys, *attr_cols, eff_from).unionByName(

@@ -69,11 +69,9 @@ def process_booking_batch(
     quarantine: ParquetTable,
     dim: DataFrame | None = None,
     gold: ParquetTable | None = None,
-    partitioned: bool = True,
     incremental_gold: bool = False,
     event_time_wins: bool = False,
-    app_id: str | None = None,
-    batch_id: int | None = None,
+    txn: tuple[str, int] | None = None,
     merge_on_read: bool = False,
     dq_rules: list | None = None,
     dq_on_breach: str = "halt",
@@ -82,31 +80,28 @@ def process_booking_batch(
     """One micro-batch: quarantine bad rows, MERGE good rows into the fact
     (latest-per-booking_id wins), then refresh gold if a dim is wired.
 
-    ``merge_on_read=True`` (the streaming entry's default): the fact
-    merge defers to `ParquetTable.upsert_delta` — O(batch) delta append
-    per trigger with periodic folds — instead of the copy-on-write
-    pruned merge whose rewrite floor dominates small micro-batches (the
+    The fact merge is partition-pruned on :data:`FACT_PARTITIONING`.
+    ``merge_on_read=True`` (the streaming entry): it defers to
+    `ParquetTable.upsert_delta` — O(batch) delta append per trigger with
+    periodic folds — instead of the copy-on-write `upsert_pruned` (the
+    batch entry) whose rewrite floor dominates small micro-batches (the
     r4 steady-state throughput miss). Readers always see resolved
     content either way.
 
-    ``app_id``+``batch_id`` (set by the streaming entry) arm the
+    ``txn=(app_id, batch_id)`` (set by the streaming entry) arms the
     per-table idempotent batch guard: each sink commit atomically records
-    (app_id, batch_id) in its pointer (ParquetTable txn markers), and a
-    REPLAYED batch — foreachBatch died after some sinks committed but
-    before the checkpoint commit — skips every sink that already recorded
-    this batch. Without the guard the keyed MERGE is naturally idempotent
-    but the quarantine APPEND is not (a replay would duplicate rejected
-    rows), and the incremental-gold delta would be computed from an
-    already-merged before-image.
+    the marker in its pointer (ParquetTable txn markers), and a REPLAYED
+    batch — foreachBatch died after some sinks committed but before the
+    checkpoint commit — skips every sink that already recorded it
+    (`ParquetTable.applied`). Without the guard the keyed MERGE is
+    naturally idempotent but the quarantine APPEND is not (a replay would
+    duplicate rejected rows), and the incremental-gold delta would be
+    computed from an already-merged before-image.
 
     `event_time_wins=True` switches the merge's matched-row conflict rule
     from arrival order (the reference's alter-row behavior) to max event
     `timestamp`: out-of-order micro-batches then converge to the same
     fact state regardless of delivery order.
-
-    `partitioned=True` uses the partition-pruned merge (only the months
-    present in the batch are rewritten; the rest of the fact table is
-    hardlinked forward — the 100 TB steady state).
 
     `incremental_gold=True` maintains gold with retraction deltas
     (operators.aggregate.merge_gold/signed_delta): O(batch + |groups|)
@@ -143,38 +138,18 @@ def process_booking_batch(
             derived, breached = expectation_gate(
                 dq_cached, dq_rules, on_breach=dq_on_breach
             )
-            if breached is not None:
-                if dq_quarantine is None:
-                    raise ValueError(
-                        "dq_on_breach='quarantine' requires a dq_quarantine "
-                        "table — breaching rows must not be dropped silently"
-                    )
-                if not _already_applied(dq_quarantine, app_id, batch_id):
-                    txn = (
-                        (app_id, batch_id)
-                        if app_id is not None and batch_id is not None
-                        else None
-                    )
-                    dq_quarantine.append(breached, txn=txn)
-                    dq_quarantine.maybe_compact(trigger_files=64)
+            if breached is not None and not dq_quarantine.applied(txn):
+                dq_quarantine.append(breached, txn=txn)
+                dq_quarantine.maybe_compact(trigger_files=64)
         _process_transformed(
             derived, rejected, fact, quarantine, dim, gold,
-            partitioned, incremental_gold, event_time_wins,
-            app_id=app_id, batch_id=batch_id, merge_on_read=merge_on_read,
+            incremental_gold, event_time_wins, txn=txn,
+            merge_on_read=merge_on_read,
         )
     finally:
         if dq_cached is not None:
             dq_cached.unpersist()
         batch.unpersist()
-
-
-def _already_applied(table: ParquetTable, app_id, batch_id) -> bool:
-    """True when ``table`` has already committed this (app, batch) — the
-    replay-detection half of the idempotent batch guard."""
-    if app_id is None or batch_id is None or not table.exists():
-        return False
-    last = table.last_txn(app_id)
-    return last is not None and last >= batch_id
 
 
 def _process_transformed(
@@ -184,19 +159,15 @@ def _process_transformed(
     quarantine: ParquetTable,
     dim: DataFrame | None,
     gold: ParquetTable | None,
-    partitioned: bool,
     incremental_gold: bool,
     event_time_wins: bool = False,
-    app_id: str | None = None,
-    batch_id: int | None = None,
+    txn: tuple[str, int] | None = None,
     merge_on_read: bool = False,
 ) -> None:
     from ..operators.merge import latest_per_key
 
-    txn = (app_id, batch_id) if app_id is not None and batch_id is not None \
-        else None
     if not rejected.isEmpty():
-        if not _already_applied(quarantine, app_id, batch_id):
+        if not quarantine.applied(txn):
             # O(batch) append, NOT idempotent on its own — the txn marker
             # (committed atomically with the append) is what makes a
             # replayed batch skip it instead of duplicating rejected rows
@@ -205,7 +176,7 @@ def _process_transformed(
             # the size-triggered compaction keeps the live file count
             # saw-toothing below the trigger instead (steady-state bound)
             quarantine.maybe_compact(trigger_files=64)
-    fact_replayed = _already_applied(fact, app_id, batch_id)
+    fact_replayed = fact.applied(txn)
     maintain_incrementally = (
         incremental_gold and dim is not None and gold is not None and gold.exists()
     )
@@ -222,7 +193,7 @@ def _process_transformed(
             from ..sources.tables import read_version
 
             fact_now = fact.read()
-            base_v = fact.last_txn_base(app_id)
+            base_v = fact.last_txn_base(txn[0])
             if base_v:
                 fact_now = read_version(fact, base_v)
             before = fact_now.join(
@@ -262,31 +233,17 @@ def _process_transformed(
         # with retraction-to-empty) are dropped
         new_gold = new_gold.filter(F.col("total_bookings") > 0)
     if not fact_replayed:
-        if partitioned and merge_on_read:
-            fact.upsert_delta(
-                derived,
-                keys=FACT_KEYS,
-                partition_by=FACT_PARTITIONING,
-                order_by=FACT_ORDER,
-                event_time_wins=event_time_wins,
-                txn=txn,
-            )
-        elif partitioned:
-            fact.upsert_pruned(
-                derived,
-                keys=FACT_KEYS,
-                partition_by=FACT_PARTITIONING,
-                order_by=FACT_ORDER,
-                event_time_wins=event_time_wins,
-                txn=txn,
-            )
-        else:
-            fact.upsert(
-                derived, keys=FACT_KEYS, order_by=FACT_ORDER,
-                event_time_wins=event_time_wins, txn=txn,
-            )
+        upsert = fact.upsert_delta if merge_on_read else fact.upsert_pruned
+        upsert(
+            derived,
+            keys=FACT_KEYS,
+            partition_by=FACT_PARTITIONING,
+            order_by=FACT_ORDER,
+            event_time_wins=event_time_wins,
+            txn=txn,
+        )
     if dim is not None and gold is not None:
-        if not _already_applied(gold, app_id, batch_id):
+        if not gold.applied(txn):
             if maintain_incrementally:
                 gold.overwrite(new_gold, txn=txn)
             else:
@@ -304,10 +261,8 @@ def load_booking_fact_stream(
     dim: DataFrame | None = None,
     gold: ParquetTable | None = None,
     available_now: bool = True,
-    partitioned: bool = True,
     max_files_per_trigger: int | None = None,
     event_time_wins: bool = False,
-    merge_on_read: bool = True,
     dq_rules: list | None = None,
     dq_on_breach: str = "halt",
     dq_quarantine: ParquetTable | None = None,
@@ -330,12 +285,11 @@ def load_booking_fact_stream(
     (``dq_on_breach='halt'`` — the reference's stopOnFirstError) or
     diverts breaching rows to ``dq_quarantine`` and publishes the rest.
 
-    ``merge_on_read=True`` (default): steady-state triggers append
-    sequence-numbered deltas (O(batch) per trigger) and fold into the
-    base every 16th batch — the low-latency path that sustains 1 k-event
-    micro-batches above the 1,000 events/s target. Set False to force
-    the copy-on-write pruned merge every batch (every version dir is
-    then a plain partitioned parquet dataset with no resolve-on-read).
+    The fact merge is merge-on-read (`ParquetTable.upsert_delta`):
+    steady-state triggers append sequence-numbered deltas (O(batch) per
+    trigger) and fold into the base every 16th batch — the low-latency
+    path that sustains 1 k-event micro-batches above the 1,000 events/s
+    target.
 
     ``event_time_wins=True``: matched keys resolve to the max event
     ``timestamp`` instead of arrival order, so a replayed or out-of-order
@@ -358,8 +312,8 @@ def load_booking_fact_stream(
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         process_booking_batch(
             batch_df, fact, quarantine, dim=dim, gold=gold,
-            partitioned=partitioned, event_time_wins=event_time_wins,
-            app_id=app_id, batch_id=batch_id, merge_on_read=merge_on_read,
+            event_time_wins=event_time_wins,
+            txn=(app_id, batch_id), merge_on_read=True,
             dq_rules=dq_rules, dq_on_breach=dq_on_breach,
             dq_quarantine=dq_quarantine, incremental_gold=incremental_gold,
         )

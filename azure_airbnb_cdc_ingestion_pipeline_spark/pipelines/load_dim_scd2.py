@@ -41,8 +41,7 @@ def process_scd2_batch(
     dq_rules: list | None = None,
     dq_on_breach: str = "halt",
     dq_quarantine: ParquetTable | None = None,
-    app_id: str | None = None,
-    batch_id: int | None = None,
+    txn: tuple[str, int] | None = None,
 ) -> None:
     """One change micro-batch: gate, then SCD2-apply into the versioned
     dim.
@@ -55,7 +54,7 @@ def process_scd2_batch(
       ``dq_quarantine`` and versions only the clean remainder.
     - ``initial_history`` seeds the dim on the very first batch when
       the table does not exist yet.
-    - ``app_id``/``batch_id`` arm the idempotent replay guard (txn
+    - ``txn=(app_id, batch_id)`` arms the idempotent replay guard (txn
       markers in the table pointer, same protocol as the fact merge).
     """
     if dq_rules is not None and dq_on_breach == "quarantine" and dq_quarantine is None:
@@ -74,29 +73,14 @@ def process_scd2_batch(
             clean, breached = expectation_gate(
                 batch, dq_rules, on_breach=dq_on_breach
             )
-            if breached is not None:
-                if not _already_applied(dq_quarantine, app_id, batch_id):
-                    txn = (
-                        (app_id, batch_id)
-                        if app_id is not None and batch_id is not None
-                        else None
-                    )
-                    dq_quarantine.append(breached, txn=txn)
-                    dq_quarantine.maybe_compact(trigger_files=64)
-            _apply(clean, dim, keys, attr_cols, initial_history, eff_from,
-                   app_id, batch_id)
+            if breached is not None and not dq_quarantine.applied(txn):
+                dq_quarantine.append(breached, txn=txn)
+                dq_quarantine.maybe_compact(trigger_files=64)
+            _apply(clean, dim, keys, attr_cols, initial_history, eff_from, txn)
         finally:
             batch.unpersist()
     else:
-        _apply(batch, dim, keys, attr_cols, initial_history, eff_from,
-               app_id, batch_id)
-
-
-def _already_applied(table: ParquetTable, app_id, batch_id) -> bool:
-    if app_id is None or batch_id is None or not table.exists():
-        return False
-    last = table.last_txn(app_id)
-    return last is not None and last >= batch_id
+        _apply(batch, dim, keys, attr_cols, initial_history, eff_from, txn)
 
 
 def _apply(
@@ -106,10 +90,9 @@ def _apply(
     attr_cols: Sequence[str],
     initial_history: DataFrame | None,
     eff_from: str,
-    app_id: str | None,
-    batch_id: int | None,
+    txn: tuple[str, int] | None,
 ) -> None:
-    if _already_applied(dim, app_id, batch_id):
+    if dim.applied(txn):
         return
     if dim.exists():
         base = dim.read()
@@ -120,8 +103,6 @@ def _apply(
             "SCD2 dim does not exist and no initial_history was given — "
             "an empty dimension must be seeded explicitly, not implied"
         )
-    txn = (app_id, batch_id) if app_id is not None and batch_id is not None \
-        else None
     dim.overwrite(
         scd2_apply(base, changes, keys=keys, attr_cols=attr_cols,
                    eff_from=eff_from),
@@ -158,7 +139,7 @@ def load_dim_scd2_stream(
             batch_df, dim, keys, attr_cols,
             initial_history=initial_history, eff_from=eff_from,
             dq_rules=dq_rules, dq_on_breach=dq_on_breach,
-            dq_quarantine=dq_quarantine, app_id=app_id, batch_id=batch_id,
+            dq_quarantine=dq_quarantine, txn=(app_id, batch_id),
         )
 
     q = run_foreach_batch_merge(

@@ -2506,34 +2506,6 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "grouping_cube",
-    oracle="""
-    SELECT o_orderstatus, o_orderpriority,
-           GROUPING(o_orderstatus) * 2 + GROUPING(o_orderpriority) AS gid,
-           count(*) AS n_orders,
-           round(sum(o_totalprice), 2) AS total_price
-    FROM orders
-    GROUP BY CUBE(o_orderstatus, o_orderpriority)
-    """,
-)
-def q_grouping_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE companion to grouping_rollup: all four grouping combinations
-    in one pass — Catalyst expands the cube into a single Expand +
-    hash-aggregate, so the table is still scanned once regardless of the
-    2^k grouping sets."""
-    return (
-        _t(spark, sf_dir, "orders")
-        .cube("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.grouping_id().alias("gid"),
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("total_price"),
-        )
-        .select("o_orderstatus", "o_orderpriority", "gid", "n_orders", "total_price")
-    )
-
-
 # ---------------------------------------------------------------------------
 # r2 widening: unpivot, window frames, grouping sets, scalar suites
 # ---------------------------------------------------------------------------

@@ -44,7 +44,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def query(name: str, oracle: str | None = None):
     """Register a (spark, sf_dir) -> DataFrame callable, optionally with its
-    DuckDB oracle SQL (omit for non-SQL-expressible ops → rows-only check)."""
+    DuckDB oracle SQL (omit for non-SQL-expressible ops → rows-only check).
+    A key registered twice raises: the later registration would otherwise
+    silently replace the earlier query and its oracle."""
+    if name in QUERIES:
+        raise ValueError(f"catalog key {name!r} is already registered")
 
     def deco(fn):
         QUERIES[name] = fn

@@ -73,19 +73,6 @@ def _mor_resolve_tagged(allf: DataFrame, mor: dict) -> DataFrame:
     return argmax_per_group(allf, keys, order, payload)
 
 
-def _mor_resolve(frames: list[DataFrame], mor: dict) -> DataFrame:
-    """Resolve a merge-on-read stack (frames[0] = lowest precedence, then
-    higher in commit order) — list-of-frames front end over
-    :func:`_mor_resolve_tagged`."""
-    tagged = [
-        f.withColumn("__seq", F.lit(i)) for i, f in enumerate(frames)
-    ]
-    allf = tagged[0]
-    for f in tagged[1:]:
-        allf = allf.unionByName(f, allowMissingColumns=True)
-    return _mor_resolve_tagged(allf, mor)
-
-
 class ParquetTable:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -120,10 +107,19 @@ class ParquetTable:
 
     def last_txn(self, app_id: str) -> int | None:
         """Highest batch id this app committed to THIS table (None if the
-        app never wrote here). A replayed foreachBatch with batch_id ≤
-        last_txn(app) must skip its non-idempotent writes."""
+        app never wrote here)."""
         t = self._read_pointer()[1].get(app_id)
         return t["batch"] if t else None
+
+    def applied(self, txn: tuple[str, int] | None) -> bool:
+        """Whether this table already committed ``txn=(app_id, batch_id)``
+        — the replay check of the idempotent batch guard: a replayed
+        foreachBatch skips every sink for which this holds. ``txn=None``
+        (no marker, e.g. a one-shot batch load) is never applied."""
+        if txn is None:
+            return False
+        last = self.last_txn(txn[0])
+        return last is not None and last >= txn[1]
 
     def last_txn_base(self, app_id: str) -> int | None:
         """Snapshot version the last txn of ``app_id`` was computed FROM —
@@ -150,22 +146,37 @@ class ParquetTable:
         On a merge-on-read table with pending deltas (see
         :meth:`upsert_delta`) the read resolves base ∪ deltas to one row
         per key — callers always see fully-merged content."""
+        return self._read_resolved(self._current_dir(), merge_schema)
+
+    def _current_dir(self) -> str:
         v = self.current_version()
         if v is None:
             raise FileNotFoundError(f"table at {self.root} has no committed version")
-        return self._read_resolved(self._version_dir(v), merge_schema)
+        return self._version_dir(v)
 
-    def _read_resolved(self, vdir: str, merge_schema: bool = False) -> DataFrame:
+    def _read_resolved(
+        self,
+        vdir: str,
+        merge_schema: bool = False,
+        keys: DataFrame | None = None,
+        key_cols: list[str] | None = None,
+    ) -> DataFrame:
+        """Resolved read of one version dir: base ∪ pending deltas to one
+        row per key. With ``keys`` the key restriction is pushed INTO each
+        frame (a left-semi join) before the union+argmax."""
         reader = self.spark.read
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
         base = reader.parquet(vdir)
+
+        def restrict(df: DataFrame) -> DataFrame:
+            return df if keys is None else df.join(keys, key_cols, "left_semi")
+
         mor = self._read_meta(vdir).get("mor") or {}
         if not mor.get("pending"):
-            return base
-        deltas = self._delta_stack(vdir)
-        allf = base.withColumn("__seq", F.lit(0)).unionByName(
-            deltas, allowMissingColumns=True
+            return restrict(base)
+        allf = restrict(base).withColumn("__seq", F.lit(0)).unionByName(
+            restrict(self._delta_stack(vdir)), allowMissingColumns=True
         )
         return _mor_resolve_tagged(allf, mor).select(*base.columns)
 
@@ -180,22 +191,8 @@ class ParquetTable:
         incremental-gold before-image needs per micro-batch. Equivalent
         to ``read().join(keys_df, key_cols, "left_semi")`` in content.
         """
-        v = self.current_version()
-        if v is None:
-            raise FileNotFoundError(f"table at {self.root} has no committed version")
-        vdir = self._version_dir(v)
         keys = F.broadcast(keys_df.select(*key_cols).dropDuplicates(key_cols))
-        base = self.spark.read.parquet(vdir)
-        mor = self._read_meta(vdir).get("mor") or {}
-        if not mor.get("pending"):
-            return base.join(keys, key_cols, "left_semi")
-        deltas = self._delta_stack(vdir).join(keys, key_cols, "left_semi")
-        allf = (
-            base.join(keys, key_cols, "left_semi")
-            .withColumn("__seq", F.lit(0))
-            .unionByName(deltas, allowMissingColumns=True)
-        )
-        return _mor_resolve_tagged(allf, mor).select(*base.columns)
+        return self._read_resolved(self._current_dir(), keys=keys, key_cols=key_cols)
 
     # -- writes --------------------------------------------------------------
     def overwrite(
@@ -534,6 +531,124 @@ class ParquetTable:
             pred = pred | match
         return tgt.filter(pred)  # partition-pruned scan
 
+    def _rewrite_partitions(
+        self,
+        base: int,
+        v: int,
+        parts: list[str],
+        combo_df: DataFrame,
+        rewrite,
+        affected_rels: set[str] | None = None,
+        meta_extra: dict | None = None,
+        txn: tuple[str, int] | None = None,
+    ) -> None:
+        """The copy-on-write commit shared by the pruned MERGE, the
+        merge-on-read fold and DELETE / UPDATE: rewrite the partitions of
+        v{base} that ``combo_df`` names as ``rewrite(their rows)``,
+        hardlink every other leaf dir forward (a metadata op), write the
+        meta sidecar, then commit v{v} conditionally on v{base}.
+
+        ``affected_rels`` (escaped leaf-dir relpaths) defaults to the dirs
+        the rewrite wrote. A rewrite that can EMPTY a partition (DELETE)
+        passes the matched partitions instead: an emptied partition writes
+        no dir and would otherwise be linked forward and resurrect."""
+        cur_dir, target = self._version_dir(base), self._version_dir(v)
+        tgt = self.spark.read.parquet(cur_dir)  # _delta is hidden
+        out = rewrite(self._restrict_to_partitions_of(tgt, combo_df, parts))
+        # repartition on the partition columns: each combo lands in ONE
+        # task → one file per partition instead of (shuffle.partitions ×
+        # combos) slivers; steady-state read/merge cost tracks partition
+        # count, not trigger count. (Huge single partitions at real scale:
+        # bound file size with spark.sql.files.maxRecordsPerFile.)
+        out.repartition(*parts).write.mode("overwrite").partitionBy(
+            *parts
+        ).parquet(target)
+        if affected_rels is None:
+            # Spark applied its own path escaping (__HIVE_DEFAULT_PARTITION__
+            # for nulls, %XX for special chars), so the written tree is
+            # correct for every value a hand-built "col=val" would mangle
+            affected_rels = set(self._leaf_partition_dirs(target))
+        linked = 0
+        for rel in self._leaf_partition_dirs(cur_dir):
+            if rel not in affected_rels and not rel.startswith(self._DELTA):
+                self._link_tree(
+                    os.path.join(cur_dir, rel), os.path.join(target, rel)
+                )
+                linked += 1
+        if linked == 0 and not self._leaf_partition_dirs(target):
+            # nothing written and nothing linked (a delete that emptied
+            # EVERY partition, or a rewrite of such a version): a
+            # partitioned empty write emits no file, so the version would
+            # be unreadable. Write one schema-bearing empty file instead;
+            # the meta sidecar keeps the partition spec for later writes.
+            out.limit(0).coalesce(1).write.mode("overwrite").parquet(target)
+        self._write_table_meta(target, parts, meta_extra)
+        self._commit(v, expected_base=base, txn=txn)
+
+    @staticmethod
+    def _mor_spec(mor: dict, keys, order_by, event_time_wins: bool) -> dict:
+        """The merge-on-read spec for the next batch: ``mor`` with this
+        merge's keys and order and the batch's sequence number. Pending
+        deltas were written under ``mor``'s keys and conflict rule, so a
+        merge that changes either raises instead of resolving them under
+        the wrong one."""
+        if (
+            mor["keys"] != list(keys)
+            or bool(mor.get("event_time_wins")) != bool(event_time_wins)
+        ):
+            raise ValueError(
+                "merge spec differs from the table's merge-on-read spec "
+                f"{mor} — fold the pending deltas first (compact) before "
+                "changing it"
+            )
+        return {
+            **mor,
+            "keys": list(keys),
+            "order_by": list(order_by or []),
+            "seq": int(mor.get("seq", 0)) + 1,
+        }
+
+    def _merge_partitions(
+        self,
+        base: int,
+        v: int,
+        source: DataFrame,
+        keys: list[str],
+        partition_by: list[str],
+        order_by: list[str] | None,
+        event_time_wins: bool,
+        txn: tuple[str, int] | None,
+        mor: dict | None,
+    ) -> None:
+        """Pruned MERGE of ``source`` into v{base}, committed as v{v}.
+        Pending merge-on-read deltas fold in first: one multi-path scan of
+        the deltas ∪ the batch, which is sequenced after every on-disk
+        delta (``mor["seq"]``), resolves to one source row per key, so the
+        new version carries no deltas."""
+        from ..operators.merge import latest_per_key, merge_dataframes
+
+        src = latest_per_key(source, keys, order_by)
+        stack = self._delta_stack(self._version_dir(base))
+        if stack is not None:
+            tagged = src.withColumn("__seq", F.lit(mor["seq"]))
+            src = source = _mor_resolve_tagged(
+                stack.unionByName(tagged, allowMissingColumns=True), mor
+            ).select(*src.columns)
+        self._rewrite_partitions(
+            base, v, partition_by,
+            # partition combos from the PRE-dedupe source when nothing
+            # folds: identical distinct set (partition attrs are immutable
+            # per key — the pruned-merge precondition) without
+            # latest_per_key's window shuffle in the peek job's lineage.
+            source.select(*partition_by).distinct(),
+            lambda affected: merge_dataframes(
+                affected, src, keys, order_by=order_by,
+                event_time_wins=event_time_wins,
+            ),
+            meta_extra={"mor": {**mor, "pending": 0}} if mor else None,
+            txn=txn,
+        )
+
     def upsert_pruned(
         self,
         source: DataFrame,
@@ -550,81 +665,32 @@ class ParquetTable:
         table (the same contract as a Delta MERGE with a partition-pruning
         ON-clause predicate).
 
+        On a table with pending merge-on-read deltas this runs the fold of
+        :meth:`upsert_delta` (deltas ∪ batch resolve first), so its keys
+        and ``event_time_wins`` must match the pending spec (ValueError).
+
         Correctness precondition (same as Delta's pruned merge): the
         partition attributes are immutable per key (e.g. a booking's
         booking_year/month never changes across updates). A key whose
         partition value changed would leave its old row in the untouched
         partition.
         """
-        from ..operators.merge import latest_per_key, merge_dataframes
+        from ..operators.merge import latest_per_key
 
-        src = latest_per_key(source, keys, order_by)
         if not self.exists():
-            self.overwrite(src, partition_by=partition_by, txn=txn)
+            self.overwrite(
+                latest_per_key(source, keys, order_by),
+                partition_by=partition_by, txn=txn,
+            )
             return
-
         cur, new_v = self._claim_version()
-        cur_dir = self._version_dir(cur)
-        meta = self._read_meta(cur_dir)
-        mor = meta.get("mor") or {}
-        target = self._version_dir(new_v)
-
-        if mor.get("pending"):
-            # pending merge-on-read deltas: the untouched-partition link
-            # pass below would carry delta files forward AND resolution
-            # would let stale delta rows outrank this merge's output —
-            # fold everything (read() resolves base ∪ deltas) into a
-            # clean full rewrite instead. Rare: upsert_delta folds on its
-            # own cadence; this is the direct-caller safety path.
-            merged = merge_dataframes(
-                self.read(), src, keys, order_by=order_by,
-                event_time_wins=event_time_wins,
-            )
-            merged.repartition(*partition_by).write.mode(
-                "overwrite"
-            ).partitionBy(*partition_by).parquet(target)
-            self._write_table_meta(
-                target, partition_by, {"mor": {**mor, "pending": 0}}
-            )
-            self._commit(new_v, expected_base=cur, txn=txn)
-            return
-
-        tgt = self.read()
-        # partition combos from the PRE-dedupe source: identical distinct
-        # set (partition attrs are immutable per key — the pruned-merge
-        # precondition) without latest_per_key's window shuffle in the
-        # peek job's lineage.
-        affected_tgt = self._restrict_to_partitions_of(
-            tgt, source.select(*partition_by).distinct(), partition_by
+        mor = self._read_meta(self._version_dir(cur)).get("mor")
+        if mor and mor.get("pending"):
+            mor = self._mor_spec(mor, keys, order_by, event_time_wins)
+        self._merge_partitions(
+            cur, new_v, source, keys, partition_by, order_by,
+            event_time_wins, txn, mor,
         )
-        merged = merge_dataframes(
-            affected_tgt, src, keys, order_by=order_by,
-            event_time_wins=event_time_wins,
-        )
-
-        # repartition on the partition columns: each combo lands in ONE
-        # task → one file per partition instead of (shuffle.partitions ×
-        # combos) slivers; steady-state read/merge cost tracks partition
-        # count, not trigger count. (Huge single partitions at real scale:
-        # bound file size with spark.sql.files.maxRecordsPerFile.)
-        merged.repartition(*partition_by).write.mode("overwrite").partitionBy(
-            *partition_by
-        ).parquet(target)
-        # The affected partition dirs are exactly the leaf dirs the merged
-        # write just produced — Spark applied its own path escaping
-        # (__HIVE_DEFAULT_PARTITION__ for nulls, %XX for special chars), so
-        # deriving the set from the written tree is correct for every value
-        # a hand-built "col=val" string would mangle.
-        affected_rels = set(self._leaf_partition_dirs(target))
-        for rel in self._leaf_partition_dirs(cur_dir):
-            if rel not in affected_rels and not rel.startswith(self._DELTA):
-                self._link_tree(
-                    os.path.join(cur_dir, rel), os.path.join(target, rel)
-                )
-        self._write_table_meta(
-            target, partition_by, {"mor": {**mor, "pending": 0}} if mor else None
-        )
-        self._commit(new_v, expected_base=cur, txn=txn)
 
     def upsert_delta(
         self,
@@ -647,105 +713,56 @@ class ParquetTable:
         ``<version>/_delta/`` and hardlink everything else forward —
         O(batch) work regardless of table size. Readers resolve
         base ∪ deltas to one row per key (one `max_by` hash-agg — see
-        `_mor_resolve`); every ``fold_after``-th batch folds the pending
-        deltas into the base with the standard pruned merge, bounding
-        both the read tax and the file count.
+        `_mor_resolve_tagged`); every ``fold_after``-th batch folds the
+        pending deltas into the base with the standard pruned merge,
+        bounding both the read tax and the file count.
 
         Same conflict semantics as the merge it defers (arrival-wins by
         delta sequence; ``event_time_wins`` resolves by max event time
         with source-wins ties), same txn idempotency markers, same
         optimistic-concurrency commit."""
-        from ..operators.merge import latest_per_key, merge_dataframes
+        from ..operators.merge import latest_per_key
 
-        src = latest_per_key(source, keys, order_by)
-        if not self.exists():
-            self.overwrite(
-                src,
-                partition_by=partition_by,
-                txn=txn,
-                meta_extra={
-                    "mor": {
-                        "keys": list(keys),
-                        "order_by": list(order_by or []),
-                        "event_time_wins": bool(event_time_wins),
-                        "seq": 0,
-                        "pending": 0,
-                    }
-                },
-            )
-            return
-        cur, new_v = self._claim_version()
-        cur_dir = self._version_dir(cur)
-        meta = self._read_meta(cur_dir)
-        mor = meta.get("mor") or {
+        fresh = {
             "keys": list(keys),
             "order_by": list(order_by or []),
             "event_time_wins": bool(event_time_wins),
             "seq": 0,
             "pending": 0,
         }
-        if (
-            mor["keys"] != list(keys)
-            or bool(mor.get("event_time_wins")) != bool(event_time_wins)
-        ):
-            raise ValueError(
-                "upsert_delta merge spec differs from the table's pending "
-                f"spec {mor} — fold first (upsert_pruned) before changing it"
+        if not self.exists():
+            self.overwrite(
+                latest_per_key(source, keys, order_by),
+                partition_by=partition_by, txn=txn, meta_extra={"mor": fresh},
             )
-        seq = int(mor.get("seq", 0)) + 1
-        pending = int(mor.get("pending", 0)) + 1
-        target = self._version_dir(new_v)
-        spec = {**mor, "keys": list(keys), "order_by": list(order_by or [])}
-
+            return
+        cur, new_v = self._claim_version()
+        cur_dir = self._version_dir(cur)
+        spec = self._mor_spec(
+            self._read_meta(cur_dir).get("mor") or fresh,
+            keys, order_by, event_time_wins,
+        )
+        pending = int(spec.get("pending", 0)) + 1
         if pending >= fold_after:
-            # fold trigger: resolve pending deltas + this batch into one
-            # merged source, then a standard pruned merge against the
-            # delta-free base. Cost amortizes to merge/fold_after per
-            # trigger. One multi-path scan for the pending deltas (r9);
-            # the incoming batch outranks every on-disk delta (seq is
-            # strictly increasing).
-            # fold_after=1 folds on every batch, so zero delta dirs may be
-            # pending at trigger time — the stack is None then (r10 advisor).
-            stack = self._delta_stack(cur_dir)
-            tagged = src.withColumn("__seq", F.lit(seq))
-            allf = (
-                tagged if stack is None
-                else stack.unionByName(tagged, allowMissingColumns=True)
+            # fold trigger: cost amortizes to merge/fold_after per trigger
+            self._merge_partitions(
+                cur, new_v, source, keys, partition_by, order_by,
+                event_time_wins, txn, spec,
             )
-            resolved_src = _mor_resolve_tagged(allf, spec).select(*src.columns)
-            base = self.spark.read.parquet(cur_dir)  # _delta is hidden
-            affected = self._restrict_to_partitions_of(
-                base, resolved_src.select(*partition_by).distinct(), partition_by
-            )
-            merged = merge_dataframes(
-                affected, resolved_src, keys, order_by=order_by,
-                event_time_wins=event_time_wins,
-            )
-            merged.repartition(*partition_by).write.mode(
-                "overwrite"
-            ).partitionBy(*partition_by).parquet(target)
-            affected_rels = set(self._leaf_partition_dirs(target))
-            for rel in self._leaf_partition_dirs(cur_dir):
-                if rel not in affected_rels and not rel.startswith(self._DELTA):
-                    self._link_tree(
-                        os.path.join(cur_dir, rel), os.path.join(target, rel)
-                    )
-            self._write_table_meta(
-                target, partition_by,
-                {"mor": {**spec, "seq": seq, "pending": 0}},
-            )
-            self._commit(new_v, expected_base=cur, txn=txn)
             return
 
         # fast path: the batch IS the write. coalesce(1): a trigger-bounded
         # micro-batch emitting shuffle.partitions sliver files would undo
         # the O(batch) win at the file-count level.
-        src.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(target, self._DELTA, f"d{seq:06d}")
+        target = self._version_dir(new_v)
+        latest_per_key(source, keys, order_by).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(
+            os.path.join(target, self._DELTA, f"d{spec['seq']:06d}")
         )
         self._link_tree(cur_dir, target)  # base + prior deltas, layout kept
         self._write_table_meta(
-            target, partition_by, {"mor": {**spec, "seq": seq, "pending": pending}}
+            target, partition_by, {"mor": {**spec, "pending": pending}}
         )
         self._commit(new_v, expected_base=cur, txn=txn)
 
@@ -804,9 +821,8 @@ class ParquetTable:
         self._fold_pending()
         base, v = self._claim_version()
         tgt = self.read()
-        target = self._version_dir(v)
         if not parts:
-            tgt.filter(~cond).write.mode("overwrite").parquet(target)
+            tgt.filter(~cond).write.mode("overwrite").parquet(self._version_dir(v))
             self._commit(v, expected_base=base)
             return
         # persist: the matching-combo frame feeds the marker write AND the
@@ -814,34 +830,12 @@ class ParquetTable:
         # each consumer re-runs the full-table predicate scan
         combo_df = tgt.filter(cond).select(*parts).distinct().persist()
         try:
-            affected_rels = self._partition_rels(combo_df, parts)
-            survivors = self._restrict_to_partitions_of(
-                tgt, combo_df, parts
-            ).filter(~cond)
-            survivors.write.mode("overwrite").partitionBy(*parts).parquet(
-                target
+            self._rewrite_partitions(
+                base, v, parts, combo_df, lambda rows: rows.filter(~cond),
+                affected_rels=self._partition_rels(combo_df, parts),
             )
         finally:
             combo_df.unpersist()
-        cur_dir = self._version_dir(base)
-        linked = 0
-        for rel in self._leaf_partition_dirs(cur_dir):
-            if rel not in affected_rels:
-                self._link_tree(
-                    os.path.join(cur_dir, rel), os.path.join(target, rel)
-                )
-                linked += 1
-        if linked == 0 and not self._leaf_partition_dirs(target):
-            # a delete that emptied EVERY partition leaves a version with
-            # no parquet files (a partitioned empty write emits nothing) —
-            # unreadable. Write one schema-bearing empty file instead (the
-            # meta sidecar below preserves the partition spec for later
-            # writes even though the layout carries none).
-            survivors.limit(0).coalesce(1).write.mode("overwrite").parquet(
-                target
-            )
-        self._write_table_meta(target, parts)
-        self._commit(v, expected_base=base)
 
     def update_where(self, condition, set_exprs: dict) -> None:
         """UPDATE ... SET: for rows where ``condition`` is TRUE (NULL →
@@ -861,7 +855,6 @@ class ParquetTable:
         self._fold_pending()  # see delete_where
         base, v = self._claim_version()
         tgt = self.read()
-        target = self._version_dir(v)
 
         def _apply(df: DataFrame) -> DataFrame:
             return df.select(
@@ -874,36 +867,14 @@ class ParquetTable:
             )
 
         if not parts:
-            _apply(tgt).write.mode("overwrite").parquet(target)
+            _apply(tgt).write.mode("overwrite").parquet(self._version_dir(v))
             self._commit(v, expected_base=base)
             return
-        combo_df = tgt.filter(cond).select(*parts).distinct()
-        affected = self._restrict_to_partitions_of(tgt, combo_df, parts)
-        _apply(affected).write.mode("overwrite").partitionBy(*parts).parquet(
-            target
-        )
         # updates never empty a partition, so the rewritten tree's dirs ARE
-        # the affected set (correctly escaped by the writer)
-        affected_rels = set(self._leaf_partition_dirs(target))
-        cur_dir = self._version_dir(base)
-        linked = 0
-        for rel in self._leaf_partition_dirs(cur_dir):
-            if rel not in affected_rels:
-                self._link_tree(
-                    os.path.join(cur_dir, rel), os.path.join(target, rel)
-                )
-                linked += 1
-        if linked == 0 and not self._leaf_partition_dirs(target):
-            # base version was the schema-bearing empty file of a
-            # delete-all (no leaf partition dirs), so the affected rewrite
-            # emitted nothing and nothing was linked — mirror delete_where:
-            # write one schema-bearing empty file so the version stays
-            # readable.
-            _apply(tgt).limit(0).coalesce(1).write.mode("overwrite").parquet(
-                target
-            )
-        self._write_table_meta(target, parts)
-        self._commit(v, expected_base=base)
+        # the affected set
+        self._rewrite_partitions(
+            base, v, parts, tgt.filter(cond).select(*parts).distinct(), _apply
+        )
 
     def overwrite_clustered(
         self,
@@ -992,39 +963,9 @@ class ParquetTable:
         return stats
 
     def pruned_files(self, col: str, lo=None, hi=None) -> tuple[list[str], int]:
-        """File paths of the current version whose [min,max] span for
-        ``col`` intersects [lo, hi] (None = unbounded). Files without
-        stats for the column are conservatively KEPT. Returns
-        (kept_paths, total_files). Stats are read from the version's
-        manifest, computed on demand (and persisted best-effort) if the
-        version was written without one."""
-        import json as _json
-
-        v = self.current_version()
-        if v is None:
-            raise FileNotFoundError(f"table at {self.root} has no committed version")
-        vdir = self._version_dir(v)
-        spath = os.path.join(vdir, self._STATS)
-        try:
-            with open(spath) as f:
-                stats = _json.load(f)
-        except (FileNotFoundError, ValueError):
-            stats = self._write_stats(vdir, [col])
-        kept, total = [], 0
-        for dirpath, _dn, filenames in os.walk(vdir):
-            for fn in filenames:
-                if not fn.endswith(".parquet"):
-                    continue
-                total += 1
-                rel = os.path.relpath(os.path.join(dirpath, fn), vdir)
-                span = stats.get(rel, {}).get(col)
-                if span is None:
-                    kept.append(os.path.join(vdir, rel))
-                    continue
-                fmin, fmax = span
-                if self._span_intersects(fmin, fmax, lo, hi):
-                    kept.append(os.path.join(vdir, rel))
-        return kept, total
+        """Single-column :meth:`pruned_files_multi`: (kept_paths,
+        total_files) for the files whose ``col`` span intersects [lo, hi]."""
+        return self.pruned_files_multi({col: (lo, hi)})
 
     @staticmethod
     def _span_intersects(fmin, fmax, lo, hi) -> bool:
@@ -1058,18 +999,16 @@ class ParquetTable:
         self, bounds: dict[str, tuple]
     ) -> tuple[list[str], int]:
         """File paths whose stats spans intersect EVERY column's [lo, hi]
-        (conjunctive skipping — the multi-column data-skipping Delta/
-        Iceberg stats give). Files lacking stats for a column are kept
-        for that column (conservative), but can still be skipped by
-        another column's bound."""
+        (None = unbounded; conjunctive skipping — the multi-column
+        data-skipping Delta/Iceberg stats give). Files lacking stats for a
+        column are kept for that column (conservative), but can still be
+        skipped by another column's bound. Returns (kept_paths,
+        total_files). Stats are read from the version's manifest, computed
+        on demand (and persisted best-effort) if the version was written
+        without one."""
         import json as _json
 
-        v = self.current_version()
-        if v is None:
-            raise FileNotFoundError(
-                f"table at {self.root} has no committed version"
-            )
-        vdir = self._version_dir(v)
+        vdir = self._current_dir()
         try:
             with open(os.path.join(vdir, self._STATS)) as f:
                 stats = _json.load(f)
@@ -1095,9 +1034,13 @@ class ParquetTable:
         return kept, total
 
     def read_pruned_multi(self, bounds: dict[str, tuple]) -> DataFrame:
-        """Multi-column range scan with conjunctive file skipping, then
-        the exact predicate on the survivors (same contract as
-        read_pruned, AND-composed across columns)."""
+        """Range scan with FILE-LEVEL skipping: plans only the files whose
+        stats spans intersect every column's [lo, hi], then applies the
+        exact AND-composed predicate. On a range-clustered table
+        (overwrite_clustered) a narrow range touches O(range/keyspace) of
+        the files instead of all of them — the scan cost a 100 TB
+        point-lookup workload needs. Empty file list short-circuits to an
+        empty frame with the table schema."""
         kept, _total = self.pruned_files_multi(bounds)
         pred = F.lit(True)
         for col, (lo, hi) in bounds.items():
@@ -1107,38 +1050,19 @@ class ParquetTable:
                 pred = pred & (F.col(col) <= F.lit(hi))
         if not kept:
             return self.read().filter(F.lit(False))
-        v = self.current_version()
+        # basePath: explicit leaf-file reads on a partitioned table would
+        # otherwise DROP the Hive-style partition columns from the schema
+        # (and silently break filters on them) — anchoring the base dir
+        # makes Spark reconstruct them exactly as read() does.
         return (
-            self.spark.read.option("basePath", self._version_dir(v))
+            self.spark.read.option("basePath", self._current_dir())
             .parquet(*kept)
             .filter(pred)
         )
 
     def read_pruned(self, col: str, lo=None, hi=None) -> DataFrame:
-        """Range scan with FILE-LEVEL skipping: plans only the files whose
-        stats span intersects [lo, hi], then applies the exact predicate.
-        On a range-clustered table (overwrite_clustered) a narrow range
-        touches O(range/keyspace) of the files instead of all of them —
-        the scan cost a 100 TB point-lookup workload needs. Empty file
-        list short-circuits to an empty frame with the table schema."""
-        kept, _total = self.pruned_files(col, lo=lo, hi=hi)
-        pred = F.lit(True)
-        if lo is not None:
-            pred = pred & (F.col(col) >= F.lit(lo))
-        if hi is not None:
-            pred = pred & (F.col(col) <= F.lit(hi))
-        if not kept:
-            return self.read().filter(F.lit(False))
-        # basePath: explicit leaf-file reads on a partitioned table would
-        # otherwise DROP the Hive-style partition columns from the schema
-        # (and silently break filters on them) — anchoring the base dir
-        # makes Spark reconstruct them exactly as read() does.
-        v = self.current_version()
-        return (
-            self.spark.read.option("basePath", self._version_dir(v))
-            .parquet(*kept)
-            .filter(pred)
-        )
+        """Single-column :meth:`read_pruned_multi`."""
+        return self.read_pruned_multi({col: (lo, hi)})
 
     def compact(
         self,

@@ -1315,6 +1315,13 @@ def test_cluster_pairs_driver_vs_distributed_parity(spark, monkeypatch):
         for r in D.cluster_pairs(pairs, driver_limit=0).collect()
     }
     assert forced == slow
+    # driver_limit=0 forces the distributed loop at n = 0 too: the empty
+    # pair list must never reach the driver kernel
+    def _no_driver(*_a, **_k):
+        raise AssertionError("driver path taken with driver_limit=0")
+
+    monkeypatch.setattr(D, "_cluster_pairs_driver", _no_driver)
+    assert D.cluster_pairs(pairs.limit(0), driver_limit=0).collect() == []
 
 
 def test_cluster_pairs_string_ids_take_distributed_path(spark):

@@ -139,13 +139,15 @@ def test_mor_direct_upsert_pruned_on_pending_folds(spark, table):  # noqa: F811
     assert not (table._read_meta(vdir).get("mor") or {}).get("pending")
 
 
-def test_mor_spec_mismatch_raises(spark, table):  # noqa: F811
-    table.upsert_delta(_mk(spark, [(1, 1, "a", 0)]),
-                       keys=["k"], partition_by=["p"], order_by=["ts"])
+@pytest.mark.parametrize("merge", ["upsert_delta", "upsert_pruned"])
+def test_mor_spec_mismatch_raises(spark, table, merge):  # noqa: F811
+    for rows in ([(1, 1, "a", 0)], [(2, 1, "c", 0)]):  # 2nd stays pending
+        table.upsert_delta(_mk(spark, rows),
+                           keys=["k"], partition_by=["p"], order_by=["ts"])
     with pytest.raises(ValueError):
-        table.upsert_delta(_mk(spark, [(1, 2, "b", 0)]),
-                           keys=["k"], partition_by=["p"], order_by=["ts"],
-                           event_time_wins=True)
+        getattr(table, merge)(_mk(spark, [(1, 2, "b", 0)]),
+                              keys=["k"], partition_by=["p"], order_by=["ts"],
+                              event_time_wins=True)
 
 
 def test_mor_read_for_keys_matches_semi_join(spark, table):

@@ -19,3 +19,19 @@ def test_query_matches_oracle(name, spark, con):
     fn = entry.queries()[name]
     ok, msg = compare(name, fn(spark, SF), con)
     assert ok, f"{name}: {msg}"
+
+
+def test_duplicate_catalog_key_raises():
+    from azure_airbnb_cdc_ingestion_pipeline_spark.plans.queries import (
+        ORACLE_SQL,
+        QUERIES,
+        query,
+    )
+
+    before = (dict(QUERIES), dict(ORACLE_SQL))
+    with pytest.raises(ValueError, match="agg_groupby_join"):
+        @query("agg_groupby_join", oracle="SELECT 1")
+        def _shadow(spark, sf_dir):
+            return None
+
+    assert (QUERIES, ORACLE_SQL) == before

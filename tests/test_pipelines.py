@@ -544,6 +544,85 @@ def test_midbatch_crash_after_fact_merge_replays_exactly_once(spark, tmp_path):
     assert fact.current_version() == fact_v
 
 
+def test_stream_trigger_that_folds_keeps_sinks_exact(spark, tmp_path):
+    """A 1-file trigger that lands on the merge-on-read fold — the fact
+    holds fold_after - 1 pending deltas, seeded through upsert_delta —
+    must fold (no _delta in the new version, pending 0) and leave fact =
+    latest-per-key, quarantine = the trigger's bad rows and incremental
+    gold = a full rebuild at 6 dp."""
+    import inspect
+    import json
+
+    from azure_airbnb_cdc_ingestion_pipeline_spark.operators.aggregate import (
+        gold_booking_aggregation,
+    )
+    from azure_airbnb_cdc_ingestion_pipeline_spark.pipelines.load_booking_fact import (
+        FACT_KEYS, FACT_ORDER, FACT_PARTITIONING, transform_bookings,
+    )
+    from azure_airbnb_cdc_ingestion_pipeline_spark.schemas import BOOKING_DOC_SCHEMA
+
+    fold_after = inspect.signature(ParquetTable.upsert_delta).parameters[
+        "fold_after"].default
+    per, trigger_n = 40, 80
+    events = gen_booking_events(
+        n=fold_after * per + trigger_n, n_keys=fold_after * per + 20, seed=5
+    )
+    seed, trigger = events[: fold_after * per], events[fold_after * per :]
+    dim = spark.createDataFrame(
+        [(i, ["US", "DE", "JP"][i % 3]) for i in range(1, 101)],
+        "customer_id int, country string",
+    )
+    wh = tmp_path / "wh"
+    fact = ParquetTable(spark, str(wh / "fact"))
+    quarantine = ParquetTable(spark, str(wh / "rej"))
+    gold = ParquetTable(spark, str(wh / "gold"))
+    # the first upsert_delta creates the fact; each later one adds a delta
+    for b in range(fold_after):
+        rows = spark.createDataFrame(seed[b * per : (b + 1) * per], BOOKING_DOC_SCHEMA)
+        fact.upsert_delta(
+            transform_bookings(rows)[0], keys=FACT_KEYS,
+            partition_by=FACT_PARTITIONING, order_by=FACT_ORDER,
+        )
+    pending = fact._read_meta(fact._version_dir(fact.current_version()))["mor"]
+    assert pending["pending"] == fold_after - 1
+    gold.overwrite(gold_booking_aggregation(fact.read(), dim))
+
+    landing = tmp_path / "feed"
+    landing.mkdir()
+    with open(landing / "trigger.json", "w") as f:
+        for e in trigger:
+            f.write(json.dumps(e) + "\n")
+    load_booking_fact_stream(
+        spark, str(landing), fact, quarantine, str(tmp_path / "ckpt"),
+        dim=dim, gold=gold, incremental_gold=True, max_files_per_trigger=1,
+    )
+
+    vdir = fact._version_dir(fact.current_version())
+    assert not os.path.exists(os.path.join(vdir, "_delta"))
+    assert fact._read_meta(vdir)["mor"]["pending"] == 0
+    good = [e for e in events if e["check_out_date"] >= e["check_in_date"]]
+    want_fact = {e["booking_id"]: e["amount"] for e in good}  # ts is monotone
+    got = fact.read().select("booking_id", "amount").collect()
+    assert {r.booking_id: r.amount for r in got} == want_fact
+    assert len(got) == len(want_fact)
+    want_bad = sorted(
+        e["id"] for e in trigger if e["check_out_date"] < e["check_in_date"]
+    )
+    assert want_bad
+    assert sorted(r.id for r in quarantine.read().collect()) == want_bad
+
+    def r6(df):
+        return sorted(
+            (r.country, r.total_bookings, r.last_booking_date, r.total_amount)
+            for r in df.select(
+                "country", "total_bookings", "last_booking_date",
+                F.round("total_amount", 6).alias("total_amount"),
+            ).collect()
+        )
+
+    assert r6(gold.read()) == r6(gold_booking_aggregation(fact.read(), dim))
+
+
 # ---------------------------------------------------------------------------
 # r6: expectation suite as the streaming publish gate (VERDICT r5 #7)
 # ---------------------------------------------------------------------------
