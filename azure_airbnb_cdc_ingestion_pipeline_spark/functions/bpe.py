@@ -38,7 +38,7 @@ the corpus and re-encodes it, Spark-first:
   and pinned equal to the naive scan by tests.
 
 The DuckDB oracle replicates training + encoding end-to-end in pure
-SQL (generated round-unrolled CTEs — `plans.extensions_r7`), so the
+SQL (generated round-unrolled CTEs — `plans.text`), so the
 merge table AND the per-doc encoded lengths are hash-gated at 16
 merges; a frozen-vocab golden test pins the 1 024-merge behavior.
 """

@@ -68,10 +68,6 @@ def token_count(col: str | Column) -> Column:
     return F.size(tokens(col))
 
 
-def _in_set(tok: Column, words: tuple[str, ...]) -> Column:
-    return tok.isin(*words)
-
-
 def stopword_count(col: str | Column, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
     """Number of token OCCURRENCES in the stopword set (not distinct)."""
     arr = tokens(col)
@@ -276,7 +272,7 @@ def html_extract_text(col: str | Column, min_line_chars: int = 30) -> Column:
     codegen, no Python in the path, scale-indifferent. NOT a browser:
     no JS, no CSS visibility, no encoding sniff (bytes must already be
     decoded). Deterministic, DuckDB-expressible (the oracle gate in
-    plans/extensions_r10.py)."""
+    plans/text.py)."""
     c = F.col(col) if isinstance(col, str) else col
     c = F.regexp_replace(
         c, f"(?is)<({_HTML_CHROME})\\b[^>]*>.*?</\\1\\s*>", ""

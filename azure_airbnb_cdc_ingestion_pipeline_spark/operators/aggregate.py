@@ -48,13 +48,6 @@ def gold_booking_aggregation(
     )
 
 
-def full_refresh(result: DataFrame, table) -> None:
-    """Truncate+insert parity: atomically replace the gold table with the
-    freshly computed aggregate (ParquetTable.overwrite is the atomic
-    analog of the stored proc's TRUNCATE + INSERT)."""
-    table.overwrite(result)
-
-
 def merge_gold(
     old_gold: DataFrame,
     delta_gold: DataFrame,

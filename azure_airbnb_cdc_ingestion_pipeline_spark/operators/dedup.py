@@ -219,7 +219,7 @@ def minhash_lsh_pairs(
     # tiny-file guard + derived-width sizing (r10): the persisted frame
     # carries the shingle-hash ARRAYS (~10× the scanned text bytes), so
     # partition count follows the row count, not the scan split count —
-    # at sf100 the scan-sized cache held ~92 MB tasks (TASK_AUDIT_r09).
+    # at sf100 the scan-sized cache held ~92 MB tasks (round-9 task audit).
     n_docs = df.count()
     df = fan_out(df, rows=n_docs)
     rows = num_hashes // bands

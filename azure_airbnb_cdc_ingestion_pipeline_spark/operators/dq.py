@@ -6,7 +6,7 @@ Generalizes the reference's fail-fast contract
 (`:31-34`) into a declarative rule suite evaluated BEFORE a table is
 published: per-batch in streaming (the gate below, wired into
 `pipelines.load_booking_fact.process_booking_batch`), or once per table
-in batch (`plans/extensions_r5.py::q_dq_expectations`).
+in batch (`plans/cdc.py::q_dq_expectations`).
 
 Design: every rule is (name, violation-predicate Column); the whole
 suite evaluates in ONE aggregation pass of conditional sums — no
@@ -66,6 +66,22 @@ def violation_pred(rules: list[tuple[str, Column]]) -> Column:
     """OR of every rule's violation predicate — the row-level split
     condition for quarantine mode."""
     return reduce(lambda a, b: a | b, (pred for _, pred in rules))
+
+
+def check_gate_wiring(
+    dq_rules: list | None, dq_on_breach: str, dq_quarantine
+) -> None:
+    """Raise ``ValueError`` when a quarantine-mode gate has no table to
+    divert into — a wiring error, not a data error, so breaching rows are
+    never dropped silently. The stream entries call it before the stream
+    starts (a mis-wired pipeline fails before any batch runs, not at its
+    first breach); the per-batch entries call it before they touch the
+    batch."""
+    if dq_rules is not None and dq_on_breach == "quarantine" and dq_quarantine is None:
+        raise ValueError(
+            "dq_on_breach='quarantine' requires a dq_quarantine table — "
+            "breaching rows must not be dropped silently"
+        )
 
 
 def expectation_gate(

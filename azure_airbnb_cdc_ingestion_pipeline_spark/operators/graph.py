@@ -1,6 +1,6 @@
 """Graph operators over DataFrames: weighted PageRank (charter
 extension; complements the connected-components min-label propagation in
-`plans/extensions.py::dedup_cluster_canonical`).
+`plans/dedup_similarity.py::q_dedup_cluster`).
 
 PageRank as iterated join-aggregate — the standard Pregel-free Spark
 formulation: ranks live in a (node, r) frame that is tiny relative to
@@ -455,7 +455,7 @@ def copurchase_pagerank(
         # cache: InMemoryRelation preserves the cached plan's
         # outputOrdering, which is what lets every per-iteration and
         # stats window below run STREAMING (no re-sort — verified in
-        # plans/r11/graph_pagerank_dist plan dumps: one Sort node total,
+        # the round-11 graph_pagerank_dist plan dump: one Sort node total,
         # inside the build).
         li_o = (
             occ.withColumn("_sz", F.sum("_m").over(Window.partitionBy(ok)))

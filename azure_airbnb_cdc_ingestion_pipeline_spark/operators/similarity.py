@@ -193,7 +193,7 @@ def _adaptive_lsh_params(
     """Corpus-proportional LSH sizing: with a FIXED plane count the bucket
     grid is constant, so expected bucket occupancy grows ∝ n and the
     within-bucket candidate join grows ∝ n² — measured superlinear at
-    sf3 (SCALE_r04_sf3: `embedding_cosine_pairs` 8.4× at k=3 before this
+    sf3 (round-4 scale run: `embedding_cosine_pairs` 8.4× at k=3 before this
     fix). Adding one plane per doubling past `target_occupancy·2^planes`
     keeps occupancy ≤ target, so candidates stay ≤ target·n — linear.
     Each extra plane cuts per-table recall (a true pair must agree on
@@ -211,7 +211,7 @@ def _adaptive_lsh_params(
     two, so occupancy sawtoothed between target/2 and target as n crossed
     plane boundaries — two scale-bench points landing on opposite sides
     of a boundary measured a spurious ~2x step on top of the data ratio
-    (`SCALE_r04_sf3` flagged `embedding_cosine_pairs` 4.18x at k=3).
+    (the round-4 sf3 run flagged `embedding_cosine_pairs` 4.18x at k=3).
     Now the third return value `nbuckets` = ⌈n / (target/2)⌉ EXACTLY
     (any integer, not a power of two); callers post-hash the sign-bit
     bucket id into `nbuckets` buckets (`_bucketize`), pinning occupancy
@@ -226,7 +226,7 @@ def _adaptive_lsh_params(
     mixed and the (mildly non-uniform) pattern probabilities landed on
     buckets directly — per-table candidate pairs ran 2–2.4× the Poisson
     expectation AND drifted upward with n (46/n at sf1 → 78/n at sf10:
-    a ~1.3×/decade superlinear residue, flagged by SCALE_r05_sf10). Now
+    a ~1.3×/decade superlinear residue, flagged by the round-5 sf10 run). Now
     planes = ⌈log2 nbuckets⌉ + 8: 256 sign patterns fold into each
     bucket, so occupancy is hash-randomized to Poisson(target/2)
     regardless of pattern skew, and candidates stay ~(target/2)·n/2 per
@@ -494,7 +494,7 @@ def cosine_pairs_lsh(
         # 160-table grid), fed them through Arrow into the verify
         # kernel, and paid per-pair gather+einsum — join-probe output,
         # row materialization, and Arrow transfer of the candidate
-        # stream dominated the sf100 wall (330 s, TASK_AUDIT_r09). Pair
+        # stream dominated the sf100 wall (330 s, round-9 task audit). Pair
         # formation is now fused INTO the partition kernel: the one
         # skinny exchange clusters each (tbl, bucket) into a partition,
         # and a mapInPandas pass groups rows by bucket in numpy and

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..operators.aggregate import gold_booking_aggregation
 from ..operators.derive import derive_booking_columns
+from ..operators.dq import check_gate_wiring
 from ..operators.split import conditional_split
 from ..schemas import BOOKING_DOC_SCHEMA
 from ..sources.tables import ParquetTable
@@ -108,18 +109,12 @@ def process_booking_batch(
     per trigger instead of re-aggregating the whole fact — the matching
     steady state for the pruned merge. Falls back to a full refresh on
     the first batch (no standing gold yet)."""
+    check_gate_wiring(dq_rules, dq_on_breach, dq_quarantine)
     # Materialize the micro-batch once: every consumer below (quarantine
     # emptiness probe + append, merge, partition-combo collect, gold
     # before-image) otherwise re-parses the landing JSON — at 4 consumers
     # that's 4x the scan cost per trigger. A micro-batch fits in memory
     # by construction (it's trigger-bounded).
-    if dq_rules is not None and dq_on_breach == "quarantine" and dq_quarantine is None:
-        # Wiring error, not a data error: fail before ANY batch runs
-        # rather than killing the stream mid-run at the first breach.
-        raise ValueError(
-            "dq_on_breach='quarantine' requires a dq_quarantine table — "
-            "breaching rows must not be dropped silently"
-        )
     batch = batch.persist()
     dq_cached: DataFrame | None = None
     try:
@@ -295,11 +290,7 @@ def load_booking_fact_stream(
     ``timestamp`` instead of arrival order, so a replayed or out-of-order
     landing drain converges to the same fact state (the `WHEN MATCHED AND
     s.ts >= t.ts` conditional-MERGE guard)."""
-    if dq_rules is not None and dq_on_breach == "quarantine" and dq_quarantine is None:
-        raise ValueError(
-            "dq_on_breach='quarantine' requires a dq_quarantine table — "
-            "breaching rows must not be dropped silently"
-        )
+    check_gate_wiring(dq_rules, dq_on_breach, dq_quarantine)
     stream = read_change_feed(
         spark, landing_dir, BOOKING_DOC_SCHEMA,
         max_files_per_trigger=max_files_per_trigger,

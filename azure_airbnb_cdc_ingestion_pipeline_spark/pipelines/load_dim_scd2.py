@@ -27,6 +27,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame
 
+from ..operators.dq import check_gate_wiring
 from ..operators.merge import scd2_apply
 from ..sources.tables import ParquetTable
 
@@ -57,12 +58,7 @@ def process_scd2_batch(
     - ``txn=(app_id, batch_id)`` arms the idempotent replay guard (txn
       markers in the table pointer, same protocol as the fact merge).
     """
-    if dq_rules is not None and dq_on_breach == "quarantine" and dq_quarantine is None:
-        # wiring error, not a data error: fail before ANY batch runs
-        raise ValueError(
-            "dq_on_breach='quarantine' requires a dq_quarantine table — "
-            "breaching rows must not be dropped silently"
-        )
+    check_gate_wiring(dq_rules, dq_on_breach, dq_quarantine)
     if batch.isEmpty():
         return
     if dq_rules is not None:
@@ -125,11 +121,7 @@ def load_dim_scd2_stream(
 ):
     """Streaming entry: drain a change stream through the gated SCD2
     apply (exactly-once via checkpoint + txn-marker replay guard)."""
-    if dq_rules is not None and dq_on_breach == "quarantine" and dq_quarantine is None:
-        raise ValueError(
-            "dq_on_breach='quarantine' requires a dq_quarantine table — "
-            "breaching rows must not be dropped silently"
-        )
+    check_gate_wiring(dq_rules, dq_on_breach, dq_quarantine)
     from ..streaming.cdc import run_foreach_batch_merge
 
     app_id = f"dim_scd2:{checkpoint_dir}"

@@ -427,7 +427,7 @@ def test_window_counts_conserved(spark, sf_dir):
 
 
 def test_stateful_running_totals_matches_batch(spark, sf_dir, tmp_path):
-    from azure_airbnb_cdc_ingestion_pipeline_spark.plans.extensions import (
+    from azure_airbnb_cdc_ingestion_pipeline_spark.plans.streaming import (
         q_stateful_running,
     )
 
@@ -566,7 +566,7 @@ def test_redact_pii_strips_all_pattern_kinds(spark):
 
 
 def test_profile_columns_counts(spark, sf_dir):
-    from azure_airbnb_cdc_ingestion_pipeline_spark.plans.extensions import (
+    from azure_airbnb_cdc_ingestion_pipeline_spark.plans.relational import (
         q_profile_columns,
     )
 
@@ -582,7 +582,7 @@ def test_profile_columns_counts(spark, sf_dir):
 
 
 def test_stream_stream_join_matches_batch(spark, sf_dir):
-    from azure_airbnb_cdc_ingestion_pipeline_spark.plans.extensions import (
+    from azure_airbnb_cdc_ingestion_pipeline_spark.plans.streaming import (
         q_stream_stream_join,
     )
     from azure_airbnb_cdc_ingestion_pipeline_spark.sources.readers import read_events
@@ -613,7 +613,7 @@ def test_stream_stream_join_matches_batch(spark, sf_dir):
 
 
 def test_kmeans_clusters_cover_corpus(spark, sf_dir):
-    from azure_airbnb_cdc_ingestion_pipeline_spark.plans.extensions import (
+    from azure_airbnb_cdc_ingestion_pipeline_spark.plans.dedup_similarity import (
         q_kmeans_clusters,
     )
 
@@ -650,7 +650,7 @@ def test_cosine_pairs_lsh_matches_all_pairs(emb):
 
 
 def test_stream_session_window_matches_batch(spark, sf_dir):
-    from azure_airbnb_cdc_ingestion_pipeline_spark.plans.extensions import (
+    from azure_airbnb_cdc_ingestion_pipeline_spark.plans.streaming import (
         q_stream_window_session,
     )
     from azure_airbnb_cdc_ingestion_pipeline_spark.sources.readers import read_events
@@ -683,7 +683,7 @@ def test_stream_session_window_matches_batch(spark, sf_dir):
 
 
 def test_stream_static_enrich_matches_batch(spark, sf_dir):
-    from azure_airbnb_cdc_ingestion_pipeline_spark.plans.extensions import (
+    from azure_airbnb_cdc_ingestion_pipeline_spark.plans.streaming import (
         q_stream_static_enrich,
     )
     from azure_airbnb_cdc_ingestion_pipeline_spark.sources.readers import read_events
@@ -706,7 +706,7 @@ def test_stream_static_enrich_matches_batch(spark, sf_dir):
 def test_stream_sessionize_stateful_matches_batch(spark, sf_dir):
     import datetime
 
-    from azure_airbnb_cdc_ingestion_pipeline_spark.plans.extensions import (
+    from azure_airbnb_cdc_ingestion_pipeline_spark.plans.streaming import (
         q_stream_sessionize_stateful,
     )
     from azure_airbnb_cdc_ingestion_pipeline_spark.sources.readers import read_events

@@ -15,7 +15,13 @@ from azure_airbnb_cdc_ingestion_pipeline_spark.operators.graph import (
     copurchase_edges,
     pagerank,
 )
-from azure_airbnb_cdc_ingestion_pipeline_spark.plans import extensions_r5 as x5
+from azure_airbnb_cdc_ingestion_pipeline_spark.plans import (
+    cdc,
+    graph_sketches,
+    multimodal,
+    relational,
+    streaming,
+)
 
 
 def _events(spark, sf_dir):
@@ -163,7 +169,7 @@ def test_zvalue_interleave_known_bits(spark):
 
 
 def test_zorder_buckets_are_local(spark, sf_dir):
-    rows = x5.q_zorder_layout(spark, sf_dir).collect()
+    rows = cdc.q_zorder_layout(spark, sf_dir).collect()
     assert rows
     g_cust = max(r.max_cust for r in rows) - min(r.min_cust for r in rows)
     # weight per-bucket span by rows: z-clustering must shrink the
@@ -178,14 +184,14 @@ def test_zorder_buckets_are_local(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 def test_projection_is_map_only(spark, sf_dir):
-    plan = x5.q_embedding_projection(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    plan = graph_sketches.q_embedding_projection(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
 
 
 def test_projection_preserves_scaled_norms(spark, sf_dir):
     # E[||Sv||^2] = in_dim * ... for unit sign matrix: E||Sv||^2 = out_dim * ||v||^2
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(50)
-    out = x5.q_embedding_projection(spark, sf_dir).limit(50).collect()
+    out = graph_sketches.q_embedding_projection(spark, sf_dir).limit(50).collect()
     norms = {
         r.vec_id: sum(float(v) ** 2 for v in r.embedding)
         for r in emb.collect()
@@ -209,7 +215,7 @@ def test_twa_constant_value_is_identity(spark):
     df = spark.createDataFrame(rows, ["user_id", "ts", "value"]).withColumn(
         "ts", F.col("ts").cast("timestamp")
     ).withColumn("event_id", F.monotonically_increasing_id())
-    from azure_airbnb_cdc_ingestion_pipeline_spark.plans.extensions_r5 import (
+    from azure_airbnb_cdc_ingestion_pipeline_spark.plans.relational import (
         q_time_weighted_avg,
     )
     # reuse the operator body through a temp view-like path: inline here
@@ -229,7 +235,7 @@ def test_twa_constant_value_is_identity(spark):
 
 
 def test_pivot_unpivot_roundtrip(spark, sf_dir):
-    from azure_airbnb_cdc_ingestion_pipeline_spark.plans import extensions_r5 as m
+    from azure_airbnb_cdc_ingestion_pipeline_spark.plans import relational as m
 
     wide = m.q_events_pivot(spark, sf_dir)
     long = m.q_events_unpivot(spark, sf_dir)
@@ -240,7 +246,7 @@ def test_pivot_unpivot_roundtrip(spark, sf_dir):
 
 
 def test_cube_levels_consistent(spark, sf_dir):
-    from azure_airbnb_cdc_ingestion_pipeline_spark.plans import extensions_r5 as m
+    from azure_airbnb_cdc_ingestion_pipeline_spark.plans import relational as m
 
     rows = m.q_grouping_cube(spark, sf_dir).collect()
     total = [r for r in rows if r.gid == 3]
@@ -306,7 +312,7 @@ def test_window_suite_single_exchange(spark, sf_dir):
     must contain exactly one Exchange (the user_id shuffle) and one
     Window node."""
     plan = (
-        x5.q_window_analytics(spark, sf_dir)
+        relational.q_window_analytics(spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -339,11 +345,11 @@ def test_triangle_chunked_summary_matches_unchunked(spark, sf_dir):
     a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("s"))
     b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("d"))
     pairs = a.join(b, "ok").filter(F.col("s") < F.col("d")).select("s", "d").distinct()
-    one = x5._triangles_summary_chunked(spark, pairs, 1).first()
-    five = x5._triangles_summary_chunked(
+    one = graph_sketches._triangles_summary_chunked(spark, pairs, 1).first()
+    five = graph_sketches._triangles_summary_chunked(
         spark, pairs, 5, compact_ids=True
     ).first()
-    per_edge = x5._triangles_per_edge(pairs)
+    per_edge = graph_sketches._triangles_per_edge(pairs)
     lazy = per_edge.agg(
         F.sum("tri").cast("long").alias("n_triangles"),
         F.countDistinct(F.when(F.col("tri") > 0, F.col("s"))).alias(
@@ -397,7 +403,7 @@ def test_interval_coverage_merges_overlaps(spark):
 
 
 def test_dq_expectations_all_pass_on_clean_data(spark, sf_dir):
-    rows = {r.rule: r for r in x5.q_dq_expectations(spark, sf_dir).collect()}
+    rows = {r.rule: r for r in cdc.q_dq_expectations(spark, sf_dir).collect()}
     assert len(rows) == 5
     for rule, r in rows.items():
         assert r.violations == 0, (rule, r)
@@ -409,7 +415,7 @@ def test_stream_kmv_matches_batch_sketch(spark, sf_dir):
         kmv_distinct,
     )
 
-    streamed = x5.q_stream_kmv(spark, sf_dir).first()
+    streamed = streaming.q_stream_kmv(spark, sf_dir).first()
     batch = (
         kmv_distinct(
             _events(spark, sf_dir).withColumn("g", F.lit(1)), "g", "user_id", k=64
@@ -479,7 +485,7 @@ def test_sessionizer_converts_session_local_walltime_to_epoch():
 # ---------------------------------------------------------------------------
 
 def test_audio_spectral_finds_planted_tone(spark, sf_dir):
-    rows = x5.q_audio_spectral(spark, sf_dir).collect()
+    rows = multimodal.q_audio_spectral(spark, sf_dir).collect()
     assert rows
     for r in rows:
         k = 10 + r.media_id % 50

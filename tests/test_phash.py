@@ -23,7 +23,7 @@ from azure_airbnb_cdc_ingestion_pipeline_spark.functions.phash import (
     phash_frame,
 )
 from azure_airbnb_cdc_ingestion_pipeline_spark.operators.dedup import hamming_pairs
-from azure_airbnb_cdc_ingestion_pipeline_spark.plans.extensions_r7 import (
+from azure_airbnb_cdc_ingestion_pipeline_spark.plans.multimodal import (
     _synth_base,
     _synth_family,
 )

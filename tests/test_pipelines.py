@@ -623,6 +623,145 @@ def test_stream_trigger_that_folds_keeps_sinks_exact(spark, tmp_path):
     assert r6(gold.read()) == r6(gold_booking_aggregation(fact.read(), dim))
 
 
+_SIGKILL_CHILD = """
+import sys
+
+from azure_airbnb_cdc_ingestion_pipeline_spark.pipelines import load_booking_fact_stream
+from azure_airbnb_cdc_ingestion_pipeline_spark.session import get_spark
+from azure_airbnb_cdc_ingestion_pipeline_spark.sources.tables import ParquetTable
+
+work = sys.argv[1]
+spark = get_spark("sigkill-child", shuffle_partitions=4)
+spark.sparkContext.setLogLevel("ERROR")
+load_booking_fact_stream(
+    spark, work + "/landing", ParquetTable(spark, work + "/fact"),
+    ParquetTable(spark, work + "/rej"), work + "/ckpt",
+    max_files_per_trigger=1,
+)
+"""
+
+
+def _assert_same_rows(got, want):
+    assert got.count() == want.count()
+    assert got.exceptAll(want).isEmpty()
+    assert want.exceptAll(got).isEmpty()
+
+
+def test_stream_survives_sigkill_mid_drain(spark, tmp_path):
+    """A child process drains six one-file triggers and is SIGKILLed —
+    JVM and all, no cleanup — once the fact has committed two versions.
+    Resuming from its checkpoint must leave fact and quarantine identical
+    to an uninterrupted drain of the same files: the checkpoint replays
+    the interrupted batch and the txn markers keep the sinks from
+    applying it twice."""
+    import shutil
+    import subprocess
+    import sys
+    import time
+
+    from perfbench.run import _kill_session
+
+    n_files = 6
+    work, ref = tmp_path / "killed", tmp_path / "reference"
+    write_booking_events_json(str(work / "landing"), n_files=n_files,
+                              n=600, n_keys=500, seed=17)
+    shutil.copytree(work / "landing", ref / "landing")
+    fact = ParquetTable(spark, str(work / "fact"))
+    quarantine = ParquetTable(spark, str(work / "rej"))
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g",
+               PYTHONPATH=os.pathsep.join(
+                   p for p in (repo, os.environ.get("PYTHONPATH")) if p))
+    log = open(tmp_path / "child.log", "w")
+    child = subprocess.Popen(
+        [sys.executable, "-c", _SIGKILL_CHILD, str(work)], env=env,
+        stdout=log, stderr=subprocess.STDOUT, start_new_session=True,
+    )
+    try:
+        deadline = time.time() + 90
+        while (fact.current_version() or 0) < 2:
+            assert child.poll() is None, (tmp_path / "child.log").read_text()[-2000:]
+            assert time.time() < deadline, "child never committed 2 fact versions"
+            time.sleep(0.05)
+    finally:
+        _kill_session(child.pid)
+        child.wait(timeout=30)
+        deadline = time.time() + 30
+        while _kill_session(child.pid):  # Spark's Python daemon, if any
+            assert time.time() < deadline, "child session outlived SIGKILL"
+            time.sleep(0.1)
+        log.close()
+    committed = [n for n in os.listdir(work / "ckpt" / "commits") if n.isdigit()]
+    assert len(committed) < n_files, "the kill landed after the drain ended"
+
+    load_booking_fact_stream(
+        spark, str(work / "landing"), fact, quarantine, str(work / "ckpt"),
+        max_files_per_trigger=1,
+    )
+    ref_fact = ParquetTable(spark, str(ref / "fact"))
+    ref_quarantine = ParquetTable(spark, str(ref / "rej"))
+    load_booking_fact_stream(
+        spark, str(ref / "landing"), ref_fact, ref_quarantine,
+        str(ref / "ckpt"), max_files_per_trigger=1,
+    )
+    _assert_same_rows(fact.read(), ref_fact.read())
+    _assert_same_rows(quarantine.read(), ref_quarantine.read())
+    assert quarantine.read().count() > 0
+
+
+def test_stream_continuous_trigger_keeps_sinks_exact(spark, tmp_path):
+    """The continuous ``processingTime`` trigger (``available_now=False``)
+    with incremental gold over three landed files: after
+    processAllAvailable the fact is latest-per-key, the quarantine holds
+    the bad rows and gold equals a full rebuild at 6 dp."""
+    from azure_airbnb_cdc_ingestion_pipeline_spark.operators.aggregate import (
+        gold_booking_aggregation,
+    )
+
+    landing = str(tmp_path / "feed")
+    kw = dict(n=300, n_keys=250, seed=23)
+    write_booking_events_json(landing, n_files=3, **kw)
+    events = gen_booking_events(**kw)
+    dim = spark.createDataFrame(
+        [(i, ["US", "DE", "JP"][i % 3]) for i in range(1, 101)],
+        "customer_id int, country string",
+    )
+    fact = ParquetTable(spark, str(tmp_path / "wh/fact"))
+    quarantine = ParquetTable(spark, str(tmp_path / "wh/rej"))
+    gold = ParquetTable(spark, str(tmp_path / "wh/gold"))
+    q = load_booking_fact_stream(
+        spark, landing, fact, quarantine, str(tmp_path / "ckpt"),
+        dim=dim, gold=gold, available_now=False, processing_time="1 second",
+        incremental_gold=True, max_files_per_trigger=1,
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    good = [e for e in events if e["check_out_date"] >= e["check_in_date"]]
+    want_fact = {e["booking_id"]: e["amount"] for e in good}  # ts is monotone
+    got = fact.read().select("booking_id", "amount").collect()
+    assert {r.booking_id: r.amount for r in got} == want_fact
+    assert len(got) == len(want_fact)
+    want_bad = sorted(
+        e["id"] for e in events if e["check_out_date"] < e["check_in_date"]
+    )
+    assert want_bad
+    assert sorted(r.id for r in quarantine.read().collect()) == want_bad
+
+    def r6(df):
+        return sorted(
+            (r.country, r.total_bookings, r.last_booking_date, r.total_amount)
+            for r in df.select(
+                "country", "total_bookings", "last_booking_date",
+                F.round("total_amount", 6).alias("total_amount"),
+            ).collect()
+        )
+
+    assert r6(gold.read()) == r6(gold_booking_aggregation(fact.read(), dim))
+
+
 # ---------------------------------------------------------------------------
 # r6: expectation suite as the streaming publish gate (VERDICT r5 #7)
 # ---------------------------------------------------------------------------
@@ -840,25 +979,46 @@ def test_scd2_gate_quarantine_versions_clean_rows(spark, tmp_path):
     assert hist.filter((F.col("k") == 1) & F.col("is_current")).collect()[0].seg == "SEG_X"
 
 
-def test_scd2_quarantine_wiring_validated_upfront(spark, tmp_path):
+@pytest.mark.parametrize("entry", [
+    "process_booking_batch", "load_booking_fact_stream",
+    "process_scd2_batch", "load_dim_scd2_stream",
+])
+def test_scd2_quarantine_wiring_validated_upfront(spark, tmp_path, entry):
+    """dq_on_breach='quarantine' without a dq_quarantine table is a wiring
+    error: every gated entry raises ValueError before it writes anything,
+    even on a batch that would pass the gate."""
+    from azure_airbnb_cdc_ingestion_pipeline_spark.pipelines.load_booking_fact import (
+        booking_expectations, process_booking_batch,
+    )
     from azure_airbnb_cdc_ingestion_pipeline_spark.pipelines.load_dim_scd2 import (
         load_dim_scd2_stream, process_scd2_batch,
     )
+    from azure_airbnb_cdc_ingestion_pipeline_spark.schemas import BOOKING_DOC_SCHEMA
 
-    batch = _scd2_wave(spark, [(1, "SEG_X", "2024-02-01")])
+    landing = str(tmp_path / "feed")
+    write_booking_events_json(landing, n_files=1, n=40, n_keys=40)
+    wave = _scd2_wave(spark, [(1, "SEG_X", "2024-02-01")])
     dim = ParquetTable(spark, str(tmp_path / "wh/dim"))
+    fact = ParquetTable(spark, str(tmp_path / "wh/fact"))
+    quar = ParquetTable(spark, str(tmp_path / "wh/rej"))
+    ckpt = str(tmp_path / "ckpt")
+    booking = dict(dq_rules=booking_expectations(), dq_on_breach="quarantine")
+    scd2 = dict(keys=["k"], attr_cols=["seg"], initial_history=_scd2_hist0(spark),
+                dq_rules=_scd2_rules(), dq_on_breach="quarantine")
+    calls = {
+        "process_booking_batch": lambda: process_booking_batch(
+            spark.read.schema(BOOKING_DOC_SCHEMA).json(landing), fact, quar,
+            **booking),
+        "load_booking_fact_stream": lambda: load_booking_fact_stream(
+            spark, landing, fact, quar, ckpt, **booking),
+        "process_scd2_batch": lambda: process_scd2_batch(wave, dim, **scd2),
+        "load_dim_scd2_stream": lambda: load_dim_scd2_stream(
+            _scd2_file_stream(spark, tmp_path, [wave]), dim,
+            checkpoint_dir=ckpt, **scd2),
+    }
     with pytest.raises(ValueError, match="dq_quarantine"):
-        process_scd2_batch(
-            batch, dim, keys=["k"], attr_cols=["seg"],
-            dq_rules=_scd2_rules(), dq_on_breach="quarantine",
-        )
-    with pytest.raises(ValueError, match="dq_quarantine"):
-        load_dim_scd2_stream(
-            _scd2_file_stream(spark, tmp_path, [batch]), dim,
-            keys=["k"], attr_cols=["seg"],
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            dq_rules=_scd2_rules(), dq_on_breach="quarantine",
-        )
+        calls[entry]()
+    assert not (fact.exists() or quar.exists() or dim.exists())
 
 
 def test_scd2_unseeded_dim_fails_loud(spark, tmp_path):

@@ -240,7 +240,7 @@ def test_doulion_driver_vs_distributed_parity(spark):
     # r10: the driver wedge-closure kernel must reproduce the
     # distributed adjacency-intersect tally exactly (same sampled set,
     # same integer count) — compare both paths at sf0.001
-    import azure_airbnb_cdc_ingestion_pipeline_spark.plans.extensions_r6 as R6
+    import azure_airbnb_cdc_ingestion_pipeline_spark.plans.graph_sketches as R6
 
     sf = "/root/testdata/sf0.001"
     fast = R6.q_graph_triangle_doulion(spark, sf).collect()[0]
