@@ -195,6 +195,43 @@ def minhash_signatures(
     )
 
 
+#: Block rows past which `_block_self_join` runs the stacked
+#: single-exchange shape (r11). Below it the planner's broadcast of the
+#: tiny exploded side is strictly cheaper than any exchange (sf0.1 A/B:
+#: forcing the stacked layout cost +0.5 s on simhash and phash).
+_STACKED_JOIN_ROWS = 2_000_000
+
+
+def _block_self_join(blocked: DataFrame, keys: list[str], n_rows: int) -> DataFrame:
+    """Self-join of an exploded block frame on its block ``keys`` — the
+    candidate join of `minhash_lsh_pairs` (band keys) and `hamming_pairs`
+    (combination keys). Every non-key column ``c`` comes out twice, as
+    ``a_c`` and ``b_c``, for each pair with a_id < b_id sharing a block
+    (a pair sharing m blocks appears m times).
+
+    ``n_rows`` (the caller's block-row count) picks the shape. Past
+    `_STACKED_JOIN_ROWS` the block stream is repartitioned ONCE by the
+    keys: both alias sides of the self-join share that one exchange
+    (ReusedExchange) and the shuffle_hash hint keeps the join sort-free
+    on the already-clustered stream. The r10 shape planned the explode
+    once PER SIDE — at sf10 the planner then broadcast one 10 M-row
+    exploded side (a ~7 s single-threaded driver relation build: sf10
+    simhash 18.5 → 12.7 s stacked), and at sf100 it exchanged the 100
+    M-row stream twice. Below the gate the small shape keeps the r10
+    plan."""
+    stacked = n_rows > _STACKED_JOIN_ROWS
+    if stacked:
+        blocked = blocked.repartition(*keys)
+    cols = [c for c in blocked.columns if c not in keys]
+    a, b = (
+        blocked.select(*keys, *[F.col(c).alias(f"{s}_{c}") for c in cols])
+        for s in "ab"
+    )
+    if stacked:
+        b = b.hint("shuffle_hash")
+    return a.join(b, keys).filter(F.col("a_id") < F.col("b_id"))
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -243,27 +280,8 @@ def minhash_lsh_pairs(
     buckets = sig.select(
         "id", F.explode(band_structs).alias("bk")
     ).select("id", "bk.band", "bk.bh")
-    # r11 (VERDICT task #5 — the wrap's stacked-key trick applied to the
-    # banded self-join), size-gated like hamming_pairs: past ~2 M band
-    # rows, explode the band keys ONCE and repartition the single stream
-    # by (band, bh); both alias sides of the self-join then share that
-    # one exchange (ReusedExchange) and the shuffle_hash hint keeps the
-    # join sort-free on the already-clustered stream. The r10 shape
-    # planned the explode once PER SIDE — two sig-cache re-reads and two
-    # full band-stream exchanges at scale. Below the gate the planner's
-    # broadcast of the tiny exploded side stays cheaper than an
-    # exchange, so the small shape keeps the r10 plan.
-    hint = None
-    if n_docs * bands > 2_000_000:
-        buckets = buckets.repartition("band", "bh")
-        hint = "shuffle_hash"
-    a = buckets.select(F.col("id").alias("a_id"), "band", "bh")
-    b = buckets.select(F.col("id").alias("b_id"), "band", "bh")
-    if hint:
-        b = b.hint(hint)
     cand = (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("a_id") < F.col("b_id"))
+        _block_self_join(buckets, ["band", "bh"], n_docs * bands)
         .select("a_id", "b_id")
         .dropDuplicates(["a_id", "b_id"])
     )
@@ -314,8 +332,10 @@ def _cluster_pairs_driver(sym: DataFrame, n_sym: int) -> DataFrame:
     """Exact connected components on the driver for bounded pair lists:
     numpy min-label pointer-jumping over the symmetrized edge set —
     the same min-id-per-component fixpoint as the distributed loop
-    (parity-pinned in tests/test_dedup.py), one collect + one
-    createDataFrame instead of O(rounds) join/checkpoint jobs."""
+    (parity-pinned in
+    tests/test_extensions.py::test_cluster_pairs_driver_vs_distributed_parity),
+    one collect + one createDataFrame instead of O(rounds)
+    join/checkpoint jobs."""
     import numpy as np
     import pandas as pd
 
@@ -572,18 +592,15 @@ def simhash_pairs(
       corpus construction). 20 exploded rows/doc instead of 4 — the
       constant the collision-free join buys.
 
-    The cutover is internal: both schemes generate a candidate superset
-    and the exact Hamming filter decides membership, so results are
-    IDENTICAL — the oracle never sees the scheme."""
+    The cutover is `hamming_pairs`' size-gated default (``scheme``
+    overrides it): both schemes generate a candidate superset and the
+    exact Hamming filter decides membership, so results are IDENTICAL —
+    the oracle never sees the scheme."""
     from ..session import track_persist
 
     sh = track_persist(
         simhash(df, id_col, text_col, num_bits=num_bits, hasher=hasher)
     )
-    if scheme is None and (sh.count() <= 30_000 or max_distance > 3):
-        scheme = (max_distance + 1, 1)
-    elif scheme is None:
-        scheme = (6, 3)
     return hamming_pairs(
         sh, "id", "simhash", max_distance=max_distance, num_bits=num_bits,
         scheme=scheme,
@@ -617,11 +634,10 @@ def hamming_pairs(
     Hamming filter)."""
     import itertools
 
-    n = fps.count()  # cheap: callers persist fps; also gates the layout
-    if scheme is not None:
-        c, g = scheme
-    else:
-        c, g = (max_distance + 1, 1) if n <= 30_000 else (max_distance + 3, 3)
+    n = fps.count()  # cheap: callers persist fps; sizes scheme and join
+    c, g = scheme or (
+        (max_distance + 1, 1) if n <= 30_000 else (max_distance + 3, 3)
+    )
     if c - max_distance < g:
         raise ValueError(
             f"blocking scheme ({c},{g}) cannot guarantee Hamming <= {max_distance}"
@@ -659,41 +675,20 @@ def hamming_pairs(
         )
     chunks = F.expr("array(" + ", ".join(structs) + ")")
     blocked = sh.select("id", "__fp", F.explode(chunks).alias("c")).select(
-        "id", "__fp", "c.ci", "c.cv"
+        "id", F.col("__fp").alias("fp"), "c.ci", "c.cv"
     )
-    # r11 (stacked single-exchange block join, as minhash_lsh_pairs),
-    # size-gated: past ~2 M blocked rows, explode the combo keys ONCE
-    # and repartition the single stream by (ci, cv) — both alias sides
-    # of the self-join share that one exchange (ReusedExchange) and
-    # shuffle_hash keeps it sort-free. The r10 shape exploded per side;
-    # at sf10 the planner then broadcast one 10 M-row exploded side (a
-    # ~7 s single-threaded driver relation build: sf10 simhash 18.5 →
-    # 12.7 s stacked), and at sf100 it exchanged the 100 M-row stream
-    # twice. BELOW the gate the planner's broadcast of the tiny
-    # exploded side is strictly cheaper than any exchange (sf0.1 A/B:
-    # forcing the stacked layout cost +0.5 s on simhash and phash), so
-    # the small shape keeps the r10 plan.
-    join_hint = None
-    if n * len(combos) > 2_000_000:
-        blocked = blocked.repartition("ci", "cv")
-        join_hint = "shuffle_hash"
-    a = blocked.select(
-        F.col("id").alias("a_id"), F.col("__fp").alias("fa"), "ci", "cv"
-    )
-    b = blocked.select(
-        F.col("id").alias("b_id"), F.col("__fp").alias("fb"), "ci", "cv"
-    )
-    if join_hint:
-        b = b.hint(join_hint)
     # Hamming filter BEFORE the pair-dedup shuffle: a pair agreeing on m
     # chunks surfaces m times from the block join, but only pairs inside
     # the distance budget need the dropDuplicates exchange — filtering
     # first keeps that shuffle proportional to true near-dups, not to all
     # block-join candidates.
     return (
-        a.join(b, ["ci", "cv"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id", F.bit_count(F.col("fa").bitwiseXOR(F.col("fb"))).alias("hamming"))
+        _block_self_join(blocked, ["ci", "cv"], n * len(combos))
+        .select(
+            "a_id",
+            "b_id",
+            F.bit_count(F.col("a_fp").bitwiseXOR(F.col("b_fp"))).alias("hamming"),
+        )
         .filter(F.col("hamming") <= max_distance)
         .dropDuplicates(["a_id", "b_id"])
     )

@@ -90,6 +90,35 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def _round_half_up(x, decimals: int):
+    """numpy HALF_UP rounding — the convention of Spark's F.round and the
+    DuckDB oracle's round(), so the Arrow kernels agree with the JVM paths
+    on every 5e-(decimals+1) boundary (np.round is half-to-even)."""
+    import numpy as np
+
+    scale = float(10**decimals)
+    return np.sign(x) * np.floor(np.abs(x) * scale + 0.5) / scale
+
+
+def _rank_neighbors(scored: DataFrame, query_id: str, k: int) -> DataFrame:
+    """The ranking tail every top-k kernel shares: keep k neighbors per
+    query by (cos desc, neighbor_id asc — deterministic ties). ``scored``
+    is (query_id, neighbor_id, cos); returns (query_id, neighbor_id, cos,
+    rank)."""
+    from .windows import topk_per_group
+
+    ranked = topk_per_group(
+        scored,
+        [query_id],
+        # cos desc; -neighbor_id desc == neighbor_id asc
+        [F.col("cos"), -F.col("neighbor_id")],
+        k=k,
+        descending=True,
+        keep_rank=True,
+    )
+    return ranked.select(query_id, "neighbor_id", "cos", F.col("rn").alias("rank"))
+
+
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -107,8 +136,6 @@ def brute_force_topk(
     Returns (query_id, neighbor_id, cos, rank). Deterministic tie-break on
     neighbor id.
     """
-    from .windows import topk_per_group
-
     from ..session import fan_out
 
     corpus = fan_out(corpus)  # tiny-file guard: per-element cosine kernel
@@ -120,16 +147,7 @@ def brute_force_topk(
         F.col(corpus_id).alias("neighbor_id"),
         F.round(cosine(F.col(query_vec), F.col(corpus_vec)), 4).alias("cos"),
     )
-    ranked = topk_per_group(
-        scored,
-        [query_id],
-        # cos desc; -neighbor_id desc == neighbor_id asc (deterministic ties)
-        [F.col("cos"), -F.col("neighbor_id")],
-        k=k,
-        descending=True,
-        keep_rank=True,
-    )
-    return ranked.select(query_id, "neighbor_id", "cos", F.col("rn").alias("rank"))
+    return _rank_neighbors(scored, query_id, k)
 
 
 def normalized(
@@ -189,7 +207,7 @@ def _adaptive_lsh_params(
     max_tables: int = 160,
     threshold: float = 0.95,
     on_budget_exceeded: str = "raise",
-) -> tuple[int, int]:
+) -> tuple[int, int, int | None]:
     """Corpus-proportional LSH sizing: with a FIXED plane count the bucket
     grid is constant, so expected bucket occupancy grows ∝ n and the
     within-bucket candidate join grows ∝ n² — measured superlinear at
@@ -238,10 +256,10 @@ def _adaptive_lsh_params(
     r7 (closes the r6 weak mark): the guarantee point now DEFAULTS to the
     caller's verification `threshold` — the advertised contract and the
     sizing contract are the same number. `recall_at` remains as an
-    explicit opt-DOWN for callers that only care about the near-dup
-    regime (cos ≥ 0.999) and want the ~10× smaller table budget; it is
-    no longer the silent default, so pairs in [threshold, 0.999) can no
-    longer be lost without the caller having asked for that trade.
+    explicit opt-DOWN to the near-dup regime (cos ≥ 0.999, the ~10×
+    smaller table budget) — the LSH operators reach it only through
+    ``on_budget_exceeded="degrade"`` — so pairs in [threshold, 0.999)
+    can never be lost without the caller having asked for that trade.
     Sizing is closed-form and fully provable (no probe-credit or
     data-dependent heuristics): smallest T with
     (1 − (1 − θ/π)^planes)^T ≤ 1e-4 at θ = acos(guarantee point).
@@ -307,9 +325,9 @@ def _adaptive_lsh_params(
                 f"adaptive LSH: meeting the 1e-4 miss budget at "
                 f"cos>={guarantee} with {planes} planes needs {tables} "
                 f"tables (> max_tables={max_tables}). Raise max_tables to "
-                f"pay the cost explicitly, or pass recall_at=0.999 to size "
-                f"for the near-dup regime only (documented best-effort "
-                f"below it)."
+                f"pay the cost explicitly, or size for the near-dup regime "
+                f"only (recall_at=0.999; on_budget_exceeded='degrade' on "
+                f"the LSH operators), documented best-effort below it."
             )
         return tables
 
@@ -330,141 +348,179 @@ def _bucketize(bucket: Column, nbuckets: int | None) -> Column:
     return F.pmod(F.xxhash64(bucket), F.lit(nbuckets))
 
 
+#: Base grid of the LSH pair operators — hyperplanes per table and the
+#: table floor — before `_adaptive_lsh_params` sizes it to the corpus.
+_LSH_PLANES, _LSH_TABLES = 8, 4
+
+#: Broadcast-verify budget of `cosine_pairs_lsh`, in MB: while the n × dim
+#: unit matrix (8 B/element) fits it, verification gathers from one
+#: broadcast copy; past it the inline-carry plan runs. 2048 MB ≈ 4 M
+#: vectors at dim 64. The session's spark.driver.maxResultSize caps it.
+_LSH_BCAST_MB = 2048
+
+
+def _rows_and_dim(vecs: DataFrame, *others: DataFrame) -> tuple[int, int | None]:
+    """Row count of ``vecs`` and the one vector length of ``vecs`` and
+    ``others`` (each with a ``v`` array column), from ONE job. Raises
+    ValueError on vectors of mixed lengths; the length is None when every
+    frame is empty."""
+    sized = vecs.select(F.lit(1).alias("c"), F.size("v").alias("d"))
+    for o in others:
+        sized = sized.unionByName(
+            o.select(F.lit(0).alias("c"), F.size("v").alias("d"))
+        )
+    n, lo, hi = sized.agg(F.sum("c"), F.min("d"), F.max("d")).first()
+    if lo != hi:
+        raise ValueError(f"LSH: vectors of mixed lengths ({lo} to {hi})")
+    return n or 0, lo
+
+
+def _lsh_buckets(
+    vecs: DataFrame,
+    out_id: str,
+    dim: int,
+    grid: tuple[int, int, int | None],
+    with_unit: bool = False,
+) -> DataFrame:
+    """The LSH sign-bucket kernel of `cosine_pairs_lsh` and
+    `cross_cosine_lsh`: one row per (vector, table) — (out_id, [unit,]
+    tbl, bucket).
+
+    ``vecs`` is (id, v); ``grid`` is `_adaptive_lsh_params`' (planes,
+    tables, nbuckets). Table t's hyperplanes are `_hyperplanes(dim,
+    planes, seed=0xA11CE + 7919·t)`; bit i of its sign bucket is
+    ⟨unit(v), plane_i⟩ ≥ 0, and `_bucketize` folds the sign bucket into
+    nbuckets. All tables' sign bits come from ONE (rows × dim) @ (dim ×
+    tables·planes) matmul per Arrow batch (r5): the unrolled JVM
+    formulation evaluated tables × planes × dim multiply-adds as Catalyst
+    expressions per row — 83 s for 207 k rows at 15 planes × 8 tables
+    (sf10), a codegen-size cliff. ``with_unit`` also emits the unit
+    vectors (the inline-carry verify needs them); otherwise only ids and
+    bucket arrays leave the Arrow stage (r11: boxing ~544 B/row of unit
+    vectors the next select dropped cost the sf10 bucketize stage
+    9.5 → 6.7 s)."""
+    import numpy as np
+    import pandas as pd
+
+    planes, tables, nbuckets = grid
+    proj = np.concatenate(
+        [
+            np.asarray(
+                _hyperplanes(dim, planes, seed=0xA11CE + t * 7919),
+                dtype=np.float64,
+            ).T
+            for t in range(tables)
+        ],
+        axis=1,
+    )  # dim × (tables·planes)
+    weights = (1 << np.arange(planes, dtype=np.int64)).astype(np.float64)
+
+    def _gemm(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            U = unit_rows(np.vstack(pdf["v"].to_numpy()))
+            signs = (U @ proj >= 0).astype(np.float64)
+            bks = (signs.reshape(len(U), tables, planes) @ weights).astype(np.int64)
+            out = {out_id: pdf["id"], "bks": list(bks)}
+            if with_unit:
+                out["unit"] = list(U)
+            yield pd.DataFrame(out)
+
+    unit = ["unit"] if with_unit else []
+    schema = (
+        f"{out_id} long, unit array<double>, bks array<long>"
+        if with_unit
+        else f"{out_id} long, bks array<long>"
+    )
+    return (
+        vecs.mapInPandas(_gemm, schema)
+        .select(out_id, *unit, F.posexplode("bks").alias("tbl", "sign_bucket"))
+        .select(
+            out_id,
+            *unit,
+            "tbl",
+            _bucketize(F.col("sign_bucket"), nbuckets).alias("bucket"),
+        )
+    )
+
+
 def cosine_pairs_lsh(
     vectors: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    dim: int = 64,
-    num_planes: int = 8,
-    num_tables: int = 4,
-    adaptive: bool = True,
-    recall_at: float | None = None,
     on_budget_exceeded: str = "raise",
 ) -> DataFrame:
     """Embedding near-dup at scale: LSH-blocked candidate generation +
     exact-cosine verification — the registered replacement for the
     all-pairs `cosine_pairs` baseline (kept as the test oracle kernel).
 
-    `threshold` is the exact-verification cut AND (r7) the default
-    recall-guarantee point: adaptive sizing meets the ≤1e-4 miss budget
-    at the advertised threshold, not just in the near-dup regime.
-    `recall_at` is an explicit opt-down (e.g. 0.999) for callers that
-    accept best-effort recall below it in exchange for ~10× fewer
-    tables — see `_adaptive_lsh_params`.
+    `threshold` is the exact-verification cut AND (r7) the
+    recall-guarantee point: `_adaptive_lsh_params` sizes the grid (from
+    8 planes × 4 tables) to meet the ≤1e-4 miss budget at the advertised
+    threshold, not just in the near-dup regime. With
+    ``on_budget_exceeded="degrade"`` a corpus past the sizer's
+    `max_tables` envelope falls back to the near-dup guarantee point
+    (cos ≥ 0.999) with a RuntimeWarning instead of raising. The vector
+    length is read from the data; mixed lengths raise ValueError.
 
-    Each of `num_tables` hash tables assigns every vector a bucket id from
-    the sign bits of `num_planes` fixed hyperplane projections (different
-    deterministic seed per table); candidate pairs share a bucket in ANY
-    table. Verification computes the exact dot on pre-normalized vectors,
-    so the output has NO false positives — only recall is probabilistic.
-    For a pair at angle θ the miss probability is
-    (1 − (1 − θ/π)^planes)^tables: at cosine ≥ 0.95 (θ/π ≤ 0.102) with
-    8×4 it is ≤ 0.15; at the near-dup regime this operator targets
-    (cos ≥ 0.999, θ/π ≈ 0.01) it is ≤ 1e-4 — and the fixed hash family
-    makes the result deterministic run-to-run.
+    Each hash table assigns every vector a bucket id from the sign bits
+    of its fixed hyperplane projections (different deterministic seed per
+    table — `_lsh_buckets`); candidate pairs share a bucket in ANY table.
+    Verification computes the exact dot on unit vectors, so the output
+    has NO false positives — only recall is probabilistic: a pair at
+    angle θ is missed with probability (1 − (1 − θ/π)^planes)^tables, and
+    the fixed hash family makes the result deterministic run-to-run.
 
-    Scale: bucketing is a map-only pass (num_tables × num_planes dot
-    products per row); the self-join is keyed on (table, bucket), so the
-    pair count is bucket-occupancy-bounded — never the O(n²) triangular
-    product. Tune num_planes to corpus density (more planes → smaller
-    buckets → fewer candidates, lower recall per table; add tables to
-    recover recall).
+    Scale: bucketing is a map-only pass; pairs form only within a
+    (table, bucket) group, so the pair count is bucket-occupancy-bounded
+    — never the O(n²) triangular product.
     """
+    import numpy as np
+    import pandas as pd
+
     from ..session import fan_out
 
     # r5: NO persisted unit frame. Caching an array<double>(64) column
     # through Spark's columnar in-memory store costs ~3.5 µs/element —
     # 46 s for 207 k × 64 at sf10, dominating the whole query (the
     # candidate work after Poissonized bucketing is ~5 s). Instead the
-    # GEMM stage normalizes in numpy (free against the matmul) and the
-    # candidate join is an alias self-join over ONE exploded frame, so
-    # the shuffled exchange is computed once and reused for the other
-    # side. The corpus count for adaptive sizing reads the raw frame —
-    # a cheap count-only scan.
+    # GEMM stage normalizes in numpy (free against the matmul). The row
+    # count and vector length for sizing read the raw frame in one scan.
     src = fan_out(vectors).select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
     )
-    n = src.count()  # also feeds the verify-path dispatch below
-    nbuckets = None
-    if adaptive:
-        num_planes, num_tables, nbuckets = _adaptive_lsh_params(
-            n, num_planes, num_tables, recall_at=recall_at,
-            threshold=threshold, on_budget_exceeded=on_budget_exceeded,
+    n, dim = _rows_and_dim(src)  # n also feeds the verify-path dispatch
+    if dim is None:
+        return src.sparkSession.createDataFrame(
+            [], "a_id long, b_id long, cos double"
         )
-    # All tables' sign buckets in ONE Arrow GEMM pass (r5): the unrolled
-    # JVM formulation evaluated tables × planes × dim multiply-adds as
-    # Catalyst expressions per row — measured 83 s for 207 k rows at
-    # planes=15/tables=8 (sf10), a codegen-size cliff vs 1.2 s at
-    # 12/6 (sf1). One (rows × dim) @ (dim × tables·planes) matmul per
-    # Arrow batch computes identical sign bits in ~ms. Vectors ride
-    # through the stage so the candidate join needs no re-attach.
-    import numpy as np
-    import pandas as pd
+    grid = _adaptive_lsh_params(
+        n, _LSH_PLANES, _LSH_TABLES,
+        threshold=threshold, on_budget_exceeded=on_budget_exceeded,
+    )
 
-    mats = [
-        np.asarray(
-            _hyperplanes(dim, num_planes, seed=0xA11CE + t * 7919),
-            dtype=np.float64,
-        ).T
-        for t in range(num_tables)
-    ]
-    proj = np.concatenate(mats, axis=1)  # dim x (tables*planes)
-    weights = (1 << np.arange(num_planes, dtype=np.int64)).astype(np.float64)
-    n_tables = num_tables
-
-    def _gemm_buckets(batches, with_unit: bool = True):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            U = unit_rows(np.vstack(pdf["v"].to_numpy()))
-            signs = (U @ proj >= 0).astype(np.float64)
-            cols = [
-                (signs[:, t * num_planes : (t + 1) * num_planes] @ weights).astype(
-                    np.int64
-                )
-                for t in range(n_tables)
-            ]
-            B = np.stack(cols, axis=1)
-            if with_unit:
-                yield pd.DataFrame(
-                    {"id": pdf["id"], "unit": list(U), "bks": list(B)}
-                )
-            else:
-                yield pd.DataFrame({"id": pdf["id"], "bks": list(B)})
-
-    # r7 verify-path dispatch: with the recall guarantee now sized at the
+    # r7 verify-path dispatch: with the recall guarantee sized at the
     # caller's THRESHOLD, the table budget is ~17 (identity regime) to
     # ~143 (sf100 grid) — carrying the 544 B unit vector on every
     # (row × table) bucket row would shuffle ~150 GB at 2 M vectors. When
-    # the full unit matrix fits a broadcast budget (n·dim·8 bytes ≤
-    # SPARK_GRAFT_LSH_BCAST_MB, default 512 MB ≈ 1 M vectors at dim 64),
-    # the candidate plan goes SKINNY (24 B rows: id, tbl, bucket),
-    # verification is a gather-GEMM mapInPandas against the broadcast
-    # matrix fused NARROWLY onto the join output (r8: dedup runs AFTER
-    # the exact-cos filter — see the candidate-join comment below), and
-    # the pair-keyed dedup shuffle carries only true pairs — total
-    # shuffle ~n·T·24 B + true-pairs·24 B, an ~8× cut. Beyond
-    # the budget (unbounded n — the true 100 TB regime, where a matrix
-    # broadcast to 1000 executors is the wrong trade) the plan falls back
-    # to the r5 inline-carry join below, which stays linear in n with a
-    # T·544 B/row constant and needs no driver materialization. The two
-    # paths emit the same pair set (same hash family, same exact verify);
-    # the oracle-gated catalog keys run the broadcast path at every SF,
-    # the scale bench exercises both sides of the gate.
-    import os
-
-    # r8: default budget 512 → 2048 MB (≈ 4M vectors at dim 64). The
-    # sf100 recall ladder showed the regimes must line up with the
-    # adaptive sizer: at the at-threshold table count (T ≈ 160 at 2M
-    # vectors) the inline-carry fallback shuffles n·T·544 B (~190 GB at
-    # sf100 — undriveable), while the broadcast matrix is just 1.1 GB —
-    # cheap on any executor profile. Beyond ~4M vectors the at-threshold
-    # guarantee hits max_tables anyway (the documented cliff), and the
-    # recall_at=0.999 degrade regime (T ≈ 7–9) is exactly where
-    # inline-carry's per-row constant becomes viable again — so the two
-    # gates now switch paths in the same neighborhood by design.
-    budget_mb = float(os.environ.get("SPARK_GRAFT_LSH_BCAST_MB", "2048"))
+    # the full unit matrix fits `_LSH_BCAST_MB`, the candidate plan goes
+    # SKINNY (24 B rows: id, tbl, bucket) and verification gathers from
+    # the broadcast matrix — total shuffle ~n·T·24 B + true-pairs·24 B,
+    # an ~8× cut. Beyond the budget (unbounded n — the true 100 TB
+    # regime, where a matrix broadcast to 1000 executors is the wrong
+    # trade) the plan falls back to the r5 inline-carry join, which stays
+    # linear in n with a T·544 B/row constant and needs no driver
+    # materialization. r8 set the budget to 2048 MB so the regimes line
+    # up with the adaptive sizer: at the at-threshold table count (T ≈
+    # 160 at 2M vectors) inline-carry shuffles n·T·544 B (~190 GB at
+    # sf100) while the broadcast matrix is 1.1 GB; beyond ~4M vectors the
+    # at-threshold guarantee hits max_tables anyway, and the degrade
+    # regime (T ≈ 7–9) is where inline-carry's per-row constant is viable
+    # again. Both paths emit the same pair set (same hash family, same
+    # exact verify, same HALF_UP rounding).
+    budget_mb = float(_LSH_BCAST_MB)
     # the matrix rides ONE driver collect — cap the gate at ~80% of the
     # session's effective maxResultSize so a foreign session (stock 1g)
     # degrades to the inline plan instead of crashing mid-collect
@@ -475,194 +531,152 @@ def cosine_pairs_lsh(
         if mrs not in ("0", "0b"):  # 0 = unlimited
             budget_mb = min(budget_mb, 0.8 * _parse_memory(mrs))
     except Exception:
-        pass  # unparseable → trust the env budget
-    if n * dim * 8 <= budget_mb * (1 << 20):
-        # r11: the broadcast-verify path never reads the `unit` column
-        # of the bucketize pass (exact vectors come from the broadcast
-        # matrix) — but the r10 kernel still normalized, boxed (list of
-        # 64-double rows → pandas object column) and shipped ~544 B/row
-        # of unit vectors back through Arrow, only for the next select
-        # to drop them. Emit (id, bks) only: sf10 bucketize stage
-        # 9.5 → 6.7 s (wall 23.1 → 20.0 s).
-        bucketed = src.mapInPandas(
-            lambda it: _gemm_buckets(it, with_unit=False),
-            "id long, bks array<long>",
-        )
-        # r10 (verdict task #2): the candidate JOIN is gone. The r8 plan
-        # shuffled the skinny rows once, then materialized every
-        # candidate pair as a JVM row (~1.4 B at the 2 M-vector /
-        # 160-table grid), fed them through Arrow into the verify
-        # kernel, and paid per-pair gather+einsum — join-probe output,
-        # row materialization, and Arrow transfer of the candidate
-        # stream dominated the sf100 wall (330 s, round-9 task audit). Pair
-        # formation is now fused INTO the partition kernel: the one
-        # skinny exchange clusters each (tbl, bucket) into a partition,
-        # and a mapInPandas pass groups rows by bucket in numpy and
-        # forms each bucket's pairs as a blocked Gram matrix (X Xᵀ)
-        # against the broadcast unit matrix — candidates never exist as
-        # rows anywhere; only verified true pairs are emitted. Same
-        # hash family, same exact verify, same HALF_UP rounding ⇒ same
-        # pair set as the join formulation.
-        n_skinny = n * num_tables
-        p_skinny = int(min(2048, max(32, n_skinny // 1_500_000)))
-        skinny = (
-            bucketed.select(
-                "id", F.posexplode("bks").alias("tbl", "sign_bucket")
+        pass  # unparseable → trust the module budget
+    if n * dim * 8 > budget_mb * (1 << 20):
+        # Inline-carry: verify IN the bucket join, THEN dedup (r5) — the
+        # exact dot kills non-pairs before any pair-keyed exchange, so the
+        # dropDuplicates input is just the true pairs × table-duplication.
+        # The alias self-join keeps both sides the same physical subtree,
+        # so Spark computes the exploded exchange once and replays it
+        # (ReusedExchange) for the other side.
+        buckets = _lsh_buckets(src, "id", dim, grid, with_unit=True)
+        a, b = buckets.alias("A"), buckets.alias("B")
+        return (
+            a.join(
+                b,
+                (F.col("A.tbl") == F.col("B.tbl"))
+                & (F.col("A.bucket") == F.col("B.bucket"))
+                & (F.col("A.id") < F.col("B.id")),
             )
             .select(
-                "id", "tbl",
-                _bucketize(F.col("sign_bucket"), nbuckets).alias("bucket"),
+                F.col("A.id").alias("a_id"),
+                F.col("B.id").alias("b_id"),
+                F.round(dot(F.col("A.unit"), F.col("B.unit")), 4).alias("cos"),
             )
-            .repartition(p_skinny, "tbl", "bucket")
+            .filter(F.col("cos") >= threshold)
+            .dropDuplicates(["a_id", "b_id"])
         )
-        # driver materialization is bounded by the budget gate above
-        tbl = src.toArrow()
-        ids = np.asarray(tbl.column("id").combine_chunks(), dtype=np.int64)
-        flat = tbl.column("v").combine_chunks().flatten()
-        V = np.asarray(flat, dtype=np.float64).reshape(len(ids), -1)
-        order = np.argsort(ids, kind="stable")
-        bc = src.sparkSession.sparkContext.broadcast(
-            (ids[order], unit_rows(V)[order])
+
+    # r10: broadcast verify with NO candidate join. The r8 plan
+    # materialized every candidate pair as a JVM row (~1.4 B at the 2 M-
+    # vector / 160-table grid) and fed them through Arrow — join-probe
+    # output, row materialization and Arrow transfer dominated the sf100
+    # wall (330 s). Pair formation is fused INTO the partition kernel:
+    # the one skinny exchange clusters each (tbl, bucket) into a
+    # partition, and a mapInPandas pass groups rows by bucket in numpy
+    # and forms each bucket's pairs as a blocked Gram matrix (X Xᵀ)
+    # against the broadcast unit matrix — candidates never exist as rows;
+    # only verified true pairs are emitted.
+    p_skinny = int(min(2048, max(32, n * grid[1] // 1_500_000)))
+    skinny = _lsh_buckets(src, "id", dim, grid).repartition(
+        p_skinny, "tbl", "bucket"
+    )
+    # driver materialization is bounded by the budget gate above
+    tbl = src.toArrow()
+    ids = np.asarray(tbl.column("id").combine_chunks(), dtype=np.int64)
+    flat = tbl.column("v").combine_chunks().flatten()
+    V = np.asarray(flat, dtype=np.float64).reshape(len(ids), -1)
+    order = np.argsort(ids, kind="stable")
+    bc = src.sparkSession.sparkContext.broadcast(
+        (ids[order], unit_rows(V)[order])
+    )
+    thr = threshold
+    # per-class GEMM tiles are capped so the gathered (nb, c, dim)
+    # stack and its (nb, c, c) Gram block stay ~tens of MB per call
+    gemm_budget = 8 << 20  # doubles per tile ≈ 64 MB
+
+    def _pair_gemm(batches):
+        ids_s, Um = bc.value
+        d = Um.shape[1]
+        # Buffer the whole partition: the repartition clusters every
+        # (tbl, bucket) group into exactly one partition, but Arrow
+        # batch boundaries split groups mid-bucket — pair formation
+        # needs the full group. ~1.5 M skinny rows ≈ 40 MB buffered.
+        parts = [p for p in batches if len(p)]
+        if not parts:
+            return
+        rid = np.concatenate([p["id"].to_numpy() for p in parts])
+        tb = np.concatenate(
+            [p["tbl"].to_numpy().astype(np.int64) for p in parts]
         )
-        thr = threshold
-        # per-class GEMM tiles are capped so the gathered (nb, c, dim)
-        # stack and its (nb, c, c) Gram block stay ~tens of MB per call
-        gemm_budget = 8 << 20  # doubles per tile ≈ 64 MB
+        bk = np.concatenate([p["bucket"].to_numpy() for p in parts])
+        o = np.lexsort((rid, bk, tb))
+        rid, tb, bk = rid[o], tb[o], bk[o]
+        m = len(rid)
+        change = np.empty(m, dtype=bool)
+        change[0] = True
+        change[1:] = (tb[1:] != tb[:-1]) | (bk[1:] != bk[:-1])
+        starts = np.flatnonzero(change)
+        counts = np.diff(np.append(starts, m))
+        row_of = np.searchsorted(ids_s, rid)  # one gather index/row
+        out_a: list = []
+        out_b: list = []
+        out_c: list = []
 
-        def _pair_gemm(batches):
-            ids_s, Um = bc.value
-            d = Um.shape[1]
-            # Buffer the whole partition: the repartition clusters every
-            # (tbl, bucket) group into exactly one partition, but Arrow
-            # batch boundaries split groups mid-bucket — pair formation
-            # needs the full group. ~1.5 M skinny rows ≈ 40 MB buffered.
-            parts = [p for p in batches if len(p)]
-            if not parts:
-                return
-            rid = np.concatenate([p["id"].to_numpy() for p in parts])
-            tb = np.concatenate(
-                [p["tbl"].to_numpy().astype(np.int64) for p in parts]
-            )
-            bk = np.concatenate([p["bucket"].to_numpy() for p in parts])
-            o = np.lexsort((rid, bk, tb))
-            rid, tb, bk = rid[o], tb[o], bk[o]
-            m = len(rid)
-            change = np.empty(m, dtype=bool)
-            change[0] = True
-            change[1:] = (tb[1:] != tb[:-1]) | (bk[1:] != bk[:-1])
-            starts = np.flatnonzero(change)
-            counts = np.diff(np.append(starts, m))
-            row_of = np.searchsorted(ids_s, rid)  # one gather index/row
-            out_a: list = []
-            out_b: list = []
-            out_c: list = []
+        def _emit(A, B, raw):
+            # HALF_UP to 4dp — the inline path's F.round convention
+            cos = _round_half_up(raw, 4)
+            keep = cos >= thr
+            if keep.any():
+                A, B, cos = A[keep], B[keep], cos[keep]
+                out_a.append(np.minimum(A, B))
+                out_b.append(np.maximum(A, B))
+                out_c.append(cos)
 
-            def _emit(A, B, raw):
-                # HALF_UP to 4dp — the SAME convention as the inline
-                # fallback path's F.round, so the env-gated plans stay
-                # bit-identical on 5e-5 boundaries (np.round is
-                # half-to-even).
-                cos = np.sign(raw) * np.floor(np.abs(raw) * 1e4 + 0.5) / 1e4
-                keep = cos >= thr
-                if keep.any():
-                    A, B, cos = A[keep], B[keep], cos[keep]
-                    lo = np.minimum(A, B)
-                    hi = np.maximum(A, B)
-                    out_a.append(lo)
-                    out_b.append(hi)
-                    out_c.append(cos)
-
-            # group the groups by occupancy in one argsort (a per-class
-            # `counts == c` scan would be O(groups × classes))
-            by_c = np.argsort(counts, kind="stable")
-            sc = counts[by_c]
-            cls = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
-            for k0, k1 in zip(cls, np.append(cls[1:], len(sc))):
-                c = int(sc[k0])
-                if c < 2:
-                    continue
-                sel = starts[by_c[k0:k1]]
-                if c <= 2048:
-                    # occupancy-class batching: all buckets of size c as
-                    # one (nb, c, dim) stack → batched Gram, upper
-                    # triangle only; nb chunked to the tile budget
-                    iu, ju = np.triu_indices(c, 1)
-                    step = max(1, int(gemm_budget // (c * d + c * c)))
-                    for s0 in range(0, len(sel), step):
-                        mem = sel[s0 : s0 + step, None] + np.arange(c)
-                        X = Um[row_of[mem]]
-                        G = np.matmul(X, X.transpose(0, 2, 1))
-                        _emit(
-                            rid[mem[:, iu]].ravel(),
-                            rid[mem[:, ju]].ravel(),
-                            G[:, iu, ju].ravel(),
+        # group the groups by occupancy in one argsort (a per-class
+        # `counts == c` scan would be O(groups × classes))
+        by_c = np.argsort(counts, kind="stable")
+        sc = counts[by_c]
+        cls = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
+        for k0, k1 in zip(cls, np.append(cls[1:], len(sc))):
+            c = int(sc[k0])
+            if c < 2:
+                continue
+            sel = starts[by_c[k0:k1]]
+            if c <= 2048:
+                # occupancy-class batching: all buckets of size c as
+                # one (nb, c, dim) stack → batched Gram, upper
+                # triangle only; nb chunked to the tile budget
+                iu, ju = np.triu_indices(c, 1)
+                step = max(1, int(gemm_budget // (c * d + c * c)))
+                for s0 in range(0, len(sel), step):
+                    mem = sel[s0 : s0 + step, None] + np.arange(c)
+                    X = Um[row_of[mem]]
+                    G = np.matmul(X, X.transpose(0, 2, 1))
+                    _emit(
+                        rid[mem[:, iu]].ravel(),
+                        rid[mem[:, ju]].ravel(),
+                        G[:, iu, ju].ravel(),
+                    )
+            else:
+                # rare giant bucket (planted-family pile-ups): tiled
+                # triangular GEMM, rows i only against columns > i
+                for s in sel:
+                    bidx = row_of[s : s + c]
+                    bids = rid[s : s + c]
+                    Xb = Um[bidx]
+                    tile = max(1, int(gemm_budget // c))
+                    for i0 in range(0, c - 1, tile):
+                        i1 = min(i0 + tile, c)
+                        G = Xb[i0:i1] @ Xb.T
+                        li, lj = np.nonzero(
+                            np.arange(c)[None, :]
+                            > np.arange(i0, i1)[:, None]
                         )
-                else:
-                    # rare giant bucket (planted-family pile-ups): tiled
-                    # triangular GEMM, rows i only against columns > i
-                    for s in sel:
-                        bidx = row_of[s : s + c]
-                        bids = rid[s : s + c]
-                        Xb = Um[bidx]
-                        tile = max(1, int(gemm_budget // c))
-                        for i0 in range(0, c - 1, tile):
-                            i1 = min(i0 + tile, c)
-                            G = Xb[i0:i1] @ Xb.T
-                            li, lj = np.nonzero(
-                                np.arange(c)[None, :]
-                                > np.arange(i0, i1)[:, None]
-                            )
-                            _emit(bids[i0 + li], bids[lj], G[li, lj])
+                        _emit(bids[i0 + li], bids[lj], G[li, lj])
 
-            if out_a:
-                yield pd.DataFrame(
-                    {
-                        "a_id": np.concatenate(out_a),
-                        "b_id": np.concatenate(out_b),
-                        "cos": np.concatenate(out_c),
-                    }
-                )
+        if out_a:
+            yield pd.DataFrame(
+                {
+                    "a_id": np.concatenate(out_a),
+                    "b_id": np.concatenate(out_b),
+                    "cos": np.concatenate(out_c),
+                }
+            )
 
-        return skinny.mapInPandas(
-            _pair_gemm, "a_id long, b_id long, cos double"
-        ).dropDuplicates(["a_id", "b_id"])
-
-    bucketed = src.mapInPandas(
-        _gemm_buckets, "id long, unit array<double>, bks array<long>"
-    )
-    buckets = bucketed.select(
-        "id",
-        "unit",
-        F.posexplode("bks").alias("tbl", "sign_bucket"),
-    ).select(
-        "id", "unit", "tbl", _bucketize(F.col("sign_bucket"), nbuckets).alias("bucket")
-    )
-    # Verify INLINE in the bucket join, THEN dedup (r5): the old order —
-    # dedup 16.8 M candidate rows, then two joins to re-attach 64-dim
-    # vectors — shuffled ~candidates × vector bytes twice. Carrying the
-    # vectors in the (tbl, bucket) join keys the shuffle at n·tables
-    # vector rows instead, the exact dot kills non-pairs before any
-    # pair-keyed exchange, and the dropDuplicates input is just the true
-    # pairs × table-duplication (near-dup-density-bounded). The alias
-    # self-join keeps both sides the same physical subtree, so Spark
-    # computes the exploded exchange once and replays it (ReusedExchange)
-    # for the other side — no persist of the vector column needed.
-    a, b = buckets.alias("A"), buckets.alias("B")
-    return (
-        a.join(
-            b,
-            (F.col("A.tbl") == F.col("B.tbl"))
-            & (F.col("A.bucket") == F.col("B.bucket"))
-            & (F.col("A.id") < F.col("B.id")),
-        )
-        .select(
-            F.col("A.id").alias("a_id"),
-            F.col("B.id").alias("b_id"),
-            F.round(dot(F.col("A.unit"), F.col("B.unit")), 4).alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
-        .dropDuplicates(["a_id", "b_id"])
-    )
+    return skinny.mapInPandas(
+        _pair_gemm, "a_id long, b_id long, cos double"
+    ).dropDuplicates(["a_id", "b_id"])
 
 
 def numpy_topk(
@@ -693,8 +707,6 @@ def numpy_topk(
     """
     import numpy as np
     import pandas as pd
-
-    from .windows import topk_per_group
 
     from ..session import fan_out
 
@@ -730,15 +742,7 @@ def numpy_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cos", F.round("cos", 4))
     )
-    ranked = topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos"), -F.col("neighbor_id")],
-        k=k,
-        descending=True,
-        keep_rank=True,
-    )
-    return ranked.select("query_id", "neighbor_id", "cos", F.col("rn").alias("rank"))
+    return _rank_neighbors(scored, "query_id", k)
 
 
 def blocked_topk(
@@ -779,7 +783,6 @@ def blocked_topk(
     import numpy as np
     import pandas as pd
 
-    from .windows import topk_per_group
     from ..session import fan_out
 
     nq = queries.count()
@@ -856,15 +859,7 @@ def blocked_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cos", F.round("cos", 4))
     )
-    ranked = topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("cos"), -F.col("neighbor_id")],
-        k=k,
-        descending=True,
-        keep_rank=True,
-    )
-    return ranked.select("query_id", "neighbor_id", "cos", F.col("rn").alias("rank"))
+    return _rank_neighbors(scored, "query_id", k)
 
 
 #: Query sets up to this many rows ship in the task closure (the
@@ -980,7 +975,7 @@ def ivf_topk(
                     continue
                 V = np.array(pdf[vec_name].tolist(), dtype=np.float64)
                 s = unit_rows(V) @ Cn.T  # (batch × n_centroids)
-                s = np.sign(s) * np.floor(np.abs(s) * 1e9 + 0.5) / 1e9
+                s = _round_half_up(s, 9)
                 best = np.argmax(s, axis=1)  # first max = lowest cell id
                 out = pdf.copy()
                 out["__cell"] = c_ids[best].astype(np.int32)
@@ -1010,15 +1005,7 @@ def ivf_topk(
         )
         .dropDuplicates([query_id, "neighbor_id"])
     )
-    ranked = topk_per_group(
-        scored,
-        [query_id],
-        [F.col("cos"), -F.col("neighbor_id")],
-        k=k,
-        descending=True,
-        keep_rank=True,
-    )
-    return ranked.select(query_id, "neighbor_id", "cos", F.col("rn").alias("rank"))
+    return _rank_neighbors(scored, query_id, k)
 
 
 # ---------------------------------------------------------------------------
@@ -1105,8 +1092,6 @@ def lsh_topk(
     LSH bucket (plus, with `multiprobe`, the num_planes buckets at Hamming
     distance 1 — recall without index rebuild). The join is keyed on the
     bucket id, so per-query work is the bucket occupancy, not |corpus|."""
-    from .windows import topk_per_group
-
     c = lsh_bucket(corpus, corpus_vec, dim, num_planes)
     q = lsh_bucket(queries, query_vec, dim, num_planes)
     if multiprobe:
@@ -1128,15 +1113,7 @@ def lsh_topk(
         )
         .dropDuplicates([query_id, "neighbor_id"])
     )
-    ranked = topk_per_group(
-        scored,
-        [query_id],
-        [F.col("cos"), -F.col("neighbor_id")],
-        k=k,
-        descending=True,
-        keep_rank=True,
-    )
-    return ranked.select(query_id, "neighbor_id", "cos", F.col("rn").alias("rank"))
+    return _rank_neighbors(scored, query_id, k)
 
 
 def semdedup(
@@ -1230,10 +1207,7 @@ def _min_id_prune(assigned: DataFrame, id_col: str, threshold: float) -> DataFra
             # already in an earlier row block — start tiles at i
             for j in range(i, n, CB):
                 cb = U[j : j + CB]
-                raw = rb @ cb.T
-                # HALF_UP to 4 dp (np.round is half-to-even)
-                cos = np.sign(raw) * np.floor(np.abs(raw) * 1e4 + 0.5) / 1e4
-                hit = cos >= thr
+                hit = _round_half_up(rb @ cb.T, 4) >= thr
                 hit &= rows_g < np.arange(j, j + cb.shape[0])[None, :]
                 is_dup[j : j + cb.shape[0]] |= hit.any(axis=0)
         return pd.DataFrame(
@@ -1337,7 +1311,7 @@ def semdedup_scaled(
                     continue
                 V = np.array(pdf[vcol].tolist(), dtype=np.float64)
                 s = unit_rows(V) @ CCn.T
-                s = np.sign(s) * np.floor(np.abs(s) * 1e9 + 0.5) / 1e9
+                s = _round_half_up(s, 9)
                 if self_col is not None:
                     # is_self tie-break (coarse ⊆ fine): pin each coarse
                     # centroid to ITS OWN coarse cell on exact rounded
@@ -1397,8 +1371,7 @@ def semdedup_scaled(
         RB = 2048
         for i in range(0, len(U), RB):
             s = U[i : i + RB] @ Fn.T
-            s = np.sign(s) * np.floor(np.abs(s) * 1e9 + 0.5) / 1e9
-            best[i : i + RB] = np.argmax(s, axis=1)
+            best[i : i + RB] = np.argmax(_round_half_up(s, 9), axis=1)
         return pd.DataFrame(
             {"id": l["id"].to_numpy(), "vv": l["vv"], "cell": fc_ids[best]}
         )
@@ -1417,11 +1390,6 @@ def cross_cosine_lsh(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    dim: int = 64,
-    num_planes: int = 8,
-    num_tables: int = 4,
-    adaptive: bool = True,
-    recall_at: float | None = None,
     on_budget_exceeded: str = "raise",
 ) -> DataFrame:
     """Cross-corpus embedding contamination scan: which LEFT (train)
@@ -1430,15 +1398,17 @@ def cross_cosine_lsh(
     (`operators.dedup.decontaminate`), catching paraphrased or
     re-encoded benchmark leakage that token overlap misses.
 
-    Same hash family and verification as `cosine_pairs_lsh`, but the
-    candidate join is left-buckets × right-buckets: left never pairs
-    with itself, so per-scan cost is O(|left| + |right| + collisions)
-    — with a fixed eval suite the right side is tiny and its bucket
-    index is effectively a broadcast dimension table, making the whole
-    scan one map-side pass over train at 100 TB. Exact-cosine
-    verification on pre-normalized vectors leaves no false positives.
-    Returns (left_id, right_id, cos ≥ threshold) pairs; `left_id`s are
-    the rows to quarantine before training.
+    Same hash family (`_lsh_buckets`), grid sizing and verification as
+    `cosine_pairs_lsh`, but the candidate join is left-buckets ×
+    right-buckets: left never pairs with itself, so per-scan cost is
+    O(|left| + |right| + collisions) — with a fixed eval suite the right
+    side is tiny and its bucket index is effectively a broadcast
+    dimension table, making the whole scan one map-side pass over train
+    at 100 TB. Exact-cosine verification on pre-normalized vectors leaves
+    no false positives. The vector length is read from the data; mixed
+    lengths (within or across the sides) raise ValueError. Returns
+    (left_id, right_id, cos ≥ threshold) pairs; `left_id`s are the rows
+    to quarantine before training.
     """
     from ..session import fan_out
 
@@ -1447,77 +1417,32 @@ def cross_cosine_lsh(
     # of re-materializing the raw input.
     lu = normalized(fan_out(left), id_col, vec_col)
     ru = normalized(right, id_col, vec_col)
-    nbuckets = None
-    if adaptive:  # the big (train) side governs bucket occupancy
-        num_planes, num_tables, nbuckets = _adaptive_lsh_params(
-            lu.count(), num_planes, num_tables, recall_at=recall_at,
-            threshold=threshold, on_budget_exceeded=on_budget_exceeded,
+    lv, rv = (u.select("id", F.col("unit").alias("v")) for u in (lu, ru))
+    n, dim = _rows_and_dim(lv, rv)
+    if dim is None:
+        return lu.sparkSession.createDataFrame(
+            [], "left_id long, right_id long, cos_sim double"
         )
-
-    # r7: bucket via the same Arrow GEMM kernel as `cosine_pairs_lsh` —
-    # the unrolled Catalyst formulation paid a codegen-compile cliff
-    # linear in tables × planes × dim, which the threshold-true table
-    # budget (17 tables in the identity regime vs 4) turned into the
-    # dominant cost (sf0.1 bench: 4.8 s calibrated, ~3 s of it compile).
-    # One (rows × dim) @ (dim × tables·planes) matmul per Arrow batch
-    # computes identical sign bits for any table count.
-    import numpy as np
-    import pandas as pd
-
-    mats = [
-        np.asarray(
-            _hyperplanes(dim, num_planes, seed=0xA11CE + t * 7919),
-            dtype=np.float64,
-        ).T
-        for t in range(num_tables)
-    ]
-    proj = np.concatenate(mats, axis=1)  # dim x (tables*planes)
-    weights = (1 << np.arange(num_planes, dtype=np.int64)).astype(np.float64)
-    n_tables, n_planes = num_tables, num_planes
-
-    def _buckets(unit: DataFrame, out_id: str) -> DataFrame:
-        def gen(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                U = np.vstack(pdf["unit"].to_numpy()).astype(np.float64)
-                signs = (U @ proj >= 0).astype(np.float64)
-                cols = [
-                    (
-                        signs[:, t * n_planes : (t + 1) * n_planes] @ weights
-                    ).astype(np.int64)
-                    for t in range(n_tables)
-                ]
-                yield pd.DataFrame(
-                    {out_id: pdf["id"], "bks": list(np.stack(cols, axis=1))}
-                )
-
-        return (
-            unit.select("id", "unit")
-            .mapInPandas(gen, f"{out_id} long, bks array<long>")
-            .select(out_id, F.posexplode("bks").alias("tbl", "sign_bucket"))
-            .select(
-                out_id,
-                "tbl",
-                _bucketize(F.col("sign_bucket"), nbuckets).alias("bucket"),
-            )
-        )
-
+    # the big (train) side governs bucket occupancy
+    grid = _adaptive_lsh_params(
+        n, _LSH_PLANES, _LSH_TABLES,
+        threshold=threshold, on_budget_exceeded=on_budget_exceeded,
+    )
     # the eval suite is broadcast-sized BY CONTRACT (a fixed benchmark
     # set vs an unbounded train corpus) — pin both right-side joins to
     # broadcast so the whole scan stays one map-side pass over train
     # (plan-asserted: tests/test_plan_assertions.py)
     cand = (
-        _buckets(lu, "left_id")
-        .join(F.broadcast(_buckets(ru, "right_id")), ["tbl", "bucket"])
+        _lsh_buckets(lv, "left_id", dim, grid)
+        .join(F.broadcast(_lsh_buckets(rv, "right_id", dim, grid)), ["tbl", "bucket"])
         .select("left_id", "right_id")
         .dropDuplicates(["left_id", "right_id"])
     )
     return (
-        cand.join(lu.select(F.col("id").alias("left_id"), F.col("unit").alias("vl")), "left_id")
+        cand.join(lv.select(F.col("id").alias("left_id"), F.col("v").alias("vl")), "left_id")
         .join(
             F.broadcast(
-                ru.select(F.col("id").alias("right_id"), F.col("unit").alias("vr"))
+                rv.select(F.col("id").alias("right_id"), F.col("v").alias("vr"))
             ),
             "right_id",
         )
@@ -1566,7 +1491,6 @@ def pq_topk(
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql import Window
 
     from ..session import fan_out
 
@@ -1675,11 +1599,6 @@ def pq_topk(
         .join(F.broadcast(qdf), "query_id")
         .withColumn("cos", F.round(cosine(F.col("qv_full"), F.col("cv_full")), 4))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", F.col("cos").alias("cos_sim"))
+    return _rank_neighbors(exact, "query_id", k).select(
+        "query_id", "neighbor_id", F.col("cos").alias("cos_sim")
     )

@@ -119,8 +119,8 @@ def get_spark(
         # per-executor and set by the deployment, not here.
         .config("spark.driver.memory", _driver_mem)
         # r8: the LSH broadcast-verify path materializes the unit matrix
-        # via one bounded driver collect (≤ SPARK_GRAFT_LSH_BCAST_MB,
-        # default 2 GiB) — the stock 1g maxResultSize rejects it at
+        # via one bounded driver collect (≤ similarity._LSH_BCAST_MB,
+        # 2 GiB) — the stock 1g maxResultSize rejects it at
         # ~2M vectors. min(4g, driver_mem/2) covers the gate with
         # headroom while never letting the limit EQUAL the heap on
         # small hosts (r8 advisor: a 4g limit inside a 4g heap admits a

@@ -1,7 +1,7 @@
 """Wrap-artifact parity guard (VERDICT r6 #4): the round's
 CORRECTNESS_LOCAL artifact must cover EXACTLY the live catalog.
 
-Round 6 shipped `CORRECTNESS_LOCAL_r06.json` missing the 4 catalog keys
+Round 6 shipped its CORRECTNESS_LOCAL artifact missing the 4 catalog keys
 that landed after the artifact was generated — the judge had to re-run
 them by hand. This test makes that impossible to ship silently: the
 newest artifact's key set must equal `__spark_entry__.queries()`.

@@ -227,7 +227,7 @@ def test_generator_strides_clear_aug_offsets():
     """The query-side doc augmentations synthesize ids at +100_000 /
     +200_000; every replica id block must clear that range plus the base
     corpus, or aug ids collide with real replica docs (the sf100
-    dedup_simhash quadratic-pair artifact, SCALE_r06_sf100 first run).
+    dedup_simhash quadratic-pair artifact of round 6's first scale run).
     Embeddings synthesize up to +200_000*j (j<=24 ANN query families)."""
     import tools.gen_sf as gen
 
