@@ -17,6 +17,7 @@ rides the same pass via count-distinct.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
@@ -119,3 +120,31 @@ def expectation_gate(
     # so explicitly (isNull() | ...), as booking_expectations does for
     # the columns where null genuinely breaks the contract.
     return batch.filter(~bad), batch.filter(bad)
+
+
+@contextmanager
+def gated_batch(
+    batch: DataFrame,
+    rules: list[tuple[str, Column]] | None,
+    on_breach: str,
+    quarantine,
+    txn: tuple[str, int] | None,
+):
+    """The per-batch gate step of the streaming sinks: persist the batch,
+    run :func:`expectation_gate`, append the breaching rows to the
+    ``quarantine`` table (its ``txn`` marker makes a replay skip the
+    append) and compact it when due, then yield the clean rows for the
+    caller's merge; the batch is unpersisted on every exit. Without
+    ``rules`` the batch passes through untouched."""
+    if rules is None:
+        yield batch
+        return
+    cached = batch.persist()
+    try:
+        clean, breached = expectation_gate(cached, rules, on_breach=on_breach)
+        if breached is not None:
+            quarantine.append(breached, txn=txn)
+            quarantine.maybe_compact(trigger_files=64)
+        yield clean
+    finally:
+        cached.unpersist()

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..operators.aggregate import gold_booking_aggregation
 from ..operators.derive import derive_booking_columns
-from ..operators.dq import check_gate_wiring
+from ..operators.dq import check_gate_wiring, gated_batch
 from ..operators.split import conditional_split
 from ..schemas import BOOKING_DOC_SCHEMA
 from ..sources.tables import ParquetTable
@@ -93,11 +93,12 @@ def process_booking_batch(
     per-table idempotent batch guard: each sink commit atomically records
     the marker in its pointer (ParquetTable txn markers), and a REPLAYED
     batch — foreachBatch died after some sinks committed but before the
-    checkpoint commit — skips every sink that already recorded it
-    (`ParquetTable.applied`). Without the guard the keyed MERGE is
-    naturally idempotent but the quarantine APPEND is not (a replay would
-    duplicate rejected rows), and the incremental-gold delta would be
-    computed from an already-merged before-image.
+    checkpoint commit — skips every sink that already recorded it (each
+    ParquetTable write checks its txn before it claims a version).
+    Without the guard the keyed MERGE is naturally idempotent but the
+    quarantine APPEND is not (a replay would duplicate rejected rows),
+    and the incremental-gold delta would be computed from an
+    already-merged before-image.
 
     `event_time_wins=True` switches the merge's matched-row conflict rule
     from arrival order (the reference's alter-row behavior) to max event
@@ -116,34 +117,23 @@ def process_booking_batch(
     # that's 4x the scan cost per trigger. A micro-batch fits in memory
     # by construction (it's trigger-bounded).
     batch = batch.persist()
-    dq_cached: DataFrame | None = None
     try:
         derived, rejected = transform_bookings(batch)
-        if dq_rules is not None:
-            # Expectation gate BEFORE any sink commit (VERDICT r5 #7):
-            # halt mode raises here — neither quarantine append, fact
-            # merge, nor gold refresh runs, and the checkpoint never
-            # commits the batch, so a fixed-and-restarted stream replays
-            # it cleanly. Quarantine mode diverts breaching rows to a
-            # DEDICATED table (derived schema ≠ the raw rejected-rows
-            # schema) and publishes the clean remainder.
-            from ..operators.dq import expectation_gate
-
-            dq_cached = derived.persist()
-            derived, breached = expectation_gate(
-                dq_cached, dq_rules, on_breach=dq_on_breach
+        # Expectation gate BEFORE any sink commit: halt mode raises here —
+        # neither quarantine append, fact merge, nor gold refresh runs, and
+        # the checkpoint never commits the batch, so a fixed-and-restarted
+        # stream replays it cleanly. Quarantine mode diverts breaching rows
+        # to a DEDICATED table (derived schema ≠ the raw rejected-rows
+        # schema).
+        with gated_batch(
+            derived, dq_rules, dq_on_breach, dq_quarantine, txn
+        ) as clean:
+            _process_transformed(
+                clean, rejected, fact, quarantine, dim, gold,
+                incremental_gold, event_time_wins, txn=txn,
+                merge_on_read=merge_on_read,
             )
-            if breached is not None and not dq_quarantine.applied(txn):
-                dq_quarantine.append(breached, txn=txn)
-                dq_quarantine.maybe_compact(trigger_files=64)
-        _process_transformed(
-            derived, rejected, fact, quarantine, dim, gold,
-            incremental_gold, event_time_wins, txn=txn,
-            merge_on_read=merge_on_read,
-        )
     finally:
-        if dq_cached is not None:
-            dq_cached.unpersist()
         batch.unpersist()
 
 
@@ -162,15 +152,14 @@ def _process_transformed(
     from ..operators.merge import latest_per_key
 
     if not rejected.isEmpty():
-        if not quarantine.applied(txn):
-            # O(batch) append, NOT idempotent on its own — the txn marker
-            # (committed atomically with the append) is what makes a
-            # replayed batch skip it instead of duplicating rejected rows
-            quarantine.append(rejected, txn=txn)
-            # append-per-batch accumulates one file per trigger forever;
-            # the size-triggered compaction keeps the live file count
-            # saw-toothing below the trigger instead (steady-state bound)
-            quarantine.maybe_compact(trigger_files=64)
+        # O(batch) append, NOT idempotent on its own — the txn marker
+        # (committed atomically with the append) is what makes a
+        # replayed batch skip it instead of duplicating rejected rows
+        quarantine.append(rejected, txn=txn)
+        # append-per-batch accumulates one file per trigger forever;
+        # the size-triggered compaction keeps the live file count
+        # saw-toothing below the trigger instead (steady-state bound)
+        quarantine.maybe_compact(trigger_files=64)
     fact_replayed = fact.applied(txn)
     maintain_incrementally = (
         incremental_gold and dim is not None and gold is not None and gold.exists()
@@ -227,24 +216,20 @@ def _process_transformed(
         # no-op groups keep their rows; zero-count groups (possible only
         # with retraction-to-empty) are dropped
         new_gold = new_gold.filter(F.col("total_bookings") > 0)
-    if not fact_replayed:
-        upsert = fact.upsert_delta if merge_on_read else fact.upsert_pruned
-        upsert(
-            derived,
-            keys=FACT_KEYS,
-            partition_by=FACT_PARTITIONING,
-            order_by=FACT_ORDER,
-            event_time_wins=event_time_wins,
-            txn=txn,
-        )
+    upsert = fact.upsert_delta if merge_on_read else fact.upsert_pruned
+    upsert(
+        derived,
+        keys=FACT_KEYS,
+        partition_by=FACT_PARTITIONING,
+        order_by=FACT_ORDER,
+        event_time_wins=event_time_wins,
+        txn=txn,
+    )
     if dim is not None and gold is not None:
-        if not gold.applied(txn):
-            if maintain_incrementally:
-                gold.overwrite(new_gold, txn=txn)
-            else:
-                gold.overwrite(
-                    gold_booking_aggregation(fact.read(), dim), txn=txn
-                )
+        if maintain_incrementally:
+            gold.overwrite(new_gold, txn=txn)
+        else:
+            gold.overwrite(gold_booking_aggregation(fact.read(), dim), txn=txn)
 
 
 def load_booking_fact_stream(

@@ -27,7 +27,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame
 
-from ..operators.dq import check_gate_wiring
+from ..operators.dq import check_gate_wiring, gated_batch
 from ..operators.merge import scd2_apply
 from ..sources.tables import ParquetTable
 
@@ -61,22 +61,8 @@ def process_scd2_batch(
     check_gate_wiring(dq_rules, dq_on_breach, dq_quarantine)
     if batch.isEmpty():
         return
-    if dq_rules is not None:
-        from ..operators.dq import expectation_gate
-
-        batch = batch.persist()
-        try:
-            clean, breached = expectation_gate(
-                batch, dq_rules, on_breach=dq_on_breach
-            )
-            if breached is not None and not dq_quarantine.applied(txn):
-                dq_quarantine.append(breached, txn=txn)
-                dq_quarantine.maybe_compact(trigger_files=64)
-            _apply(clean, dim, keys, attr_cols, initial_history, eff_from, txn)
-        finally:
-            batch.unpersist()
-    else:
-        _apply(batch, dim, keys, attr_cols, initial_history, eff_from, txn)
+    with gated_batch(batch, dq_rules, dq_on_breach, dq_quarantine, txn) as clean:
+        _apply(clean, dim, keys, attr_cols, initial_history, eff_from, txn)
 
 
 def _apply(
@@ -88,8 +74,6 @@ def _apply(
     eff_from: str,
     txn: tuple[str, int] | None,
 ) -> None:
-    if dim.applied(txn):
-        return
     if dim.exists():
         base = dim.read()
     elif initial_history is not None:

@@ -16,6 +16,35 @@ from ..sources.readers import read_events
 from ..streaming import windows as W
 from .queries import _t, query
 
+_DRAIN_TIMEOUT_S = 180
+
+
+def _drain(writer) -> None:
+    """Run ``writer`` with an availableNow trigger until the backlog is
+    drained. A drain that does not finish within the timeout stops the
+    query and raises ``TimeoutError`` — the sink would otherwise be
+    returned holding only part of the stream."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+            raise TimeoutError(
+                f"stream {q.name or q.id} did not drain within "
+                f"{_DRAIN_TIMEOUT_S} s"
+            )
+    finally:
+        q.stop()
+
+
+def _drain_to_memory(
+    df: DataFrame, qname: str, output_mode: str = "append"
+) -> DataFrame:
+    """Drain the streaming ``df`` into the memory sink ``qname`` and
+    return the sink's table."""
+    _drain(
+        df.writeStream.format("memory").queryName(qname).outputMode(output_mode)
+    )
+    return df.sparkSession.table(qname)
+
 
 # ---------------------------------------------------------------------------
 # S1 — incremental stream source (SURVEY §2.1 S1): file-stream read of the
@@ -41,15 +70,7 @@ def q_source_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(sf_dir)
         .select("event_id", "user_id", "event_type", "value")
     )
-    qname = "stream_incremental_sink"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(qname)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.table(qname)
+    return _drain_to_memory(stream, "stream_incremental_sink")
 
 
 @query(
@@ -180,16 +201,7 @@ def q_stream_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=["event_type"],
         aggs=[F.count(F.lit(1)).alias("n_events")],
     )
-    qname = "stream_tumbling_sink"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    return spark.table(qname)
+    return _drain_to_memory(agg, "stream_tumbling_sink", "complete")
 
 
 @query("stateful_running_totals")  # custom stateful streaming — rows-only
@@ -198,16 +210,7 @@ def q_stateful_running(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = _events_stream(spark, sf_dir).select("user_id", "value")
     out = running_user_totals(stream)
-    qname = "stateful_running_sink"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    return spark.table(qname)
+    return _drain_to_memory(out, "stateful_running_sink", "update")
 
 
 @query(
@@ -318,16 +321,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
         "inner",
     ).select("c_user", "click_id", "click_ts", "purchase_ts", "purchase_value")
-    qname = "stream_stream_sink"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    return spark.table(qname)
+    return _drain_to_memory(joined, "stream_stream_sink")
 
 
 @query(
@@ -388,16 +382,7 @@ def q_stream_window_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 2).alias("total_value"),
         ],
     )
-    qname = "stream_session_sink"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    return spark.table(qname)
+    return _drain_to_memory(agg, "stream_session_sink")
 
 
 @query(
@@ -485,16 +470,7 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type", "value"
     )
     enriched = stream.join(F.broadcast(static_profile), "user_id", "inner")
-    qname = "stream_static_sink"
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    return spark.table(qname)
+    return _drain_to_memory(enriched, "stream_static_sink")
 
 
 @query("stream_sessionize_stateful")  # custom emit-on-close state — rows-only
@@ -514,16 +490,7 @@ def q_stream_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "1 day")
     )
     out = sessionize_stream(stream, gap_ms=30 * 60 * 1000)
-    qname = "stream_sessionize_sink"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    return spark.table(qname)
+    return _drain_to_memory(out, "stream_sessionize_sink")
 
 
 @query(
@@ -656,13 +623,10 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = f"/tmp/stream_kmv_ckpt_{hashlib.md5(sf_dir.encode()).hexdigest()[:16]}"
     shutil.rmtree(ckpt, ignore_errors=True)  # stale state would skip batches
     try:
-        q = (
+        _drain(
             stream.writeStream.foreachBatch(_merge_batch)
-            .trigger(availableNow=True)
             .option("checkpointLocation", ckpt)
-            .start()
         )
-        q.awaitTermination(180)
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
     import math
@@ -702,16 +666,7 @@ def q_stream_dropdup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = dup.withWatermark("ts", "1 day").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    qname = "stream_dropdup_sink"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    return spark.table(qname)
+    return _drain_to_memory(deduped, "stream_dropdup_sink")
 
 
 @query(

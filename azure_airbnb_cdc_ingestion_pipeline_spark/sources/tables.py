@@ -12,6 +12,21 @@ transactional surface those sinks need on plain parquet:
 - keyed upsert (MERGE) built from the pure-DataFrame merge in
   ``operators.merge``.
 
+Every write — overwrite, append, MERGE, the merge-on-read delta and its
+fold, DELETE, UPDATE, compaction — commits through one sequence,
+``ParquetTable._commit_version``:
+
+1. replay guard: return at once if the table already recorded ``txn``;
+2. claim the next version dir (O_EXCL claim file);
+3. write the new rows into it (or, on a table with no version yet, the
+   first-write rows);
+4. hardlink forward what the write names: nothing, the whole previous
+   tree, or its untouched partition dirs;
+5. write ``_table_meta.json``, carrying the partition and merge-on-read
+   specs forward unless the write replaces them;
+6. commit: rename the pointer, conditional on the snapshot version the
+   write read from (only the blind ``overwrite`` is last-committer-wins).
+
 Scale posture: one version = one parquet dataset written fully in parallel
 by executors; the only driver-side work is the pointer swap. A real 100 TB
 deployment would swap this class for Delta/Iceberg MERGE (file-level
@@ -21,6 +36,7 @@ storage-agnostic, callers only see DataFrames.
 
 from __future__ import annotations
 
+import json
 import logging
 import os
 import shutil
@@ -94,13 +110,11 @@ class ParquetTable:
         (the Delta txnAppId/txnVersion idempotency contract: a foreachBatch
         writer that dies between data commit and checkpoint commit replays
         the batch, and the marker tells the sink it already applied it)."""
-        import json as _json
-
         try:
             with open(self._pointer_path()) as f:
                 lines = f.read().splitlines()
             v = int(lines[0].strip())
-            txns = _json.loads(lines[1]) if len(lines) > 1 and lines[1] else {}
+            txns = json.loads(lines[1]) if len(lines) > 1 and lines[1] else {}
             return v, txns
         except (FileNotFoundError, ValueError, IndexError):
             return None, {}
@@ -130,6 +144,10 @@ class ParquetTable:
 
     def _version_dir(self, v: int) -> str:
         return os.path.join(self.root, f"v{v:06d}")
+
+    def _current_meta(self) -> dict:
+        """The current version's sidecar ({} when the table is absent)."""
+        return self._read_meta(self._version_dir(self.current_version() or 0))
 
     def exists(self) -> bool:
         return self.current_version() is not None
@@ -195,6 +213,49 @@ class ParquetTable:
         return self._read_resolved(self._current_dir(), keys=keys, key_cols=key_cols)
 
     # -- writes --------------------------------------------------------------
+    def _commit_version(
+        self,
+        write,
+        *,
+        first: DataFrame | None = None,
+        meta: dict | None = None,
+        txn: tuple[str, int] | None = None,
+        blind: bool = False,
+    ) -> int | None:
+        """The one commit sequence of every write (see the module
+        docstring). Step 3 calls ``write(base_dir, target, meta)``, or —
+        the one first-write bootstrap — writes ``first`` when the table
+        has no version yet. ``write`` returns the base dirs to hardlink
+        forward (relative paths; ``["."]`` is the whole tree) and may set
+        sidecar keys in ``meta``, which starts as the base's sidecar
+        updated with the ``meta`` argument. The commit is conditional on
+        the base version unless ``blind``. Returns the committed version,
+        or None when ``txn`` was already applied."""
+        if self.applied(txn):
+            return None
+        base, v = self._claim_version()
+        base_dir, target = self._version_dir(base), self._version_dir(v)
+        meta = {"partition_by": [], **self._read_meta(base_dir), **(meta or {})}
+        if base == 0 and first is not None:
+            self._write_frame(first, target, meta["partition_by"])
+        else:
+            for rel in write(base_dir, target, meta) or ():
+                self._link_tree(
+                    os.path.join(base_dir, rel), os.path.join(target, rel)
+                )
+        self._write_table_meta(target, meta)
+        self._commit(v, expected_base=None if blind else base, txn=txn)
+        return v
+
+    @staticmethod
+    def _write_frame(
+        df: DataFrame, target: str, partition_by: list[str] | None
+    ) -> None:
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(target)
+
     def overwrite(
         self,
         df: DataFrame,
@@ -208,17 +269,21 @@ class ParquetTable:
         on the previous snapshot, so concurrent overwrites are
         last-committer-wins on the pointer — but each writer gets a UNIQUE
         claimed version dir, so they never clobber each other's files.
-        Returns the committed version number."""
-        _base, v = self._claim_version()
-        target = self._version_dir(v)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(target)
-        if partition_by or meta_extra:
-            self._write_table_meta(target, partition_by or [], meta_extra)
-        self._commit(v, txn=txn)
-        return v
+        Returns the committed version number (the current one when ``txn``
+        was already applied)."""
+        v = self._commit_version(
+            lambda _base_dir, target, _meta: self._write_frame(
+                df, target, partition_by
+            ),
+            meta={
+                "partition_by": list(partition_by or []),
+                "mor": None,
+                **(meta_extra or {}),
+            },
+            txn=txn,
+            blind=True,
+        )
+        return v or self.current_version()
 
     _META = "_table_meta.json"
     #: merge-on-read delta subdir inside a version dir. The leading
@@ -227,30 +292,21 @@ class ParquetTable:
     #: explicit path.
     _DELTA = "_delta"
 
-    def _write_table_meta(
-        self,
-        vdir: str,
-        partition_by: list[str],
-        extra: dict | None = None,
-    ) -> None:
-        """Record the partition spec in the version dir: layout inference
-        breaks the moment a version has no partition dirs (e.g. a DELETE
-        that emptied every partition), silently degrading later writes to
-        the unpartitioned path — the sidecar is authoritative. ``extra``
-        carries the merge-on-read spec (see :meth:`upsert_delta`)."""
-        import json as _json
-
+    def _write_table_meta(self, vdir: str, meta: dict) -> None:
+        """Record the partition spec (and the merge-on-read spec, see
+        :meth:`upsert_delta`) in the version dir. Every commit writes
+        one, and it is the only source of the partition spec: layout
+        inference breaks the moment a version has no partition dirs (e.g.
+        a DELETE that emptied every partition)."""
         fd, tmp = tempfile.mkstemp(dir=vdir, prefix="._meta")
         with os.fdopen(fd, "w") as f:
-            _json.dump({"partition_by": list(partition_by), **(extra or {})}, f)
+            json.dump({k: v for k, v in meta.items() if v is not None}, f)
         os.replace(tmp, os.path.join(vdir, self._META))
 
     def _read_meta(self, vdir: str) -> dict:
-        import json as _json
-
         try:
             with open(os.path.join(vdir, self._META)) as f:
-                return _json.load(f)
+                return json.load(f)
         except (FileNotFoundError, ValueError):
             return {}
 
@@ -327,8 +383,8 @@ class ParquetTable:
         """Write pointer to a temp file, atomic-rename over _CURRENT — the
         POSIX-atomic commit point — then prune old versions.
 
-        With ``expected_base`` set (read-modify-write paths: upsert/append),
-        the commit is conditional: if another writer advanced the pointer
+        With ``expected_base`` set (every read-modify-write), the commit
+        is conditional: if another writer advanced the pointer
         past the snapshot this write was computed from, the orphan version
         is deleted and ConcurrentWriteError raised — failing LOUDLY instead
         of silently dropping the winner's rows. (Same optimistic-concurrency
@@ -351,13 +407,11 @@ class ParquetTable:
                     f"v{cur} is now committed; recompute the merge from the "
                     "current snapshot and retry"
                 )
-        import json as _json
-
         base_v, txns = self._read_pointer()
         if txn is not None:
             app, bid = txn
             txns = {**txns, str(app): {"batch": int(bid), "base": base_v or 0}}
-        content = str(v) if not txns else f"{v}\n{_json.dumps(txns)}"
+        content = str(v) if not txns else f"{v}\n{json.dumps(txns)}"
         fd, tmp = tempfile.mkstemp(dir=self.root, prefix="._ptr")
         with os.fdopen(fd, "w") as f:
             f.write(content)
@@ -409,47 +463,29 @@ class ParquetTable:
                 event_time_wins=event_time_wins, txn=txn,
             )
             return
-        if not self.exists():
-            first = (
-                latest_per_key(source, keys, order_by) if order_by else source
+        if self.exists():
+            log.warning(
+                "upsert on unpartitioned table %s rewrites the full table per "
+                "batch; write with partition_by and use upsert_pruned for the "
+                "O(affected-partitions) steady state",
+                self.root,
             )
-            self.overwrite(first, txn=txn)
-            return
-        log.warning(
-            "upsert on unpartitioned table %s rewrites the full table per "
-            "batch; write with partition_by and use upsert_pruned for the "
-            "O(affected-partitions) steady state",
-            self.root,
+        self._commit_version(
+            lambda base_dir, target, _meta: self._rewrite_partitions(
+                base_dir, target, [],
+                lambda tgt: merge_dataframes(
+                    tgt, source, keys, order_by=order_by,
+                    event_time_wins=event_time_wins,
+                ),
+            ),
+            first=latest_per_key(source, keys, order_by) if order_by else source,
+            txn=txn,
         )
-        base, v = self._claim_version()
-        merged = merge_dataframes(
-            self.read(), source, keys, order_by=order_by,
-            event_time_wins=event_time_wins,
-        )
-        merged.write.mode("overwrite").parquet(self._version_dir(v))
-        self._commit(v, expected_base=base, txn=txn)
 
     def _partition_columns(self) -> list[str]:
-        """Partition columns of the current version: the metadata sidecar
-        when present (authoritative), else inferred from the hive-style
-        directory layout (empty when unpartitioned/absent)."""
-        v = self.current_version()
-        if v is None:
-            return []
-        meta = self._read_meta(self._version_dir(v))
-        if meta.get("partition_by"):
-            return list(meta["partition_by"])
-        cols: list[str] = []
-        d = self._version_dir(v)
-        while True:
-            subdirs = [
-                n for n in os.listdir(d)
-                if "=" in n and os.path.isdir(os.path.join(d, n))
-            ]
-            if not subdirs:
-                return cols
-            cols.append(subdirs[0].split("=", 1)[0])
-            d = os.path.join(d, subdirs[0])
+        """Partition columns of the current version, from its metadata
+        sidecar (empty when unpartitioned/absent)."""
+        return list(self._current_meta().get("partition_by") or [])
 
     # -- scale paths ---------------------------------------------------------
     def _leaf_partition_dirs(self, vdir: str) -> list[str]:
@@ -476,23 +512,21 @@ class ParquetTable:
     def append(
         self, df: DataFrame, txn: tuple[str, int] | None = None
     ) -> None:
-        """O(batch) append: write only the new rows, hardlink the previous
-        version's files alongside them, swap the pointer. Replaces
-        read-union-rewrite (which is O(table) per batch and quadratic over
-        a stream's lifetime). File names carry write-UUIDs, so links and
-        fresh files never collide."""
-        if not self.exists():
-            self.overwrite(df, txn=txn)
-            return
+        """O(batch) append: write only the new rows (with the table's
+        partition spec), hardlink the previous version's files alongside
+        them, swap the pointer. Replaces read-union-rewrite (which is
+        O(table) per batch and quadratic over a stream's lifetime). File
+        names carry write-UUIDs, so links and fresh files never collide."""
         # append semantics ("just add rows") are undefined against pending
         # merge-on-read deltas (a linked delta would keep outranking rows
         # for its keys) — fold to a clean base first. No-op otherwise.
         self._fold_pending()
-        base, v = self._claim_version()
-        target = self._version_dir(v)
-        df.write.mode("overwrite").parquet(target)
-        self._link_tree(self._version_dir(base), target)
-        self._commit(v, expected_base=base, txn=txn)
+
+        def write(_base_dir: str, target: str, meta: dict) -> list[str]:
+            self._write_frame(df, target, meta["partition_by"])
+            return ["."]
+
+        self._commit_version(write, first=df, txn=txn)
 
     # Above this many touched partition combos, pruned writes abandon the
     # OR-predicate (static pruning) for a broadcast semi-join (bounded plan).
@@ -533,57 +567,63 @@ class ParquetTable:
 
     def _rewrite_partitions(
         self,
-        base: int,
-        v: int,
+        base_dir: str,
+        target: str,
         parts: list[str],
-        combo_df: DataFrame,
         rewrite,
-        affected_rels: set[str] | None = None,
-        meta_extra: dict | None = None,
-        txn: tuple[str, int] | None = None,
-    ) -> None:
-        """The copy-on-write commit shared by the pruned MERGE, the
+        matches=None,
+        emptied: bool = False,
+    ) -> list[str]:
+        """The copy-on-write write step shared by the pruned MERGE, the
         merge-on-read fold and DELETE / UPDATE: rewrite the partitions of
-        v{base} that ``combo_df`` names as ``rewrite(their rows)``,
-        hardlink every other leaf dir forward (a metadata op), write the
-        meta sidecar, then commit v{v} conditionally on v{base}.
+        the base that hold ``matches(base rows)`` as ``rewrite(their
+        rows)`` and return every other leaf dir, for
+        :meth:`_commit_version` to hardlink forward (a metadata op). An
+        unpartitioned table (``parts=[]``) rewrites everything.
 
-        ``affected_rels`` (escaped leaf-dir relpaths) defaults to the dirs
-        the rewrite wrote. A rewrite that can EMPTY a partition (DELETE)
-        passes the matched partitions instead: an emptied partition writes
+        The rewritten partitions are the dirs the rewrite wrote. A rewrite
+        that can EMPTY a partition (DELETE) passes ``emptied=True``, and
+        the matched partitions count instead: an emptied partition writes
         no dir and would otherwise be linked forward and resurrect."""
-        cur_dir, target = self._version_dir(base), self._version_dir(v)
-        tgt = self.spark.read.parquet(cur_dir)  # _delta is hidden
-        out = rewrite(self._restrict_to_partitions_of(tgt, combo_df, parts))
-        # repartition on the partition columns: each combo lands in ONE
-        # task → one file per partition instead of (shuffle.partitions ×
-        # combos) slivers; steady-state read/merge cost tracks partition
-        # count, not trigger count. (Huge single partitions at real scale:
-        # bound file size with spark.sql.files.maxRecordsPerFile.)
-        out.repartition(*parts).write.mode("overwrite").partitionBy(
-            *parts
-        ).parquet(target)
-        if affected_rels is None:
+        tgt = self.spark.read.parquet(base_dir)  # _delta is hidden
+        if not parts:
+            rewrite(tgt).write.mode("overwrite").parquet(target)
+            return []
+        combo_df = matches(tgt).select(*parts).distinct()
+        if emptied:
+            # the combos feed the partition restriction AND the marker
+            # write — without persist each re-runs the predicate scan
+            combo_df = combo_df.persist()
+        try:
+            out = rewrite(self._restrict_to_partitions_of(tgt, combo_df, parts))
+            # repartition on the partition columns: each combo lands in ONE
+            # task → one file per partition instead of (shuffle.partitions ×
+            # combos) slivers; steady-state read/merge cost tracks partition
+            # count, not trigger count. (Huge single partitions at real
+            # scale: bound file size with spark.sql.files.maxRecordsPerFile.)
+            out.repartition(*parts).write.mode("overwrite").partitionBy(
+                *parts
+            ).parquet(target)
             # Spark applied its own path escaping (__HIVE_DEFAULT_PARTITION__
             # for nulls, %XX for special chars), so the written tree is
             # correct for every value a hand-built "col=val" would mangle
-            affected_rels = set(self._leaf_partition_dirs(target))
-        linked = 0
-        for rel in self._leaf_partition_dirs(cur_dir):
-            if rel not in affected_rels and not rel.startswith(self._DELTA):
-                self._link_tree(
-                    os.path.join(cur_dir, rel), os.path.join(target, rel)
-                )
-                linked += 1
-        if linked == 0 and not self._leaf_partition_dirs(target):
-            # nothing written and nothing linked (a delete that emptied
+            written = set(self._leaf_partition_dirs(target))
+            affected = self._partition_rels(combo_df, parts) if emptied else written
+        finally:
+            if emptied:
+                combo_df.unpersist()
+        untouched = [
+            rel for rel in self._leaf_partition_dirs(base_dir)
+            if rel not in affected and not rel.startswith(self._DELTA)
+        ]
+        if not untouched and not written:
+            # nothing written and nothing to link (a delete that emptied
             # EVERY partition, or a rewrite of such a version): a
             # partitioned empty write emits no file, so the version would
             # be unreadable. Write one schema-bearing empty file instead;
             # the meta sidecar keeps the partition spec for later writes.
             out.limit(0).coalesce(1).write.mode("overwrite").parquet(target)
-        self._write_table_meta(target, parts, meta_extra)
-        self._commit(v, expected_base=base, txn=txn)
+        return untouched
 
     @staticmethod
     def _mor_spec(mor: dict, keys, order_by, event_time_wins: bool) -> dict:
@@ -610,43 +650,49 @@ class ParquetTable:
 
     def _merge_partitions(
         self,
-        base: int,
-        v: int,
+        base_dir: str,
+        target: str,
+        meta: dict,
         source: DataFrame,
         keys: list[str],
         partition_by: list[str],
         order_by: list[str] | None,
         event_time_wins: bool,
-        txn: tuple[str, int] | None,
-        mor: dict | None,
-    ) -> None:
-        """Pruned MERGE of ``source`` into v{base}, committed as v{v}.
-        Pending merge-on-read deltas fold in first: one multi-path scan of
-        the deltas ∪ the batch, which is sequenced after every on-disk
-        delta (``mor["seq"]``), resolves to one source row per key, so the
-        new version carries no deltas."""
+        spec: dict | None = None,
+    ) -> list[str]:
+        """Write step of the pruned MERGE of ``source`` into the base —
+        the one fold. Pending merge-on-read deltas fold in first: one
+        multi-path scan of the deltas ∪ the batch, which is sequenced
+        after every on-disk delta (``spec["seq"]``), resolves to one
+        source row per key, so the new version carries no deltas.
+        ``spec`` (from :meth:`upsert_delta`) defaults to the base's
+        pending spec checked against this merge."""
         from ..operators.merge import latest_per_key, merge_dataframes
 
         src = latest_per_key(source, keys, order_by)
-        stack = self._delta_stack(self._version_dir(base))
-        if stack is not None:
-            tagged = src.withColumn("__seq", F.lit(mor["seq"]))
+        mor = meta.get("mor") or {}
+        if mor.get("pending"):
+            spec = spec or self._mor_spec(mor, keys, order_by, event_time_wins)
+            tagged = src.withColumn("__seq", F.lit(spec["seq"]))
             src = source = _mor_resolve_tagged(
-                stack.unionByName(tagged, allowMissingColumns=True), mor
+                self._delta_stack(base_dir).unionByName(
+                    tagged, allowMissingColumns=True
+                ),
+                spec,
             ).select(*src.columns)
-        self._rewrite_partitions(
-            base, v, partition_by,
-            # partition combos from the PRE-dedupe source when nothing
-            # folds: identical distinct set (partition attrs are immutable
-            # per key — the pruned-merge precondition) without
-            # latest_per_key's window shuffle in the peek job's lineage.
-            source.select(*partition_by).distinct(),
+        if spec:
+            meta["mor"] = {**spec, "pending": 0}
+        return self._rewrite_partitions(
+            base_dir, target, partition_by,
             lambda affected: merge_dataframes(
                 affected, src, keys, order_by=order_by,
                 event_time_wins=event_time_wins,
             ),
-            meta_extra={"mor": {**mor, "pending": 0}} if mor else None,
-            txn=txn,
+            # partition combos from the PRE-dedupe source when nothing
+            # folds: identical distinct set (partition attrs are immutable
+            # per key — the pruned-merge precondition) without
+            # latest_per_key's window shuffle in the peek job's lineage.
+            lambda _tgt: source,
         )
 
     def upsert_pruned(
@@ -677,19 +723,14 @@ class ParquetTable:
         """
         from ..operators.merge import latest_per_key
 
-        if not self.exists():
-            self.overwrite(
-                latest_per_key(source, keys, order_by),
-                partition_by=partition_by, txn=txn,
-            )
-            return
-        cur, new_v = self._claim_version()
-        mor = self._read_meta(self._version_dir(cur)).get("mor")
-        if mor and mor.get("pending"):
-            mor = self._mor_spec(mor, keys, order_by, event_time_wins)
-        self._merge_partitions(
-            cur, new_v, source, keys, partition_by, order_by,
-            event_time_wins, txn, mor,
+        self._commit_version(
+            lambda base_dir, target, meta: self._merge_partitions(
+                base_dir, target, meta, source, keys, partition_by,
+                order_by, event_time_wins,
+            ),
+            first=latest_per_key(source, keys, order_by),
+            meta={"partition_by": list(partition_by)},
+            txn=txn,
         )
 
     def upsert_delta(
@@ -720,71 +761,54 @@ class ParquetTable:
         Same conflict semantics as the merge it defers (arrival-wins by
         delta sequence; ``event_time_wins`` resolves by max event time
         with source-wins ties), same txn idempotency markers, same
-        optimistic-concurrency commit."""
+        optimistic-concurrency commit. The first delta records the
+        merge-on-read spec; later batches must keep its keys and
+        ``event_time_wins``."""
         from ..operators.merge import latest_per_key
 
-        fresh = {
-            "keys": list(keys),
-            "order_by": list(order_by or []),
-            "event_time_wins": bool(event_time_wins),
-            "seq": 0,
-            "pending": 0,
-        }
-        if not self.exists():
-            self.overwrite(
-                latest_per_key(source, keys, order_by),
-                partition_by=partition_by, txn=txn, meta_extra={"mor": fresh},
-            )
-            return
-        cur, new_v = self._claim_version()
-        cur_dir = self._version_dir(cur)
-        spec = self._mor_spec(
-            self._read_meta(cur_dir).get("mor") or fresh,
-            keys, order_by, event_time_wins,
-        )
-        pending = int(spec.get("pending", 0)) + 1
-        if pending >= fold_after:
-            # fold trigger: cost amortizes to merge/fold_after per trigger
-            self._merge_partitions(
-                cur, new_v, source, keys, partition_by, order_by,
-                event_time_wins, txn, spec,
-            )
-            return
+        latest = latest_per_key(source, keys, order_by)
+        fresh = {"keys": list(keys), "event_time_wins": bool(event_time_wins)}
 
-        # fast path: the batch IS the write. coalesce(1): a trigger-bounded
-        # micro-batch emitting shuffle.partitions sliver files would undo
-        # the O(batch) win at the file-count level.
-        target = self._version_dir(new_v)
-        latest_per_key(source, keys, order_by).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(
-            os.path.join(target, self._DELTA, f"d{spec['seq']:06d}")
+        def write(base_dir: str, target: str, meta: dict) -> list[str]:
+            spec = self._mor_spec(
+                meta.get("mor") or fresh, keys, order_by, event_time_wins
+            )
+            pending = int(spec.get("pending", 0)) + 1
+            if pending >= fold_after:
+                # fold trigger: cost amortizes to merge/fold_after per trigger
+                return self._merge_partitions(
+                    base_dir, target, meta, source, keys, partition_by,
+                    order_by, event_time_wins, spec,
+                )
+            # fast path: the batch IS the write. coalesce(1): a
+            # trigger-bounded micro-batch emitting shuffle.partitions sliver
+            # files would undo the O(batch) win at the file-count level.
+            latest.coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(target, self._DELTA, f"d{spec['seq']:06d}")
+            )
+            meta["mor"] = {**spec, "pending": pending}
+            return ["."]  # base + prior deltas, layout kept
+
+        self._commit_version(
+            write, first=latest, meta={"partition_by": list(partition_by)},
+            txn=txn,
         )
-        self._link_tree(cur_dir, target)  # base + prior deltas, layout kept
-        self._write_table_meta(
-            target, partition_by, {"mor": {**spec, "pending": pending}}
-        )
-        self._commit(new_v, expected_base=cur, txn=txn)
 
     def _fold_pending(self) -> None:
-        """Fold pending merge-on-read deltas into a clean base version.
-        DML/maintenance entry points (delete/update/compact/cluster) call
-        this first: their partition-link passes assume version dirs hold
-        exactly the resolved content."""
-        v = self.current_version()
-        if v is None:
-            return
-        vdir = self._version_dir(v)
-        meta = self._read_meta(vdir)
+        """Fold pending merge-on-read deltas into the base: the pruned
+        MERGE of an empty batch, so only the partitions the deltas touch
+        are rewritten (no-op without pending deltas). append and the
+        DML / maintenance entry points call this first: their writes
+        assume version dirs hold exactly the resolved content."""
+        meta = self._current_meta()
         mor = meta.get("mor") or {}
-        if not mor.get("pending"):
-            return
-        parts = meta.get("partition_by") or None
-        self.overwrite(
-            self.read(),
-            partition_by=parts,
-            meta_extra={"mor": {**mor, "pending": 0}},
-        )
+        if mor.get("pending"):
+            self.upsert_pruned(
+                self.spark.read.parquet(self._current_dir()).limit(0),
+                mor["keys"], meta["partition_by"],
+                order_by=mor.get("order_by") or None,
+                event_time_wins=bool(mor.get("event_time_wins")),
+            )
 
     # -- DML (copy-on-write DELETE / UPDATE, the Delta analog) ---------------
 
@@ -814,28 +838,15 @@ class ParquetTable:
         whose rows are all deleted writes no output dir and must still be
         excluded from the hardlink pass, or its rows would resurrect."""
         cond = F.coalesce(condition, F.lit(False))
-        parts = self._partition_columns()
-        # DML link passes assume version dirs hold exactly the resolved
-        # content — fold pending merge-on-read deltas first (no-op unless
-        # the table is mid-MoR-window)
         self._fold_pending()
-        base, v = self._claim_version()
-        tgt = self.read()
-        if not parts:
-            tgt.filter(~cond).write.mode("overwrite").parquet(self._version_dir(v))
-            self._commit(v, expected_base=base)
-            return
-        # persist: the matching-combo frame feeds the marker write AND the
-        # partition restriction (limit-collect / semi-join) — without it
-        # each consumer re-runs the full-table predicate scan
-        combo_df = tgt.filter(cond).select(*parts).distinct().persist()
-        try:
-            self._rewrite_partitions(
-                base, v, parts, combo_df, lambda rows: rows.filter(~cond),
-                affected_rels=self._partition_rels(combo_df, parts),
+        self._commit_version(
+            lambda base_dir, target, meta: self._rewrite_partitions(
+                base_dir, target, meta["partition_by"],
+                lambda rows: rows.filter(~cond),
+                lambda tgt: tgt.filter(cond),
+                emptied=True,
             )
-        finally:
-            combo_df.unpersist()
+        )
 
     def update_where(self, condition, set_exprs: dict) -> None:
         """UPDATE ... SET: for rows where ``condition`` is TRUE (NULL →
@@ -845,16 +856,13 @@ class ParquetTable:
         cannot be assigned (an update that moves a row across partitions
         is a delete+insert — use upsert for that); this keeps the rewrite
         prunable to the affected partitions, hardlinking the rest."""
-        parts = self._partition_columns()
-        bad = set(set_exprs) & set(parts)
+        bad = set(set_exprs) & set(self._partition_columns())
         if bad:
             raise ValueError(
                 f"update_where cannot assign partition columns {sorted(bad)}"
             )
         cond = F.coalesce(condition, F.lit(False))
-        self._fold_pending()  # see delete_where
-        base, v = self._claim_version()
-        tgt = self.read()
+        self._fold_pending()
 
         def _apply(df: DataFrame) -> DataFrame:
             return df.select(
@@ -866,14 +874,13 @@ class ParquetTable:
                 ]
             )
 
-        if not parts:
-            _apply(tgt).write.mode("overwrite").parquet(self._version_dir(v))
-            self._commit(v, expected_base=base)
-            return
         # updates never empty a partition, so the rewritten tree's dirs ARE
         # the affected set
-        self._rewrite_partitions(
-            base, v, parts, tgt.filter(cond).select(*parts).distinct(), _apply
+        self._commit_version(
+            lambda base_dir, target, meta: self._rewrite_partitions(
+                base_dir, target, meta["partition_by"], _apply,
+                lambda tgt: tgt.filter(cond),
+            )
         )
 
     def overwrite_clustered(
@@ -897,17 +904,23 @@ class ParquetTable:
         every subsequent pruned scan. For multi-column clustering the
         leading column dominates skipping (lexicographic order), so put
         the most-filtered column first."""
+        v = self.overwrite(
+            self._clustered(df, cluster_by, num_files), partition_by=partition_by
+        )
+        # persist the per-file min/max manifest for the cluster keys so
+        # read_pruned can file-skip without touching footers again
+        self._write_stats(self._version_dir(v), cluster_by)
+
+    @staticmethod
+    def _clustered(
+        df: DataFrame, cluster_by: list[str], num_files: int | None
+    ) -> DataFrame:
         parts = (
             df.repartitionByRange(num_files, *cluster_by)
             if num_files
             else df.repartitionByRange(*cluster_by)
         )
-        v = self.overwrite(
-            parts.sortWithinPartitions(*cluster_by), partition_by=partition_by
-        )
-        # persist the per-file min/max manifest for the cluster keys so
-        # read_pruned can file-skip without touching footers again
-        self._write_stats(self._version_dir(v), cluster_by)
+        return parts.sortWithinPartitions(*cluster_by)
 
     # -- file-skipping stats (the Delta/Iceberg data-skipping analog) --------
     _STATS = "_file_stats.json"
@@ -953,12 +966,10 @@ class ParquetTable:
         }
 
     def _write_stats(self, vdir: str, cols: list[str]) -> dict:
-        import json as _json
-
         stats = self._collect_file_stats(vdir, cols)
         fd, tmp = tempfile.mkstemp(dir=vdir, prefix="._stats")
         with os.fdopen(fd, "w") as f:
-            _json.dump(stats, f)
+            json.dump(stats, f)
         os.replace(tmp, os.path.join(vdir, self._STATS))
         return stats
 
@@ -1006,12 +1017,10 @@ class ParquetTable:
         total_files). Stats are read from the version's manifest, computed
         on demand (and persisted best-effort) if the version was written
         without one."""
-        import json as _json
-
         vdir = self._current_dir()
         try:
             with open(os.path.join(vdir, self._STATS)) as f:
-                stats = _json.load(f)
+                stats = json.load(f)
         except (FileNotFoundError, ValueError):
             stats = self._write_stats(vdir, list(bounds))
         kept, total = [], 0
@@ -1078,20 +1087,26 @@ class ParquetTable:
 
         With ``cluster_by``, the compaction also range-clusters on those
         keys (the OPTIMIZE ... ZORDER BY combo): same write cost, and
-        every subsequent read_pruned range scan on the keys file-skips."""
-        df = self.read()
-        n = df.count()
-        n_files = max(1, -(-n // target_rows_per_file))
-        if cluster_by:
-            self.overwrite_clustered(
-                df, cluster_by, partition_by=partition_by, num_files=n_files
-            )
-        elif partition_by:
-            self.overwrite(
-                df.repartition(n_files, *partition_by), partition_by=partition_by
-            )
-        else:
-            self.overwrite(df.repartition(n_files))
+        every subsequent read_pruned range scan on the keys file-skips.
+
+        A read-modify-write: a commit by another writer after the read
+        raises ConcurrentWriteError instead of dropping its rows."""
+        self._fold_pending()
+
+        def write(base_dir: str, target: str, _meta: dict) -> None:
+            df = self.spark.read.parquet(base_dir)
+            n_files = max(1, -(-df.count() // target_rows_per_file))
+            if cluster_by:
+                df = self._clustered(df, cluster_by, n_files)
+            else:
+                df = df.repartition(n_files, *(partition_by or []))
+            self._write_frame(df, target, partition_by)
+            if cluster_by:
+                self._write_stats(target, cluster_by)
+
+        self._commit_version(
+            write, meta={"partition_by": list(partition_by or [])}
+        )
 
     def live_file_count(self) -> int:
         """Parquet files in the current version — an O(files) directory

@@ -19,7 +19,7 @@ from tools.oracle_check import canon, duck_con  # noqa: E402
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else "CORRECTNESS_LOCAL_r04.json"
+    out_path = sys.argv[2] if len(sys.argv) > 2 else "CORRECTNESS_LOCAL.json"
     import __spark_entry__ as entry
     from azure_airbnb_cdc_ingestion_pipeline_spark.session import get_spark
 

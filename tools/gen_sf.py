@@ -57,7 +57,7 @@ import duckdb
 # merge turned each collision into a common-token-skeleton fingerprint:
 # ~K/11 per base family, mutually near-identical, C(K/11, 2) quadratic
 # pair mass (measured: 72.7x output pairs for 10x docs at sf10->sf100,
-# SCALE_r06_sf100.json first run). 10_000_000 gives 50x clearance, same
+# in round 6's first sf100 run). 10_000_000 gives 50x clearance, same
 # headroom class as the embeddings stride.
 STRIDES = {
     "customer": 100_000,
