@@ -308,7 +308,7 @@ def bpe_doc_token_counts(
     closure) → broadcast word→length join back onto the token stream →
     per-doc sum. The corpus-sized stages are all JVM; Python touches
     only distinct word forms."""
-    import pandas as pd
+    from .arrow import map_batches
 
     tok = docs.select(
         F.col(id_col),
@@ -316,22 +316,15 @@ def bpe_doc_token_counts(
     ).filter(F.col("w") != "")
     distinct_words = tok.select("w").distinct()
 
-    def enc(batches):
-        ranks = bpe_ranks(merges)  # once per task, shared across words
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pd.DataFrame(
-                {
-                    "w": pdf["w"],
-                    "n": [
-                        len(bpe_segment(w, merges, ranks))
-                        for w in pdf["w"]
-                    ],
-                }
-            )
+    ranks = bpe_ranks(merges)  # once, shipped in the closure
 
-    word_len = distinct_words.mapInPandas(enc, "w string, n long")
+    def enc(b) -> dict:
+        return {
+            "w": b.arrow("w"),
+            "n": [len(bpe_segment(w, merges, ranks)) for w in b["w"]],
+        }
+
+    word_len = map_batches(distinct_words, enc, "w string, n long")
     return (
         tok.join(F.broadcast(word_len), "w")
         .groupBy(id_col)

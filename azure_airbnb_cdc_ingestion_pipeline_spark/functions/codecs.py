@@ -13,7 +13,7 @@ decodable with the standard library alone, which is enough to take
 - **WAV PCM** (``wave``): header + frame decode for 8/16-bit PCM;
   duration, channel count, sample rate, and normalized mean amplitude.
 
-These run inside Arrow-batched ``mapInPandas`` workers (see
+These run inside Arrow-batched kernels (``functions.arrow``; see
 operators/multimodal.py) — per-item Python cost is the codec itself, the
 Spark plan stays a narrow map with no payload shuffle.
 """

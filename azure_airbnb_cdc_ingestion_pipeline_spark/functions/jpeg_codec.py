@@ -14,7 +14,7 @@ detect-and-degrade to the SOF header walk (`codecs.jpeg_info`) exactly as
 before; malformed bytes raise ValueError so the quarantine channel keeps
 working. The numeric kernels (DCT, quantize, color transform) are numpy
 matrix ops; only the entropy coder is per-symbol Python — fine for the
-Arrow-batch sizes `mapInPandas` feeds it.
+Arrow-batch sizes `functions.arrow.map_batches` feeds it.
 
 Reference parity note: the reference pipeline has no media path at all —
 this belongs to the charter's multimodal-column extension

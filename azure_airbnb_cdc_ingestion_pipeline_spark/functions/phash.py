@@ -8,7 +8,7 @@ tracks visual difference — followed by Hamming-radius pair finding
 (`operators.dedup.hamming_pairs`, the same pigeonhole-banded blocking
 the simhash text path uses; never an all-pairs product).
 
-Kernels here are numpy over Arrow batches (`mapInPandas`); the image
+Kernels here are numpy over Arrow batches (`functions.arrow`); the image
 bytes come out of the repo's own PNG codec (`functions.codecs`), so the
 whole path — decode → grayscale → resize → DCT → hash — is real, not a
 stub. Invariance envelope (measured on the synthetic corpus,
@@ -28,8 +28,6 @@ crop-sensitive; provided for parity with common curation stacks.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 
@@ -139,25 +137,17 @@ def phash_frame(
     partition. Undecodable payloads raise (route corrupt media through
     `operators.multimodal.decode_features(on_error='quarantine')`
     upstream when the corpus is untrusted)."""
-    import pandas as pd
+    from .arrow import map_batches
 
     fields = f"{id_col} long, phash long" + (
         ", dhash long" if include_dhash else ""
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out: dict[str, list] = {id_col: [], "phash": []}
-            if include_dhash:
-                out["dhash"] = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                gray = decode_gray(payload)
-                out[id_col].append(mid)
-                out["phash"].append(phash64(gray))
-                if include_dhash:
-                    out["dhash"].append(dhash64(gray))
-            yield pd.DataFrame(out)
+    def gen(b) -> dict:
+        grays = [decode_gray(p) for p in b[payload_col]]
+        out = {id_col: b.arrow(id_col), "phash": [phash64(g) for g in grays]}
+        if include_dhash:
+            out["dhash"] = [dhash64(g) for g in grays]
+        return out
 
-    return media.select(id_col, payload_col).mapInPandas(gen, fields)
+    return map_batches(media.select(id_col, payload_col), gen, fields)

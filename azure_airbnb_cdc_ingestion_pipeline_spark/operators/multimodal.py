@@ -2,9 +2,10 @@
 
 Charter extension. Media (image/audio/video) is modeled as a `binary`
 column plus a metadata struct; heavy per-item work (decode, feature
-extraction, resize, frame sampling) runs as Arrow-batched pandas
-iterators via `mapInPandas` — the sanctioned Python path, ~10-100× faster
-than row-at-a-time UDFs and memory-bounded by the Arrow batch size.
+extraction, resize, frame sampling) runs as Arrow-batched kernels
+through `functions.arrow.map_batches` — the engine's one Python path,
+~10-100× faster than row-at-a-time UDFs and memory-bounded by the Arrow
+batch size.
 
 The codec layer (PIL/ffmpeg/librosa) is NOT available in this container,
 so `decode_media` raises NotImplementedError unless the deterministic
@@ -20,13 +21,13 @@ by `spark.sql.files.maxPartitionBytes` on the payload files.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions import arrow
 
 MEDIA_META = T.StructType(
     [
@@ -72,6 +73,16 @@ def as_media(
     )
 
 
+_IMAGE = ("width", "height", "channels", "mean_intensity")
+_FEATURES = (*_IMAGE, "duration_ms")
+
+
+def _features(decoded: dict[str, Any], *keys: str) -> dict[str, Any]:
+    """The five feature fields: ``keys`` read from ``decoded``, the rest
+    None."""
+    return {f: decoded[f] if f in keys else None for f in _FEATURES}
+
+
 def decode_media(payload: bytes, mime: str, fake: bool = False) -> dict[str, Any]:
     """Decode one media payload.
 
@@ -93,23 +104,11 @@ def decode_media(payload: bytes, mime: str, fake: bool = False) -> dict[str, Any
     from ..functions import codecs
 
     if mime == "image/png":
-        img = codecs.decode_png(payload)
-        return {
-            "width": img["width"],
-            "height": img["height"],
-            "channels": img["channels"],
-            "mean_intensity": img["mean_intensity"],
-            "duration_ms": None,
-        }
+        return _features(codecs.decode_png(payload), *_IMAGE)
     if mime in ("audio/wav", "audio/x-wav"):
-        au = codecs.decode_wav(payload)
-        return {
-            "width": None,
-            "height": None,
-            "channels": au["channels"],
-            "mean_intensity": au["mean_intensity"],
-            "duration_ms": au["duration_ms"],
-        }
+        return _features(
+            codecs.decode_wav(payload), "channels", "mean_intensity", "duration_ms"
+        )
     if mime in ("image/jpeg", "image/jpg"):
         # full pixel decode for the supported profile (baseline —
         # interleaved AND non-interleaved scans — plus progressive
@@ -123,35 +122,15 @@ def decode_media(payload: bytes, mime: str, fake: bool = False) -> dict[str, Any
         from ..functions import jpeg_codec
 
         try:
-            img = jpeg_codec.decode_jpeg(payload)
-            return {
-                "width": img["width"],
-                "height": img["height"],
-                "channels": img["channels"],
-                "mean_intensity": img["mean_intensity"],
-                "duration_ms": None,
-            }
+            return _features(jpeg_codec.decode_jpeg(payload), *_IMAGE)
         except (jpeg_codec.NoScanData, NotImplementedError):
             pass
         w, h, ncomp = codecs.jpeg_info(payload)
-        return {
-            "width": w,
-            "height": h,
-            "channels": ncomp,
-            "mean_intensity": None,
-            "duration_ms": None,
-        }
+        return _features({"width": w, "height": h, "channels": ncomp}, *_IMAGE[:3])
     if mime == "image/gif":
         # full first-frame decode (palette + GIF-LZW, functions/codecs.py
         # r10); animation frames beyond the first are length-walked only
-        img = codecs.decode_gif(payload)
-        return {
-            "width": img["width"],
-            "height": img["height"],
-            "channels": img["channels"],
-            "mean_intensity": img["mean_intensity"],
-            "duration_ms": None,
-        }
+        return _features(codecs.decode_gif(payload), *_IMAGE)
     if mime == "image/webp":
         # full VP8L lossless decode (functions/webp_codec.py, r10);
         # lossy VP8 raises NotImplementedError inside decode_webp →
@@ -160,58 +139,25 @@ def decode_media(payload: bytes, mime: str, fake: bool = False) -> dict[str, Any
         from ..functions import webp_codec
 
         try:
-            img = webp_codec.decode_webp(payload)
-            return {
-                "width": img["width"],
-                "height": img["height"],
-                "channels": img["channels"],
-                "mean_intensity": img["mean_intensity"],
-                "duration_ms": None,
-            }
+            return _features(webp_codec.decode_webp(payload), *_IMAGE)
         except NotImplementedError:
             pass
-        info = webp_codec.webp_info(payload)
-        return {
-            "width": info["width"],
-            "height": info["height"],
-            "channels": None,
-            "mean_intensity": None,
-            "duration_ms": None,
-        }
+        return _features(webp_codec.webp_info(payload), "width", "height")
     if mime in ("audio/mpeg", "audio/mp3"):
         # frame-header walk: real channels/duration, no entropy decode
-        au = codecs.mp3_info(payload)
-        return {
-            "width": None,
-            "height": None,
-            "channels": au["channels"],
-            "mean_intensity": None,
-            "duration_ms": au["duration_ms"],
-        }
+        return _features(codecs.mp3_info(payload), "channels", "duration_ms")
     if mime == "video/mp4":
         # moov box walk: real dimensions + duration, no sample decode
-        vi = codecs.mp4_info(payload)
-        return {
-            "width": vi["width"],
-            "height": vi["height"],
-            "channels": None,
-            "mean_intensity": None,
-            "duration_ms": vi["duration_ms"],
-        }
+        return _features(
+            codecs.mp4_info(payload), "width", "height", "duration_ms"
+        )
     if mime in ("video/y4m", "video/x-yuv4mpeg"):
         # FULL raw-frame decode (r5): dimensions, frame count/duration
         # and pixel-level mean luma over sampled frames —
         # functions/codecs.py::decode_y4m. Unsupported colorspaces /
         # interlace raise NotImplementedError (degrade); malformed bytes
         # ValueError (quarantine), same contract as the other codecs.
-        vi = codecs.decode_y4m(payload, sample_every=1)
-        return {
-            "width": vi["width"],
-            "height": vi["height"],
-            "channels": vi["channels"],
-            "mean_intensity": vi["mean_intensity"],
-            "duration_ms": vi["duration_ms"],
-        }
+        return _features(codecs.decode_y4m(payload, sample_every=1), *_FEATURES)
     raise NotImplementedError(
         f"no codec for {mime} in this environment (stdlib codecs cover "
         "image/png, audio/wav and video/y4m fully; image/jpeg baseline+"
@@ -220,25 +166,22 @@ def decode_media(payload: bytes, mime: str, fake: bool = False) -> dict[str, Any
     )
 
 
-def extract_features(media: DataFrame, batch_hint: int | None = None) -> DataFrame:
-    """Cheap per-item features via mapInPandas (Arrow batches): byte length
-    and content digest. The iterator shape keeps peak memory at one Arrow
-    batch regardless of corpus size."""
+def extract_features(media: DataFrame) -> DataFrame:
+    """Cheap per-item features over Arrow batches: byte length and content
+    digest. Peak memory is one Arrow batch regardless of corpus size."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf["payload"]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "byte_len": payloads.map(lambda b: len(b) if b is not None else 0),
-                    "digest": payloads.map(
-                        lambda b: hashlib.md5(b).hexdigest() if b is not None else None
-                    ),
-                }
-            )
+    def _extract(b: arrow.Columns) -> dict:
+        payloads = b["payload"]
+        return {
+            "media_id": b.arrow("media_id"),
+            "byte_len": [len(p) if p is not None else 0 for p in payloads],
+            "digest": [
+                hashlib.md5(p).hexdigest() if p is not None else None
+                for p in payloads
+            ],
+        }
 
-    return media.mapInPandas(_extract, FEATURE_SCHEMA)
+    return arrow.map_batches(media, _extract, FEATURE_SCHEMA)
 
 
 DECODED_SCHEMA = T.StructType(
@@ -258,19 +201,10 @@ DECODED_Q_SCHEMA = T.StructType(
     list(DECODED_SCHEMA.fields) + [T.StructField("error", T.StringType())]
 )
 
-_NULL_FEATURES: dict[str, Any] = {
-    "width": None,
-    "height": None,
-    "channels": None,
-    "duration_ms": None,
-    "mean_intensity": None,
-}
-
-
 def decode_features(
     media: DataFrame, fake: bool = False, on_error: str = "raise"
 ) -> DataFrame:
-    """Per-item decode via mapInPandas: each row decoded with the codec
+    """Per-item decode over Arrow batches: each row decoded with the codec
     for ITS meta.mime (real stdlib codecs for image/png and audio/wav;
     `fake=True` for formats without one). The plan is a narrow map over
     the scan — payloads never shuffle; only the small feature rows do.
@@ -294,33 +228,17 @@ def decode_features(
         try:
             return {**decode_media(b, m, fake=fake), "error": None}
         except (ValueError, NotImplementedError) as e:
-            return {**_NULL_FEATURES, "error": f"{type(e).__name__}: {e}"}
+            return {**_features({}), "error": f"{type(e).__name__}: {e}"}
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                _decode_row(b, m) for b, m in zip(pdf["payload"], pdf["mime"])
-            ]
-            out = {
-                "media_id": pdf["media_id"],
-                "width": pd.array([r["width"] for r in rows], dtype="Int32"),
-                "height": pd.array([r["height"] for r in rows], dtype="Int32"),
-                "channels": pd.array(
-                    [r["channels"] for r in rows], dtype="Int32"
-                ),
-                "duration_ms": pd.array(
-                    [r["duration_ms"] for r in rows], dtype="Int64"
-                ),
-                "mean_intensity": [r["mean_intensity"] for r in rows],
-            }
-            if quarantine:
-                out["error"] = [r["error"] for r in rows]
-            yield pd.DataFrame(out)
+    schema = DECODED_Q_SCHEMA if quarantine else DECODED_SCHEMA
+
+    def _decode(b: arrow.Columns) -> dict:
+        rows = [_decode_row(p, m) for p, m in zip(b["payload"], b["mime"])]
+        out = {f: [r[f] for r in rows] for f in schema.names[1:]}
+        return {"media_id": b.arrow("media_id"), **out}
 
     slim = media.select("media_id", "payload", F.col("meta.mime").alias("mime"))
-    return slim.mapInPandas(
-        _decode, DECODED_Q_SCHEMA if quarantine else DECODED_SCHEMA
-    )
+    return arrow.map_batches(slim, _decode, schema)
 
 
 def split_quarantine(decoded: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -338,8 +256,8 @@ def sample_frames(
 ) -> DataFrame:
     """Frame-sampling plumbing (video → frame rows): each payload fans out
     to ceil(duration/every_ms) synthetic frame records. Real decoder would
-    emit actual frame bytes; the flatMap shape (1 → N rows inside
-    mapInPandas) is what matters for the plan."""
+    emit actual frame bytes; the flatMap shape (1 → N rows inside one
+    Arrow map pass) is what matters for the plan."""
     schema = T.StructType(
         [
             T.StructField("media_id", T.LongType()),
@@ -348,22 +266,21 @@ def sample_frames(
         ]
     )
 
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {"media_id": [], "frame_idx": [], "frame_digest": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if not fake:
-                    raise NotImplementedError("no video codec in this environment")
-                n = 1 + (len(payload or b"") % 4)
-                for i in range(n):
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(i)
-                    out["frame_digest"].append(
-                        hashlib.md5((payload or b"") + bytes([i])).hexdigest()
-                    )
-            yield pd.DataFrame(out)
+    def _frames(b: arrow.Columns) -> dict:
+        out: dict[str, list] = {"media_id": [], "frame_idx": [], "frame_digest": []}
+        for mid, payload in zip(b["media_id"], b["payload"]):
+            if not fake:
+                raise NotImplementedError("no video codec in this environment")
+            n = 1 + (len(payload or b"") % 4)
+            for i in range(n):
+                out["media_id"].append(mid)
+                out["frame_idx"].append(i)
+                out["frame_digest"].append(
+                    hashlib.md5((payload or b"") + bytes([i])).hexdigest()
+                )
+        return out
 
-    return media.mapInPandas(_frames, schema)
+    return arrow.map_batches(media, _frames, schema)
 
 
 def resize_media(
@@ -372,7 +289,7 @@ def resize_media(
     """Resize: payload -> resized payload + updated meta. image/png rows
     run the REAL stdlib decode→nearest-neighbor→re-encode path
     (functions/codecs.py); other mimes need PIL/ffmpeg and must use
-    `fake=True` (digest stand-in). The Spark plan — narrow mapInPandas,
+    `fake=True` (digest stand-in). The Spark plan — narrow Arrow map,
     meta struct rebuild, payload stays executor-side — is identical
     either way."""
 
@@ -392,17 +309,13 @@ def resize_media(
             f"no resize codec for {mime} — pass fake=True for the stub"
         )
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            out["payload"] = [
-                _resize_one(b, (m if isinstance(m, dict) else m.asDict())["mime"])
-                for b, m in zip(pdf["payload"], pdf["meta"])
-            ]
-            out["meta"] = out["meta"].map(
-                lambda m: {**(m if isinstance(m, dict) else m.asDict()),
-                           "width": width, "height": height}
-            )
-            yield out
+    def _resize(b: arrow.Columns) -> dict:
+        metas = b["meta"]
+        return {
+            **b.append("payload", [
+                _resize_one(p, m["mime"]) for p, m in zip(b["payload"], metas)
+            ]),
+            "meta": [{**m, "width": width, "height": height} for m in metas],
+        }
 
-    return media.mapInPandas(_resize, media.schema)
+    return arrow.map_batches(media, _resize, media.schema)

@@ -6,7 +6,7 @@ embedding-cosine near-dup pair finder.
 
 Kernel choice: dot products run JVM-side via `F.zip_with` +
 `F.aggregate` — whole-stage-codegen arithmetic on the array columns, no
-Python in the loop. (An Arrow/pandas-UDF numpy-matmul kernel wins when k
+Python in the loop. (An Arrow numpy-matmul kernel wins when k
 and the query set are large; the LSH bucketing below is the bigger lever
 because it removes the |corpus| factor per query.)
 
@@ -25,6 +25,9 @@ import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..functions import arrow
 
 
 def unit_rows(M):
@@ -400,7 +403,6 @@ def _lsh_buckets(
     vectors the next select dropped cost the sf10 bucketize stage
     9.5 → 6.7 s)."""
     import numpy as np
-    import pandas as pd
 
     planes, tables, nbuckets = grid
     proj = np.concatenate(
@@ -415,26 +417,21 @@ def _lsh_buckets(
     )  # dim × (tables·planes)
     weights = (1 << np.arange(planes, dtype=np.int64)).astype(np.float64)
 
-    def _gemm(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            U = unit_rows(np.vstack(pdf["v"].to_numpy()))
-            signs = (U @ proj >= 0).astype(np.float64)
-            bks = (signs.reshape(len(U), tables, planes) @ weights).astype(np.int64)
-            out = {out_id: pdf["id"], "bks": list(bks)}
-            if with_unit:
-                out["unit"] = list(U)
-            yield pd.DataFrame(out)
+    def _gemm(b):
+        U = unit_rows(b["v"])
+        signs = (U @ proj >= 0).astype(np.float64)
+        bks = (signs.reshape(len(U), tables, planes) @ weights).astype(np.int64)
+        out = {out_id: b.arrow("id"), "bks": bks}
+        if with_unit:
+            out["unit"] = U
+        return out
 
     unit = ["unit"] if with_unit else []
-    schema = (
-        f"{out_id} long, unit array<double>, bks array<long>"
-        if with_unit
-        else f"{out_id} long, bks array<long>"
+    schema = f"{out_id} long, " + (
+        "unit array<double>, bks array<long>" if with_unit else "bks array<long>"
     )
     return (
-        vecs.mapInPandas(_gemm, schema)
+        arrow.map_batches(vecs, _gemm, schema)
         .select(out_id, *unit, F.posexplode("bks").alias("tbl", "sign_bucket"))
         .select(
             out_id,
@@ -478,7 +475,6 @@ def cosine_pairs_lsh(
     — never the O(n²) triangular product.
     """
     import numpy as np
-    import pandas as pd
 
     from ..session import fan_out
 
@@ -563,7 +559,7 @@ def cosine_pairs_lsh(
     # output, row materialization and Arrow transfer dominated the sf100
     # wall (330 s). Pair formation is fused INTO the partition kernel:
     # the one skinny exchange clusters each (tbl, bucket) into a
-    # partition, and a mapInPandas pass groups rows by bucket in numpy
+    # partition, and an Arrow map pass groups rows by bucket in numpy
     # and forms each bucket's pairs as a blocked Gram matrix (X Xᵀ)
     # against the broadcast unit matrix — candidates never exist as rows;
     # only verified true pairs are emitted.
@@ -572,34 +568,23 @@ def cosine_pairs_lsh(
         p_skinny, "tbl", "bucket"
     )
     # driver materialization is bounded by the budget gate above
-    tbl = src.toArrow()
-    ids = np.asarray(tbl.column("id").combine_chunks(), dtype=np.int64)
-    flat = tbl.column("v").combine_chunks().flatten()
-    V = np.asarray(flat, dtype=np.float64).reshape(len(ids), -1)
+    got = arrow.collect(src)
+    ids = np.asarray(got["id"], dtype=np.int64)
     order = np.argsort(ids, kind="stable")
     bc = src.sparkSession.sparkContext.broadcast(
-        (ids[order], unit_rows(V)[order])
+        (ids[order], unit_rows(got["v"])[order])
     )
     thr = threshold
     # per-class GEMM tiles are capped so the gathered (nb, c, dim)
     # stack and its (nb, c, c) Gram block stay ~tens of MB per call
     gemm_budget = 8 << 20  # doubles per tile ≈ 64 MB
 
-    def _pair_gemm(batches):
+    def _pair_gemm(b):
         ids_s, Um = bc.value
         d = Um.shape[1]
-        # Buffer the whole partition: the repartition clusters every
-        # (tbl, bucket) group into exactly one partition, but Arrow
-        # batch boundaries split groups mid-bucket — pair formation
-        # needs the full group. ~1.5 M skinny rows ≈ 40 MB buffered.
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        rid = np.concatenate([p["id"].to_numpy() for p in parts])
-        tb = np.concatenate(
-            [p["tbl"].to_numpy().astype(np.int64) for p in parts]
-        )
-        bk = np.concatenate([p["bucket"].to_numpy() for p in parts])
+        rid = b["id"]
+        tb = b["tbl"].astype(np.int64)
+        bk = b["bucket"]
         o = np.lexsort((rid, bk, tb))
         rid, tb, bk = rid[o], tb[o], bk[o]
         m = len(rid)
@@ -666,16 +651,19 @@ def cosine_pairs_lsh(
                         _emit(bids[i0 + li], bids[lj], G[li, lj])
 
         if out_a:
-            yield pd.DataFrame(
-                {
-                    "a_id": np.concatenate(out_a),
-                    "b_id": np.concatenate(out_b),
-                    "cos": np.concatenate(out_c),
-                }
-            )
+            return {
+                "a_id": np.concatenate(out_a),
+                "b_id": np.concatenate(out_b),
+                "cos": np.concatenate(out_c),
+            }
 
-    return skinny.mapInPandas(
-        _pair_gemm, "a_id long, b_id long, cos double"
+    # Buffer the whole partition: the repartition clusters every (tbl,
+    # bucket) group into exactly one partition, but Arrow batch
+    # boundaries split groups mid-bucket — pair formation needs the full
+    # group. ~1.5 M skinny rows ≈ 40 MB buffered.
+    return arrow.map_batches(
+        skinny, _pair_gemm, "a_id long, b_id long, cos double",
+        whole_partition=True,
     ).dropDuplicates(["a_id", "b_id"])
 
 
@@ -699,46 +687,41 @@ def numpy_topk(
     (argpartition), so the shuffle that feeds the global ranking window
     carries ~batches × q × (k+1) rows — never the full score matrix.
 
-    Scale: corpus partitions stream through mapInPandas with no corpus
+    Scale: corpus partitions stream through Arrow batches with no corpus
     shuffle; driver holds only q × dim doubles. Prefer this kernel when
     q × dim is large enough that per-pair expression evaluation
     dominates (GEMM amortizes to ~ns/pair); prefer `lsh_topk`/`ivf_topk`
     when |corpus| itself is the problem.
     """
     import numpy as np
-    import pandas as pd
 
     from ..session import fan_out
 
     corpus = fan_out(corpus)  # tiny-file guard: GEMM batches per partition
-    qrows = queries.select(query_id, query_vec).collect()
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qn = unit_rows(np.array([r[1] for r in qrows], dtype=np.float64))
+    q = arrow.collect(queries.select(query_id, query_vec))
+    qids = np.asarray(q[query_id], dtype=np.int64)
+    qn = unit_rows(q[query_vec])
     take = k + 1  # +1 absorbs a potential self-match dropped below
 
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[corpus_id].to_numpy(dtype=np.int64)
-            v = np.array(pdf[corpus_vec].tolist(), dtype=np.float64)
-            s = unit_rows(v) @ qn.T  # (batch × q) cosine matrix
-            top = min(take, len(ids))
-            # per query-column: indices of the `top` best corpus rows
-            cand = np.argpartition(-s, top - 1, axis=0)[:top]
-            out_q = np.repeat(qids, top)
-            rows = cand.T.ravel()
-            yield pd.DataFrame(
-                {
-                    "query_id": out_q,
-                    "neighbor_id": ids[rows],
-                    "cos": s[rows, np.repeat(np.arange(len(qids)), top)],
-                }
-            )
+    def score(b):
+        ids = np.asarray(b[corpus_id], dtype=np.int64)
+        s = unit_rows(b[corpus_vec]) @ qn.T  # (batch × q) cosine matrix
+        top = min(take, len(ids))
+        # per query-column: indices of the `top` best corpus rows
+        cand = np.argpartition(-s, top - 1, axis=0)[:top]
+        out_q = np.repeat(qids, top)
+        rows = cand.T.ravel()
+        return {
+            "query_id": out_q,
+            "neighbor_id": ids[rows],
+            "cos": s[rows, np.repeat(np.arange(len(qids)), top)],
+        }
 
     scored = (
-        corpus.select(corpus_id, corpus_vec)
-        .mapInPandas(score, "query_id long, neighbor_id long, cos double")
+        arrow.map_batches(
+            corpus.select(corpus_id, corpus_vec), score,
+            "query_id long, neighbor_id long, cos double",
+        )
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cos", F.round("cos", 4))
     )
@@ -762,7 +745,7 @@ def blocked_topk(
     caps |queries| at driver memory; a real retrieval pipeline can have
     a query set as big as the corpus).
 
-    Block-nested GEMM via cogrouped `applyInPandas`: queries are hashed
+    Block-nested GEMM via a cogrouped Arrow kernel: queries are hashed
     into ⌈|Q|/query_block_rows⌉ blocks and corpus rows into
     ⌈|C|/corpus_block_rows⌉ chunks; each side is replicated across the
     other's block ids (an `explode` over block-id literals — the
@@ -781,7 +764,6 @@ def blocked_topk(
     size. Self-matches (query_id == neighbor_id) are excluded, matching
     the broadcast kernels' convention."""
     import numpy as np
-    import pandas as pd
 
     from ..session import fan_out
 
@@ -810,18 +792,12 @@ def blocked_topk(
         .withColumn("_qb", F.explode(F.array(*[F.lit(b) for b in range(q_blocks)])))
     )
 
-    def score(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(qpdf) or not len(cpdf):
-            return pd.DataFrame(
-                {"query_id": pd.Series(dtype="int64"),
-                 "neighbor_id": pd.Series(dtype="int64"),
-                 "cos": pd.Series(dtype="float64")}
-            )
+    def score(qb: arrow.Columns, cb: arrow.Columns) -> dict:
         # unit_rows: zero-norm AND non-finite rows → cos 0 (r8 policy)
-        qn = unit_rows(np.array(qpdf["qv"].tolist(), dtype=np.float64))
-        cn = unit_rows(np.array(cpdf["cv"].tolist(), dtype=np.float64))
+        qn = unit_rows(qb["qv"])
+        cn = unit_rows(cb["cv"])
         s = cn @ qn.T  # (c_blk × q_blk)
-        top = min(take, len(cpdf))
+        top = min(take, len(cb))
         # Select local candidates by the SAME total order the global
         # window uses — (round(cos,4) DESC, neighbor_id ASC) — so a
         # rounded-cos tie can never cut the globally-winning smaller id
@@ -829,7 +805,8 @@ def blocked_topk(
         # minus an epsilon·cid-rank perturbation (max 65535·1e-11 =
         # 6.5e-7, far below the 5e-5 half-step of the 4dp rounding, far
         # above float64 ulp near 1).
-        cid_order = np.argsort(cpdf["cid"].to_numpy(dtype=np.int64), kind="stable")
+        cids = np.asarray(cb["cid"], dtype=np.int64)
+        cid_order = np.argsort(cids, kind="stable")
         cid_rank = np.empty(len(cid_order), dtype=np.float64)
         cid_rank[cid_order] = np.arange(len(cid_order), dtype=np.float64)
         # r8 (advisor): the perturbation must stay below the 5e-5
@@ -838,24 +815,23 @@ def blocked_topk(
         # raised. Scale it from the actual batch size (identical 1e-11
         # below 2.5M rows, so gated results are unchanged); the floor
         # stays ≥ thousands of ulps near 1.0 even at 2^31 rows.
-        eps = min(1e-11, 2.5e-5 / max(len(cpdf), 1))
+        eps = min(1e-11, 2.5e-5 / max(len(cb), 1))
         key = np.round(s, 4) - eps * cid_rank[:, None]
         cand = np.argpartition(-key, top - 1, axis=0)[:top]
-        qids = qpdf["qid"].to_numpy(dtype=np.int64)
-        cids = cpdf["cid"].to_numpy(dtype=np.int64)
+        qids = np.asarray(qb["qid"], dtype=np.int64)
         rows = cand.T.ravel()
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(qids, top),
-                "neighbor_id": cids[rows],
-                "cos": s[rows, np.repeat(np.arange(len(qids)), top)],
-            }
-        )
+        return {
+            "query_id": np.repeat(qids, top),
+            "neighbor_id": cids[rows],
+            "cos": s[rows, np.repeat(np.arange(len(qids)), top)],
+        }
 
     scored = (
-        qb_rep.groupby("_qb", "_cb")
-        .cogroup(cb_rep.groupby("_qb", "_cb"))
-        .applyInPandas(score, "query_id long, neighbor_id long, cos double")
+        arrow.apply_cogroups(
+            qb_rep.groupby("_qb", "_cb").cogroup(cb_rep.groupby("_qb", "_cb")),
+            score,
+            "query_id long, neighbor_id long, cos double",
+        )
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cos", F.round("cos", 4))
     )
@@ -920,8 +896,6 @@ def ivf_topk(
     on cell id, so AQE handles uneven cell sizes like any other grouped
     join.
     """
-    import numpy as np
-
     from .windows import topk_per_group
 
     spark = corpus.sparkSession
@@ -952,36 +926,14 @@ def ivf_topk(
         # 145 M × 64-element folds ≈ 100 s of the 121 s sf100 recall
         # wall. The centroid set is bounded BY CONTRACT (broadcast
         # metadata), so collect it once and score each corpus Arrow
-        # batch against ALL centroids with ONE numpy matmul — no
-        # crossJoin, no exchange at all (the kernel emits exactly one
-        # row per corpus row, cell attached). Tie order matches the old
-        # argmax: HALF_UP round to 9 dp, lowest cell id on ties
-        # (centroid columns sorted by cell id; argmax takes the first
-        # max). unit_rows gives non-finite/zero rows cos 0 everywhere,
-        # same keep-ranked-last policy as every other Arrow kernel.
-        crows = sorted(centers.collect(), key=lambda r: r["__cell"])
-        c_ids = np.array([r["__cell"] for r in crows], dtype=np.int64)
-        Cn = unit_rows(np.array([r["center"] for r in crows], dtype=np.float64))
-        out_fields = corpus.schema.fields
-        out_schema = ", ".join(
-            [f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields]
-            + ["__cell int"]
+        # batch against ALL centroids with ONE numpy matmul
+        # (`_assign_cells`: one row per corpus row, cell attached).
+        # unit_rows gives non-finite/zero rows cos 0 everywhere, the
+        # keep-ranked-last policy of every kernel.
+        assigned = _assign_cells(
+            corpus, corpus_vec, _centroids(centers, "__cell", "center"),
+            "__cell", T.IntegerType(),
         )
-        vec_name = corpus_vec
-
-        def _assign(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.array(pdf[vec_name].tolist(), dtype=np.float64)
-                s = unit_rows(V) @ Cn.T  # (batch × n_centroids)
-                s = _round_half_up(s, 9)
-                best = np.argmax(s, axis=1)  # first max = lowest cell id
-                out = pdf.copy()
-                out["__cell"] = c_ids[best].astype(np.int32)
-                yield out
-
-        assigned = corpus.mapInPandas(_assign, out_schema)
     probes = topk_per_group(
         queries.crossJoin(F.broadcast(centers)).select(
             query_id,
@@ -1116,6 +1068,53 @@ def lsh_topk(
     return _rank_neighbors(scored, query_id, k)
 
 
+def _centroids(centers: DataFrame, cell: str, center: str):
+    """(cell ids ascending, unit centre rows in that order) of a bounded
+    centroid frame, collected once to ride the task closure of
+    :func:`_assign_cells`."""
+    import numpy as np
+
+    got = arrow.collect(centers.select(cell, center))
+    by_cell = np.argsort(got[cell], kind="stable")
+    return (
+        np.asarray(got[cell], dtype=np.int64)[by_cell],
+        unit_rows(got[center][by_cell]),
+    )
+
+
+def _assign_cells(
+    df: DataFrame,
+    vec_col: str,
+    cents,
+    out: str,
+    out_type: T.DataType,
+    self_col: str | None = None,
+) -> DataFrame:
+    """``df`` plus ``out``: the cell of ``cents`` (`_centroids`) nearest
+    each row's ``vec_col`` — one (batch × centroids) GEMM per Arrow batch,
+    no crossJoin and no exchange. Scores round HALF_UP to 9 dp and ties
+    go to the LOWEST cell id (ids ascending; argmax takes the first max),
+    the convention the DuckDB oracles reproduce. ``self_col`` names a
+    row's own cell id: on an exact rounded tie the row stays in its own
+    cell (ε = a quarter of the 1e-9 rounding quantum breaks the tie
+    without ever reordering distinct rounded scores)."""
+    import numpy as np
+
+    c_ids, Cn = cents
+
+    def _assign(b):
+        s = _round_half_up(unit_rows(b[vec_col]) @ Cn.T, 9)
+        if self_col is not None:
+            ids = b[self_col]
+            pos = np.searchsorted(c_ids, ids).clip(max=len(c_ids) - 1)
+            hit = c_ids[pos] == ids
+            s[np.nonzero(hit)[0], pos[hit]] += 2.5e-10
+        return b.append(out, c_ids[np.argmax(s, axis=1)])
+
+    schema = T.StructType(df.schema.fields + [T.StructField(out, out_type)])
+    return arrow.map_batches(df, _assign, schema)
+
+
 def semdedup(
     vectors: DataFrame,
     centroids: DataFrame,
@@ -1169,7 +1168,7 @@ def _min_id_prune(assigned: DataFrame, id_col: str, threshold: float) -> DataFra
     distinct and a keep-flag back-join — 263 GB of summed memory spill
     and 5.6 GB peak task execution memory at sf100, an OOM on any
     standard 4–8 GB executor slot. Now: ONE cell-keyed shuffle of the
-    corpus rows into `applyInPandas`, and the quadratic stays inside an
+    corpus rows into a grouped Arrow kernel, and the quadratic stays in an
     Arrow kernel as a TILED unit-row GEMM — peak task memory is
     O(|cell|·dim + tile), never O(|cell|²), and the keep flag is
     computed in place (no pair stream, no distinct, no back-join, and
@@ -1182,18 +1181,16 @@ def _min_id_prune(assigned: DataFrame, id_col: str, threshold: float) -> DataFra
     the DuckDB oracle's round(list_cosine_similarity, 4) at every
     boundary."""
     import numpy as np
-    import pandas as pd
 
     thr = float(threshold)
     id_t = assigned.schema["id"].dataType.simpleString()
     cell_t = assigned.schema["cell"].dataType.simpleString()
 
-    def _prune_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy(dtype=np.int64)
+    def _prune_cell(g: arrow.Columns) -> dict:
+        ids = np.asarray(g["id"], dtype=np.int64)
         order = np.argsort(ids, kind="stable")
         ids = ids[order]
-        V = np.array(pdf["vv"].to_numpy()[order].tolist(), dtype=np.float64)
-        U = unit_rows(V)
+        U = unit_rows(g["vv"][order])
         n = len(ids)
         is_dup = np.zeros(n, dtype=bool)
         # 1024×8192 float64 tiles = 64 MB of scores — the expected cell
@@ -1210,17 +1207,13 @@ def _min_id_prune(assigned: DataFrame, id_col: str, threshold: float) -> DataFra
                 hit = _round_half_up(rb @ cb.T, 4) >= thr
                 hit &= rows_g < np.arange(j, j + cb.shape[0])[None, :]
                 is_dup[j : j + cb.shape[0]] |= hit.any(axis=0)
-        return pd.DataFrame(
-            {
-                "id": ids,
-                "cell": pdf["cell"].to_numpy()[order],
-                "keep": ~is_dup,
-            }
-        )
+        return {"id": ids, "cell": g["cell"][order], "keep": ~is_dup}
 
     return (
-        assigned.groupBy("cell")
-        .applyInPandas(_prune_cell, f"id {id_t}, cell {cell_t}, keep boolean")
+        arrow.apply_groups(
+            assigned.groupBy("cell"), _prune_cell,
+            f"id {id_t}, cell {cell_t}, keep boolean",
+        )
         .select(F.col("id").alias(id_col), "cell", "keep")
     )
 
@@ -1267,7 +1260,6 @@ def semdedup_scaled(
     import math
 
     import numpy as np
-    import pandas as pd
 
     from ..session import fan_out, track_persist
 
@@ -1300,51 +1292,17 @@ def semdedup_scaled(
     # Coarse centroids are k1 = √(n/S) rows — 4 k rows × dim even at
     # 2 × 10⁹ vectors, bounded driver metadata by construction — so they
     # collect once and ride the task closure.
-    crows = sorted(coarse.collect(), key=lambda r: r["ccell"])
-    cc_ids = np.array([r["ccell"] for r in crows], dtype=np.int64)
-    CCn = unit_rows(np.array([r["ccenter"] for r in crows], dtype=np.float64))
-
-    def _coarse_assign(vcol: str, self_col: str | None):
-        def _run(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.array(pdf[vcol].tolist(), dtype=np.float64)
-                s = unit_rows(V) @ CCn.T
-                s = _round_half_up(s, 9)
-                if self_col is not None:
-                    # is_self tie-break (coarse ⊆ fine): pin each coarse
-                    # centroid to ITS OWN coarse cell on exact rounded
-                    # ties — ε = a quarter of the 1e-9 rounding quantum
-                    # breaks ties toward self without ever reordering
-                    # distinct rounded scores. Guarantees every ccell a
-                    # vector can argmax to has ≥ 1 fine centroid, so the
-                    # fine-level cogroup below can never drop a vector.
-                    ids = pdf[self_col].to_numpy()
-                    pos = np.searchsorted(cc_ids, ids).clip(
-                        max=len(cc_ids) - 1
-                    )
-                    hit = cc_ids[pos] == ids
-                    s[np.nonzero(hit)[0], pos[hit]] += 2.5e-10
-                best = np.argmax(s, axis=1)
-                out = pdf.copy()
-                out["ccell"] = cc_ids[best]
-                yield out
-
-        return _run
-
+    cents = _centroids(coarse, "ccell", "ccenter")
+    v2c = _assign_cells(
+        vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vv")),
+        "vv", cents, "ccell", T.LongType(),
+    )
+    # is_self tie-break (coarse ⊆ fine): guarantees every ccell a vector
+    # can argmax to has ≥ 1 fine centroid, so the fine-level cogroup
+    # below can never drop a vector
+    f2c = _assign_cells(fine, "center", cents, "ccell", T.LongType(), "cell")
     vv_t = vectors.schema[vec_col].dataType.simpleString()
     id_t = vectors.schema[id_col].dataType.simpleString()
-    v2c = vectors.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vv")
-    ).mapInPandas(
-        _coarse_assign("vv", None),
-        f"id {id_t}, vv {vv_t}, ccell bigint",
-    )
-    f2c = fine.mapInPandas(
-        _coarse_assign("center", "cell"),
-        f"cell {id_t}, center {vv_t}, ccell bigint",
-    )
 
     # vector → fine cell, candidates restricted to its coarse cell's
     # fine centroids: COGROUP on ccell — each group is ~n/k1 vectors ×
@@ -1352,34 +1310,22 @@ def semdedup_scaled(
     # 2048 × |group centroids|), argmax with the same 9 dp/lowest-cell
     # convention. The only data movement is the two ccell-keyed
     # exchanges feeding the cogroup — O(n + k2) rows.
-    def _fine_assign(l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-        if not len(l) or not len(r):
-            return pd.DataFrame(
-                {
-                    "id": pd.Series([], dtype="int64"),
-                    "vv": pd.Series([], dtype=object),
-                    "cell": pd.Series([], dtype="int64"),
-                }
-            )
-        order = np.argsort(r["cell"].to_numpy(), kind="stable")
-        fc_ids = r["cell"].to_numpy()[order]
-        Fn = unit_rows(
-            np.array(r["center"].to_numpy()[order].tolist(), dtype=np.float64)
-        )
-        U = unit_rows(np.array(l["vv"].tolist(), dtype=np.float64))
+    def _fine_assign(l: arrow.Columns, r: arrow.Columns) -> dict:
+        order = np.argsort(r["cell"], kind="stable")
+        fc_ids = r["cell"][order]
+        Fn = unit_rows(r["center"][order])
+        U = unit_rows(l["vv"])
         best = np.empty(len(U), dtype=np.int64)
         RB = 2048
         for i in range(0, len(U), RB):
             s = U[i : i + RB] @ Fn.T
             best[i : i + RB] = np.argmax(_round_half_up(s, 9), axis=1)
-        return pd.DataFrame(
-            {"id": l["id"].to_numpy(), "vv": l["vv"], "cell": fc_ids[best]}
-        )
+        return {"id": l.arrow("id"), "vv": l.arrow("vv"), "cell": fc_ids[best]}
 
-    assigned = (
-        v2c.groupBy("ccell")
-        .cogroup(f2c.groupBy("ccell"))
-        .applyInPandas(_fine_assign, f"id {id_t}, vv {vv_t}, cell {id_t}")
+    assigned = arrow.apply_cogroups(
+        v2c.groupBy("ccell").cogroup(f2c.groupBy("ccell")),
+        _fine_assign,
+        f"id {id_t}, vv {vv_t}, cell {id_t}",
     )
     return _min_id_prune(assigned, id_col, threshold)
 
@@ -1490,7 +1436,6 @@ def pq_topk(
     shuffle; exact re-rank touches only |queries| x shortlist rows.
     """
     import numpy as np
-    import pandas as pd
 
     from ..session import fan_out
 
@@ -1506,24 +1451,20 @@ def pq_topk(
         ).cast("double")
         / 1152921504606846975.0
     )
-    sample_rows = (
+    sample = arrow.collect(
         corpus.select(
             F.col(corpus_vec).cast("array<double>").alias("v"), u.alias("u")
-        )
-        .filter(F.col("u") < rate)
-        .collect()
+        ).filter(F.col("u") < rate)
     )
-    if len(sample_rows) < ksub:
+    if len(sample) < ksub:
         raise ValueError(
-            f"pq_topk: corpus has only {len(sample_rows)} rows — cannot "
+            f"pq_topk: corpus has only {len(sample)} rows — cannot "
             f"train {ksub} centroids per subspace (need >= ksub rows)."
         )
     # hash order: a deterministic pseudo-random shuffle, so strided init
-    # seeds spread over the distribution rather than over id ranges
-    sample_rows.sort(key=lambda r: r.u)
-    train = unit_rows(
-        np.vstack([np.asarray(r.v, dtype=np.float64) for r in sample_rows])
-    )  # train in the unit space the scan quantizes
+    # seeds spread over the distribution rather than over id ranges;
+    # train in the unit space the scan quantizes
+    train = unit_rows(sample["v"][np.argsort(sample["u"], kind="stable")])
     stride = max(1, len(train) // ksub)
     codebooks = []
     for j in range(m):
@@ -1541,11 +1482,11 @@ def pq_topk(
         codebooks.append(C)
     CB = np.stack(codebooks)  # (m, ksub, sub)
 
-    q_rows = queries.select(
-        query_id, F.col(query_vec).cast("array<double>").alias("qv")
-    ).collect()
-    q_ids = [r[0] for r in q_rows]
-    Q = np.vstack([np.asarray(r.qv, dtype=np.float64) for r in q_rows])
+    got = arrow.collect(
+        queries.select(query_id, F.col(query_vec).cast("array<double>").alias("qv"))
+    )
+    q_ids = got[query_id]
+    Q = got["qv"]
     qn = unit_rows(Q)
     # ADC tables: for each query and subspace, dot(q_sub, centroid) —
     # approx dot(q, x) = sum_j table[q][j][code_j(x)]
@@ -1553,35 +1494,29 @@ def pq_topk(
 
     n_q, sl = len(Q), shortlist
 
-    def _scan(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.vstack(pdf["v"].to_numpy())
-            U = unit_rows(V).reshape(len(V), m, sub)
-            # encode: per subspace nearest centroid
-            codes = np.empty((len(V), m), dtype=np.int64)
-            for j in range(m):
-                d2 = (
-                    (U[:, j, None, :] - CB[j][None, :, :]) ** 2
-                ).sum(axis=2)
-                codes[:, j] = d2.argmin(axis=1)
-            # ADC scores: (q, rows)
-            scores = np.zeros((n_q, len(V)))
-            for j in range(m):
-                scores += tables[:, j, :][:, codes[:, j]]
-            out_q, out_id = [], []
-            for qi in range(n_q):
-                top = np.argsort(-scores[qi])[:sl]
-                out_q.extend([q_ids[qi]] * len(top))
-                out_id.extend(pdf["id"].iloc[top].tolist())
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_id})
+    def _scan(b):
+        V = b["v"]
+        U = unit_rows(V).reshape(len(V), m, sub)
+        # encode: per subspace nearest centroid
+        codes = np.empty((len(V), m), dtype=np.int64)
+        for j in range(m):
+            d2 = ((U[:, j, None, :] - CB[j][None, :, :]) ** 2).sum(axis=2)
+            codes[:, j] = d2.argmin(axis=1)
+        # ADC scores: (q, rows)
+        scores = np.zeros((n_q, len(V)))
+        for j in range(m):
+            scores += tables[:, j, :][:, codes[:, j]]
+        tops = [np.argsort(-scores[qi])[:sl] for qi in range(n_q)]
+        return {
+            "query_id": np.repeat(q_ids, [len(t) for t in tops]),
+            "neighbor_id": b["id"][np.concatenate(tops)] if tops else [],
+        }
 
     src = fan_out(corpus).select(
         F.col(corpus_id).alias("id"),
         F.col(corpus_vec).cast("array<double>").alias("v"),
     )
-    cand = src.mapInPandas(_scan, "query_id long, neighbor_id long").filter(
+    cand = arrow.map_batches(src, _scan, "query_id long, neighbor_id long").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
     # exact re-rank of the per-partition shortlists at full precision

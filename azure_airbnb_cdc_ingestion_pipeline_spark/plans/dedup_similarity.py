@@ -384,7 +384,7 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Same semantics and oracle as ann_cosine_topk — different physical
-# kernel (Arrow mapInPandas GEMM instead of per-element JVM expressions).
+# kernel (Arrow-batch GEMM instead of per-element JVM expressions).
 @query("ann_numpy_topk", oracle=_ANN_ORACLE)
 def q_ann_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import numpy_topk

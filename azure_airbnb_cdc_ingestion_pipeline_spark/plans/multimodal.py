@@ -1,4 +1,4 @@
-"""Multimodal family: binary payloads through ``mapInPandas`` — feature
+"""Multimodal family: binary payloads through Arrow map passes — feature
 extraction with a quarantine channel, JPEG (baseline, 4:2:0 / 4:2:2,
 EXIF orientation) and Y4M video round trips through the engine's own
 codecs, WAV spectral features, and perceptual-hash image near-dup dedup.
@@ -16,11 +16,11 @@ GIF, so they must collapse across the format boundary.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import arrow
 from ..operators.multimodal import as_media, extract_features
 from .queries import _t, query
 
@@ -47,24 +47,20 @@ def _media_frame(docs: DataFrame, mime: str, encode) -> DataFrame:
     ``encode(doc_id, text)`` per row of ``docs`` (``text`` is None when
     ``docs`` carries no text column), labelled ``mime``, with the
     dimensions and duration left for the decoder to report. A narrow
-    mapInPandas pass — payload bytes never shuffle."""
+    Arrow map pass — payload bytes never shuffle."""
 
-    def synth(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            texts = pdf["text"] if "text" in pdf else [None] * len(pdf)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [
-                        encode(int(did), text)
-                        for did, text in zip(pdf["doc_id"], texts)
-                    ],
-                }
-            )
+    def synth(b):
+        texts = b["text"] if "text" in b else [None] * len(b)
+        return {
+            "media_id": b.arrow("doc_id"),
+            "payload": [
+                encode(int(did), text) for did, text in zip(b["doc_id"], texts)
+            ],
+        }
 
-    return docs.mapInPandas(synth, "media_id long, payload binary").select(
+    return arrow.map_batches(
+        docs, synth, "media_id long, payload binary"
+    ).select(
         "media_id",
         "payload",
         F.struct(
@@ -103,7 +99,7 @@ def q_multimodal_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixed good/corrupt media corpus with ``on_error='quarantine'`` — good
     rows yield real decoded WAV features (stdlib codec), corrupt rows
     divert to the error side channel instead of failing the Arrow task.
-    Payload synthesis and decode are both narrow mapInPandas passes —
+    Payload synthesis and decode are both narrow Arrow map passes —
     payload bytes never shuffle."""
     from ..functions.codecs import encode_wav
     from ..operators.multimodal import decode_features
@@ -147,7 +143,7 @@ def q_multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean intensity. r5: odd doc_ids encode PROGRESSIVE (SOF2, DC +
     spectral-AC scans) so the oracle now also gates the progressive
     decode path — flat blocks reconstruct bit-identically under either
-    coding. Both synthesis and decode are narrow mapInPandas passes —
+    coding. Both synthesis and decode are narrow Arrow map passes —
     payload bytes never shuffle, so the pattern is scan-speed linear at
     any corpus size."""
     from ..functions.jpeg_codec import encode_jpeg
@@ -193,7 +189,7 @@ def q_multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     `functions.codecs.encode_y4m`, decode it back through the
     `decode_features` Arrow stage — every emitted field (dimensions,
     channel count, frame-sampled mean luma, fps-derived duration) is an
-    actual decoded value. Synthesis and decode are narrow mapInPandas
+    actual decoded value. Synthesis and decode are narrow Arrow map
     passes; payload bytes never shuffle."""
     from ..functions.codecs import encode_y4m
     from ..operators.multimodal import decode_features
@@ -252,13 +248,12 @@ def q_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominant non-DC bin + RMS. The FFT runs on actually-decoded bytes;
     the oracle predicts the dominant bin analytically (sawtooth
     fundamental) and recomputes RMS from the same integer samples.
-    Arrow `mapInPandas` end-to-end — payload bytes never shuffle; at
+    one Arrow map pass end-to-end — payload bytes never shuffle; at
     100 TB this is the feature-extract stage of an audio corpus scan."""
     import io as _io
     import wave as _wave
 
     import numpy as _np
-    import pandas as _pd
 
     from ..functions.codecs import encode_wav
     from ..session import fan_out
@@ -268,43 +263,34 @@ def q_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
     # real scale
     docs = fan_out(_t(spark, sf_dir, "documents").select("doc_id"))
 
-    def _synth_and_analyze(batches):
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                k = 10 + did % 50
-                t = _np.arange(_AU_N, dtype=_np.int64)
-                s = (t * k % _AU_N) * 2 * _AU_AMP // _AU_N - _AU_AMP
-                payload = encode_wav([int(v) for v in s], sample_rate=_AU_SR)
-                # decode through the real codec path
-                with _wave.open(_io.BytesIO(payload), "rb") as wf:
-                    sr = wf.getframerate()
-                    n = wf.getnframes()
-                    raw = _np.frombuffer(
-                        wf.readframes(n), dtype="<i2"
-                    ).astype(_np.float64)
-                spec = _np.abs(_np.fft.rfft(raw / 32768.0))
-                dom = int(_np.argmax(spec[1:]) + 1)  # exclude DC
-                rms = float(_np.sqrt(_np.mean((raw / 32768.0) ** 2)))
-                out.append((did, sr, n, dom, dom * _AU_SR / _AU_N, round(rms, 4)))
-            yield _pd.DataFrame(
-                out,
-                columns=[
-                    "media_id",
-                    "sample_rate",
-                    "n_samples",
-                    "dominant_bin",
-                    "dominant_freq_hz",
-                    "rms",
-                ],
-            )
-
-    return docs.mapInPandas(
-        _synth_and_analyze,
+    schema = (
         "media_id long, sample_rate int, n_samples int, dominant_bin long, "
-        "dominant_freq_hz double, rms double",
+        "dominant_freq_hz double, rms double"
     )
+    names = [c.split()[0] for c in schema.split(", ")]
+
+    def _synth_and_analyze(b):
+        out = []
+        for did in b["doc_id"]:
+            did = int(did)
+            k = 10 + did % 50
+            t = _np.arange(_AU_N, dtype=_np.int64)
+            s = (t * k % _AU_N) * 2 * _AU_AMP // _AU_N - _AU_AMP
+            payload = encode_wav([int(v) for v in s], sample_rate=_AU_SR)
+            # decode through the real codec path
+            with _wave.open(_io.BytesIO(payload), "rb") as wf:
+                sr = wf.getframerate()
+                n = wf.getnframes()
+                raw = _np.frombuffer(
+                    wf.readframes(n), dtype="<i2"
+                ).astype(_np.float64)
+            spec = _np.abs(_np.fft.rfft(raw / 32768.0))
+            dom = int(_np.argmax(spec[1:]) + 1)  # exclude DC
+            rms = float(_np.sqrt(_np.mean((raw / 32768.0) ** 2)))
+            out.append((did, sr, n, dom, dom * _AU_SR / _AU_N, round(rms, 4)))
+        return dict(zip(names, map(list, zip(*out))))
+
+    return arrow.map_batches(docs, _synth_and_analyze, schema)
 
 
 _IMG = 256  # synthesized image edge; 1-px crop = 0.4 % shift ≤ 6 bits
@@ -363,19 +349,16 @@ def _image_corpus(spark: SparkSession, sf_dir: str, encode_family) -> DataFrame:
         )
     )
 
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids, hashes = [], []
-            for did in pdf["doc_id"]:
-                family = dict(_synth_family(int(did)))
-                for v, payload in enumerate(encode_family(family)):
-                    ids.append(int(did) * 10 + v)
-                    hashes.append(phash64(decode_gray(payload)))
-            yield pd.DataFrame({"media_id": ids, "phash": hashes})
+    def gen(b):
+        ids, hashes = [], []
+        for did in b["doc_id"]:
+            family = dict(_synth_family(int(did)))
+            for v, payload in enumerate(encode_family(family)):
+                ids.append(int(did) * 10 + v)
+                hashes.append(phash64(decode_gray(payload)))
+        return {"media_id": ids, "phash": hashes}
 
-    return docs.mapInPandas(gen, "media_id long, phash long")
+    return arrow.map_batches(docs, gen, "media_id long, phash long")
 
 
 def _phash_dedup(spark: SparkSession, sf_dir: str, encode_family) -> DataFrame:
@@ -472,7 +455,7 @@ def q_multimodal_jpeg420_roundtrip(
     exercises partial MCUs), decode through the `decode_features` Arrow
     stage, and emit decoded dimensions and mean intensity. Same
     scan-speed-linear shape as `multimodal_jpeg_roundtrip`: two narrow
-    mapInPandas passes, payload bytes never shuffle."""
+    Arrow map passes, payload bytes never shuffle."""
     from ..functions.jpeg_codec import encode_jpeg
     from ..operators.multimodal import decode_features
     from ..session import fan_out
@@ -622,51 +605,47 @@ def q_multimodal_exif_orientation(
     and emit the ORIENTED dimensions plus the top-left / bottom-right
     luma — an analytic function of (orientation, doc parity) that fails
     for any wrong flip axis, rotation direction, or missed dim swap.
-    Two narrow mapInPandas passes; payloads never shuffle."""
+    Two narrow Arrow map passes; payloads never shuffle."""
     from ..functions.jpeg_codec import decode_jpeg, encode_jpeg
     from ..session import fan_out
 
     docs = fan_out(_t(spark, sf_dir, "documents").select("doc_id"))
 
-    def _run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids, ws, hs, tls, brs = [], [], [], [], []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                o = 1 + did % 8
-                jit = 2 * (did % 2)
-                g = np.zeros((16, 24), dtype=np.uint8)
-                for by in range(2):
-                    for bx in range(3):
-                        g[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                            20 + 40 * (3 * by + bx) + jit
-                        )
-                rgb = np.repeat(g[:, :, None], 3, axis=2)
-                d = decode_jpeg(
-                    encode_jpeg(24, 16, 3, rgb.tobytes(), exif_orientation=o)
-                )
-                a = np.frombuffer(d["pixels"], np.uint8).reshape(
-                    d["height"], d["width"], 3
-                )
-                ids.append(did)
-                ws.append(d["width"])
-                hs.append(d["height"])
-                tls.append(int(a[0, 0, 0]))
-                brs.append(int(a[-1, -1, 0]))
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "width": ws,
-                    "height": hs,
-                    "top_left": tls,
-                    "bottom_right": brs,
-                }
+    def _run(b):
+        ids, ws, hs, tls, brs = [], [], [], [], []
+        for did in b["doc_id"]:
+            did = int(did)
+            o = 1 + did % 8
+            jit = 2 * (did % 2)
+            g = np.zeros((16, 24), dtype=np.uint8)
+            for by in range(2):
+                for bx in range(3):
+                    g[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
+                        20 + 40 * (3 * by + bx) + jit
+                    )
+            rgb = np.repeat(g[:, :, None], 3, axis=2)
+            d = decode_jpeg(
+                encode_jpeg(24, 16, 3, rgb.tobytes(), exif_orientation=o)
             )
+            a = np.frombuffer(d["pixels"], np.uint8).reshape(
+                d["height"], d["width"], 3
+            )
+            ids.append(did)
+            ws.append(d["width"])
+            hs.append(d["height"])
+            tls.append(int(a[0, 0, 0]))
+            brs.append(int(a[-1, -1, 0]))
+        return {
+            "media_id": ids,
+            "width": ws,
+            "height": hs,
+            "top_left": tls,
+            "bottom_right": brs,
+        }
 
-    return docs.mapInPandas(
+    return arrow.map_batches(
+        docs,
         _run,
         "media_id long, width int, height int, "
         "top_left int, bottom_right int",
-    ).select("media_id", "width", "height", "top_left", "bottom_right")
+    )

@@ -1,8 +1,9 @@
 """SparkSession factory.
 
 Scale posture: AQE is always on (runtime re-plan, skew-join splitting,
-partition coalescing); shuffle partitions default to the local core count
-but should be sized ~2-3x total executor cores on a real cluster. The
+partition coalescing); shuffle partitions default to 32
+(``SPARK_GRAFT_SHUFFLE`` overrides it) and should be sized ~2-3x total
+executor cores on a real cluster. The
 reference ran its data flow on an 8-core managed Spark cluster
 (/root/reference/pipeline/LoadBookingFact.json:29-32) with 4-8 partitions
 per core guidance (/root/reference/README.md:571-574) — AQE subsumes that
@@ -61,7 +62,8 @@ def get_spark(
     """Build (or reuse) a SparkSession tuned for this engine.
 
     Defaults honor the test-harness env: ``SPARK_GRAFT_CPUS`` sets the
-    local master thread count (default 32 threads / local[*]).
+    local master thread count (``local[*]`` when unset) and
+    ``SPARK_GRAFT_SHUFFLE`` the shuffle partitions (32 when unset).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")

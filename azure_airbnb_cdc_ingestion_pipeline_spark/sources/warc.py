@@ -26,8 +26,8 @@ Format essentials implemented from the public spec:
 Spark posture for 100 TB: gzip members are not block-splittable, so the
 parallel unit is the FILE — exactly how Common Crawl is processed in
 practice (a snapshot is ~72 000 × ~1 GB warc.gz files; 1 000 executors
-take ~72 waves). The reader is ``binaryFile`` scan → one Arrow
-``mapInPandas`` pass; record payloads are born inside their task and
+take ~72 waves). The reader is ``binaryFile`` scan → one Arrow map pass
+(``functions.arrow``); record payloads are born inside their task and
 never shuffle. Malformed records divert to the reject channel with a
 reason and the parse RESUMES at the next gzip member / next ``WARC/``
 magic — a 100 TB ingest keeps running, like the JSONL path.
@@ -212,26 +212,22 @@ def read_warc_with_rejects(
     its member; plain (uncompressed) streams resync at the next
     ``WARC/`` magic.
     """
-    import pandas as pd
+    from ..functions.arrow import map_batches
 
     cols = [c.split()[0] for c in WARC_FIELDS.split(", ")]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                rows = [
-                    {c: r.get(c) for c in cols}
-                    for r in parse_warc_bytes(
-                        bytes(row["content"]), row["path"]
-                    )
-                ]
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
+    def gen(b) -> dict:
+        rows = [
+            r
+            for content, source in zip(b["content"], b["path"])
+            for r in parse_warc_bytes(content, source)
+        ]
+        return {c: [r.get(c) for r in rows] for c in cols}
 
-    parsed = (
-        spark.read.format("binaryFile").load(path)
-        .select("path", "content")
-        .mapInPandas(gen, WARC_FIELDS)
+    parsed = map_batches(
+        spark.read.format("binaryFile").load(path).select("path", "content"),
+        gen,
+        WARC_FIELDS,
     )
     good = parsed.filter(F.col("reject_reason").isNull()).drop(
         "reject_reason", "reject_snippet"
@@ -258,42 +254,34 @@ def write_warc(
     import hashlib
     import os
 
-    os.makedirs(out_dir, exist_ok=True)
-    sess_cols = [uri_col, text_col]
+    from ..functions.arrow import map_batches
 
-    def _write(pdfs: Iterator) -> Iterator:
-        import pandas as pd
+    os.makedirs(out_dir, exist_ok=True)
+
+    def _write(b) -> dict:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
         path = os.path.join(out_dir, f"part-{pid:05d}.wet.gz")
-        wrote = 0
         with open(path, "wb") as f:
-            for pdf in pdfs:
-                for uri, text in zip(pdf[uri_col], pdf[text_col]):
-                    body = str(text).encode("utf-8")
-                    rid = hashlib.md5(str(uri).encode()).hexdigest()
-                    rec = (
-                        b"WARC/1.0\r\n"
-                        b"WARC-Type: conversion\r\n"
-                        + f"WARC-Target-URI: {uri}\r\n".encode()
-                        + f"WARC-Date: {date}\r\n".encode()
-                        + f"WARC-Record-ID: <urn:uuid:{rid}>\r\n".encode()
-                        + b"Content-Type: text/plain\r\n"
-                        + f"Content-Length: {len(body)}\r\n\r\n".encode()
-                        + body + b"\r\n\r\n"
-                    )
-                    f.write(gzip.compress(rec) if gz else rec)
-                    wrote += 1
-        if wrote == 0:
-            os.unlink(path)
-            yield pd.DataFrame({"files": []})
-        else:
-            yield pd.DataFrame({"files": [1]})
+            for uri, text in zip(b[uri_col], b[text_col]):
+                body = str(text).encode("utf-8")
+                rid = hashlib.md5(str(uri).encode()).hexdigest()
+                rec = (
+                    b"WARC/1.0\r\n"
+                    b"WARC-Type: conversion\r\n"
+                    + f"WARC-Target-URI: {uri}\r\n".encode()
+                    + f"WARC-Date: {date}\r\n".encode()
+                    + f"WARC-Record-ID: <urn:uuid:{rid}>\r\n".encode()
+                    + b"Content-Type: text/plain\r\n"
+                    + f"Content-Length: {len(body)}\r\n\r\n".encode()
+                    + body + b"\r\n\r\n"
+                )
+                f.write(gzip.compress(rec) if gz else rec)
+        return {"files": [1]}
 
-    n = (
-        df.select(*sess_cols)
-        .mapInPandas(_write, "files int")
-        .count()
-    )
-    return int(n)
+    # one file per non-empty partition: the kernel sees the whole
+    # partition, and an empty one never runs (so writes no file)
+    return map_batches(
+        df.select(uri_col, text_col), _write, "files int", whole_partition=True
+    ).count()

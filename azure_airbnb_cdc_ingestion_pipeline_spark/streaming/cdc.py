@@ -9,16 +9,21 @@ Reference behavior being reproduced
   trigger for the hourly-drain pattern (``processingTime`` for continuous);
 - continuation-token checkpointing (customizedCheckpointKey)
   → ``checkpointLocation`` (WAL; restart resumes exactly where it left);
-- "exactly-once" into the warehouse → idempotent keyed MERGE per
-  micro-batch: replaying a batch re-applies the same latest-per-key
-  rows, a no-op on the merged state (tested);
+- "exactly-once" into the warehouse → every sink commit of a
+  micro-batch carries the ``(pipeline, batch_id)`` txn marker, and a
+  replayed batch whose marker a table already recorded commits nothing
+  there (``ParquetTable._commit_version``'s replay guard; tested);
 - late/out-of-order data → no watermark needed for parity: the keyed
-  merge is latest-timestamp-wins per booking_id (§2.7).
+  merge resolves each booking_id to the latest arrival, or to the max
+  event time with ``event_time_wins`` (§2.7).
 
-Scale: each micro-batch shuffles only its own (small) data for the
-dedupe; the left-anti pass over the big fact table broadcasts the batch's
-keys, so the steady-state cost is one target scan per trigger — the same
-asymptotics as Delta MERGE without file pruning.
+Scale: the fact merge is merge-on-read (``ParquetTable.upsert_delta``).
+Each trigger dedupes only its own (small) batch and writes it as a
+sequence-numbered delta; nothing in the target is scanned or rewritten,
+so a trigger costs O(batch). Readers resolve base ∪ deltas to one row
+per key, and every 16th delta folds the pending deltas into the base
+with the pruned copy-on-write merge, bounding the read tax and the file
+count.
 """
 
 from __future__ import annotations

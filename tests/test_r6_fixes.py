@@ -206,8 +206,8 @@ def test_auto_topk_dispatches_on_query_count(spark):
     # above the limit → blocked (cogroup) plan; below → mapInPandas plan
     blocked = auto_topk(queries, corpus, k=2, driver_query_limit=5)
     closure = auto_topk(queries, corpus, k=2, driver_query_limit=1000)
-    assert "FlatMapCoGroupsInPandas" in _plan(blocked)
-    assert "FlatMapCoGroupsInPandas" not in _plan(closure)
+    assert "FlatMapCoGroupsInArrow" in _plan(blocked)
+    assert "FlatMapCoGroupsInArrow" not in _plan(closure)
     assert (
         blocked.orderBy("query_id", "rank").collect()
         == closure.orderBy("query_id", "rank").collect()
