@@ -51,8 +51,9 @@ def sized_shuffle(
     the window must be materialized inside it (eager localCheckpoint)
     or they will execute under the session defaults.
     """
-    sc = spark.sparkContext
-    p_n = min(cap, max(sc.defaultParallelism, -(-max(input_rows, 1) // rows_per_task)))
+    from ..session import partitions_for
+
+    p_n = partitions_for(spark, input_rows, rows_per_task, cap)
     conf = spark.conf
     saved = conf.get("spark.sql.shuffle.partitions")
     saved_coalesce = conf.get("spark.sql.adaptive.coalescePartitions.enabled")

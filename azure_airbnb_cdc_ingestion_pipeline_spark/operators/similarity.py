@@ -476,7 +476,7 @@ def cosine_pairs_lsh(
     """
     import numpy as np
 
-    from ..session import fan_out
+    from ..session import fan_out, partitions_for
 
     # r5: NO persisted unit frame. Caching an array<double>(64) column
     # through Spark's columnar in-memory store costs ~3.5 µs/element —
@@ -563,7 +563,9 @@ def cosine_pairs_lsh(
     # and forms each bucket's pairs as a blocked Gram matrix (X Xᵀ)
     # against the broadcast unit matrix — candidates never exist as rows;
     # only verified true pairs are emitted.
-    p_skinny = int(min(2048, max(32, n * grid[1] // 1_500_000)))
+    p_skinny = partitions_for(
+        src.sparkSession, n * grid[1], rows_per_task=1_500_000, cap=2048
+    )
     skinny = _lsh_buckets(src, "id", dim, grid).repartition(
         p_skinny, "tbl", "bucket"
     )

@@ -212,10 +212,13 @@ def _process_transformed(
         from ..operators.aggregate import merge_gold, signed_delta
 
         delta = signed_delta(before, after, dim)
-        new_gold = merge_gold(gold.read(), delta)
-        # no-op groups keep their rows; zero-count groups (possible only
-        # with retraction-to-empty) are dropped
-        new_gold = new_gold.filter(F.col("total_bookings") > 0)
+
+        def new_gold(old_gold: DataFrame) -> DataFrame:
+            # no-op groups keep their rows; zero-count groups (possible
+            # only with retraction-to-empty) are dropped
+            return merge_gold(old_gold, delta).filter(
+                F.col("total_bookings") > 0
+            )
     upsert = fact.upsert_delta if merge_on_read else fact.upsert_pruned
     upsert(
         derived,
@@ -227,6 +230,10 @@ def _process_transformed(
     )
     if dim is not None and gold is not None:
         if maintain_incrementally:
+            # gold is read and rewritten inside one conditional commit: a
+            # gold commit by another writer in between raises instead of
+            # being lost. The full refresh below depends only on the fact,
+            # so it stays a blind overwrite.
             gold.overwrite(new_gold, txn=txn)
         else:
             gold.overwrite(gold_booking_aggregation(fact.read(), dim), txn=txn)

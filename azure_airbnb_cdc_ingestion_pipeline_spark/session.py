@@ -1,10 +1,13 @@
-"""SparkSession factory.
+"""SparkSession factory and the one partition-count rule.
 
 Scale posture: AQE is always on (runtime re-plan, skew-join splitting,
-partition coalescing); shuffle partitions default to 32
-(``SPARK_GRAFT_SHUFFLE`` overrides it) and should be sized ~2-3x total
-executor cores on a real cluster. The
-reference ran its data flow on an 8-core managed Spark cluster
+partition coalescing). ``spark.sql.shuffle.partitions`` (32 by default,
+``SPARK_GRAFT_SHUFFLE`` overrides it) is a CEILING that AQE coalesces
+down from by size — cached frames included, so a frame persisted after
+a shuffle holds a few input-sized partitions, not 32 slivers. Operators
+that need an explicit count take it from :func:`partitions_for`: the
+session's parallelism, or more when the input's row count asks for it.
+The reference ran its data flow on an 8-core managed Spark cluster
 (/root/reference/pipeline/LoadBookingFact.json:29-32) with 4-8 partitions
 per core guidance (/root/reference/README.md:571-574) — AQE subsumes that
 hand-tuning.
@@ -63,7 +66,9 @@ def get_spark(
 
     Defaults honor the test-harness env: ``SPARK_GRAFT_CPUS`` sets the
     local master thread count (``local[*]`` when unset) and
-    ``SPARK_GRAFT_SHUFFLE`` the shuffle partitions (32 when unset).
+    ``SPARK_GRAFT_SHUFFLE`` the shuffle partitions (32 when unset). That
+    count is the ceiling AQE coalesces each shuffle down from, cached
+    frames included; explicit counts come from :func:`partitions_for`.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -84,6 +89,13 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # Coalesce the shuffle a persisted frame was computed from too.
+        # Off, a frame cached after a groupBy keeps every one of the
+        # shuffle partitions above, and each later scan of it pays one
+        # task per (mostly empty) partition: dedup_simhash at sf0.01 ran
+        # 199 tasks with it off and 36 with it on.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+                "true")
         # r10 (guide §6.1): scan-split sizing is
         # min(maxPartitionBytes, max(openCostInBytes, bytes/parallelism))
         # — the stock 4 MB openCost FLOORS the split size, so a 10 MB
@@ -174,6 +186,18 @@ def release_persisted(blocking: bool = False) -> int:
     return n
 
 
+def partitions_for(spark, rows: int, rows_per_task: int,
+                   cap: int | None = None) -> int:
+    """The one explicit partition-count rule:
+    ``min(cap, max(defaultParallelism, ⌈rows / rows_per_task⌉))``.
+
+    Small inputs get one task per core and no more (per-task fixed cost
+    dominates small work); large inputs get enough tasks that each holds
+    about ``rows_per_task`` rows, so the row term governs at scale."""
+    n = max(spark.sparkContext.defaultParallelism, -(-int(rows) // rows_per_task))
+    return n if cap is None else min(cap, n)
+
+
 #: memo for fan_out's partition probe — the ``df.rdd`` conversion is
 #: analysis-only (no job) but rebuilds the RDD-side plan each call; a hot
 #: loop re-probing the same frame pays it repeatedly (VERDICT r3 watch-item
@@ -182,8 +206,7 @@ def release_persisted(blocking: bool = False) -> int:
 _fanout_probe_cache: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
-def fan_out(df, min_factor: int = 2, rows: int | None = None,
-            rows_per_task: int = 40_000):
+def fan_out(df, rows: int = 0, rows_per_task: int = 40_000):
     """Spread a compute-heavy frame across the session's parallelism when
     the scan yielded too few partitions (tiny file / single parquet row
     group) — otherwise a per-row kernel (shingle hashing, minhash folds,
@@ -199,9 +222,7 @@ def fan_out(df, min_factor: int = 2, rows: int | None = None,
     width, not the scan width. At sf100 the minhash family's 32
     scan-sized cache partitions carried ~92 MB tasks; 40 k rows/task
     keeps every cached partition (~800 B/row of shingles) near 32 MB."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if rows is not None:
-        target = max(target, -(-rows // rows_per_task))
+    target = partitions_for(df.sparkSession, rows, rows_per_task)
     n = _fanout_probe_cache.get(df)
     if n is None:
         n = df.rdd.getNumPartitions()

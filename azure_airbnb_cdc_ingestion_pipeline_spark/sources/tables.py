@@ -25,7 +25,8 @@ fold, DELETE, UPDATE, compaction — commits through one sequence,
 5. write ``_table_meta.json``, carrying the partition and merge-on-read
    specs forward unless the write replaces them;
 6. commit: rename the pointer, conditional on the snapshot version the
-   write read from (only the blind ``overwrite`` is last-committer-wins).
+   write read from (only ``overwrite`` of a given frame is
+   last-committer-wins).
 
 Scale posture: one version = one parquet dataset written fully in parallel
 by executors; the only driver-side work is the pointer swap. A real 100 TB
@@ -41,6 +42,7 @@ import logging
 import os
 import shutil
 import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -258,7 +260,7 @@ class ParquetTable:
 
     def overwrite(
         self,
-        df: DataFrame,
+        df: DataFrame | Callable[[DataFrame], DataFrame],
         partition_by: list[str] | None = None,
         txn: tuple[str, int] | None = None,
         meta_extra: dict | None = None,
@@ -270,18 +272,29 @@ class ParquetTable:
         last-committer-wins on the pointer — but each writer gets a UNIQUE
         claimed version dir, so they never clobber each other's files.
         Returns the committed version number (the current one when ``txn``
-        was already applied)."""
+        was already applied).
+
+        ``df`` may instead be a function of the table's content — the
+        read-modify-write form (incremental gold). It is called inside
+        the commit with the resolved content of the version this write
+        replaces, and the commit is conditional on that version: a commit
+        by another writer in between raises ConcurrentWriteError instead
+        of being silently replaced."""
+        blind = not callable(df)
+
+        def write(base_dir: str, target: str, _meta: dict) -> None:
+            new = df if blind else df(self._read_resolved(base_dir))
+            self._write_frame(new, target, partition_by)
+
         v = self._commit_version(
-            lambda _base_dir, target, _meta: self._write_frame(
-                df, target, partition_by
-            ),
+            write,
             meta={
                 "partition_by": list(partition_by or []),
                 "mor": None,
                 **(meta_extra or {}),
             },
             txn=txn,
-            blind=True,
+            blind=blind,
         )
         return v or self.current_version()
 

@@ -161,12 +161,17 @@ def write_customer_csv_drops(dirpath: str, seed: int = 42) -> list[str]:
 
 def write_booking_events_json(dirpath: str, n_files: int = 4, **kw) -> list[str]:
     """Booking events as newline-delimited JSON split over n_files (the
-    change-feed landing directory analog)."""
+    change-feed landing directory analog). The files get strictly
+    increasing mtimes, one second apart and in the past: the file source
+    drains in mtime order, and files written within one clock tick would
+    otherwise drain in directory-listing order."""
     import json
+    import time
 
     os.makedirs(dirpath, exist_ok=True)
     events = gen_booking_events(**kw)
     per = (len(events) + n_files - 1) // n_files
+    mtime0 = int(time.time()) - n_files
     paths = []
     for i in range(n_files):
         chunk = events[i * per : (i + 1) * per]
@@ -176,5 +181,6 @@ def write_booking_events_json(dirpath: str, n_files: int = 4, **kw) -> list[str]
         with open(path, "w") as f:
             for e in chunk:
                 f.write(json.dumps(e) + "\n")
+        os.utime(path, (mtime0 + i, mtime0 + i))
         paths.append(path)
     return paths

@@ -107,6 +107,42 @@ def test_fold_before_delete_raises_on_concurrent_commit(
     assert _state(t) == [(1, "a"), (2, "b2"), (3, "c")]
 
 
+def test_incremental_gold_raises_on_concurrent_gold_commit(
+    spark, tmp_path, monkeypatch
+):
+    from fixtures import gen_booking_events
+
+    from azure_airbnb_cdc_ingestion_pipeline_spark.pipelines.load_booking_fact import (
+        process_booking_batch,
+    )
+    from azure_airbnb_cdc_ingestion_pipeline_spark.schemas import BOOKING_DOC_SCHEMA
+
+    events = gen_booking_events(n=120, n_keys=80, seed=5)
+    dim = spark.createDataFrame(
+        [(i, ["US", "DE"][i % 2]) for i in range(1, 101)],
+        "customer_id int, country string",
+    )
+    fact = ParquetTable(spark, str(tmp_path / "fact"))
+    quar = ParquetTable(spark, str(tmp_path / "quar"))
+    gold = ParquetTable(spark, str(tmp_path / "gold"))
+
+    def batch(b):
+        rows = events[b * 60 : (b + 1) * 60]
+        return spark.createDataFrame(rows, BOOKING_DOC_SCHEMA)
+
+    process_booking_batch(  # first batch: full refresh, gold now exists
+        batch(0), fact, quar, dim=dim, gold=gold, incremental_gold=True
+    )
+    other = ParquetTable(spark, gold.root)
+    raced = gold.read().limit(1)
+    _race_next_commit(monkeypatch, gold, lambda: other.overwrite(raced))
+    with pytest.raises(ConcurrentWriteError):
+        process_booking_batch(
+            batch(1), fact, quar, dim=dim, gold=gold, incremental_gold=True
+        )
+    assert gold.read().count() == 1  # the other writer's commit stands
+
+
 @pytest.mark.parametrize("write", ["append", "upsert_delta", "overwrite"])
 def test_replayed_txn_commits_no_version(spark, tmp_path, write):
     t = ParquetTable(spark, str(tmp_path / "t"))

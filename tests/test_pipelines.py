@@ -720,7 +720,9 @@ def test_stream_continuous_trigger_keeps_sinks_exact(spark, tmp_path):
 
     landing = str(tmp_path / "feed")
     kw = dict(n=300, n_keys=250, seed=23)
-    write_booking_events_json(landing, n_files=3, **kw)
+    paths = write_booking_events_json(landing, n_files=3, **kw)
+    mtimes = [os.stat(p).st_mtime for p in paths]
+    assert len(paths) == 3 and all(a < b for a, b in zip(mtimes, mtimes[1:]))
     events = gen_booking_events(**kw)
     dim = spark.createDataFrame(
         [(i, ["US", "DE", "JP"][i % 3]) for i in range(1, 101)],

@@ -203,7 +203,8 @@ def test_auto_topk_dispatches_on_query_count(spark):
     queries = corpus.limit(30).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    # above the limit → blocked (cogroup) plan; below → mapInPandas plan
+    # above the limit → blocked (cogrouped applyInArrow) plan; below →
+    # driver-side closure plan (mapInArrow against the collected queries)
     blocked = auto_topk(queries, corpus, k=2, driver_query_limit=5)
     closure = auto_topk(queries, corpus, k=2, driver_query_limit=1000)
     assert "FlatMapCoGroupsInArrow" in _plan(blocked)
