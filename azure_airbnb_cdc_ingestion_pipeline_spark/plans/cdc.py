@@ -748,11 +748,11 @@ def q_stream_scd2_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     publish gate the fact merge runs behind, now oracle-exercised on
     the SCD2 path too (VERDICT r6 #8). The waves are clean, so the
     gate passes and the history is identical; the breach-halts
-    semantics are pinned by tests/test_pipelines.py."""
-    import hashlib
-    import os
-    import tempfile
+    semantics are pinned by tests/test_pipelines.py.
 
+    Every call streams into a fresh dir: a dim table or checkpoint left
+    by an earlier process may come from other code, and a call that
+    found every wave already processed would not stream at all."""
     from pyspark.sql.types import (
         DateType, DoubleType, LongType, StringType, StructField, StructType,
     )
@@ -760,19 +760,12 @@ def q_stream_scd2_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import ParquetTable
 
     hist0, waves = _scd2_fixture(spark, sf_dir)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    base_dir = os.path.join(tempfile.gettempdir(), f"scd2_stream_{tag}")
+    base_dir = tempfile.mkdtemp(prefix="scd2_stream_")
     in_dir = os.path.join(base_dir, "in")
     ckpt = os.path.join(base_dir, "ckpt")
     table_root = os.path.join(base_dir, "dim")
-    # deterministic content: write each wave once; a later invocation
-    # finds them already processed in the checkpoint and the final
-    # table state simply re-reads (idempotent, no orphan dirs)
-    if not os.path.isdir(in_dir):
-        for i, w in enumerate(waves):
-            w.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(in_dir, f"wave{i:02d}")
-            )
+    for i, w in enumerate(waves):
+        w.coalesce(1).write.parquet(os.path.join(in_dir, f"wave{i:02d}"))
     schema = StructType(
         [
             StructField("c_custkey", LongType()),

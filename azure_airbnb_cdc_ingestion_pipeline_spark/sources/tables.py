@@ -22,11 +22,18 @@ fold, DELETE, UPDATE, compaction — commits through one sequence,
    first-write rows);
 4. hardlink forward what the write names: nothing, the whole previous
    tree, or its untouched partition dirs;
-5. write ``_table_meta.json``, carrying the partition and merge-on-read
-   specs forward unless the write replaces them;
-6. commit: rename the pointer, conditional on the snapshot version the
-   write read from (only ``overwrite`` of a given frame is
-   last-committer-wins).
+5. write ``_table_meta.json``, carrying the partition spec, the
+   merge-on-read spec and the schema forward unless the write replaces
+   them (``overwrite`` and the first write record the schema of the frame
+   they wrote, ``append`` adds the batch's new columns);
+6. commit: under an exclusive lock on the table root, rename the
+   pointer, conditional on the snapshot version the write read from
+   (only ``overwrite`` of a given frame is last-committer-wins).
+
+Every read of a version scans it with the schema its sidecar records
+(``ParquetTable._scan``): no read infers or merges parquet footer
+schemas, so building a read launches no Spark job, and a column a file
+lacks reads as null.
 
 Scale posture: one version = one parquet dataset written fully in parallel
 by executors; the only driver-side work is the pointer swap. A real 100 TB
@@ -37,6 +44,8 @@ storage-agnostic, callers only see DataFrames.
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import json
 import logging
 import os
@@ -46,6 +55,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 log = logging.getLogger(__name__)
 
@@ -66,6 +76,20 @@ def _iter_parquet_files(vdir: str):
         for fn in filenames:
             if fn.endswith(".parquet"):
                 yield os.path.join(dirpath, fn)
+
+
+def _reader_schema(fields: list[StructField], partition_by: list[str]) -> dict:
+    """The schema a read of ``fields`` written with ``partition_by``
+    returns, as sidecar JSON: data columns in order, then the partition
+    columns in spec order, every field nullable at every depth (parquet
+    reads are)."""
+    text = StructType(
+        [f for f in fields if f.name not in partition_by]
+        + [f for c in partition_by for f in fields if f.name == c]
+    ).json()
+    for key in ("nullable", "containsNull", "valueContainsNull"):
+        text = text.replace(f'"{key}":false', f'"{key}":true')
+    return json.loads(text)
 
 
 def _mor_resolve_tagged(allf: DataFrame, mor: dict) -> DataFrame:
@@ -155,18 +179,17 @@ class ParquetTable:
         return self.current_version() is not None
 
     # -- reads ---------------------------------------------------------------
-    def read(self, merge_schema: bool = False) -> DataFrame:
-        """Snapshot read of the current version. ``merge_schema=True``
-        unions the schemas of all files in the version (parquet
-        mergeSchema) — the additive schema-evolution read: after an
-        append() whose batch carries NEW columns, old files surface them
-        as nulls instead of the reader pinning one file's schema.
-        Costs one footer read per file at planning (why it's opt-in).
+    def read(self) -> DataFrame:
+        """Snapshot read of the current version, with the schema its
+        sidecar records: after an append() whose batch carries NEW
+        columns, the read shows them, null in the older files; after an
+        overwrite, it shows the overwriting frame's columns only. Building
+        the read touches no parquet footer, so it launches no Spark job.
 
         On a merge-on-read table with pending deltas (see
         :meth:`upsert_delta`) the read resolves base ∪ deltas to one row
         per key — callers always see fully-merged content."""
-        return self._read_resolved(self._current_dir(), merge_schema)
+        return self._read_resolved(self._current_dir())
 
     def _current_dir(self) -> str:
         v = self.current_version()
@@ -174,20 +197,37 @@ class ParquetTable:
             raise FileNotFoundError(f"table at {self.root} has no committed version")
         return self._version_dir(v)
 
+    def _scan(self, vdir: str, paths: list[str] | None = None) -> DataFrame:
+        """The one reader of a version's files: ``paths`` under ``vdir``
+        (its whole base by default), read with the schema the version's
+        sidecar records. A column a file lacks reads as null, and a
+        version with no data file reads as zero rows."""
+        schema = self._read_meta(vdir).get("schema")
+        if schema is None:
+            raise ValueError(
+                f"table {self.root}: {os.path.basename(vdir)} records no "
+                "schema in its sidecar"
+            )
+        reader = self.spark.read.schema(StructType.fromJson(schema))
+        if paths is None:
+            return reader.parquet(vdir)  # _delta is hidden
+        # basePath: files named one by one keep the Hive-style partition
+        # columns of the version's layout
+        return reader.option("basePath", vdir).parquet(*paths)
+
     def _read_resolved(
         self,
         vdir: str,
-        merge_schema: bool = False,
         keys: DataFrame | None = None,
         key_cols: list[str] | None = None,
+        files: list[str] | None = None,
     ) -> DataFrame:
         """Resolved read of one version dir: base ∪ pending deltas to one
         row per key. With ``keys`` the key restriction is pushed INTO each
-        frame (a left-semi join) before the union+argmax."""
-        reader = self.spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        base = reader.parquet(vdir)
+        frame (a left-semi join) before the union+argmax. ``files`` (on a
+        version without pending deltas only) restricts the base to those
+        files."""
+        base = self._scan(vdir, files)
 
         def restrict(df: DataFrame) -> DataFrame:
             return df if keys is None else df.join(keys, key_cols, "left_semi")
@@ -196,7 +236,7 @@ class ParquetTable:
         if not mor.get("pending"):
             return restrict(base)
         allf = restrict(base).withColumn("__seq", F.lit(0)).unionByName(
-            restrict(self._delta_stack(vdir)), allowMissingColumns=True
+            restrict(self._delta_stack(vdir))
         )
         return _mor_resolve_tagged(allf, mor).select(*base.columns)
 
@@ -230,9 +270,11 @@ class ParquetTable:
         has no version yet. ``write`` returns the base dirs to hardlink
         forward (relative paths; ``["."]`` is the whole tree) and may set
         sidecar keys in ``meta``, which starts as the base's sidecar
-        updated with the ``meta`` argument. The commit is conditional on
-        the base version unless ``blind``. Returns the committed version,
-        or None when ``txn`` was already applied."""
+        updated with the ``meta`` argument: a write that changes the
+        columns sets ``schema``, every other one carries the base's
+        forward. The commit is conditional on the base version unless
+        ``blind``. Returns the committed version, or None when ``txn`` was
+        already applied."""
         if self.applied(txn):
             return None
         base, v = self._claim_version()
@@ -240,6 +282,7 @@ class ParquetTable:
         meta = {"partition_by": [], **self._read_meta(base_dir), **(meta or {})}
         if base == 0 and first is not None:
             self._write_frame(first, target, meta["partition_by"])
+            meta["schema"] = _reader_schema(first.schema.fields, meta["partition_by"])
         else:
             for rel in write(base_dir, target, meta) or ():
                 self._link_tree(
@@ -282,9 +325,10 @@ class ParquetTable:
         of being silently replaced."""
         blind = not callable(df)
 
-        def write(base_dir: str, target: str, _meta: dict) -> None:
+        def write(base_dir: str, target: str, meta: dict) -> None:
             new = df if blind else df(self._read_resolved(base_dir))
             self._write_frame(new, target, partition_by)
+            meta["schema"] = _reader_schema(new.schema.fields, meta["partition_by"])
 
         v = self._commit_version(
             write,
@@ -306,10 +350,11 @@ class ParquetTable:
     _DELTA = "_delta"
 
     def _write_table_meta(self, vdir: str, meta: dict) -> None:
-        """Record the partition spec (and the merge-on-read spec, see
-        :meth:`upsert_delta`) in the version dir. Every commit writes
-        one, and it is the only source of the partition spec: layout
-        inference breaks the moment a version has no partition dirs (e.g.
+        """Record the partition spec, the schema (see :meth:`_scan`) and
+        the merge-on-read spec (see :meth:`upsert_delta`) in the version
+        dir. Every commit writes one, and it is the only source of the
+        partition spec and the schema: layout and footer inference break
+        the moment a version has no partition dirs or no data file (e.g.
         a DELETE that emptied every partition)."""
         fd, tmp = tempfile.mkstemp(dir=vdir, prefix="._meta")
         with os.fdopen(fd, "w") as f:
@@ -342,13 +387,12 @@ class ParquetTable:
         r8 #7): the old one-DataFrame-per-delta-dir stack cost a scan +
         plan per pending delta on EVERY resolved read and made the
         periodic fold the measured p99 tail of the latency leg (~16
-        single-file reads per fold); one multi-path read is one job.
-        mergeSchema keeps the additive schema-evolution behavior the
-        unionByName(allowMissingColumns) stack had."""
+        single-file reads per fold). The stack reads with the version's
+        schema, so a column a batch lacked reads as null."""
         dirs = self._delta_dirs(vdir)
         if not dirs:
             return None
-        df = self.spark.read.option("mergeSchema", "true").parquet(*dirs)
+        df = self._scan(vdir, dirs)
         # Anchor to the _delta parent so a /dNNNNNN/ segment elsewhere in
         # the table path (e.g. a root under /data/d000042/...) can never
         # mis-tag rows (r10 advisor). raise_error on a non-match instead
@@ -406,10 +450,14 @@ class ParquetTable:
         ``txn=(app_id, batch_id)`` records a streaming idempotency marker
         in the SAME atomic rename (see _read_pointer): there is no crash
         window in which the data is committed but the marker is not, or
-        vice versa. Markers from other apps carry forward unchanged."""
-        if expected_base is not None:
-            cur = self.current_version() or 0
-            if cur != expected_base:
+        vice versa. Markers from other apps carry forward unchanged.
+
+        The pointer read, the check and the rename run under an exclusive
+        lock on the table root, so no other commit can land between this
+        writer's check and its rename and then be overwritten by it."""
+        with self._commit_lock():
+            cur, txns = self._read_pointer()
+            if expected_base is not None and (cur or 0) != expected_base:
                 shutil.rmtree(self._version_dir(v), ignore_errors=True)
                 try:
                     os.remove(self._claim_path(v))
@@ -420,16 +468,26 @@ class ParquetTable:
                     f"v{cur} is now committed; recompute the merge from the "
                     "current snapshot and retry"
                 )
-        base_v, txns = self._read_pointer()
-        if txn is not None:
-            app, bid = txn
-            txns = {**txns, str(app): {"batch": int(bid), "base": base_v or 0}}
-        content = str(v) if not txns else f"{v}\n{json.dumps(txns)}"
-        fd, tmp = tempfile.mkstemp(dir=self.root, prefix="._ptr")
-        with os.fdopen(fd, "w") as f:
-            f.write(content)
-        os.replace(tmp, self._pointer_path())
-        self._vacuum(keep=2)
+            if txn is not None:
+                app, bid = txn
+                txns = {**txns, str(app): {"batch": int(bid), "base": cur or 0}}
+            content = str(v) if not txns else f"{v}\n{json.dumps(txns)}"
+            fd, tmp = tempfile.mkstemp(dir=self.root, prefix="._ptr")
+            with os.fdopen(fd, "w") as f:
+                f.write(content)
+            os.replace(tmp, self._pointer_path())
+            self._vacuum(keep=2)
+
+    @contextlib.contextmanager
+    def _commit_lock(self):
+        """Exclusive ``flock`` on the table root's lock file; closing the
+        descriptor releases it, also when the holder dies."""
+        fd = os.open(os.path.join(self.root, "._commit_lock"), os.O_CREAT | os.O_RDWR)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX)
+            yield
+        finally:
+            os.close(fd)
 
     def _vacuum(self, keep: int = 2) -> None:
         cur = self.current_version() or 0
@@ -537,6 +595,11 @@ class ParquetTable:
 
         def write(_base_dir: str, target: str, meta: dict) -> list[str]:
             self._write_frame(df, target, meta["partition_by"])
+            base = StructType.fromJson(meta["schema"])
+            meta["schema"] = _reader_schema(
+                base.fields + [f for f in df.schema.fields if f.name not in base.names],
+                meta["partition_by"],
+            )
             return ["."]
 
         self._commit_version(write, first=df, txn=txn)
@@ -598,7 +661,7 @@ class ParquetTable:
         that can EMPTY a partition (DELETE) passes ``emptied=True``, and
         the matched partitions count instead: an emptied partition writes
         no dir and would otherwise be linked forward and resurrect."""
-        tgt = self.spark.read.parquet(base_dir)  # _delta is hidden
+        tgt = self._scan(base_dir)
         if not parts:
             rewrite(tgt).write.mode("overwrite").parquet(target)
             return []
@@ -625,18 +688,10 @@ class ParquetTable:
         finally:
             if emptied:
                 combo_df.unpersist()
-        untouched = [
+        return [
             rel for rel in self._leaf_partition_dirs(base_dir)
             if rel not in affected and not rel.startswith(self._DELTA)
         ]
-        if not untouched and not written:
-            # nothing written and nothing to link (a delete that emptied
-            # EVERY partition, or a rewrite of such a version): a
-            # partitioned empty write emits no file, so the version would
-            # be unreadable. Write one schema-bearing empty file instead;
-            # the meta sidecar keeps the partition spec for later writes.
-            out.limit(0).coalesce(1).write.mode("overwrite").parquet(target)
-        return untouched
 
     @staticmethod
     def _mor_spec(mor: dict, keys, order_by, event_time_wins: bool) -> dict:
@@ -817,7 +872,7 @@ class ParquetTable:
         mor = meta.get("mor") or {}
         if mor.get("pending"):
             self.upsert_pruned(
-                self.spark.read.parquet(self._current_dir()).limit(0),
+                self._scan(self._current_dir()).limit(0),
                 mor["keys"], meta["partition_by"],
                 order_by=mor.get("order_by") or None,
                 event_time_wins=bool(mor.get("event_time_wins")),
@@ -1061,26 +1116,20 @@ class ParquetTable:
         exact AND-composed predicate. On a range-clustered table
         (overwrite_clustered) a narrow range touches O(range/keyspace) of
         the files instead of all of them — the scan cost a 100 TB
-        point-lookup workload needs. Empty file list short-circuits to an
-        empty frame with the table schema."""
-        kept, _total = self.pruned_files_multi(bounds)
+        point-lookup workload needs. Equal to ``read().filter(...)`` in
+        every table state: with pending merge-on-read deltas nothing is
+        skipped, because under ``event_time_wins`` a base row outside the
+        range can outrank a delta row inside it."""
         pred = F.lit(True)
         for col, (lo, hi) in bounds.items():
             if lo is not None:
                 pred = pred & (F.col(col) >= F.lit(lo))
             if hi is not None:
                 pred = pred & (F.col(col) <= F.lit(hi))
-        if not kept:
-            return self.read().filter(F.lit(False))
-        # basePath: explicit leaf-file reads on a partitioned table would
-        # otherwise DROP the Hive-style partition columns from the schema
-        # (and silently break filters on them) — anchoring the base dir
-        # makes Spark reconstruct them exactly as read() does.
-        return (
-            self.spark.read.option("basePath", self._current_dir())
-            .parquet(*kept)
-            .filter(pred)
-        )
+        vdir = self._current_dir()
+        pending = (self._read_meta(vdir).get("mor") or {}).get("pending")
+        files = None if pending else self.pruned_files_multi(bounds)[0]
+        return self._read_resolved(vdir, files=files).filter(pred)
 
     def read_pruned(self, col: str, lo=None, hi=None) -> DataFrame:
         """Single-column :meth:`read_pruned_multi`."""
@@ -1106,8 +1155,10 @@ class ParquetTable:
         raises ConcurrentWriteError instead of dropping its rows."""
         self._fold_pending()
 
-        def write(base_dir: str, target: str, _meta: dict) -> None:
-            df = self.spark.read.parquet(base_dir)
+        def write(base_dir: str, target: str, meta: dict) -> None:
+            df = self._scan(base_dir)
+            # the partition spec may change: partition columns read last
+            meta["schema"] = _reader_schema(df.schema.fields, meta["partition_by"])
             n_files = max(1, -(-df.count() // target_rows_per_file))
             if cluster_by:
                 df = self._clustered(df, cluster_by, n_files)

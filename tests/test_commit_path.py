@@ -5,6 +5,8 @@ snapshot it read."""
 from __future__ import annotations
 
 import os
+import sys
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -74,7 +76,11 @@ def test_every_version_has_a_sidecar(spark, tmp_path):
     ]
     for write in writes:
         write()
-        assert t._read_meta(_current_dir(t)) == {"partition_by": []}
+        meta = t._read_meta(_current_dir(t))
+        assert [f["name"] for f in meta.pop("schema")["fields"]] == [
+            "k", "ts", "val", "p"
+        ]
+        assert meta == {"partition_by": []}
     assert _state(t) == [(1, "a2")]
 
 
@@ -105,6 +111,91 @@ def test_fold_before_delete_raises_on_concurrent_commit(
     with pytest.raises(ConcurrentWriteError):
         t.delete_where(F.col("k") == 1)
     assert _state(t) == [(1, "a"), (2, "b2"), (3, "c")]
+
+
+def test_commit_excludes_a_racing_commit(spark, tmp_path, monkeypatch):
+    """Writer B's whole commit runs between writer A's pointer check and
+    A's pointer rename: B must wait for A and then lose, never land and
+    be overwritten by A (which moved the pointer back and dropped B's
+    rows)."""
+    t = ParquetTable(spark, str(tmp_path / "t"))
+    t.overwrite(_mk(spark, [(1, 1, "a", 0)]))
+    other = ParquetTable(spark, t.root)
+    b_commit, staged, outcome, threads = other._commit, {}, {}, []
+    seen = [t.current_version()]
+
+    def run_b():
+        try:
+            b_commit(*staged["args"], **staged["kwargs"])
+        except ConcurrentWriteError as exc:
+            outcome["b"] = exc
+
+    a_commit, a_read = t._commit, t._read_pointer
+
+    def a_commit_racing(*args, **kwargs):
+        # B claims the version after A's and writes it; its commit waits
+        monkeypatch.setattr(
+            other, "_commit", lambda *a, **kw: staged.update(args=a, kwargs=kw)
+        )
+        other.append(_mk(spark, [(3, 1, "c", 0)]))
+
+        def read_then_race():
+            out = a_read()
+            monkeypatch.setattr(t, "_read_pointer", a_read)
+            b = threading.Thread(target=run_b)
+            b.start()
+            b.join(timeout=5)
+            threads.append(b)
+            seen.append(ParquetTable(spark, t.root).current_version())
+            return out
+
+        monkeypatch.setattr(t, "_read_pointer", read_then_race)
+        return a_commit(*args, **kwargs)
+
+    monkeypatch.setattr(t, "_commit", a_commit_racing)
+    t.append(_mk(spark, [(2, 1, "b", 0)]))
+    seen.append(t.current_version())
+    threads[0].join(timeout=60)
+    assert not threads[0].is_alive()
+    seen.append(t.current_version())
+    assert isinstance(outcome.get("b"), ConcurrentWriteError)
+    assert seen == sorted(seen), seen
+    assert _state(t) == [(1, "a"), (2, "b")]
+
+
+def test_commit_stress_no_two_commits_share_a_base(spark, tmp_path):
+    """16 threads race conditional commits of empty versions: each
+    snapshot version is committed on at most once (a second commit on the
+    same base would overwrite the first one's rows), and the pointer
+    never moves back."""
+    t = ParquetTable(spark, str(tmp_path / "t"))
+    wins, moved_back = [], []
+
+    def commit_loop():
+        for _ in range(15):
+            base, v = t._claim_version()
+            os.makedirs(t._version_dir(v), exist_ok=True)
+            try:
+                t._commit(v, expected_base=base)
+            except ConcurrentWriteError:
+                continue
+            wins.append(base)
+            if t.current_version() < v:
+                moved_back.append(v)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=commit_loop) for _ in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert len(wins) == len(set(wins)) and wins
+    assert not moved_back
 
 
 def test_incremental_gold_raises_on_concurrent_gold_commit(

@@ -170,3 +170,41 @@ def test_mor_read_for_keys_matches_semi_join(spark, table):
     plan = table.read_for_keys(want_keys, ["k"])._jdf.queryExecution().toString()
     physical = plan.split("== Physical Plan ==")[-1]
     assert physical.count("BroadcastHashJoin") >= 2  # base + delta restricted
+
+
+@pytest.mark.parametrize(
+    "event_time_wins", [False, True], ids=["arrival", "event_time"]
+)
+@pytest.mark.parametrize(
+    "partition_by", [["p"], []], ids=["partitioned", "unpartitioned"]
+)
+def test_mor_read_pruned_matches_filtered_read(
+    spark, table, partition_by, event_time_wins
+):
+    """With pending deltas a pruned read resolves exactly like read():
+    no stale base row beside its delta row, no mixed base/delta layout,
+    and under event_time_wins a base row outside the range still
+    outranks an older delta row inside it."""
+    kw = dict(keys=["k"], partition_by=partition_by, order_by=["ts"],
+              event_time_wins=event_time_wins)
+    table.upsert_delta(
+        _mk(spark, [(1, 5, "a", 0), (2, 1, "b", 1), (3, 1, "c", 2)]), **kw
+    )
+    table.upsert_delta(_mk(spark, [(1, 3, "a-old", 0), (2, 2, "b2", 1)]), **kw)
+    for bounds in (
+        {"ts": (3, 3)},
+        {"ts": (1, 2)},
+        {"k": (1, 2), "ts": (None, 4)},
+        {"p": (0, 0)},
+    ):
+        pred = F.lit(True)
+        for col, (lo, hi) in bounds.items():
+            if lo is not None:
+                pred = pred & (F.col(col) >= lo)
+            if hi is not None:
+                pred = pred & (F.col(col) <= hi)
+        want = sorted(table.read().filter(pred).collect())
+        assert sorted(table.read_pruned_multi(bounds).collect()) == want, bounds
+    want = sorted(table.read().filter(F.col("ts") == 3).collect())
+    assert sorted(table.read_pruned("ts", 3, 3).collect()) == want
+    assert [r.val for r in want] == ([] if event_time_wins else ["a-old"])

@@ -370,9 +370,9 @@ def test_read_pruned_on_statless_version_computes_manifest_on_demand(
 
 def test_append_with_new_column_and_merge_schema_read(spark, tmp_path):
     """Additive schema evolution: an appended batch may carry columns the
-    table didn't have; read(merge_schema=True) surfaces the union schema
-    with nulls for pre-evolution rows (the allowSchemaDrift sink analog
-    on the table layer)."""
+    table didn't have; read() surfaces the union schema the append
+    recorded, with nulls for pre-evolution rows (the allowSchemaDrift
+    sink analog on the table layer)."""
     from azure_airbnb_cdc_ingestion_pipeline_spark.sources.tables import ParquetTable
 
     t = ParquetTable(spark, str(tmp_path / "t"))
@@ -382,7 +382,7 @@ def test_append_with_new_column_and_merge_schema_read(spark, tmp_path):
             "id", (F.col("id") * 2).alias("a"), F.lit("drifted").alias("b")
         )
     )
-    df = t.read(merge_schema=True)
+    df = t.read()
     assert set(df.columns) == {"id", "a", "b"}
     rows = {r.id: r.b for r in df.collect()}
     assert len(rows) == 8
@@ -588,7 +588,7 @@ def test_diff_versions_change_data_feed(spark, tmp_path):
 
 def test_delete_where_all_rows_keeps_readable_schema(spark, tmp_path):
     """Deleting every row of a partitioned table must leave a READABLE
-    empty version (schema-bearing file), not a fileless dir."""
+    empty version (read with the schema its sidecar records)."""
     t = ParquetTable(spark, str(tmp_path / "t"))
     t.overwrite(
         spark.range(10).select(
@@ -671,8 +671,8 @@ def test_table_history_reports_retained_versions(spark, tmp_path):
 
 def test_update_where_after_delete_all_stays_readable(spark, tmp_path):
     """ADVICE r3: update_where on a partitioned table whose current
-    version is the schema-bearing empty file of a delete-all (no leaf
-    partition dirs) must commit a READABLE version — previously the
+    version is the empty version of a delete-all (no leaf partition
+    dirs) must commit a READABLE version — previously the
     affected rewrite emitted no parquet files, nothing was hardlinked,
     and read() on the new version failed."""
     t = ParquetTable(spark, str(tmp_path / "t"))
