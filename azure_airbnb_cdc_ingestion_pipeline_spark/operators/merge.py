@@ -71,10 +71,25 @@ def latest_per_key(
     """Resolve intra-batch duplicates to the latest row per key (descending,
     nulls last). With ``order_by=None`` the source is trusted unique —
     mirroring Delta MERGE's duplicate-source-key error contract, we dedupe
-    arbitrarily-but-deterministically on the keys themselves."""
+    arbitrarily-but-deterministically on the keys themselves.
+
+    Idempotent: a frame this function returned (or its ``persist()``,
+    which is the same object) is unique on its keys, so resolving it
+    again on the same keys returns it unchanged instead of planning a
+    second window over it."""
+    if getattr(df, "_graft_unique_on", None) == frozenset(keys):
+        return df
     if order_by is None:
-        return df.dropDuplicates(list(keys))
-    return topk_per_group(df, keys, order_by, k=1, descending=True)
+        return known_unique(df.dropDuplicates(list(keys)), keys)
+    return known_unique(topk_per_group(df, keys, order_by, k=1, descending=True), keys)
+
+
+def known_unique(df: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Record on ``df`` that it holds one row per ``keys`` tuple (the
+    operator that built it grouped or ranked on them), so
+    :func:`latest_per_key` on those keys returns it unchanged."""
+    df._graft_unique_on = frozenset(keys)
+    return df
 
 
 def merge_dataframes(
@@ -110,10 +125,9 @@ def merge_dataframes(
         if order_by is None:
             raise ValueError("event_time_wins requires order_by")
         return resolve_event_time(target, source, keys, order_by)
-    src = latest_per_key(source, keys, order_by).select(*target.columns)
-    src_keys = F.broadcast(src.select(*keys).dropDuplicates(keys))
-    untouched = target.join(src_keys, on=keys, how="left_anti")
-    return src.unionByName(untouched)
+    src = latest_per_key(source, keys, order_by)
+    untouched = target.join(F.broadcast(src.select(*keys)), on=keys, how="left_anti")
+    return src.select(*target.columns).unionByName(untouched)
 
 
 def apply_cdc(

@@ -15,16 +15,23 @@ insertIf(isNull(lookup.key)) — same logical plan, one operator.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import arrow
+from ..operators import aggregate
 from ..operators.aggregate import gold_booking_aggregation
 from ..operators.derive import derive_booking_columns
 from ..operators.dq import check_gate_wiring, gated_batch
+from ..operators.merge import resolve_event_time
 from ..operators.split import conditional_split
 from ..schemas import BOOKING_DOC_SCHEMA
+from ..session import persist_owned, persisted
 from ..sources.tables import ParquetTable
-from ..streaming.cdc import read_change_feed, run_foreach_batch_merge
+from ..streaming.cdc import (
+    read_change_feed, release_on_termination, run_foreach_batch_merge,
+)
 
 def _quality_pred():
     # The reference compares the STRING dates lexicographically
@@ -34,6 +41,8 @@ def _quality_pred():
 
 FACT_KEYS = ["booking_id"]
 FACT_ORDER = ["timestamp"]
+#: the dim columns gold reads (the join key and the group)
+DIM_COLUMNS = ["customer_id", "country"]
 
 
 def transform_bookings(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -78,8 +87,8 @@ def process_booking_batch(
     dq_on_breach: str = "halt",
     dq_quarantine: ParquetTable | None = None,
 ) -> None:
-    """One micro-batch: quarantine bad rows, MERGE good rows into the fact
-    (latest-per-booking_id wins), then refresh gold if a dim is wired.
+    """One micro-batch: MERGE good rows into the fact (latest-per-booking_id
+    wins), quarantine bad rows, then refresh gold if a dim is wired.
 
     The fact merge is partition-pruned on :data:`FACT_PARTITIONING`.
     ``merge_on_read=True`` (the streaming entry): it defers to
@@ -105,20 +114,25 @@ def process_booking_batch(
     `timestamp`: out-of-order micro-batches then converge to the same
     fact state regardless of delivery order.
 
-    `incremental_gold=True` maintains gold with retraction deltas
-    (operators.aggregate.merge_gold/signed_delta): O(batch + |groups|)
-    per trigger instead of re-aggregating the whole fact — the matching
-    steady state for the pruned merge. Falls back to a full refresh on
-    the first batch (no standing gold yet)."""
+    `incremental_gold=True` maintains gold with retraction deltas: the
+    batch's signed delta (operators.aggregate.signed_delta, one row per
+    touched group) is collected before the fact commit and merged into
+    gold on the driver (merge_gold) inside gold's conditional commit —
+    O(batch + |groups|) per trigger instead of re-aggregating the whole
+    fact, the matching steady state for the pruned merge. Falls back to
+    a full refresh on the first batch (no standing gold yet)."""
     check_gate_wiring(dq_rules, dq_on_breach, dq_quarantine)
-    # Materialize the micro-batch once: every consumer below (quarantine
-    # emptiness probe + append, merge, partition-combo collect, gold
-    # before-image) otherwise re-parses the landing JSON — at 4 consumers
-    # that's 4x the scan cost per trigger. A micro-batch fits in memory
-    # by construction (it's trigger-bounded).
-    batch = batch.persist()
-    try:
-        derived, rejected = transform_bookings(batch)
+    # The micro-batch is cached: the source is read once per trigger, by
+    # the one job that also counts the bad rows (the observation) and
+    # collects the batch keys — see _process_transformed. Every later
+    # consumer (the batch's latest rows, the quarantine append) reads the
+    # cache. A micro-batch fits in memory by construction (it's
+    # trigger-bounded).
+    bad_rows = Observation()
+    with persisted(batch):
+        derived, rejected = transform_bookings(
+            batch.observe(bad_rows, F.count_if(_quality_pred()).alias("n"))
+        )
         # Expectation gate BEFORE any sink commit: halt mode raises here —
         # neither quarantine append, fact merge, nor gold refresh runs, and
         # the checkpoint never commits the batch, so a fixed-and-restarted
@@ -129,17 +143,16 @@ def process_booking_batch(
             derived, dq_rules, dq_on_breach, dq_quarantine, txn
         ) as clean:
             _process_transformed(
-                clean, rejected, fact, quarantine, dim, gold,
+                clean, rejected, bad_rows, fact, quarantine, dim, gold,
                 incremental_gold, event_time_wins, txn=txn,
                 merge_on_read=merge_on_read,
             )
-    finally:
-        batch.unpersist()
 
 
 def _process_transformed(
     derived: DataFrame,
     rejected: DataFrame,
+    bad_rows: Observation,
     fact: ParquetTable,
     quarantine: ParquetTable,
     dim: DataFrame | None,
@@ -149,94 +162,107 @@ def _process_transformed(
     txn: tuple[str, int] | None = None,
     merge_on_read: bool = False,
 ) -> None:
+    """The sinks of one batch, in commit order: fact, quarantine, gold.
+
+    The batch's latest row per key is computed once and cached; the same
+    frame is the fact write and the after image (``latest_per_key``
+    returns it unchanged when the write resolves it again)."""
     from ..operators.merge import latest_per_key
 
-    if not rejected.isEmpty():
-        # O(batch) append, NOT idempotent on its own — the txn marker
-        # (committed atomically with the append) is what makes a
-        # replayed batch skip it instead of duplicating rejected rows
-        quarantine.append(rejected, txn=txn)
-        # append-per-batch accumulates one file per trigger forever;
-        # the size-triggered compaction keeps the live file count
-        # saw-toothing below the trigger instead (steady-state bound)
-        quarantine.maybe_compact(trigger_files=64)
-    fact_replayed = fact.applied(txn)
     maintain_incrementally = (
         incremental_gold and dim is not None and gold is not None and gold.exists()
     )
+    # the first full pass over the batch, one job with no shuffle: it
+    # caches the batch, counts its bad rows (bad_rows) and brings its keys
+    # to the driver for the before-image (repeated keys are harmless to a
+    # semi-join)
+    keys = arrow.collect(derived.select(*FACT_KEYS)).data
+    with persisted(latest_per_key(derived, FACT_KEYS, FACT_ORDER)) as latest:
+        delta = None
+        if maintain_incrementally and not gold.applied(txn):
+            delta = _gold_delta(latest, keys, fact, dim, event_time_wins, txn)
+        upsert = fact.upsert_delta if merge_on_read else fact.upsert_pruned
+        upsert(
+            latest,
+            keys=FACT_KEYS,
+            partition_by=FACT_PARTITIONING,
+            order_by=FACT_ORDER,
+            event_time_wins=event_time_wins,
+            txn=txn,
+        )
+        if bad_rows.get["n"]:
+            # O(batch) append, NOT idempotent on its own — the txn marker
+            # (committed atomically with the append) is what makes a
+            # replayed batch skip it instead of duplicating rejected rows
+            quarantine.append(rejected, txn=txn)
+            # append-per-batch accumulates one file per trigger forever;
+            # the size-triggered compaction keeps the live file count
+            # saw-toothing below the trigger instead (steady-state bound)
+            quarantine.maybe_compact(trigger_files=64)
+    if dim is None or gold is None:
+        return
     if maintain_incrementally:
-        # before-image: current fact rows for the batch's keys, snapshotted
-        # against the pre-merge table version (version dirs are immutable,
-        # and _vacuum(keep=2) retains it across the one merge commit that
-        # lands before this plan materializes in gold.overwrite below).
-        # On a REPLAY whose fact merge already committed, "current" would
-        # be the post-merge state (delta ≈ 0 → gold stuck stale), so read
-        # the pre-merge snapshot the txn marker recorded instead.
-        batch_latest = latest_per_key(derived, FACT_KEYS, FACT_ORDER)
-        if fact_replayed:
-            from ..sources.tables import read_version
-
-            fact_now = fact.read()
-            base_v = fact.last_txn_base(txn[0])
-            if base_v:
-                fact_now = read_version(fact, base_v)
-            before = fact_now.join(
-                F.broadcast(batch_latest.select(*FACT_KEYS).distinct()),
-                on=FACT_KEYS,
-                how="left_semi",
-            )
-        else:
-            # key-restricted resolved read: under merge-on-read a plain
-            # read().semi-join would resolve the WHOLE table first (the
-            # semi-join can't push through the max_by resolve) — this
-            # pushes the batch keys into every frame of the stack, so
-            # the before-image costs O(batch keys), not O(table)
-            before = fact.read_for_keys(batch_latest, FACT_KEYS)
-        if event_time_wins:
-            # the merge resolves matched keys to max event time, so the
-            # post-merge state of a batch key is the winner of (existing
-            # row, batch row) — deriving `after` from the batch alone
-            # would retract a newer fact row in favor of a late older
-            # event and permanently diverge gold from the fact. Uses the
-            # SAME deterministic source-wins tie-break as the merge
-            # itself (resolve_event_time), so an exact event-time tie
-            # resolves identically here and in fact.upsert below.
-            from ..operators.merge import resolve_event_time
-
-            after = resolve_event_time(
-                before, batch_latest.select(*before.columns),
-                FACT_KEYS, FACT_ORDER,
-            )
-        else:
-            after = batch_latest
-        from ..operators.aggregate import merge_gold, signed_delta
-
-        delta = signed_delta(before, after, dim)
-
+        # gold is read, merged with the collected delta on the driver and
+        # rewritten inside one conditional commit: a gold commit by
+        # another writer in between raises instead of being lost (a
+        # replayed gold commit never calls new_gold). The full refresh
+        # below depends only on the fact, so it stays a blind overwrite.
         def new_gold(old_gold: DataFrame) -> DataFrame:
-            # no-op groups keep their rows; zero-count groups (possible
-            # only with retraction-to-empty) are dropped
-            return merge_gold(old_gold, delta).filter(
-                F.col("total_bookings") > 0
-            )
-    upsert = fact.upsert_delta if merge_on_read else fact.upsert_pruned
-    upsert(
-        derived,
-        keys=FACT_KEYS,
-        partition_by=FACT_PARTITIONING,
-        order_by=FACT_ORDER,
-        event_time_wins=event_time_wins,
-        txn=txn,
-    )
-    if dim is not None and gold is not None:
-        if maintain_incrementally:
-            # gold is read and rewritten inside one conditional commit: a
-            # gold commit by another writer in between raises instead of
-            # being lost. The full refresh below depends only on the fact,
-            # so it stays a blind overwrite.
-            gold.overwrite(new_gold, txn=txn)
-        else:
-            gold.overwrite(gold_booking_aggregation(fact.read(), dim), txn=txn)
+            merged = aggregate.merge_gold(arrow.collect(old_gold).data, delta)
+            spark = old_gold.sparkSession
+            return spark.createDataFrame(merged, old_gold.schema).coalesce(1)
+
+        gold.overwrite(new_gold, txn=txn)
+    else:
+        gold.overwrite(gold_booking_aggregation(fact.read(), dim), txn=txn)
+
+
+def _gold_delta(
+    latest: DataFrame,
+    keys: pa.Table,
+    fact: ParquetTable,
+    dim: DataFrame,
+    event_time_wins: bool,
+    txn: tuple[str, int] | None,
+) -> pa.Table:
+    """The batch's signed gold delta, one row per touched group, collected
+    to Arrow BEFORE the fact write commits, so the before-image is the
+    current fact rows for the batch's ``keys``. On a REPLAY whose fact
+    write already committed, "current" would be the post-merge state
+    (delta ≈ 0 → gold stuck stale), so it reads the pre-merge snapshot
+    the txn marker recorded instead (kept on disk by _vacuum(keep=2)).
+
+    The keys are a local relation, so the base and the delta frames
+    share one broadcast of them (Spark reuses no broadcast of a cached
+    frame)."""
+    keys = latest.sparkSession.createDataFrame(keys).coalesce(1)
+    if fact.applied(txn):
+        from ..sources.tables import read_version
+
+        fact_now = fact.read()
+        base_v = fact.last_txn_base(txn[0])
+        if base_v:
+            fact_now = read_version(fact, base_v)
+        before = fact_now.join(F.broadcast(keys), on=FACT_KEYS, how="left_semi")
+    else:
+        # key-restricted resolved read: under merge-on-read a plain
+        # read().semi-join would resolve the WHOLE table first (the
+        # semi-join can't push through the max_by resolve) — this pushes
+        # the batch keys into every frame of the stack, so the
+        # before-image costs O(batch keys), not O(table)
+        before = fact.read_for_keys(keys, FACT_KEYS)
+    after = latest
+    if event_time_wins:
+        # the merge resolves matched keys to max event time, so the
+        # post-merge state of a batch key is the winner of (existing row,
+        # batch row) — deriving `after` from the batch alone would retract
+        # a newer fact row in favor of a late older event and permanently
+        # diverge gold from the fact. Uses the SAME deterministic
+        # source-wins tie-break as the merge itself (resolve_event_time),
+        # so an exact event-time tie resolves identically here and in the
+        # fact write.
+        after = resolve_event_time(before, latest, FACT_KEYS, FACT_ORDER)
+    return arrow.collect(aggregate.signed_delta(before, after, dim)).data
 
 
 def load_booking_fact_stream(
@@ -281,12 +307,26 @@ def load_booking_fact_stream(
     ``event_time_wins=True``: matched keys resolve to the max event
     ``timestamp`` instead of arrival order, so a replayed or out-of-order
     landing drain converges to the same fact state (the `WHEN MATCHED AND
-    s.ts >= t.ts` conditional-MERGE guard)."""
+    s.ts >= t.ts` conditional-MERGE guard).
+
+    The dim side gold reads, ``dim``'s (customer_id, country), is cached
+    once for the query and read by every trigger (a dim the caller cached
+    is left as it is). An ``available_now`` drain releases it when the
+    drain ends or fails; a continuous query releases it from a
+    ``StreamingQueryListener`` when it stops or fails
+    (``streaming.cdc.release_on_termination``)."""
     check_gate_wiring(dq_rules, dq_on_breach, dq_quarantine)
     stream = read_change_feed(
         spark, landing_dir, BOOKING_DOC_SCHEMA,
         max_files_per_trigger=max_files_per_trigger,
     )
+    release_dim = lambda: None  # noqa: E731
+    if dim is not None:
+        # the dim side gold reads, cached once for every trigger of this
+        # query. A projection of its own: a dim the caller cached stays
+        # exactly as the caller left it.
+        dim = dim.select(*DIM_COLUMNS)
+        release_dim = persist_owned(dim)
 
     # stable per (pipeline, checkpoint): the batch-id sequence is scoped to
     # the checkpoint, so the idempotency marker must be too
@@ -301,12 +341,21 @@ def load_booking_fact_stream(
             dq_quarantine=dq_quarantine, incremental_gold=incremental_gold,
         )
 
-    q = run_foreach_batch_merge(
-        stream, _process, checkpoint_dir, available_now=available_now,
-        processing_time=processing_time,
-    )
+    try:
+        q = run_foreach_batch_merge(
+            stream, _process, checkpoint_dir, available_now=available_now,
+            processing_time=processing_time,
+        )
+    except BaseException:
+        release_dim()
+        raise
     if available_now:
-        q.awaitTermination()
+        try:
+            q.awaitTermination()
+        finally:
+            release_dim()
+    else:
+        release_on_termination(spark, q, release_dim)
     return q
 
 

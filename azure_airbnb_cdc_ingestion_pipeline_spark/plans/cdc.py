@@ -9,7 +9,9 @@ expectations and the CSV / JSONL sources.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,6 +26,22 @@ from ..operators.split import conditional_split
 from ..sources.readers import cast_to_schema, read_csv, read_events
 from ..sources.tables import ParquetTable
 from .queries import ORACLE_SQL, _t, query
+
+
+#: the per-process root of the tables, files and checkpoints the keys below
+#: write (see :func:`scratch_dir`); empty until the first call
+_SCRATCH_ROOT: list[str] = []
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh dir for a key's own table or files. A key returns a lazy
+    frame over them, so they must outlive the call; they live under one
+    per-process root, removed at interpreter exit."""
+    if not _SCRATCH_ROOT:
+        root = tempfile.mkdtemp(prefix="spark_graft_")
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        _SCRATCH_ROOT.append(root)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT[0])
 
 
 # ---------------------------------------------------------------------------
@@ -323,7 +341,7 @@ def q_sink_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("gold_full_refresh", oracle=ORACLE_SQL.get("agg_groupby_join"))
 def q_gold_full_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     result = q_agg_groupby_join(spark, sf_dir)
-    root = os.path.join(tempfile.mkdtemp(prefix="gold_"), "booking_agg")
+    root = os.path.join(scratch_dir("gold_"), "booking_agg")
     table = ParquetTable(spark, root)
     table.overwrite(result)
     return table.read()
@@ -345,7 +363,7 @@ def q_gold_full_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_source_csv_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer")
-    tmp = os.path.join(tempfile.mkdtemp(prefix="csv_"), "customer_csv")
+    tmp = os.path.join(scratch_dir("csv_"), "customer_csv")
     (
         cust.write.mode("overwrite")
         .option("header", "true")
@@ -416,10 +434,13 @@ def q_cdc_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_gold_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incrementally-maintained gold aggregate: the fact arrives as
-    three append batches; each is aggregated alone and partial-MERGED
-    into the standing gold (count+count, sum+sum, greatest(max)). The
-    oracle recomputes from scratch — the fold must land on identical
-    state. Per-trigger cost is O(batch + |groups|), never O(fact)."""
+    three append batches; each is aggregated alone, collected (one row
+    per group) and merged into the standing gold on the driver
+    (count+count, sum+sum, greatest(max)) — the pipeline's incremental
+    gold step. The oracle recomputes from scratch — the fold must land
+    on identical state. Per-trigger cost is O(batch + |groups|), never
+    O(fact)."""
+    from ..functions import arrow
     from ..operators.aggregate import gold_booking_aggregation, merge_gold
 
     o = _t(spark, sf_dir, "orders")
@@ -427,7 +448,7 @@ def q_gold_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     gold = None
     for b in range(3):
         batch = o.filter(F.col("o_orderkey") % 3 == b)
-        part = gold_booking_aggregation(
+        part = arrow.collect(gold_booking_aggregation(
             batch,
             dim,
             fact_key="o_custkey",
@@ -435,9 +456,9 @@ def q_gold_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             group_col="c_mktsegment",
             amount_col="o_totalprice",
             date_col="o_orderdate",
-        )
+        )).data
         gold = part if gold is None else merge_gold(gold, part, "c_mktsegment")
-    return gold.select(
+    return spark.createDataFrame(gold).select(
         F.col("c_mktsegment").alias("country"),
         "total_bookings",
         F.round("total_amount", 2).alias("total_amount"),
@@ -760,7 +781,7 @@ def q_stream_scd2_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import ParquetTable
 
     hist0, waves = _scd2_fixture(spark, sf_dir)
-    base_dir = tempfile.mkdtemp(prefix="scd2_stream_")
+    base_dir = scratch_dir("scd2_stream_")
     in_dir = os.path.join(base_dir, "in")
     ckpt = os.path.join(base_dir, "ckpt")
     table_root = os.path.join(base_dir, "dim")

@@ -15,7 +15,9 @@ hand-tuning.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
 import weakref
 
 from pyspark.sql import SparkSession
@@ -167,6 +169,38 @@ def track_persist(df, storage_level=None):
     df.persist() if storage_level is None else df.persist(storage_level)
     _PERSISTED.append(df)
     return df
+
+
+def persist_owned(df):
+    """Persist ``df`` unless it is cached already, and return the function
+    that releases it: it unpersists what this call persisted, once, and
+    leaves a frame that was cached before (the caller's own, or an equal
+    plan someone else cached) as it found it."""
+    from pyspark import StorageLevel
+
+    if df.storageLevel != StorageLevel.NONE:
+        return lambda: None
+    df.persist()
+    lock, done = threading.Lock(), []
+
+    def release() -> None:
+        with lock:
+            if not done:
+                done.append(True)
+                df.unpersist()
+
+    return release
+
+
+@contextlib.contextmanager
+def persisted(df):
+    """``df`` persisted for the ``with`` body (see :func:`persist_owned`),
+    released on every exit."""
+    release = persist_owned(df)
+    try:
+        yield df
+    finally:
+        release()
 
 
 def release_persisted(blocking: bool = False) -> int:

@@ -103,6 +103,7 @@ def _mor_resolve_tagged(allf: DataFrame, mor: dict) -> DataFrame:
     event time wins with later-frame tie-break — the same `WHEN MATCHED
     AND s.ts >= t.ts` source-wins contract
     `operators.merge.resolve_event_time` enforces at write time."""
+    from ..operators.merge import known_unique
     from ..operators.windows import argmax_per_group
 
     keys = list(mor["keys"])
@@ -112,7 +113,20 @@ def _mor_resolve_tagged(allf: DataFrame, mor: dict) -> DataFrame:
         else [F.col("__seq")]
     )
     payload = [c for c in allf.columns if c not in set(keys) | {"__seq"}]
-    return argmax_per_group(allf, keys, order, payload)
+    return known_unique(argmax_per_group(allf, keys, order, payload), keys)
+
+
+def _null_filled(source: DataFrame, target: DataFrame) -> DataFrame:
+    """``source`` plus, as typed nulls, the ``target`` columns it lacks: a
+    batch without a column an ``append`` added merges as null there, as
+    an older file reads. ``source`` itself when it lacks none."""
+    have = set(source.columns)
+    missing = [f for f in target.schema.fields if f.name not in have]
+    if not missing:
+        return source
+    return source.select(
+        "*", *[F.lit(None).cast(f.dataType).alias(f.name) for f in missing]
+    )
 
 
 class ParquetTable:
@@ -251,7 +265,9 @@ class ParquetTable:
         incremental-gold before-image needs per micro-batch. Equivalent
         to ``read().join(keys_df, key_cols, "left_semi")`` in content.
         """
-        keys = F.broadcast(keys_df.select(*key_cols).dropDuplicates(key_cols))
+        # no dedupe: a semi-join emits each row once however often its key
+        # repeats on the right
+        keys = F.broadcast(keys_df.select(*key_cols))
         return self._read_resolved(self._current_dir(), keys=keys, key_cols=key_cols)
 
     # -- writes --------------------------------------------------------------
@@ -545,7 +561,7 @@ class ParquetTable:
             lambda base_dir, target, _meta: self._rewrite_partitions(
                 base_dir, target, [],
                 lambda tgt: merge_dataframes(
-                    tgt, source, keys, order_by=order_by,
+                    tgt, _null_filled(source, tgt), keys, order_by=order_by,
                     event_time_wins=event_time_wins,
                 ),
             ),
@@ -741,25 +757,27 @@ class ParquetTable:
         mor = meta.get("mor") or {}
         if mor.get("pending"):
             spec = spec or self._mor_spec(mor, keys, order_by, event_time_wins)
-            tagged = src.withColumn("__seq", F.lit(spec["seq"]))
-            src = source = _mor_resolve_tagged(
-                self._delta_stack(base_dir).unionByName(
-                    tagged, allowMissingColumns=True
-                ),
-                spec,
-            ).select(*src.columns)
+            # every column of the stack and the batch: a column only the
+            # pending deltas carry keeps their values for the keys the
+            # batch does not touch. The partition combos come from the
+            # unresolved rows (partition attrs are immutable per key).
+            source = self._delta_stack(base_dir).unionByName(
+                src.withColumn("__seq", F.lit(spec["seq"])),
+                allowMissingColumns=True,
+            )
+            src = _mor_resolve_tagged(source, spec)
         if spec:
             meta["mor"] = {**spec, "pending": 0}
         return self._rewrite_partitions(
             base_dir, target, partition_by,
             lambda affected: merge_dataframes(
-                affected, src, keys, order_by=order_by,
+                affected, _null_filled(src, affected), keys, order_by=order_by,
                 event_time_wins=event_time_wins,
             ),
-            # partition combos from the PRE-dedupe source when nothing
-            # folds: identical distinct set (partition attrs are immutable
-            # per key — the pruned-merge precondition) without
-            # latest_per_key's window shuffle in the peek job's lineage.
+            # partition combos from the unresolved source: identical
+            # distinct set (partition attrs are immutable per key — the
+            # pruned-merge precondition) without a resolve shuffle in the
+            # peek job's lineage.
             lambda _tgt: source,
         )
 

@@ -24,6 +24,15 @@ so a trigger costs O(batch). Readers resolve base ∪ deltas to one row
 per key, and every 16th delta folds the pending deltas into the base
 with the pruned copy-on-write merge, bounding the read tax and the file
 count.
+
+One pass per trigger (``pipelines.load_booking_fact``): the source is
+read once into a cached batch by the job that also counts its bad rows
+and collects its keys; the batch's latest row per key is computed once
+and cached, and is the fact delta, the before-image keys and the after
+image; incremental gold collects the signed delta (one row per gold
+group) and merges it on the driver. The dim side is cached once per
+query: an ``availableNow`` drain releases it when it ends, a continuous
+query from a listener when it stops (:func:`release_on_termination`).
 """
 
 from __future__ import annotations
@@ -32,7 +41,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
 
 def read_change_feed(
@@ -69,6 +78,41 @@ def run_foreach_batch_merge(
     else:
         writer = writer.trigger(processingTime=processing_time)
     return writer.start()
+
+
+class _OnTermination(StreamingQueryListener):
+    """Calls ``action`` once, when the query with id ``query_id`` ends."""
+
+    def __init__(self, spark: SparkSession, query_id: str, action: Callable[[], None]):
+        self.spark, self.query_id, self.action = spark, query_id, action
+
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        pass
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        if str(event.id) == self.query_id:
+            self.action()
+            self.spark.streams.removeListener(self)
+
+
+def release_on_termination(
+    spark: SparkSession, query: StreamingQuery, release: Callable[[], None]
+) -> None:
+    """Run ``release`` (idempotent) when ``query`` stops, fails or ends —
+    from a listener, since a continuous-trigger query outlives the call
+    that started it. A query that ended before the listener was added is
+    released here."""
+    listener = _OnTermination(spark, str(query.id), release)
+    spark.streams.addListener(listener)
+    if not query.isActive:
+        release()
+        spark.streams.removeListener(listener)
 
 
 def dedup_stream(

@@ -156,6 +156,7 @@ def test_blocked_levenshtein_pairs_block_bounded(spark):
 
 
 def test_incremental_gold_with_retraction_matches_full_recompute(spark):
+    from azure_airbnb_cdc_ingestion_pipeline_spark.functions import arrow
     from azure_airbnb_cdc_ingestion_pipeline_spark.operators.aggregate import (
         gold_booking_aggregation,
         merge_gold,
@@ -185,7 +186,9 @@ def test_incremental_gold_with_retraction_matches_full_recompute(spark):
     )
     got = {
         r["country"]: (r["total_bookings"], r["total_amount"], r["last_booking_date"])
-        for r in merge_gold(gold, delta).collect()
+        for r in merge_gold(
+            arrow.collect(gold).data, arrow.collect(delta).data
+        ).to_pylist()
     }
     new_fact = merge_dataframes(fact, batch, ["booking_id"])
     want = {

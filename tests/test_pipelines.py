@@ -377,12 +377,12 @@ def test_event_time_wins_out_of_order_batches_converge(spark, tmp_path):
 
 
 def test_incremental_gold_before_image_survives_vacuum(spark, tmp_path):
-    """Guards the vacuum-retention coupling (keep=2): the incremental-gold
-    before-image plan reads the PRE-merge fact version and only
-    materializes inside gold.overwrite, after the merge commit has already
-    landed. With default retention that version must still be on disk —
-    per-batch gold must equal a full refresh after EVERY consecutive
-    batch, not just the last."""
+    """Guards the before-image's read of the PRE-merge fact version: the
+    incremental-gold delta is collected before the fact commit lands (a
+    replay whose fact commit already landed reads the pre-merge version
+    the txn marker records, which default retention (keep=2) keeps on
+    disk) — per-batch gold must equal a full refresh after EVERY
+    consecutive batch, not just the last."""
     from azure_airbnb_cdc_ingestion_pipeline_spark.operators.aggregate import (
         gold_booking_aggregation,
     )

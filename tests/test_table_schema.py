@@ -101,3 +101,40 @@ def test_version_without_recorded_schema_raises(spark, tmp_path):
         json.dump(meta, f)
     with pytest.raises(ValueError, match=str(tmp_path / "t")):
         t.read()
+
+
+@pytest.mark.parametrize(
+    "event_time_wins", [False, True], ids=["arrival", "event_time"]
+)
+def test_pruned_merge_of_batch_without_appended_column(spark, tmp_path, event_time_wins):
+    """A batch that lacks a column an append added merges with nulls
+    there; rows the batch does not touch keep their values."""
+    t = ParquetTable(spark, str(tmp_path / "t"))
+    t.overwrite(_mk(spark, [(1, 1, "a", 0), (2, 1, "b", 1)]), partition_by=["p"])
+    t.append(_mk(spark, [(3, 1, "c", 1)]).withColumn("extra", F.lit("x")))
+    t.upsert_pruned(
+        _mk(spark, [(1, 2, "a2", 0), (4, 1, "d", 1)]),
+        keys=["k"], partition_by=["p"], order_by=["ts"],
+        event_time_wins=event_time_wins,
+    )
+    got = sorted((r.k, r.val, r.extra) for r in t.read().collect())
+    assert got == [(1, "a2", None), (2, "b", None), (3, "c", "x"), (4, "d", None)]
+
+
+@pytest.mark.parametrize(
+    "event_time_wins", [False, True], ids=["arrival", "event_time"]
+)
+def test_fold_of_batch_without_appended_column(spark, tmp_path, event_time_wins):
+    """The merge-on-read fold of a batch that lacks an appended column: a
+    pending delta that carries the column keeps its value, and the
+    batch's own rows read null there."""
+    t = ParquetTable(spark, str(tmp_path / "t"))
+    t.overwrite(_mk(spark, [(1, 1, "a", 0), (2, 1, "b", 1)]), partition_by=["p"])
+    t.append(_mk(spark, [(3, 1, "c", 1)]).withColumn("extra", F.lit("x")))
+    mor = dict(MOR, event_time_wins=event_time_wins, fold_after=2)
+    t.upsert_delta(_mk(spark, [(2, 2, "b2", 1)]).withColumn("extra", F.lit("y")), **mor)
+    assert t._current_meta()["mor"]["pending"] == 1
+    t.upsert_delta(_mk(spark, [(1, 2, "a2", 0), (4, 1, "d", 1)]), **mor)
+    assert t._current_meta()["mor"]["pending"] == 0  # folded
+    got = sorted((r.k, r.val, r.extra) for r in t.read().collect())
+    assert got == [(1, "a2", None), (2, "b2", "y"), (3, "c", "x"), (4, "d", None)]
