@@ -15,6 +15,12 @@ Scale: fact⋈dim with dim broadcast = zero shuffle of the 100 TB fact for
 the join; the only shuffle is the low-cardinality group-by, which AQE
 coalesces. The full-refresh materialization (truncate+insert,
 synapse_table_creation.sql:71-88) maps to an atomic table overwrite.
+
+Incremental maintenance (:func:`signed_delta`, :func:`merge_gold`,
+:func:`lost_max_groups`) runs in Arrow on the driver: its inputs are a
+micro-batch's before and after images (trigger-bounded), the dim's
+(key, group) side (what the star join's broadcast already builds on the
+driver) and gold itself (one row per group).
 """
 
 from __future__ import annotations
@@ -65,10 +71,10 @@ def merge_gold(
     counts/sums add, max takes the greatest. Exact for append-only
     facts; with keyed updates, feed a RETRACTION delta (see
     :func:`signed_delta`) — then count/sum stay exact and max stays
-    exact as long as group maxima never decrease (the arrival-wins CDC
-    case; a shrinking max needs a per-group recompute, the standard
-    materialized-view limitation). A group whose count the delta takes
-    to zero (every row retracted) is dropped.
+    exact as long as group maxima never decrease; a group whose max may
+    shrink is named by :func:`lost_max_groups` and must be recomputed
+    (the standard materialized-view limitation). A group whose count the
+    delta takes to zero (every row retracted) is dropped.
 
     Float caveat (r8, measured by the continuous-trigger latency leg):
     a DOUBLE sum maintained by +/- retractions accumulates epsilon-order
@@ -84,8 +90,8 @@ def merge_gold(
     country``), so the merge is one O(|groups|) hash aggregation over
     the two tables' rows, with no Spark job. A null group merges with
     the null group. Cost per trigger is the batch-sized
-    :func:`signed_delta` aggregation plus this, O(batch + |groups|),
-    instead of O(fact table)."""
+    :func:`signed_delta` aggregation plus this, O(batch + |dim| +
+    |groups|) on the driver, instead of O(fact table)."""
     rows = pa.concat_tables(
         [old_gold, delta_gold.select(old_gold.column_names).cast(old_gold.schema)]
     )
@@ -104,39 +110,92 @@ def merge_gold(
 
 
 def signed_delta(
-    before: DataFrame,
-    after: DataFrame,
-    dim: DataFrame,
-    **gold_kwargs,
-) -> DataFrame:
+    before: pa.Table,
+    after: pa.Table,
+    dim: pa.Table,
+    fact_key: str = "customer_id",
+    dim_key: str = "customer_id",
+    group_col: str = "country",
+    amount_col: str = "amount",
+    date_col: str = "booking_date",
+) -> pa.Table:
     """Retraction delta for keyed-upsert facts: the batch's BEFORE image
     (the target rows the batch keys hit, before the merge) contributes
     negatively, the AFTER image positively. Aggregating the signed union
     gives the per-group (Δcount, Δsum, candidate max) that
-    :func:`merge_gold` folds in.
+    :func:`merge_gold` folds in, plus ``retracted_max``, the group's
+    largest retracted date (see :func:`lost_max_groups`).
 
-    Cost: one O(batch) Spark pass (a broadcast dim join and a partial
-    then final aggregation), whose result is one row per touched gold
-    group — small enough to collect to Arrow for :func:`merge_gold`.
-    """
-    amount = gold_kwargs.get("amount_col", "amount")
-    date_col = gold_kwargs.get("date_col", "booking_date")
-    signed = after.withColumn("__w", F.lit(1)).unionByName(
-        before.withColumn("__w", F.lit(-1))
+    All three inputs are Arrow tables on the driver: the two images are
+    batch-sized (one row per batch key at most) and ``dim`` is the
+    (key, group) side a star join would broadcast. The join is inner, as
+    in :func:`gold_booking_aggregation`: a fact row without a dim row
+    counts nowhere. Cost: O(batch + |dim|), with no Spark job."""
+    cols = [fact_key, amount_col, date_col]
+    signed = pa.concat_tables([
+        t.select(cols).cast(after.select(cols).schema)
+        .append_column("__w", pa.array([w] * t.num_rows, pa.int64()))
+        for t, w in ((after, 1), (before, -1))
+    ])
+    side = pa.table({"__k": dim[dim_key], "__grp": dim[group_col]})
+    fact_type = signed.schema.field(fact_key).type
+    dim_type = side.schema.field("__k").type
+    if fact_type != dim_type:
+        # Spark's join widens int to long; Acero's needs one key type
+        both_int = pa.types.is_integer(fact_type) and pa.types.is_integer(dim_type)
+        key_type = pa.int64() if both_int else fact_type
+        signed = signed.set_column(0, fact_key, signed[fact_key].cast(key_type))
+        side = side.set_column(0, "__k", side["__k"].cast(key_type))
+    joined = signed.join(
+        side, keys=fact_key, right_keys="__k", join_type="inner",
+        use_threads=False,
     )
-    fact_key = gold_kwargs.get("fact_key", "customer_id")
-    dim_key = gold_kwargs.get("dim_key", "customer_id")
-    group_col = gold_kwargs.get("group_col", "country")
-    dim_side = F.broadcast(
-        dim.select(F.col(dim_key).alias("__k"), F.col(group_col).alias("__grp"))
-    )
-    joined = signed.join(dim_side, signed[fact_key] == dim_side["__k"], "inner")
-    return joined.groupBy(F.col("__grp").alias(group_col)).agg(
-        F.sum("__w").alias("total_bookings"),
-        F.sum(F.col("__w") * F.coalesce(F.col(amount), F.lit(0.0))).alias(
-            "total_amount"
+    w = joined["__w"]
+    null_date = pa.nulls(joined.num_rows, joined.schema.field(date_col).type)
+    rows = pa.table({
+        "__grp": joined["__grp"],
+        "w": w,
+        "amount": pc.multiply(
+            pc.cast(w, pa.float64()),
+            pc.fill_null(pc.cast(joined[amount_col], pa.float64()), 0.0),
         ),
-        F.max(F.when(F.col("__w") == 1, F.col(date_col))).alias(
-            "last_booking_date"
-        ),
-    )
+        "added": pc.if_else(pc.equal(w, 1), joined[date_col], null_date),
+        "retracted": pc.if_else(pc.equal(w, -1), joined[date_col], null_date),
+    })
+    agg = rows.group_by("__grp", use_threads=False).aggregate([
+        ("w", "sum"), ("amount", "sum"), ("added", "max"), ("retracted", "max"),
+    ])
+    return pa.table({
+        group_col: agg["__grp"],
+        "total_bookings": agg["w_sum"],
+        "total_amount": agg["amount_sum"],
+        "last_booking_date": agg["added_max"],
+        "retracted_max": agg["retracted_max"],
+    })
+
+
+def lost_max_groups(
+    old_gold: pa.Table, delta: pa.Table, group_col: str = "country"
+) -> list:
+    """The groups whose ``last_booking_date`` :func:`merge_gold` cannot
+    know: the delta retracted a row dated at the group's standing max
+    and added none dated at or after it. A max does not subtract, so
+    such a group (a booking that moved to another group, or whose date
+    went back) must be recomputed from the fact. O(|groups|), on the
+    driver; a null group is a group."""
+    standing = dict(zip(
+        old_gold[group_col].to_pylist(), old_gold["last_booking_date"].to_pylist()
+    ))
+    lost = []
+    for g, added, retracted in zip(
+        delta[group_col].to_pylist(),
+        delta["last_booking_date"].to_pylist(),
+        delta["retracted_max"].to_pylist(),
+    ):
+        top = standing.get(g)
+        if (
+            retracted is not None and top is not None and retracted >= top
+            and (added is None or added < top)
+        ):
+            lost.append(g)
+    return lost

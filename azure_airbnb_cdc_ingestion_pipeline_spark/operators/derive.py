@@ -36,34 +36,28 @@ def derive_booking_columns(df: DataFrame) -> DataFrame:
     - struct flattening ``city``/``country``;
     - typed casts of the string-ingested date columns.
     """
+    # each parse is built once: every Column built is a chain of py4j
+    # calls, and Catalyst plans a reused expression the same way
+    check_in = F.to_date("check_in_date", "yyyy-MM-dd")
+    check_out = F.to_date("check_out_date", "yyyy-MM-dd")
+    booked = F.to_timestamp("booking_date", "yyyy-MM-dd HH:mm:ss")
+    city = F.col("property_location.city")
+    country = F.col("property_location.country")
     return df.select(
         "booking_id",
         "property_id",
         "customer_id",
         "owner_id",
-        F.to_date("check_in_date", "yyyy-MM-dd").alias("check_in_date"),
-        F.to_date("check_out_date", "yyyy-MM-dd").alias("check_out_date"),
-        F.datediff(
-            F.to_date("check_out_date", "yyyy-MM-dd"),
-            F.to_date("check_in_date", "yyyy-MM-dd"),
-        )
-        .cast("long")
-        .alias("stay_duration"),
-        F.to_timestamp("booking_date", "yyyy-MM-dd HH:mm:ss").alias("booking_date"),
-        F.year(F.to_timestamp("booking_date", "yyyy-MM-dd HH:mm:ss")).alias(
-            "booking_year"
-        ),
-        F.month(F.to_timestamp("booking_date", "yyyy-MM-dd HH:mm:ss")).alias(
-            "booking_month"
-        ),
+        check_in.alias("check_in_date"),
+        check_out.alias("check_out_date"),
+        F.datediff(check_out, check_in).cast("long").alias("stay_duration"),
+        booked.alias("booking_date"),
+        F.year(booked).alias("booking_year"),
+        F.month(booked).alias("booking_month"),
         "amount",
         "currency",
-        F.col("property_location.city").alias("city"),
-        F.col("property_location.country").alias("country"),
-        F.concat(
-            F.col("property_location.city"),
-            F.lit(", "),
-            F.col("property_location.country"),
-        ).alias("full_address"),
+        city.alias("city"),
+        country.alias("country"),
+        F.concat(city, F.lit(", "), country).alias("full_address"),
         F.to_timestamp("timestamp", "yyyy-MM-dd HH:mm:ss").alias("timestamp"),
     )

@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -82,6 +84,58 @@ def latest_per_key(
     if order_by is None:
         return known_unique(df.dropDuplicates(list(keys)), keys)
     return known_unique(topk_per_group(df, keys, order_by, k=1, descending=True), keys)
+
+
+def latest_rows(
+    table: pa.Table, keys: Sequence[str], order_by: Sequence[str]
+) -> pa.Table:
+    """The driver twin of :func:`latest_per_key` over an Arrow table: a
+    stable sort with ``keys`` ascending and ``order_by`` descending,
+    nulls last, then the first row per key (a null key is one key). Rows
+    tied on ``order_by`` keep their input order, so the earliest wins —
+    a trailing priority column (:func:`resolve_event_time_rows`) or
+    sequence number (the merge-on-read resolve) makes the order total."""
+    if table.num_rows < 2:
+        return table
+    rows = table.take(pc.sort_indices(
+        table,
+        sort_keys=[(k, "ascending") for k in keys]
+        + [(c, "descending") for c in order_by],
+        null_placement="at_end",
+    ))
+    first = None
+    for k in keys:
+        col = rows.column(k)
+        a, b = col.slice(1), col.slice(0, len(col) - 1)
+        # null-safe "differs": one side null differs, both null do not
+        differs = pc.or_(
+            pc.fill_null(pc.not_equal(a, b), False),
+            pc.xor(pc.is_null(a), pc.is_null(b)),
+        )
+        first = differs if first is None else pc.or_(first, differs)
+    return rows.filter(pa.concat_arrays([
+        pa.array([True]), first.combine_chunks(),
+    ]))
+
+
+def resolve_event_time_rows(
+    target: pa.Table,
+    source: pa.Table,
+    keys: Sequence[str],
+    order_by: Sequence[str],
+) -> pa.Table:
+    """The driver twin of :func:`resolve_event_time`: (target ∪ source)
+    to one row per key by max ``order_by``, the source winning exact
+    ties. The result has the target's columns."""
+    names = target.column_names
+    both = pa.concat_tables([
+        t.select(names).cast(target.schema)
+        .append_column(_SRC_PRIORITY, pa.array([p] * t.num_rows, pa.int8()))
+        for t, p in ((target, 0), (source, 1))
+    ])
+    return latest_rows(both, keys, [*order_by, _SRC_PRIORITY]).drop_columns(
+        [_SRC_PRIORITY]
+    )
 
 
 def known_unique(df: DataFrame, keys: Sequence[str]) -> DataFrame:

@@ -16,7 +16,8 @@ insertIf(isNull(lookup.key)) — same logical plan, one operator.
 from __future__ import annotations
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, SparkSession
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import arrow
@@ -24,16 +25,15 @@ from ..operators import aggregate
 from ..operators.aggregate import gold_booking_aggregation
 from ..operators.derive import derive_booking_columns
 from ..operators.dq import check_gate_wiring, gated_batch
-from ..operators.merge import resolve_event_time
+from ..operators.merge import known_unique, latest_rows, resolve_event_time_rows
 from ..operators.split import conditional_split
 from ..schemas import BOOKING_DOC_SCHEMA
-from ..session import persist_owned, persisted
+from ..session import persisted
 from ..sources.tables import ParquetTable
-from ..streaming.cdc import (
-    read_change_feed, release_on_termination, run_foreach_batch_merge,
-)
+from ..streaming.cdc import read_change_feed, run_foreach_batch_merge
 
-def _quality_pred():
+
+def _quality_pred() -> Column:
     # The reference compares the STRING dates lexicographically
     # (dataflow/…:96 — correct for ISO yyyy-MM-dd); keep that exact predicate.
     return F.col("check_out_date") < F.col("check_in_date")
@@ -45,11 +45,31 @@ FACT_ORDER = ["timestamp"]
 DIM_COLUMNS = ["customer_id", "country"]
 
 
-def transform_bookings(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
+def transform_bookings(
+    raw: DataFrame, quality: Column | None = None
+) -> tuple[DataFrame, DataFrame]:
     """split(quality gate) → derive: returns (fact_rows, rejected_rows).
-    Predicate-true rows (impossible bookings) route to the FIRST stream."""
-    bad, good = conditional_split(raw, _quality_pred())
+    Predicate-true rows (impossible bookings) route to the FIRST stream.
+    ``quality`` is the gate's predicate when the caller built it already."""
+    bad, good = conditional_split(
+        raw, _quality_pred() if quality is None else quality
+    )
     return derive_booking_columns(good), bad
+
+
+def dim_side(dim: DataFrame) -> DataFrame:
+    """The dim side gold reads, ``dim``'s :data:`DIM_COLUMNS`, with its
+    rows collected to Arrow once: :func:`process_booking_batch` reads
+    them instead of collecting the dim again on every call. The rows are
+    a snapshot taken now."""
+    side = dim.select(*DIM_COLUMNS)
+    side._graft_rows = arrow.collect(side).data
+    return side
+
+
+def _dim_rows(dim: DataFrame) -> pa.Table:
+    rows = getattr(dim, "_graft_rows", None)
+    return arrow.collect(dim.select(*DIM_COLUMNS)).data if rows is None else rows
 
 
 # Fact partitioning for the pruned merge: a booking's calendar month is
@@ -116,22 +136,35 @@ def process_booking_batch(
 
     `incremental_gold=True` maintains gold with retraction deltas: the
     batch's signed delta (operators.aggregate.signed_delta, one row per
-    touched group) is collected before the fact commit and merged into
-    gold on the driver (merge_gold) inside gold's conditional commit —
+    touched group) is computed on the driver before the fact commit and
+    merged into gold (merge_gold) inside gold's conditional commit —
     O(batch + |groups|) per trigger instead of re-aggregating the whole
-    fact, the matching steady state for the pruned merge. Falls back to
-    a full refresh on the first batch (no standing gold yet)."""
+    fact, the matching steady state for the pruned merge. A group whose
+    max the delta cannot know (it retracted the group's latest booking
+    date, see aggregate.lost_max_groups) is recomputed from the committed
+    fact in the same commit. Falls back to a full refresh on the first
+    batch (no standing gold yet). The delta reads ``dim``'s
+    (customer_id, country) as Arrow: collected once if ``dim`` came from
+    :func:`dim_side` (the streaming entry), else on every call.
+
+    After the one pass over the cached batch, every batch-sized step runs
+    in Arrow on the driver; Spark keeps the key-restricted fact scan and
+    the three sink writes. The driver holds O(batch + dim) rows: the
+    batch is trigger-bounded (a backfill through
+    :func:`load_booking_fact_batch` is one batch, so it must fit the
+    driver), and the dim side is the one a broadcast star join builds on
+    the driver anyway."""
     check_gate_wiring(dq_rules, dq_on_breach, dq_quarantine)
     # The micro-batch is cached: the source is read once per trigger, by
     # the one job that also counts the bad rows (the observation) and
-    # collects the batch keys — see _process_transformed. Every later
-    # consumer (the batch's latest rows, the quarantine append) reads the
-    # cache. A micro-batch fits in memory by construction (it's
-    # trigger-bounded).
+    # collects the derived rows — see _process_transformed. The
+    # quarantine append reads the cache. A micro-batch fits in memory by
+    # construction (it's trigger-bounded).
     bad_rows = Observation()
+    quality = _quality_pred()
     with persisted(batch):
         derived, rejected = transform_bookings(
-            batch.observe(bad_rows, F.count_if(_quality_pred()).alias("n"))
+            batch.observe(bad_rows, F.count_if(quality).alias("n")), quality
         )
         # Expectation gate BEFORE any sink commit: halt mode raises here —
         # neither quarantine append, fact merge, nor gold refresh runs, and
@@ -164,41 +197,39 @@ def _process_transformed(
 ) -> None:
     """The sinks of one batch, in commit order: fact, quarantine, gold.
 
-    The batch's latest row per key is computed once and cached; the same
-    frame is the fact write and the after image (``latest_per_key``
-    returns it unchanged when the write resolves it again)."""
-    from ..operators.merge import latest_per_key
-
+    The derived rows cross to Arrow once; the batch's latest row per key
+    is computed there and is both the fact delta (a local relation) and
+    the after image."""
+    spark = derived.sparkSession
     maintain_incrementally = (
         incremental_gold and dim is not None and gold is not None and gold.exists()
     )
-    # the first full pass over the batch, one job with no shuffle: it
-    # caches the batch, counts its bad rows (bad_rows) and brings its keys
-    # to the driver for the before-image (repeated keys are harmless to a
-    # semi-join)
-    keys = arrow.collect(derived.select(*FACT_KEYS)).data
-    with persisted(latest_per_key(derived, FACT_KEYS, FACT_ORDER)) as latest:
-        delta = None
-        if maintain_incrementally and not gold.applied(txn):
-            delta = _gold_delta(latest, keys, fact, dim, event_time_wins, txn)
-        upsert = fact.upsert_delta if merge_on_read else fact.upsert_pruned
-        upsert(
-            latest,
-            keys=FACT_KEYS,
-            partition_by=FACT_PARTITIONING,
-            order_by=FACT_ORDER,
-            event_time_wins=event_time_wins,
-            txn=txn,
-        )
-        if bad_rows.get["n"]:
-            # O(batch) append, NOT idempotent on its own — the txn marker
-            # (committed atomically with the append) is what makes a
-            # replayed batch skip it instead of duplicating rejected rows
-            quarantine.append(rejected, txn=txn)
-            # append-per-batch accumulates one file per trigger forever;
-            # the size-triggered compaction keeps the live file count
-            # saw-toothing below the trigger instead (steady-state bound)
-            quarantine.maybe_compact(trigger_files=64)
+    # the one pass over the batch, one job with no shuffle: it caches the
+    # batch, counts its bad rows (bad_rows) and brings every derived row
+    # to the driver
+    latest = latest_rows(arrow.collect(derived).data, FACT_KEYS, FACT_ORDER)
+    delta = dim_rows = None
+    if maintain_incrementally and not gold.applied(txn):
+        dim_rows = _dim_rows(dim)
+        delta = _gold_delta(latest, fact, dim_rows, event_time_wins, txn)
+    upsert = fact.upsert_delta if merge_on_read else fact.upsert_pruned
+    upsert(
+        known_unique(spark.createDataFrame(latest, derived.schema), FACT_KEYS),
+        keys=FACT_KEYS,
+        partition_by=FACT_PARTITIONING,
+        order_by=FACT_ORDER,
+        event_time_wins=event_time_wins,
+        txn=txn,
+    )
+    if bad_rows.get["n"]:
+        # O(batch) append, NOT idempotent on its own — the txn marker
+        # (committed atomically with the append) is what makes a
+        # replayed batch skip it instead of duplicating rejected rows
+        quarantine.append(rejected, txn=txn)
+        # append-per-batch accumulates one file per trigger forever;
+        # the size-triggered compaction keeps the live file count
+        # saw-toothing below the trigger instead (steady-state bound)
+        quarantine.maybe_compact(trigger_files=64)
     if dim is None or gold is None:
         return
     if maintain_incrementally:
@@ -208,8 +239,11 @@ def _process_transformed(
         # replayed gold commit never calls new_gold). The full refresh
         # below depends only on the fact, so it stays a blind overwrite.
         def new_gold(old_gold: DataFrame) -> DataFrame:
-            merged = aggregate.merge_gold(arrow.collect(old_gold).data, delta)
-            spark = old_gold.sparkSession
+            old = arrow.collect(old_gold).data
+            merged = aggregate.merge_gold(old, delta)
+            lost = aggregate.lost_max_groups(old, delta)
+            if lost:
+                merged = _recompute_groups(merged, lost, fact, dim_rows)
             return spark.createDataFrame(merged, old_gold.schema).coalesce(1)
 
         gold.overwrite(new_gold, txn=txn)
@@ -218,51 +252,51 @@ def _process_transformed(
 
 
 def _gold_delta(
-    latest: DataFrame,
-    keys: pa.Table,
+    latest: pa.Table,
     fact: ParquetTable,
-    dim: DataFrame,
+    dim: pa.Table,
     event_time_wins: bool,
     txn: tuple[str, int] | None,
 ) -> pa.Table:
-    """The batch's signed gold delta, one row per touched group, collected
-    to Arrow BEFORE the fact write commits, so the before-image is the
-    current fact rows for the batch's ``keys``. On a REPLAY whose fact
+    """The batch's signed gold delta, one row per touched group, computed
+    on the driver BEFORE the fact write commits, so the before-image is
+    the current fact rows for the batch's keys. On a REPLAY whose fact
     write already committed, "current" would be the post-merge state
     (delta ≈ 0 → gold stuck stale), so it reads the pre-merge snapshot
-    the txn marker recorded instead (kept on disk by _vacuum(keep=2)).
-
-    The keys are a local relation, so the base and the delta frames
-    share one broadcast of them (Spark reuses no broadcast of a cached
-    frame)."""
-    keys = latest.sparkSession.createDataFrame(keys).coalesce(1)
+    the txn marker recorded instead (kept on disk by _vacuum(keep=2))."""
+    keys = fact.spark.createDataFrame(latest.select(FACT_KEYS)).coalesce(1)
+    version = None
     if fact.applied(txn):
-        from ..sources.tables import read_version
-
-        fact_now = fact.read()
-        base_v = fact.last_txn_base(txn[0])
-        if base_v:
-            fact_now = read_version(fact, base_v)
-        before = fact_now.join(F.broadcast(keys), on=FACT_KEYS, how="left_semi")
-    else:
-        # key-restricted resolved read: under merge-on-read a plain
-        # read().semi-join would resolve the WHOLE table first (the
-        # semi-join can't push through the max_by resolve) — this pushes
-        # the batch keys into every frame of the stack, so the
-        # before-image costs O(batch keys), not O(table)
-        before = fact.read_for_keys(keys, FACT_KEYS)
+        version = fact.last_txn_base(txn[0]) or None
+    # key-restricted resolved read: the batch keys are pushed into every
+    # frame of the merge-on-read stack, so the before-image costs
+    # O(batch keys), not O(table)
+    before = fact.read_for_keys(keys, FACT_KEYS, version=version)
     after = latest
     if event_time_wins:
         # the merge resolves matched keys to max event time, so the
         # post-merge state of a batch key is the winner of (existing row,
         # batch row) — deriving `after` from the batch alone would retract
         # a newer fact row in favor of a late older event and permanently
-        # diverge gold from the fact. Uses the SAME deterministic
-        # source-wins tie-break as the merge itself (resolve_event_time),
-        # so an exact event-time tie resolves identically here and in the
-        # fact write.
-        after = resolve_event_time(before, latest, FACT_KEYS, FACT_ORDER)
-    return arrow.collect(aggregate.signed_delta(before, after, dim)).data
+        # diverge gold from the fact. The SAME deterministic source-wins
+        # tie-break as the merge itself (resolve_event_time), so an exact
+        # event-time tie resolves identically here and in the fact write.
+        after = resolve_event_time_rows(before, latest, FACT_KEYS, FACT_ORDER)
+    return aggregate.signed_delta(before, after, dim)
+
+
+def _recompute_groups(
+    merged: pa.Table, groups: list, fact: ParquetTable, dim: pa.Table
+) -> pa.Table:
+    """``merged`` with the rows of ``groups`` rebuilt from the committed
+    fact: one Spark aggregation over those groups' customers only."""
+    group = pa.array(groups, dim.schema.field("country").type)
+    members = fact.spark.createDataFrame(
+        dim.filter(pc.is_in(dim["country"], value_set=group))
+    )
+    fresh = arrow.collect(gold_booking_aggregation(fact.read(), members)).data
+    kept = merged.filter(pc.invert(pc.is_in(merged["country"], value_set=group)))
+    return pa.concat_tables([kept, fresh.select(kept.column_names).cast(kept.schema)])
 
 
 def load_booking_fact_stream(
@@ -309,24 +343,16 @@ def load_booking_fact_stream(
     landing drain converges to the same fact state (the `WHEN MATCHED AND
     s.ts >= t.ts` conditional-MERGE guard).
 
-    The dim side gold reads, ``dim``'s (customer_id, country), is cached
-    once for the query and read by every trigger (a dim the caller cached
-    is left as it is). An ``available_now`` drain releases it when the
-    drain ends or fails; a continuous query releases it from a
-    ``StreamingQueryListener`` when it stops or fails
-    (``streaming.cdc.release_on_termination``)."""
+    With incremental gold, the dim side gold reads is collected to Arrow
+    once, when the query starts (:func:`dim_side`), and every trigger
+    reads those rows."""
     check_gate_wiring(dq_rules, dq_on_breach, dq_quarantine)
     stream = read_change_feed(
         spark, landing_dir, BOOKING_DOC_SCHEMA,
         max_files_per_trigger=max_files_per_trigger,
     )
-    release_dim = lambda: None  # noqa: E731
-    if dim is not None:
-        # the dim side gold reads, cached once for every trigger of this
-        # query. A projection of its own: a dim the caller cached stays
-        # exactly as the caller left it.
-        dim = dim.select(*DIM_COLUMNS)
-        release_dim = persist_owned(dim)
+    if dim is not None and incremental_gold and gold is not None:
+        dim = dim_side(dim)
 
     # stable per (pipeline, checkpoint): the batch-id sequence is scoped to
     # the checkpoint, so the idempotency marker must be too
@@ -341,21 +367,12 @@ def load_booking_fact_stream(
             dq_quarantine=dq_quarantine, incremental_gold=incremental_gold,
         )
 
-    try:
-        q = run_foreach_batch_merge(
-            stream, _process, checkpoint_dir, available_now=available_now,
-            processing_time=processing_time,
-        )
-    except BaseException:
-        release_dim()
-        raise
+    q = run_foreach_batch_merge(
+        stream, _process, checkpoint_dir, available_now=available_now,
+        processing_time=processing_time,
+    )
     if available_now:
-        try:
-            q.awaitTermination()
-        finally:
-            release_dim()
-    else:
-        release_on_termination(spark, q, release_dim)
+        q.awaitTermination()
     return q
 
 

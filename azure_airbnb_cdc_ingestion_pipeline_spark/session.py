@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import contextlib
 import os
-import threading
 import weakref
 
 from pyspark.sql import SparkSession
@@ -171,36 +170,21 @@ def track_persist(df, storage_level=None):
     return df
 
 
-def persist_owned(df):
-    """Persist ``df`` unless it is cached already, and return the function
-    that releases it: it unpersists what this call persisted, once, and
-    leaves a frame that was cached before (the caller's own, or an equal
-    plan someone else cached) as it found it."""
+@contextlib.contextmanager
+def persisted(df):
+    """``df`` persisted for the ``with`` body and unpersisted on every
+    exit. A frame that is cached already (the caller's own, or an equal
+    plan someone else cached) is used as it is and left as it was."""
     from pyspark import StorageLevel
 
     if df.storageLevel != StorageLevel.NONE:
-        return lambda: None
+        yield df
+        return
     df.persist()
-    lock, done = threading.Lock(), []
-
-    def release() -> None:
-        with lock:
-            if not done:
-                done.append(True)
-                df.unpersist()
-
-    return release
-
-
-@contextlib.contextmanager
-def persisted(df):
-    """``df`` persisted for the ``with`` body (see :func:`persist_owned`),
-    released on every exit."""
-    release = persist_owned(df)
     try:
         yield df
     finally:
-        release()
+        df.unpersist()
 
 
 def release_persisted(blocking: bool = False) -> int:

@@ -53,6 +53,7 @@ import shutil
 import tempfile
 from typing import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
@@ -114,6 +115,19 @@ def _mor_resolve_tagged(allf: DataFrame, mor: dict) -> DataFrame:
     )
     payload = [c for c in allf.columns if c not in set(keys) | {"__seq"}]
     return known_unique(argmax_per_group(allf, keys, order, payload), keys)
+
+
+def _mor_resolve_rows(tagged: pa.Table, mor: dict) -> pa.Table:
+    """The driver twin of :func:`_mor_resolve_tagged` over a collected,
+    ``__seq``-tagged stack: the same rule through
+    ``operators.merge.latest_rows``, ``__seq`` dropped."""
+    from ..operators.merge import latest_rows
+
+    order = (
+        [*(mor.get("order_by") or []), "__seq"]
+        if mor.get("event_time_wins") else ["__seq"]
+    )
+    return latest_rows(tagged, list(mor["keys"]), order).drop_columns(["__seq"])
 
 
 def _null_filled(source: DataFrame, target: DataFrame) -> DataFrame:
@@ -229,46 +243,49 @@ class ParquetTable:
         # columns of the version's layout
         return reader.option("basePath", vdir).parquet(*paths)
 
-    def _read_resolved(
-        self,
-        vdir: str,
-        keys: DataFrame | None = None,
-        key_cols: list[str] | None = None,
-        files: list[str] | None = None,
-    ) -> DataFrame:
+    def _read_resolved(self, vdir: str, files: list[str] | None = None) -> DataFrame:
         """Resolved read of one version dir: base ∪ pending deltas to one
-        row per key. With ``keys`` the key restriction is pushed INTO each
-        frame (a left-semi join) before the union+argmax. ``files`` (on a
-        version without pending deltas only) restricts the base to those
-        files."""
+        row per key. ``files`` (on a version without pending deltas only)
+        restricts the base to those files."""
         base = self._scan(vdir, files)
-
-        def restrict(df: DataFrame) -> DataFrame:
-            return df if keys is None else df.join(keys, key_cols, "left_semi")
-
         mor = self._read_meta(vdir).get("mor") or {}
         if not mor.get("pending"):
-            return restrict(base)
-        allf = restrict(base).withColumn("__seq", F.lit(0)).unionByName(
-            restrict(self._delta_stack(vdir))
-        )
+            return base
+        allf = base.withColumn("__seq", F.lit(0)).unionByName(self._delta_stack(vdir))
         return _mor_resolve_tagged(allf, mor).select(*base.columns)
 
-    def read_for_keys(self, keys_df: DataFrame, key_cols: list[str]) -> DataFrame:
-        """Resolved rows for a bounded key set — the point-lookup read.
+    def read_for_keys(
+        self, keys_df: DataFrame, key_cols: list[str], version: int | None = None
+    ) -> pa.Table:
+        """Resolved rows for a bounded key set, on the driver — the point
+        lookup the incremental-gold before-image needs per micro-batch.
+        Equal in content to ``read().join(keys_df, key_cols, "left_semi")``
+        (of :func:`read_version` with ``version``).
 
-        A consumer that semi-joins AFTER :meth:`read` pays the full
-        merge-on-read resolution first (Catalyst cannot push a semi-join
-        through the max_by aggregate); this pushes the key restriction
-        INTO each frame of the stack before the union+argmax, so the
-        resolve cost is O(matching rows), not O(table) — what the
-        incremental-gold before-image needs per micro-batch. Equivalent
-        to ``read().join(keys_df, key_cols, "left_semi")`` in content.
-        """
+        The key restriction is a broadcast left-semi join INSIDE each
+        frame of the merge-on-read stack, and one collect brings back the
+        restricted base rows and the pending delta rows tagged with
+        ``__seq``: O(matching rows), with no aggregate and no shuffle in
+        Spark. :func:`_mor_resolve_rows` resolves them in Arrow under the
+        table's rule (the highest ``__seq``, or ``order_by`` then
+        ``__seq`` under ``event_time_wins``)."""
+        from ..functions import arrow
+
+        vdir = (
+            self._current_dir() if version is None
+            else _retained_dir(self, version)
+        )
         # no dedupe: a semi-join emits each row once however often its key
-        # repeats on the right
+        # repeats on the right, and base and deltas share one broadcast
         keys = F.broadcast(keys_df.select(*key_cols))
-        return self._read_resolved(self._current_dir(), keys=keys, key_cols=key_cols)
+        base = self._scan(vdir).join(keys, key_cols, "left_semi")
+        mor = self._read_meta(vdir).get("mor") or {}
+        if not mor.get("pending"):
+            return arrow.collect(base).data
+        tagged = base.withColumn("__seq", F.lit(0)).unionByName(
+            self._delta_stack(vdir).join(keys, key_cols, "left_semi")
+        )
+        return _mor_resolve_rows(arrow.collect(tagged).data, mor).select(base.columns)
 
     # -- writes --------------------------------------------------------------
     def _commit_version(
@@ -1244,14 +1261,19 @@ def read_version(table: ParquetTable, version: int) -> DataFrame:
     the Delta/Iceberg `VERSION AS OF` analog the versioned-pointer
     layout gives for free. Only versions within the vacuum retention
     (keep=2 by default) are readable; older ones raise."""
+    # _read_resolved: a merge-on-read version's deltas are part of its
+    # logical snapshot — time travel must see merged content too
+    return table._read_resolved(_retained_dir(table, version))
+
+
+def _retained_dir(table: ParquetTable, version: int) -> str:
+    """The dir of ``version``; raises when the vacuum removed it."""
     if version not in _versions(table):
         raise FileNotFoundError(
             f"version v{version} of {table.root} is not available "
             f"(retained: {_versions(table)})"
         )
-    # _read_resolved: a merge-on-read version's deltas are part of its
-    # logical snapshot — time travel must see merged content too
-    return table._read_resolved(table._version_dir(version))
+    return table._version_dir(version)
 
 
 def diff_versions(

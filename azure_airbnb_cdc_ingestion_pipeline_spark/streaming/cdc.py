@@ -26,13 +26,16 @@ with the pruned copy-on-write merge, bounding the read tax and the file
 count.
 
 One pass per trigger (``pipelines.load_booking_fact``): the source is
-read once into a cached batch by the job that also counts its bad rows
-and collects its keys; the batch's latest row per key is computed once
-and cached, and is the fact delta, the before-image keys and the after
-image; incremental gold collects the signed delta (one row per gold
-group) and merges it on the driver. The dim side is cached once per
-query: an ``availableNow`` drain releases it when it ends, a continuous
-query from a listener when it stops (:func:`release_on_termination`).
+read once into a cached batch, by the one job that also counts its bad
+rows and brings every derived row to the driver as Arrow. Every
+batch-sized step after it runs there: the latest row per key (the fact
+delta, written as a local relation, and the after image), the
+before-image resolve of the rows ``ParquetTable.read_for_keys`` collects
+for the batch keys, and the signed gold delta against the dim side, which
+the query collects once when it starts. Spark keeps the work that touches
+a table: the key-restricted fact scan and the three sink writes. The
+driver holds O(batch + dim) rows: the batch is trigger-bounded, and the
+dim side is the one a broadcast star join already built on the driver.
 """
 
 from __future__ import annotations
@@ -41,7 +44,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
+from pyspark.sql.streaming import StreamingQuery
 
 
 def read_change_feed(
@@ -78,41 +81,6 @@ def run_foreach_batch_merge(
     else:
         writer = writer.trigger(processingTime=processing_time)
     return writer.start()
-
-
-class _OnTermination(StreamingQueryListener):
-    """Calls ``action`` once, when the query with id ``query_id`` ends."""
-
-    def __init__(self, spark: SparkSession, query_id: str, action: Callable[[], None]):
-        self.spark, self.query_id, self.action = spark, query_id, action
-
-    def onQueryStarted(self, event) -> None:
-        pass
-
-    def onQueryProgress(self, event) -> None:
-        pass
-
-    def onQueryIdle(self, event) -> None:
-        pass
-
-    def onQueryTerminated(self, event) -> None:
-        if str(event.id) == self.query_id:
-            self.action()
-            self.spark.streams.removeListener(self)
-
-
-def release_on_termination(
-    spark: SparkSession, query: StreamingQuery, release: Callable[[], None]
-) -> None:
-    """Run ``release`` (idempotent) when ``query`` stops, fails or ends —
-    from a listener, since a continuous-trigger query outlives the call
-    that started it. A query that ended before the listener was added is
-    released here."""
-    listener = _OnTermination(spark, str(query.id), release)
-    spark.streams.addListener(listener)
-    if not query.isActive:
-        release()
-        spark.streams.removeListener(listener)
 
 
 def dedup_stream(

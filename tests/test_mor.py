@@ -150,7 +150,9 @@ def test_mor_spec_mismatch_raises(spark, table, merge):  # noqa: F811
                               event_time_wins=True)
 
 
-def test_mor_read_for_keys_matches_semi_join(spark, table):
+def test_mor_read_for_keys_matches_semi_join(spark, table, monkeypatch):
+    from azure_airbnb_cdc_ingestion_pipeline_spark.functions import arrow
+
     table.upsert_delta(_mk(spark, [(1, 1, "a", 0), (2, 1, "b", 1)]),
                        keys=["k"], partition_by=["p"], order_by=["ts"])
     table.upsert_delta(_mk(spark, [(1, 2, "a2", 0), (3, 1, "c", 2)]),
@@ -160,16 +162,23 @@ def test_mor_read_for_keys_matches_semi_join(spark, table):
         (r.k, r.val)
         for r in table.read().join(want_keys, ["k"], "left_semi").collect()
     }
+    collected = []
+    collect = arrow.collect
+    monkeypatch.setattr(arrow, "collect", lambda df: collected.append(df) or collect(df))
     via_keys = {
-        (r.k, r.val)
-        for r in table.read_for_keys(want_keys, ["k"]).collect()
+        (r["k"], r["val"])
+        for r in table.read_for_keys(want_keys, ["k"]).to_pylist()
     }
     assert via_keys == via_read == {(1, "a2"), (3, "c")}
-    # the key-restricted plan must NOT carry a full-table resolve: the
-    # semi-joins sit BELOW the max_by aggregate
-    plan = table.read_for_keys(want_keys, ["k"])._jdf.queryExecution().toString()
-    physical = plan.split("== Physical Plan ==")[-1]
+    # the one collected frame is key-restricted in every frame of the
+    # stack (base + delta), and Spark runs no aggregate and no shuffle:
+    # the resolve happens on the driver
+    (frame,) = collected
+    physical = frame._jdf.queryExecution().toString().split("== Physical Plan ==")[-1]
     assert physical.count("BroadcastHashJoin") >= 2  # base + delta restricted
+    assert "Aggregate" not in physical
+    assert not [line for line in physical.splitlines()
+                if "Exchange" in line and "BroadcastExchange" not in line]
 
 
 @pytest.mark.parametrize(

@@ -182,13 +182,12 @@ def test_incremental_gold_with_retraction_matches_full_recompute(spark):
     )
     before = fact.join(batch.select("booking_id"), "booking_id", "left_semi")
     delta = signed_delta(
-        before, batch, dim, amount_col="amount", date_col="booking_date"
+        arrow.collect(before).data, arrow.collect(batch).data,
+        arrow.collect(dim).data, amount_col="amount", date_col="booking_date",
     )
     got = {
         r["country"]: (r["total_bookings"], r["total_amount"], r["last_booking_date"])
-        for r in merge_gold(
-            arrow.collect(gold).data, arrow.collect(delta).data
-        ).to_pylist()
+        for r in merge_gold(arrow.collect(gold).data, delta).to_pylist()
     }
     new_fact = merge_dataframes(fact, batch, ["booking_id"])
     want = {
