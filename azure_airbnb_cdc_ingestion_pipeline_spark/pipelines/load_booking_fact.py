@@ -72,10 +72,10 @@ def _dim_rows(dim: DataFrame) -> pa.Table:
     return arrow.collect(dim.select(*DIM_COLUMNS)).data if rows is None else rows
 
 
-# Fact partitioning for the pruned merge: a booking's calendar month is
-# immutable across updates (the upsert_pruned precondition), and CDC
-# updates cluster in recent months — steady-state batches rewrite only
-# the hot partitions.
+# Fact partitioning for the fold's pruned merge: a booking's calendar
+# month is immutable across updates (the pruned-merge precondition), and
+# CDC updates cluster in recent months — a fold rewrites only the hot
+# partitions.
 FACT_PARTITIONING = ["booking_year", "booking_month"]
 
 
@@ -102,7 +102,6 @@ def process_booking_batch(
     incremental_gold: bool = False,
     event_time_wins: bool = False,
     txn: tuple[str, int] | None = None,
-    merge_on_read: bool = False,
     dq_rules: list | None = None,
     dq_on_breach: str = "halt",
     dq_quarantine: ParquetTable | None = None,
@@ -110,13 +109,10 @@ def process_booking_batch(
     """One micro-batch: MERGE good rows into the fact (latest-per-booking_id
     wins), quarantine bad rows, then refresh gold if a dim is wired.
 
-    The fact merge is partition-pruned on :data:`FACT_PARTITIONING`.
-    ``merge_on_read=True`` (the streaming entry): it defers to
-    `ParquetTable.upsert_delta` — O(batch) delta append per trigger with
-    periodic folds — instead of the copy-on-write `upsert_pruned` (the
-    batch entry) whose rewrite floor dominates small micro-batches (the
-    r4 steady-state throughput miss). Readers always see resolved
-    content either way.
+    The fact merge is merge-on-read (`ParquetTable.upsert_delta`): an
+    O(batch) delta append per trigger, and every 16th batch a fold into
+    the base, partition-pruned on :data:`FACT_PARTITIONING`. Readers
+    always see resolved content.
 
     ``txn=(app_id, batch_id)`` (set by the streaming entry) arms the
     per-table idempotent batch guard: each sink commit atomically records
@@ -139,21 +135,20 @@ def process_booking_batch(
     touched group) is computed on the driver before the fact commit and
     merged into gold (merge_gold) inside gold's conditional commit —
     O(batch + |groups|) per trigger instead of re-aggregating the whole
-    fact, the matching steady state for the pruned merge. A group whose
-    max the delta cannot know (it retracted the group's latest booking
-    date, see aggregate.lost_max_groups) is recomputed from the committed
-    fact in the same commit. Falls back to a full refresh on the first
-    batch (no standing gold yet). The delta reads ``dim``'s
+    fact, the matching steady state for the O(batch) fact delta. A group
+    whose max the delta cannot know (it retracted the group's latest
+    booking date, see aggregate.lost_max_groups) is recomputed from the
+    committed fact in the same commit. Falls back to a full refresh on the
+    first batch (no standing gold yet). The delta reads ``dim``'s
     (customer_id, country) as Arrow: collected once if ``dim`` came from
     :func:`dim_side` (the streaming entry), else on every call.
 
     After the one pass over the cached batch, every batch-sized step runs
     in Arrow on the driver; Spark keeps the key-restricted fact scan and
     the three sink writes. The driver holds O(batch + dim) rows: the
-    batch is trigger-bounded (a backfill through
-    :func:`load_booking_fact_batch` is one batch, so it must fit the
-    driver), and the dim side is the one a broadcast star join builds on
-    the driver anyway."""
+    batch is trigger-bounded (``streaming.cdc.read_change_feed`` caps
+    every trigger), and the dim side is the one a broadcast star join
+    builds on the driver anyway."""
     check_gate_wiring(dq_rules, dq_on_breach, dq_quarantine)
     # The micro-batch is cached: the source is read once per trigger, by
     # the one job that also counts the bad rows (the observation) and
@@ -178,7 +173,6 @@ def process_booking_batch(
             _process_transformed(
                 clean, rejected, bad_rows, fact, quarantine, dim, gold,
                 incremental_gold, event_time_wins, txn=txn,
-                merge_on_read=merge_on_read,
             )
 
 
@@ -193,7 +187,6 @@ def _process_transformed(
     incremental_gold: bool,
     event_time_wins: bool = False,
     txn: tuple[str, int] | None = None,
-    merge_on_read: bool = False,
 ) -> None:
     """The sinks of one batch, in commit order: fact, quarantine, gold.
 
@@ -212,8 +205,7 @@ def _process_transformed(
     if maintain_incrementally and not gold.applied(txn):
         dim_rows = _dim_rows(dim)
         delta = _gold_delta(latest, fact, dim_rows, event_time_wins, txn)
-    upsert = fact.upsert_delta if merge_on_read else fact.upsert_pruned
-    upsert(
+    fact.upsert_delta(
         known_unique(spark.createDataFrame(latest, derived.schema), FACT_KEYS),
         keys=FACT_KEYS,
         partition_by=FACT_PARTITIONING,
@@ -319,6 +311,11 @@ def load_booking_fact_stream(
     """Streaming entry: drain the change-feed landing dir through the merge
     (exactly-once via checkpoint + idempotent merge).
 
+    Each trigger is bounded: ``max_files_per_trigger`` files, or without
+    it the byte cap of ``streaming.cdc.read_change_feed``, so a backlog
+    (the first drain of a from-the-beginning change feed) is cut into
+    several micro-batches instead of reaching the driver in one.
+
     ``available_now=False`` runs a CONTINUOUS ``processingTime`` trigger
     (r8 — the steady-latency consumer shape; ``processing_time`` sets the
     cadence) and returns the running query without awaiting it.
@@ -362,7 +359,7 @@ def load_booking_fact_stream(
         process_booking_batch(
             batch_df, fact, quarantine, dim=dim, gold=gold,
             event_time_wins=event_time_wins,
-            txn=(app_id, batch_id), merge_on_read=True,
+            txn=(app_id, batch_id),
             dq_rules=dq_rules, dq_on_breach=dq_on_breach,
             dq_quarantine=dq_quarantine, incremental_gold=incremental_gold,
         )
@@ -374,16 +371,3 @@ def load_booking_fact_stream(
     if available_now:
         q.awaitTermination()
     return q
-
-
-def load_booking_fact_batch(
-    spark: SparkSession,
-    landing_dir: str,
-    fact: ParquetTable,
-    quarantine: ParquetTable,
-    dim: DataFrame | None = None,
-    gold: ParquetTable | None = None,
-) -> None:
-    """Batch variant (one-shot backfill of the whole landing dir)."""
-    raw = spark.read.schema(BOOKING_DOC_SCHEMA).json(landing_dir)
-    process_booking_batch(raw, fact, quarantine, dim=dim, gold=gold)

@@ -683,12 +683,12 @@ class ParquetTable:
         matches=None,
         emptied: bool = False,
     ) -> list[str]:
-        """The copy-on-write write step shared by the pruned MERGE, the
-        merge-on-read fold and DELETE / UPDATE: rewrite the partitions of
-        the base that hold ``matches(base rows)`` as ``rewrite(their
-        rows)`` and return every other leaf dir, for
-        :meth:`_commit_version` to hardlink forward (a metadata op). An
-        unpartitioned table (``parts=[]``) rewrites everything.
+        """The copy-on-write write step shared by the merge-on-read fold
+        (the pruned MERGE), DELETE / UPDATE and the unpartitioned upsert:
+        rewrite the partitions of the base that hold ``matches(base
+        rows)`` as ``rewrite(their rows)`` and return every other leaf
+        dir, for :meth:`_commit_version` to hardlink forward (a metadata
+        op). An unpartitioned table (``parts=[]``) rewrites everything.
 
         The rewritten partitions are the dirs the rewrite wrote. A rewrite
         that can EMPTY a partition (DELETE) passes ``emptied=True``, and
@@ -729,11 +729,12 @@ class ParquetTable:
     @staticmethod
     def _mor_spec(mor: dict, keys, order_by, event_time_wins: bool) -> dict:
         """The merge-on-read spec for the next batch: ``mor`` with this
-        merge's keys and order and the batch's sequence number. Pending
-        deltas were written under ``mor``'s keys and conflict rule, so a
-        merge that changes either raises instead of resolving them under
-        the wrong one."""
-        if (
+        merge's keys, order and conflict rule and the batch's sequence
+        number. Pending deltas were written under ``mor``'s keys and
+        conflict rule, so while any is pending a merge that changes either
+        raises instead of resolving them under the wrong one; once
+        nothing is pending, the next merge may change both."""
+        if mor.get("pending") and (
             mor["keys"] != list(keys)
             or bool(mor.get("event_time_wins")) != bool(event_time_wins)
         ):
@@ -746,6 +747,7 @@ class ParquetTable:
             **mor,
             "keys": list(keys),
             "order_by": list(order_by or []),
+            "event_time_wins": bool(event_time_wins),
             "seq": int(mor.get("seq", 0)) + 1,
         }
 
@@ -759,21 +761,18 @@ class ParquetTable:
         partition_by: list[str],
         order_by: list[str] | None,
         event_time_wins: bool,
-        spec: dict | None = None,
+        spec: dict,
     ) -> list[str]:
-        """Write step of the pruned MERGE of ``source`` into the base —
-        the one fold. Pending merge-on-read deltas fold in first: one
-        multi-path scan of the deltas ∪ the batch, which is sequenced
-        after every on-disk delta (``spec["seq"]``), resolves to one
-        source row per key, so the new version carries no deltas.
-        ``spec`` (from :meth:`upsert_delta`) defaults to the base's
-        pending spec checked against this merge."""
+        """Write step of the fold: the pruned MERGE of ``source`` into the
+        base. Pending merge-on-read deltas fold in first: one multi-path
+        scan of the deltas ∪ the batch, which is sequenced after every
+        on-disk delta (``spec["seq"]``), resolves to one source row per
+        key, so the new version carries no deltas. With nothing pending
+        the sidecar's merge-on-read spec stays as it was."""
         from ..operators.merge import latest_per_key, merge_dataframes
 
         src = latest_per_key(source, keys, order_by)
-        mor = meta.get("mor") or {}
-        if mor.get("pending"):
-            spec = spec or self._mor_spec(mor, keys, order_by, event_time_wins)
+        if (meta.get("mor") or {}).get("pending"):
             # every column of the stack and the batch: a column only the
             # pending deltas carry keeps their values for the keys the
             # batch does not touch. The partition combos come from the
@@ -783,7 +782,6 @@ class ParquetTable:
                 allowMissingColumns=True,
             )
             src = _mor_resolve_tagged(source, spec)
-        if spec:
             meta["mor"] = {**spec, "pending": 0}
         return self._rewrite_partitions(
             base_dir, target, partition_by,
@@ -807,16 +805,13 @@ class ParquetTable:
         event_time_wins: bool = False,
         txn: tuple[str, int] | None = None,
     ) -> None:
-        """Partition-pruned MERGE: rewrite ONLY the partitions the source
-        batch touches; untouched partitions are hardlinked into the new
-        version (a metadata op). This is the 100 TB CDC steady state —
-        per-batch cost is proportional to the affected partitions, not the
-        table (the same contract as a Delta MERGE with a partition-pruning
-        ON-clause predicate).
-
-        On a table with pending merge-on-read deltas this runs the fold of
-        :meth:`upsert_delta` (deltas ∪ batch resolve first), so its keys
-        and ``event_time_wins`` must match the pending spec (ValueError).
+        """Partition-pruned MERGE now: :meth:`upsert_delta` folding on
+        this batch (``fold_after=1``). It rewrites ONLY the partitions the
+        batch and any pending deltas touch; untouched partitions are
+        hardlinked into the new version (a metadata op), so the cost is
+        proportional to the affected partitions, not the table (the same
+        contract as a Delta MERGE with a partition-pruning ON-clause
+        predicate).
 
         Correctness precondition (same as Delta's pruned merge): the
         partition attributes are immutable per key (e.g. a booking's
@@ -824,16 +819,9 @@ class ParquetTable:
         partition value changed would leave its old row in the untouched
         partition.
         """
-        from ..operators.merge import latest_per_key
-
-        self._commit_version(
-            lambda base_dir, target, meta: self._merge_partitions(
-                base_dir, target, meta, source, keys, partition_by,
-                order_by, event_time_wins,
-            ),
-            first=latest_per_key(source, keys, order_by),
-            meta={"partition_by": list(partition_by)},
-            txn=txn,
+        self.upsert_delta(
+            source, keys, partition_by, order_by=order_by,
+            event_time_wins=event_time_wins, txn=txn, fold_after=1,
         )
 
     def upsert_delta(
@@ -848,33 +836,32 @@ class ParquetTable:
     ) -> None:
         """Merge-on-read upsert — the low-latency CDC steady state.
 
-        A copy-on-write merge (:meth:`upsert_pruned`) pays O(affected
-        partitions) per trigger; when micro-batches are small and spread
-        across partitions that floor dominates (measured ~1 s/batch at
-        1 k-event triggers — the r4 verdict's steady-state miss). This is
-        the Hudi-MoR / Delta-deletion-vector trade instead: per trigger,
-        write ONLY the batch as a sequence-numbered delta file set under
+        A copy-on-write merge pays O(affected partitions) per trigger;
+        when micro-batches are small and spread across partitions that
+        floor dominates (measured ~1 s/batch at 1 k-event triggers — the
+        r4 verdict's steady-state miss). This is the Hudi-MoR /
+        Delta-deletion-vector trade instead: per trigger, write ONLY the
+        batch as a sequence-numbered delta file set under
         ``<version>/_delta/`` and hardlink everything else forward —
         O(batch) work regardless of table size. Readers resolve
         base ∪ deltas to one row per key (one `max_by` hash-agg — see
         `_mor_resolve_tagged`); every ``fold_after``-th batch folds the
-        pending deltas into the base with the standard pruned merge,
-        bounding both the read tax and the file count.
+        pending deltas and the batch into the base with the pruned
+        copy-on-write merge (:meth:`_merge_partitions`), bounding both
+        the read tax and the file count.
 
-        Same conflict semantics as the merge it defers (arrival-wins by
-        delta sequence; ``event_time_wins`` resolves by max event time
-        with source-wins ties), same txn idempotency markers, same
-        optimistic-concurrency commit. The first delta records the
-        merge-on-read spec; later batches must keep its keys and
-        ``event_time_wins``."""
+        Conflict semantics: arrival-wins by delta sequence;
+        ``event_time_wins`` resolves by max event time with source-wins
+        ties. Same txn idempotency markers and optimistic-concurrency
+        commit as every write. While deltas are pending, a batch must keep
+        their keys and ``event_time_wins`` (ValueError)."""
         from ..operators.merge import latest_per_key
 
         latest = latest_per_key(source, keys, order_by)
-        fresh = {"keys": list(keys), "event_time_wins": bool(event_time_wins)}
 
         def write(base_dir: str, target: str, meta: dict) -> list[str]:
             spec = self._mor_spec(
-                meta.get("mor") or fresh, keys, order_by, event_time_wins
+                meta.get("mor") or {}, keys, order_by, event_time_wins
             )
             pending = int(spec.get("pending", 0)) + 1
             if pending >= fold_after:
@@ -899,10 +886,11 @@ class ParquetTable:
 
     def _fold_pending(self) -> None:
         """Fold pending merge-on-read deltas into the base: the pruned
-        MERGE of an empty batch, so only the partitions the deltas touch
-        are rewritten (no-op without pending deltas). append and the
-        DML / maintenance entry points call this first: their writes
-        assume version dirs hold exactly the resolved content."""
+        MERGE now (:meth:`upsert_pruned`) of an empty batch, so only the
+        partitions the deltas touch are rewritten (no-op without pending
+        deltas). append and the DML / maintenance entry points call this
+        first: their writes assume version dirs hold exactly the resolved
+        content."""
         meta = self._current_meta()
         mor = meta.get("mor") or {}
         if mor.get("pending"):

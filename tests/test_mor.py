@@ -148,6 +148,13 @@ def test_mor_spec_mismatch_raises(spark, table, merge):  # noqa: F811
         getattr(table, merge)(_mk(spark, [(1, 2, "b", 0)]),
                               keys=["k"], partition_by=["p"], order_by=["ts"],
                               event_time_wins=True)
+    # what the error advises: once compact() folded the pending deltas,
+    # nothing is pending and both names accept the new conflict rule
+    table.compact(partition_by=["p"])
+    getattr(table, merge)(_mk(spark, [(1, 2, "b", 0)]),
+                          keys=["k"], partition_by=["p"], order_by=["ts"],
+                          event_time_wins=True)
+    assert _state(table) == [(1, "b"), (2, "c")]
 
 
 def test_mor_read_for_keys_matches_semi_join(spark, table, monkeypatch):

@@ -196,44 +196,6 @@ def test_watermark_drops_late_events_across_restarts(spark, tmp_path):
     assert 10 not in out2  # late row dropped, 10:00 window not re-emitted
 
 
-def test_dedup_stream_within_watermark(spark, tmp_path):
-    import json as _json
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from azure_airbnb_cdc_ingestion_pipeline_spark.streaming.cdc import dedup_stream
-
-    land = tmp_path / "dd_land"
-    land.mkdir()
-    schema = T.StructType(
-        [T.StructField("ts", T.StringType()), T.StructField("k", T.StringType())]
-    )
-    with open(land / "f1.json", "w") as f:
-        rows = [("2024-01-01 10:00:00", "a"), ("2024-01-01 10:05:00", "a"),
-                ("2024-01-01 10:10:00", "b"), ("2024-01-01 10:20:00", "a")]
-        for ts, k in rows:
-            f.write(_json.dumps({"ts": ts, "k": k}) + "\n")
-    stream = (
-        spark.readStream.schema(schema)
-        .json(str(land))
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    out = dedup_stream(stream, ["k"], ts_col="ts", within="1 hour")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dd_sink")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "dd_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r.k for r in spark.table("dd_sink").collect()}
-    assert got == {"a", "b"}
-    assert spark.table("dd_sink").count() == 2  # dups within window suppressed
-
-
 def test_schema_drift_passthrough_to_sink(spark, tmp_path):
     """allowSchemaDrift analog: a field NOT in the explicit schema must
     survive read → sink instead of being silently dropped."""

@@ -1,7 +1,8 @@
 """The driver-resident tail of a CDC trigger: the Arrow "latest row per
 key" kernel against the Spark rules it replaces, the Spark jobs one
-incremental trigger launches, the events it counts, and incremental
-gold's max when a booking leaves its group."""
+incremental trigger launches, the events it counts, the byte cap on a
+default drain, and incremental gold's max when a booking leaves its
+group."""
 
 import json
 import random
@@ -156,7 +157,7 @@ def _seeded(spark, tmp_path, files):
         _write_json(path, events)
         process_booking_batch(
             _read_batch(spark, path), fact, quarantine, dim=dim, gold=gold,
-            incremental_gold=True, txn=("t", i), merge_on_read=True,
+            incremental_gold=True, txn=("t", i),
         )
     assert fact._current_meta()["mor"]["pending"] >= 1
     return fact, quarantine, gold, dim
@@ -180,7 +181,7 @@ def test_incremental_trigger_launches_seven_jobs(spark, tmp_path):
         before = set(tracker.getJobIdsForGroup("one-trigger"))
         process_booking_batch(
             batch, fact, quarantine, dim=dim, gold=gold, incremental_gold=True,
-            txn=("t", len(files) - 1), merge_on_read=True,
+            txn=("t", len(files) - 1),
         )
         jobs = set(tracker.getJobIdsForGroup("one-trigger")) - before
     finally:
@@ -199,7 +200,7 @@ def test_batch_of_rejected_rows_leaves_fact_and_gold(spark, tmp_path):
     _write_json(path, rejected)
     process_booking_batch(
         _read_batch(spark, path), fact, quarantine, dim=dim, gold=gold,
-        incremental_gold=True, txn=("t", 2), merge_on_read=True,
+        incremental_gold=True, txn=("t", 2),
     )
     assert sorted(tuple(r) for r in gold.read().collect()) == want_gold
     _assert_cdc_gates(fact, quarantine, gold, dim, files, False)
@@ -219,6 +220,43 @@ def test_drain_counts_each_event_once(spark, tmp_path):
     progress = [p for p in q.recentProgress if int(p["numInputRows"]) > 0]
     assert len(progress) == len(files)
     assert sum(int(p["numInputRows"]) for p in progress) == sum(map(len, files))
+
+
+def test_default_drain_caps_every_trigger(spark, tmp_path, monkeypatch):
+    """Without max_files_per_trigger a drain is capped by bytes: a backlog
+    larger than the cap runs as several triggers, and no collect to the
+    driver holds more than one file's events. The file source admits at
+    least one file per trigger, so a 1-byte cap drains one file each."""
+    from azure_airbnb_cdc_ingestion_pipeline_spark.functions import arrow
+    from azure_airbnb_cdc_ingestion_pipeline_spark.streaming import cdc
+
+    events = gen_booking_events(n=450, n_keys=400, seed=43)
+    files = [events[:150], events[150:300], events[300:]]
+    landing = str(tmp_path / "feed")
+    _write_files(landing, files)
+    fact, quarantine, gold = _tables(spark, tmp_path)
+    dim = _dim(spark)
+    monkeypatch.setattr(cdc, "TRIGGER_MAX_BYTES", 1)
+    collected = []
+    collect = arrow.collect
+
+    def spy(df):
+        out = collect(df)
+        collected.append(out.data.num_rows)
+        return out
+
+    monkeypatch.setattr(arrow, "collect", spy)
+    q = load_booking_fact_stream(
+        spark, landing, fact, quarantine, str(tmp_path / "ckpt"),
+        dim=dim, gold=gold, incremental_gold=True,
+    )
+    triggers = [int(p["numInputRows"]) for p in q.recentProgress
+                if int(p["numInputRows"]) > 0]
+    assert len(triggers) >= 2
+    assert sum(triggers) == len(events)
+    budget = max(map(len, files))
+    assert collected and max(collected) <= budget
+    _assert_cdc_gates(fact, quarantine, gold, dim, files, False)
 
 
 @pytest.mark.parametrize("event_time_wins", [False, True], ids=["arrival", "event_time"])
