@@ -144,7 +144,7 @@ def gated_batch(
         clean, breached = expectation_gate(cached, rules, on_breach=on_breach)
         if breached is not None:
             quarantine.append(breached, txn=txn)
-            quarantine.maybe_compact(trigger_files=64)
+            quarantine.maybe_compact()
         yield clean
     finally:
         cached.unpersist()

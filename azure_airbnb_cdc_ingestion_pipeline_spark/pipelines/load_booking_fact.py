@@ -221,7 +221,7 @@ def _process_transformed(
         # append-per-batch accumulates one file per trigger forever;
         # the size-triggered compaction keeps the live file count
         # saw-toothing below the trigger instead (steady-state bound)
-        quarantine.maybe_compact(trigger_files=64)
+        quarantine.maybe_compact()
     if dim is None or gold is None:
         return
     if maintain_incrementally:

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.sketches import HASH_SPACE
-from ..sources.readers import read_events
+from ..sources.readers import read_events, read_events_stream
 from ..streaming import windows as W
 from .queries import _t, query
 
@@ -62,13 +62,8 @@ def _drain_to_memory(
     oracle="SELECT event_id, user_id, event_type, value FROM events",
 )
 def q_source_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ev_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(ev_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select("event_id", "user_id", "event_type", "value")
+    stream = read_events_stream(spark, sf_dir).select(
+        "event_id", "user_id", "event_type", "value"
     )
     return _drain_to_memory(stream, "stream_incremental_sink")
 
@@ -167,30 +162,11 @@ def q_window_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    if dict(stream.dtypes)["ts"] == "bigint":
-        stream = stream.withColumn(
-            "ts",
-            F.expr(
-                "timestampadd(MICROSECOND, ts div 1000,"
-                " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-            ),
-        )
-    return stream
-
-
 @query("stream_window_tumbling")  # streaming — rows-only check
 def q_stream_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # watermarks require TIMESTAMP (LTZ) event time; rows-only check, so
     # the session-tz interpretation of the NTZ value is immaterial here
-    stream = _events_stream(spark, sf_dir).withColumn(
+    stream = read_events_stream(spark, sf_dir).withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
     stream = W.with_watermark(stream, "ts", "1 day")
@@ -208,7 +184,7 @@ def q_stream_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stateful_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import running_user_totals
 
-    stream = _events_stream(spark, sf_dir).select("user_id", "value")
+    stream = read_events_stream(spark, sf_dir).select("user_id", "value")
     out = running_user_totals(stream)
     return _drain_to_memory(out, "stateful_running_sink", "update")
 
@@ -293,7 +269,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (unbounded state is the stream-stream failure mode at scale). Same
     parquet source read twice as independent streams; availableNow drains
     it like a batch."""
-    base = _events_stream(spark, sf_dir).withColumn(
+    base = read_events_stream(spark, sf_dir).withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
     clicks = (
@@ -368,7 +344,7 @@ def q_stream_window_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch advances the watermark so closed sessions flush.
     Sessions newer than the watermark delay are (correctly) still open
     and unemitted — the batch-equivalence test accounts for that."""
-    stream = _events_stream(spark, sf_dir).withColumn(
+    stream = read_events_stream(spark, sf_dir).withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
     stream = W.with_watermark(stream, "ts", "1 day")
@@ -466,7 +442,7 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_nationkey",
         )
     )
-    stream = _events_stream(spark, sf_dir).select(
+    stream = read_events_stream(spark, sf_dir).select(
         "event_id", "user_id", "event_type", "value"
     )
     enriched = stream.join(F.broadcast(static_profile), "user_id", "inner")
@@ -484,7 +460,7 @@ def q_stream_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import sessionize_stream
 
     stream = (
-        _events_stream(spark, sf_dir)
+        read_events_stream(spark, sf_dir)
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .select("user_id", "ts", "value")
         .withWatermark("ts", "1 day")
@@ -610,7 +586,7 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         s = sorted(set(merged) | {r.h for r in hs})
         merged[:] = s[:k]
 
-    stream = _events_stream(spark, sf_dir).select("user_id")
+    stream = read_events_stream(spark, sf_dir).select("user_id")
     # Deterministic checkpoint path (r6 advisor): Python str hash is
     # PYTHONHASHSEED-randomized per process, so abs(hash(sf_dir)) left
     # unmatched orphan dirs after crashed runs. An md5 digest makes the
@@ -650,7 +626,7 @@ def q_stream_dropdup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (keys expire once the watermark passes — at 100 TB the state store
     holds one watermark-width of keys, not the full history)."""
 
-    stream = _events_stream(spark, sf_dir).withColumn(
+    stream = read_events_stream(spark, sf_dir).withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
     dup = (

@@ -1,10 +1,10 @@
 """SparkSession factory and the one partition-count rule.
 
 Scale posture: AQE is always on (runtime re-plan, skew-join splitting,
-partition coalescing). ``spark.sql.shuffle.partitions`` (32 by default,
-``SPARK_GRAFT_SHUFFLE`` overrides it) is a CEILING that AQE coalesces
-down from by size — cached frames included, so a frame persisted after
-a shuffle holds a few input-sized partitions, not 32 slivers. Operators
+partition coalescing). ``spark.sql.shuffle.partitions`` (32 unless the
+caller passes a count) is a CEILING that AQE coalesces down from by
+size — cached frames included, so a frame persisted after a shuffle
+holds a few input-sized partitions, not 32 slivers. Operators
 that need an explicit count take it from :func:`partitions_for`: the
 session's parallelism, or more when the input's row count asks for it.
 The reference ran its data flow on an 8-core managed Spark cluster
@@ -60,27 +60,24 @@ def _default_max_result(driver_mem: str) -> str:
 def get_spark(
     app_name: str = "airbnb-cdc-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
+    shuffle_partitions: int = 32,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
-    Defaults honor the test-harness env: ``SPARK_GRAFT_CPUS`` sets the
-    local master thread count (``local[*]`` when unset) and
-    ``SPARK_GRAFT_SHUFFLE`` the shuffle partitions (32 when unset). That
-    count is the ceiling AQE coalesces each shuffle down from, cached
-    frames included; explicit counts come from :func:`partitions_for`.
+    ``SPARK_GRAFT_CPUS`` sets the local master thread count (``local[*]``
+    when unset) and ``SPARK_GRAFT_DRIVER_MEM`` the driver heap (half of
+    physical RAM when unset). ``shuffle_partitions`` is the ceiling AQE
+    coalesces each shuffle down from, cached frames included; explicit
+    counts come from :func:`partitions_for`.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     _driver_mem = os.environ.get(
         "SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()
     )
 
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(master)
         # Runtime adaptivity: coalesce post-shuffle partitions, convert
@@ -108,10 +105,9 @@ def get_spark(
         # is far below 4 MB of scan work. Scale-adaptive by construction:
         # bytes/parallelism dominates once files outgrow cores·256 KB,
         # and at cluster scale (≥128 MB files) maxPartitionBytes governs
-        # — production deployments can restore a bigger charge via
-        # SPARK_GRAFT_OPEN_COST when listing thousands of tiny files.
-        .config("spark.sql.files.openCostInBytes",
-                os.environ.get("SPARK_GRAFT_OPEN_COST", "262144"))
+        # — a deployment listing thousands of tiny files may want a
+        # bigger charge.
+        .config("spark.sql.files.openCostInBytes", "262144")
         # Arrow for any pandas-UDF path (the only sanctioned Python hot path).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # The reference ingests dates as strings and casts leniently
@@ -143,13 +139,9 @@ def get_spark(
         # dispatch in cosine_pairs_lsh ALSO reads the session's
         # effective limit, so a tight session degrades to the inline
         # plan instead of crashing.
-        .config("spark.driver.maxResultSize",
-                os.environ.get("SPARK_GRAFT_MAX_RESULT",
-                               _default_max_result(_driver_mem)))
+        .config("spark.driver.maxResultSize", _default_max_result(_driver_mem))
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
 
 
 # ---------------------------------------------------------------------------

@@ -18,6 +18,7 @@ from __future__ import annotations
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import TESTDATA_TABLES
@@ -114,7 +115,6 @@ def read_json_docs(
     """
     if drift_column is None:
         return spark.read.schema(schema).json(path)
-    from pyspark.sql import functions as F
 
     known = F.array(*[F.lit(f.name) for f in schema.fields])
     raw = spark.read.text(path)
@@ -145,8 +145,6 @@ def cast_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
     allowDataTruncation:true`` analog
     (/root/reference/pipeline/LoadCustomerDim.json:94-101). Columns missing
     from ``df`` become nulls; extra columns are dropped."""
-    from pyspark.sql import functions as F
-
     cols = []
     for field in schema.fields:
         if field.name in df.columns:
@@ -156,35 +154,53 @@ def cast_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
     return df.select(*cols)
 
 
+def _events_micros(ev: DataFrame) -> DataFrame:
+    """``ev``, a batch or stream read of the testdata ``events`` table
+    under ``spark.sql.legacy.parquet.nanosAsLong=true``, with its
+    nanosecond parquet timestamp ``ts`` (LongType nanos there) as a
+    microsecond TIMESTAMP_NTZ: floor-divided to µs with integer
+    arithmetic (ns epochs ≈ 1.7e18 overflow doubles, so ``div`` not
+    ``/``) and rebuilt with pure NTZ arithmetic — timezone-independent,
+    so results match DuckDB under any session tz. DuckDB oracle
+    equivalent: ``CAST(ts AS TIMESTAMP)`` (ns → µs truncation)."""
+    if dict(ev.dtypes)["ts"] != "bigint":
+        return ev
+    return ev.withColumn(
+        "ts",
+        F.expr(
+            "timestampadd(MICROSECOND, ts div 1000,"
+            " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
+        ),
+    )
+
+
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Read the testdata ``events`` table, normalizing its nanosecond
-    parquet timestamp to a microsecond TIMESTAMP column.
+    """Read the testdata ``events`` table with ``ts`` as a microsecond
+    TIMESTAMP (:func:`_events_micros`).
 
     Sets ``spark.sql.legacy.parquet.nanosAsLong=true`` on the session (it
     is a dynamic SQL conf, so this works on any caller-provided session):
-    the ns column arrives as LongType nanos; we floor-divide to µs with
-    integer arithmetic (ns epochs ≈ 1.7e18 overflow doubles, so ``div``
-    not ``/``) and rebuild a TIMESTAMP_NTZ with pure NTZ arithmetic —
-    timezone-independent, so results match DuckDB under any session tz.
-    DuckDB oracle equivalent: ``CAST(ts AS TIMESTAMP)`` (ns → µs
-    truncation).
+    Spark rejects the INT64 TIMESTAMP(NANOS) column otherwise.
     """
-    from pyspark.sql import functions as F
-
     def _build() -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        if dict(ev.dtypes)["ts"] == "bigint":
-            ev = ev.withColumn(
-                "ts",
-                F.expr(
-                    "timestampadd(MICROSECOND, ts div 1000,"
-                    " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-                ),
-            )
-        return ev
+        return _events_micros(spark.read.parquet(f"{sf_dir}/events.parquet"))
 
     return _memo_read(spark, ("events", sf_dir), _build)
+
+
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The testdata ``events`` table as a file-stream source (its change
+    feed from the beginning), with the columns and ``ts`` type of
+    :func:`read_events`. The stream reads with the table's raw schema,
+    taken from one batch read of it."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    return _events_micros(
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+    )
 
 
 def load_sf_tables(
@@ -219,8 +235,6 @@ def read_jsonl_with_rejects(
     — a 100 TB ingest keeps running and the rejects land in their own
     sink, exactly like the reference's row-level error path.
     """
-    from pyspark.sql import functions as F
-
     # `from_json` PERMISSIVE yields an all-null struct for a malformed
     # line (never a null struct), so malformed-vs-missing needs the
     # corrupt-record column: it is non-null exactly when parsing failed.

@@ -9,8 +9,12 @@ transactional surface those sinks need on plain parquet:
 - snapshot reads (readers always see one complete version),
 - atomic overwrite (write a new version directory, then atomically swap a
   pointer file — the rename is the commit point),
-- keyed upsert (MERGE) built from the pure-DataFrame merge in
-  ``operators.merge``.
+- keyed upsert (MERGE): ``upsert``, ``upsert_pruned`` and the
+  merge-on-read ``upsert_delta`` are one path. An ``upsert_delta`` batch
+  lands as a delta until its fold is due; the other two fold on every
+  batch. A fold merges the batch and the pending deltas into the base
+  through the one merge body, ``ParquetTable._merge_partitions``, over
+  the pure-DataFrame merge in ``operators.merge``.
 
 Every write — overwrite, append, MERGE, the merge-on-read delta and its
 fold, DELETE, UPDATE, compaction — commits through one sequence,
@@ -56,7 +60,7 @@ from typing import Callable
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 log = logging.getLogger(__name__)
 
@@ -339,7 +343,6 @@ class ParquetTable:
         df: DataFrame | Callable[[DataFrame], DataFrame],
         partition_by: list[str] | None = None,
         txn: tuple[str, int] | None = None,
-        meta_extra: dict | None = None,
     ) -> int:
         """Atomic full overwrite: parallel parquet write of v_{n+1}, then a
         POSIX-atomic pointer rename (the commit). Old versions are pruned
@@ -365,11 +368,7 @@ class ParquetTable:
 
         v = self._commit_version(
             write,
-            meta={
-                "partition_by": list(partition_by or []),
-                "mor": None,
-                **(meta_extra or {}),
-            },
+            meta={"partition_by": list(partition_by or []), "mor": None},
             txn=txn,
             blind=blind,
         )
@@ -552,38 +551,23 @@ class ParquetTable:
         and the SCD-Type-1 dim upsert keyed on customer_id
         (/root/reference/pipeline/LoadCustomerDim.json:82-101).
 
-        When ``partition_by`` is given (or the existing table was written
-        partitioned), the merge routes to :meth:`upsert_pruned` — O(affected
-        partitions) per batch. The unpartitioned fallback rewrites the whole
-        table per merge (O(table) per batch, quadratic over a stream's
-        lifetime) and logs a scale warning when the table is partitionable.
-        """
-        from ..operators.merge import merge_dataframes, latest_per_key
-
+        The merge is :meth:`upsert_pruned` on ``partition_by`` or the
+        table's own partition spec: O(affected partitions) per batch. On
+        an unpartitioned table the spec is empty and the fold rewrites the
+        whole table (O(table) per batch, quadratic over a stream's
+        lifetime), so that case logs a scale warning. Like every write of
+        a keyed batch, the first one keeps one row per key."""
         parts = partition_by or self._partition_columns()
-        if parts:
-            self.upsert_pruned(
-                source, keys, parts, order_by=order_by,
-                event_time_wins=event_time_wins, txn=txn,
-            )
-            return
-        if self.exists():
+        if not parts and self.exists():
             log.warning(
                 "upsert on unpartitioned table %s rewrites the full table per "
-                "batch; write with partition_by and use upsert_pruned for the "
-                "O(affected-partitions) steady state",
+                "batch; write with partition_by for the O(affected-partitions) "
+                "steady state",
                 self.root,
             )
-        self._commit_version(
-            lambda base_dir, target, _meta: self._rewrite_partitions(
-                base_dir, target, [],
-                lambda tgt: merge_dataframes(
-                    tgt, _null_filled(source, tgt), keys, order_by=order_by,
-                    event_time_wins=event_time_wins,
-                ),
-            ),
-            first=latest_per_key(source, keys, order_by) if order_by else source,
-            txn=txn,
+        self.upsert_pruned(
+            source, keys, parts, order_by=order_by,
+            event_time_wins=event_time_wins, txn=txn,
         )
 
     def _partition_columns(self) -> list[str]:
@@ -637,58 +621,28 @@ class ParquetTable:
 
         self._commit_version(write, first=df, txn=txn)
 
-    # Above this many touched partition combos, pruned writes abandon the
-    # OR-predicate (static pruning) for a broadcast semi-join (bounded plan).
-    _PRUNE_COMBO_LIMIT = 100
-
-    def _restrict_to_partitions_of(
-        self, tgt: DataFrame, combo_df: DataFrame, partition_by: list[str]
-    ) -> DataFrame:
-        """`tgt` restricted to the partition combos present in `combo_df`.
-
-        Peeks at most LIMIT+1 combos: a normal CDC batch touches a handful
-        of partitions (small OR predicate → static partition pruning at
-        the scan); a pathological backfill spanning hundreds would build a
-        thousands-term driver predicate, so past the limit this switches
-        to a broadcast LEFT SEMI join on the partition columns — the plan
-        stays bounded and the driver never materializes the combos.
-        eqNullSafe throughout: a null partition value (e.g. a malformed
-        date that cast to null year/month) must still SELECT the existing
-        null-partition rows — plain == yields null and silently drops
-        them."""
-        combos = [
-            tuple(r)
-            for r in combo_df.limit(self._PRUNE_COMBO_LIMIT + 1).collect()
-        ]
-        if len(combos) > self._PRUNE_COMBO_LIMIT:
-            t, s = tgt.alias("__t"), combo_df.alias("__s")
-            cond = F.lit(True)
-            for c in partition_by:
-                cond = cond & F.col(f"__t.{c}").eqNullSafe(F.col(f"__s.{c}"))
-            return t.join(F.broadcast(s), cond, "leftsemi")
-        pred = F.lit(False)
-        for combo in combos:
-            match = F.lit(True)
-            for c, v in zip(partition_by, combo):
-                match = match & F.col(c).eqNullSafe(F.lit(v))
-            pred = pred | match
-        return tgt.filter(pred)  # partition-pruned scan
-
     def _rewrite_partitions(
         self,
         base_dir: str,
         target: str,
         parts: list[str],
         rewrite,
-        matches=None,
+        matches,
         emptied: bool = False,
     ) -> list[str]:
         """The copy-on-write write step shared by the merge-on-read fold
-        (the pruned MERGE), DELETE / UPDATE and the unpartitioned upsert:
-        rewrite the partitions of the base that hold ``matches(base
-        rows)`` as ``rewrite(their rows)`` and return every other leaf
-        dir, for :meth:`_commit_version` to hardlink forward (a metadata
-        op). An unpartitioned table (``parts=[]``) rewrites everything.
+        (every keyed MERGE) and DELETE / UPDATE: rewrite the partitions of
+        the base that hold ``matches(base rows)`` as ``rewrite(their
+        rows)`` and return every other leaf dir, for
+        :meth:`_commit_version` to hardlink forward (a metadata op). An
+        unpartitioned table (``parts=[]``) rewrites everything.
+
+        One job collects the distinct partition combos of the matching
+        rows; the base is restricted to them with one ``struct(parts) IN
+        (…)`` predicate, which Spark plans as a static partition filter at
+        any combo count. Struct comparison is null-safe, so a null
+        partition value (e.g. a malformed date that cast to a null
+        year/month) still selects the existing null-partition rows.
 
         The rewritten partitions are the dirs the rewrite wrote. A rewrite
         that can EMPTY a partition (DELETE) passes ``emptied=True``, and
@@ -698,29 +652,30 @@ class ParquetTable:
         if not parts:
             rewrite(tgt).write.mode("overwrite").parquet(target)
             return []
-        combo_df = matches(tgt).select(*parts).distinct()
-        if emptied:
-            # the combos feed the partition restriction AND the marker
-            # write — without persist each re-runs the predicate scan
-            combo_df = combo_df.persist()
-        try:
-            out = rewrite(self._restrict_to_partitions_of(tgt, combo_df, parts))
-            # repartition on the partition columns: each combo lands in ONE
-            # task → one file per partition instead of (shuffle.partitions ×
-            # combos) slivers; steady-state read/merge cost tracks partition
-            # count, not trigger count. (Huge single partitions at real
-            # scale: bound file size with spark.sql.files.maxRecordsPerFile.)
-            out.repartition(*parts).write.mode("overwrite").partitionBy(
-                *parts
-            ).parquet(target)
-            # Spark applied its own path escaping (__HIVE_DEFAULT_PARTITION__
-            # for nulls, %XX for special chars), so the written tree is
-            # correct for every value a hand-built "col=val" would mangle
-            written = set(self._leaf_partition_dirs(target))
-            affected = self._partition_rels(combo_df, parts) if emptied else written
-        finally:
-            if emptied:
-                combo_df.unpersist()
+        combos = [
+            tuple(r) for r in matches(tgt).select(*parts).distinct().collect()
+        ]
+        fields = [tgt.schema[c] for c in parts]
+        out = rewrite(tgt.filter(F.struct(*parts).isin([
+            F.struct(*[F.lit(v).cast(f.dataType).alias(f.name)
+                       for f, v in zip(fields, combo)])
+            for combo in combos
+        ])))
+        # repartition on the partition columns: each combo lands in ONE
+        # task → one file per partition instead of (shuffle.partitions ×
+        # combos) slivers; steady-state read/merge cost tracks partition
+        # count, not trigger count. (Huge single partitions at real
+        # scale: bound file size with spark.sql.files.maxRecordsPerFile.)
+        out.repartition(*parts).write.mode("overwrite").partitionBy(
+            *parts
+        ).parquet(target)
+        # Spark applied its own path escaping (__HIVE_DEFAULT_PARTITION__
+        # for nulls, %XX for special chars), so the written tree is
+        # correct for every value a hand-built "col=val" would mangle
+        affected = (
+            self._partition_rels(combos, fields) if emptied
+            else set(self._leaf_partition_dirs(target))
+        )
         return [
             rel for rel in self._leaf_partition_dirs(base_dir)
             if rel not in affected and not rel.startswith(self._DELTA)
@@ -763,12 +718,15 @@ class ParquetTable:
         event_time_wins: bool,
         spec: dict,
     ) -> list[str]:
-        """Write step of the fold: the pruned MERGE of ``source`` into the
-        base. Pending merge-on-read deltas fold in first: one multi-path
-        scan of the deltas ∪ the batch, which is sequenced after every
-        on-disk delta (``spec["seq"]``), resolves to one source row per
-        key, so the new version carries no deltas. With nothing pending
-        the sidecar's merge-on-read spec stays as it was."""
+        """Write step of the fold, the one merge body of every keyed
+        upsert: the MERGE of ``source`` into the partitions of the base it
+        touches (the whole base when ``partition_by`` is empty), through
+        :meth:`_rewrite_partitions`. Pending merge-on-read deltas fold in
+        first: one multi-path scan of the deltas ∪ the batch, which is
+        sequenced after every on-disk delta (``spec["seq"]``), resolves to
+        one source row per key, so the new version carries no deltas. With
+        nothing pending the sidecar's merge-on-read spec stays as it
+        was."""
         from ..operators.merge import latest_per_key, merge_dataframes
 
         src = latest_per_key(source, keys, order_by)
@@ -811,7 +769,7 @@ class ParquetTable:
         hardlinked into the new version (a metadata op), so the cost is
         proportional to the affected partitions, not the table (the same
         contract as a Delta MERGE with a partition-pruning ON-clause
-        predicate).
+        predicate). With ``partition_by=[]`` the whole table is rewritten.
 
         Correctness precondition (same as Delta's pruned merge): the
         partition attributes are immutable per key (e.g. a booking's
@@ -904,18 +862,22 @@ class ParquetTable:
     # -- DML (copy-on-write DELETE / UPDATE, the Delta analog) ---------------
 
     def _partition_rels(
-        self, combo_df: DataFrame, partition_by: list[str]
+        self, combos: list[tuple], fields: list[StructField]
     ) -> set[str]:
-        """Escaped leaf-dir relpaths for a frame of partition combos, via a
-        tiny marker write: Spark applies its own path escaping
+        """Escaped leaf-dir relpaths for collected partition combos of the
+        partition columns ``fields``, via a tiny marker write of them as a
+        local relation: Spark applies its own path escaping
         (__HIVE_DEFAULT_PARTITION__ for nulls, %XX for specials), so the
         only robust combo→dir mapping is to let the writer produce the
         dirs. O(#combos) rows, one small job."""
         marker = tempfile.mkdtemp(dir=self.root, prefix="._affected")
         try:
-            combo_df.withColumn("__m", F.lit(1)).write.mode(
-                "overwrite"
-            ).partitionBy(*partition_by).parquet(marker)
+            self.spark.createDataFrame(
+                [(*c, 1) for c in combos],
+                StructType([*fields, StructField("__m", IntegerType())]),
+            ).write.mode("overwrite").partitionBy(
+                *[f.name for f in fields]
+            ).parquet(marker)
             return set(self._leaf_partition_dirs(marker))
         finally:
             shutil.rmtree(marker, ignore_errors=True)

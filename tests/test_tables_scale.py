@@ -407,38 +407,63 @@ def test_compact_with_clustering_enables_skipping(spark, tmp_path):
     assert t.read().count() == 4300
 
 
-def test_upsert_pruned_semi_join_fallback_many_partitions(spark, tmp_path):
-    """A backfill batch spanning 500 partitions must NOT build a 500-term
-    OR predicate: past _PRUNE_COMBO_LIMIT the merge prunes via a broadcast
-    LEFT SEMI join on the partition columns. Correctness: updates land,
-    untouched partitions survive as hardlinks."""
+def test_upsert_pruned_in_set_filter_many_partitions(spark, tmp_path):
+    """A backfill batch spanning 500 partitions, one of them a null
+    partition value, restricts the base with the same one ``struct(pm) IN
+    (…)`` predicate as a batch touching a few: a 500-term OR of
+    eqNullSafe terms overflows the planner's stack, the IN set plans as a
+    static partition filter. Correctness: updates land, the null
+    partition merges without duplicates, untouched partitions survive as
+    hardlinks."""
     t = ParquetTable(spark, str(tmp_path / "wide"))
+    # pm = id % 600, except the keys 0 and 600 of partition 0, whose pm
+    # is null
+    pm = F.when(F.col("id") % 600 != 0, (F.col("id") % 600).cast("int"))
     base = spark.range(1200).select(
         F.col("id").alias("k"),
-        (F.col("id") % 600).cast("int").alias("pm"),
+        pm.alias("pm"),
         F.lit(1).alias("ver"),
         F.col("id").cast("timestamp").alias("ts"),
     )
     t.upsert_pruned(base, keys=["k"], partition_by=["pm"], order_by=["ts"])
     v1 = _inodes(t._version_dir(t.current_version()))
 
-    # batch touches partitions 0..499 (500 combos > the 100-combo limit)
+    # batch touches partitions null, 1..499: 500 combos
     batch = spark.range(500).select(
         F.col("id").alias("k"),
-        (F.col("id") % 600).cast("int").alias("pm"),
+        pm.alias("pm"),
         F.lit(2).alias("ver"),
         (F.col("id") + 10_000).cast("timestamp").alias("ts"),
     )
-    assert batch.select("pm").distinct().count() == 500 > t._PRUNE_COMBO_LIMIT
+    assert batch.select("pm").distinct().count() == 500
+    assert batch.filter("pm IS NULL").count() == 1
     t.upsert_pruned(batch, keys=["k"], partition_by=["pm"], order_by=["ts"])
     out = t.read()
     assert out.count() == 1200
     assert out.filter("ver = 2").count() == 500
+    assert sorted(
+        (r.k, r.ver) for r in out.filter("pm IS NULL").collect()
+    ) == [(0, 2), (600, 1)]
     # the 100 partitions the batch did not touch (pm 500..599) are
     # hardlinked forward, not rewritten
     v2 = _inodes(t._version_dir(t.current_version()))
     linked = [r for r in v2 if v2[r] in set(v1.values())]
     assert any(r.startswith("pm=5") for r in linked)
+
+
+def test_first_upsert_keeps_one_row_per_key(spark, tmp_path):
+    """The write that creates the table resolves a batch's duplicate keys
+    as every later merge does: one row per key, each one of that key's
+    source rows, and the next upsert keeps it that way."""
+    t = ParquetTable(spark, str(tmp_path / "dups"))
+    src = [(1, "a"), (1, "b"), (2, "c")]
+    t.upsert(spark.createDataFrame(src, "k int, v string"), keys=["k"])
+    rows = t.read().collect()
+    assert sorted(r.k for r in rows) == [1, 2]
+    assert {(r.k, r.v) for r in rows} <= set(src)
+
+    t.upsert(spark.createDataFrame([(3, "d")], "k int, v string"), keys=["k"])
+    assert sorted(r.k for r in t.read().collect()) == [1, 2, 3]
 
 
 def test_read_pruned_reconstructs_partition_columns(spark, tmp_path):
