@@ -116,10 +116,10 @@ def process_booking_batch(
 
     ``txn=(app_id, batch_id)`` (set by the streaming entry) arms the
     per-table idempotent batch guard: each sink commit atomically records
-    the marker in its pointer (ParquetTable txn markers), and a REPLAYED
+    the marker in its log entry (ParquetTable txn markers), and a REPLAYED
     batch — foreachBatch died after some sinks committed but before the
     checkpoint commit — skips every sink that already recorded it (each
-    ParquetTable write checks its txn before it claims a version).
+    ParquetTable write checks its txn before it writes a file).
     Without the guard the keyed MERGE is naturally idempotent but the
     quarantine APPEND is not (a replay would duplicate rejected rows),
     and the incremental-gold delta would be computed from an
@@ -255,7 +255,8 @@ def _gold_delta(
     the current fact rows for the batch's keys. On a REPLAY whose fact
     write already committed, "current" would be the post-merge state
     (delta ≈ 0 → gold stuck stale), so it reads the pre-merge snapshot
-    the txn marker recorded instead (kept on disk by _vacuum(keep=2))."""
+    the txn marker recorded instead (the vacuum keeps the version before
+    the current one readable)."""
     keys = fact.spark.createDataFrame(latest.select(FACT_KEYS)).coalesce(1)
     version = None
     if fact.applied(txn):

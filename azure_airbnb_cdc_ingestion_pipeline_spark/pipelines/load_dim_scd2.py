@@ -56,7 +56,7 @@ def process_scd2_batch(
     - ``initial_history`` seeds the dim on the very first batch when
       the table does not exist yet.
     - ``txn=(app_id, batch_id)`` arms the idempotent replay guard (txn
-      markers in the table pointer, same protocol as the fact merge).
+      markers in the table log entry, same protocol as the fact merge).
     """
     check_gate_wiring(dq_rules, dq_on_breach, dq_quarantine)
     if batch.isEmpty():

@@ -108,6 +108,12 @@ def get_spark(
         # — a deployment listing thousands of tiny files may want a
         # bigger charge.
         .config("spark.sql.files.openCostInBytes", "262144")
+        # A ParquetTable read names every file its log lists. Above this
+        # many paths Spark lists them in a Spark job (measured: 33 files
+        # 1 job and 0.32 s, 672 files 2.6 s); the driver lists the same
+        # 672 in 0.15 s with no job.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                "1000000")
         # Arrow for any pandas-UDF path (the only sanctioned Python hot path).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # The reference ingests dates as strings and casts leniently

@@ -12,7 +12,8 @@ Reference behavior being reproduced
 - "exactly-once" into the warehouse → every sink commit of a
   micro-batch carries the ``(pipeline, batch_id)`` txn marker, and a
   replayed batch whose marker a table already recorded commits nothing
-  there (``ParquetTable._commit_version``'s replay guard; tested);
+  there (the replay guard of ``ParquetTable._commit_version``, read from
+  the txn map of the table's newest log entry; tested);
 - late/out-of-order data → no watermark needed for parity: the keyed
   merge resolves each booking_id to the latest arrival, or to the max
   event time with ``event_time_wins`` (§2.7).

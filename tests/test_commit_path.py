@@ -1,6 +1,6 @@
 """ParquetTable's one commit sequence: every write goes through the replay
-guard, writes a sidecar, and a read-modify-write commits only on the
-snapshot it read."""
+guard, records its schema in its log entry, and a read-modify-write
+commits only on the snapshot it read."""
 
 from __future__ import annotations
 
@@ -27,31 +27,22 @@ def _state(t):
     return sorted((r.k, r.val) for r in t.read().collect())
 
 
-def _inodes(vdir: str) -> dict[str, int]:
-    out = {}
-    for dirpath, _d, files in os.walk(vdir):
-        for f in files:
-            if f.endswith(".parquet"):
-                p = os.path.join(dirpath, f)
-                out[os.path.relpath(p, vdir)] = os.stat(p).st_ino
-    return out
-
-
-def _current_dir(t) -> str:
-    return t._version_dir(t.current_version())
+def _files(t) -> set[str]:
+    """The files the current version lists, relative to the table root."""
+    return set(t._snapshot().files)
 
 
 def _race_next_commit(monkeypatch, t, other_commit) -> None:
-    """Let another writer commit right before ``t``'s next commit, i.e.
-    after ``t`` read its snapshot and wrote its version from it."""
-    commit = t._commit
+    """Let another writer commit right before ``t``'s next entry create,
+    i.e. after ``t`` read its snapshot and wrote its files from it."""
+    put = t._put_entry
 
     def racing(*args, **kwargs):
-        monkeypatch.setattr(t, "_commit", commit)
+        monkeypatch.setattr(t, "_put_entry", put)
         other_commit()
-        return commit(*args, **kwargs)
+        return put(*args, **kwargs)
 
-    monkeypatch.setattr(t, "_commit", racing)
+    monkeypatch.setattr(t, "_put_entry", racing)
 
 
 def test_append_to_partitioned_table_keeps_rows(spark, tmp_path):
@@ -59,9 +50,8 @@ def test_append_to_partitioned_table_keeps_rows(spark, tmp_path):
     t.overwrite(_mk(spark, [(1, 1, "a", 0), (2, 1, "b", 1)]), partition_by=["p"])
     t.append(_mk(spark, [(3, 1, "c", 1), (4, 1, "d", 2)]))
     assert _state(t) == [(1, "a"), (2, "b"), (3, "c"), (4, "d")]
-    vdir = _current_dir(t)
-    assert t._read_meta(vdir)["partition_by"] == ["p"]
-    assert {rel.split(os.sep)[0] for rel in _inodes(vdir)} == {"p=0", "p=1", "p=2"}
+    assert t._current_meta()["partition_by"] == ["p"]
+    assert {p.split("/")[1] for p in _files(t)} == {"p=0", "p=1", "p=2"}
 
 
 def test_every_version_has_a_sidecar(spark, tmp_path):
@@ -76,7 +66,7 @@ def test_every_version_has_a_sidecar(spark, tmp_path):
     ]
     for write in writes:
         write()
-        meta = t._read_meta(_current_dir(t))
+        meta = t._current_meta()
         assert [f["name"] for f in meta.pop("schema")["fields"]] == [
             "k", "ts", "val", "p"
         ]
@@ -114,72 +104,64 @@ def test_fold_before_delete_raises_on_concurrent_commit(
 
 
 def test_commit_excludes_a_racing_commit(spark, tmp_path, monkeypatch):
-    """Writer B's whole commit runs between writer A's pointer check and
-    A's pointer rename: B must wait for A and then lose, never land and
-    be overwritten by A (which moved the pointer back and dropped B's
-    rows)."""
+    """Two writers read the same snapshot, write their files and race the
+    put-if-absent create of the same entry: exactly one commits, the
+    other raises and deletes its files, and the winner's rows are never
+    overwritten."""
     t = ParquetTable(spark, str(tmp_path / "t"))
     t.overwrite(_mk(spark, [(1, 1, "a", 0)]))
-    other = ParquetTable(spark, t.root)
-    b_commit, staged, outcome, threads = other._commit, {}, {}, []
-    seen = [t.current_version()]
+    base = t.current_version()
+    writers = {"b": t, "c": ParquetTable(spark, t.root)}
+    both_staged = threading.Barrier(2, timeout=60)
+    entries, outcome = {}, {}
+    for name, w in writers.items():
+        put = w._put_entry
 
-    def run_b():
+        def staged_put(v, entry, _put=put, _name=name):
+            entries[_name] = entry
+            both_staged.wait()  # both wrote their files on the same base
+            return _put(v, entry)
+
+        monkeypatch.setattr(w, "_put_entry", staged_put)
+
+    def run(name):
         try:
-            b_commit(*staged["args"], **staged["kwargs"])
-        except ConcurrentWriteError as exc:
-            outcome["b"] = exc
+            writers[name].append(_mk(spark, [({"b": 2, "c": 3}[name], 1, name, 0)]))
+            outcome[name] = "committed"
+        except ConcurrentWriteError:
+            outcome[name] = "raised"
 
-    a_commit, a_read = t._commit, t._read_pointer
-
-    def a_commit_racing(*args, **kwargs):
-        # B claims the version after A's and writes it; its commit waits
-        monkeypatch.setattr(
-            other, "_commit", lambda *a, **kw: staged.update(args=a, kwargs=kw)
-        )
-        other.append(_mk(spark, [(3, 1, "c", 0)]))
-
-        def read_then_race():
-            out = a_read()
-            monkeypatch.setattr(t, "_read_pointer", a_read)
-            b = threading.Thread(target=run_b)
-            b.start()
-            b.join(timeout=5)
-            threads.append(b)
-            seen.append(ParquetTable(spark, t.root).current_version())
-            return out
-
-        monkeypatch.setattr(t, "_read_pointer", read_then_race)
-        return a_commit(*args, **kwargs)
-
-    monkeypatch.setattr(t, "_commit", a_commit_racing)
-    t.append(_mk(spark, [(2, 1, "b", 0)]))
-    seen.append(t.current_version())
-    threads[0].join(timeout=60)
-    assert not threads[0].is_alive()
-    seen.append(t.current_version())
-    assert isinstance(outcome.get("b"), ConcurrentWriteError)
-    assert seen == sorted(seen), seen
-    assert _state(t) == [(1, "a"), (2, "b")]
+    threads = [threading.Thread(target=run, args=(n,)) for n in writers]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=120)
+    assert not any(th.is_alive() for th in threads)
+    assert sorted(outcome.values()) == ["committed", "raised"], outcome
+    assert t.current_version() == base + 1
+    winner = next(n for n, o in outcome.items() if o == "committed")
+    assert _state(t) == sorted([(1, "a"), ({"b": 2, "c": 3}[winner], winner)])
+    loser = entries[next(n for n in outcome if n != winner)]
+    assert loser["add"] and not any(
+        os.path.exists(os.path.join(t.root, a["path"])) for a in loser["add"]
+    )
 
 
 def test_commit_stress_no_two_commits_share_a_base(spark, tmp_path):
-    """16 threads race conditional commits of empty versions: each
-    snapshot version is committed on at most once (a second commit on the
-    same base would overwrite the first one's rows), and the pointer
-    never moves back."""
+    """16 threads race conditional commits of empty versions through the
+    one commit sequence: each snapshot version is committed on at most
+    once (a second commit on the same base would overwrite the first
+    one's rows), and the current version never moves back."""
     t = ParquetTable(spark, str(tmp_path / "t"))
     wins, moved_back = [], []
 
     def commit_loop():
         for _ in range(15):
-            base, v = t._claim_version()
-            os.makedirs(t._version_dir(v), exist_ok=True)
             try:
-                t._commit(v, expected_base=base)
+                v = t._commit_version(lambda snap, meta: ([], []))
             except ConcurrentWriteError:
                 continue
-            wins.append(base)
+            wins.append(v - 1)
             if t.current_version() < v:
                 moved_back.append(v)
 
@@ -196,6 +178,7 @@ def test_commit_stress_no_two_commits_share_a_base(spark, tmp_path):
     assert not any(th.is_alive() for th in threads)
     assert len(wins) == len(set(wins)) and wins
     assert not moved_back
+    assert t.current_version() == len(wins)
 
 
 def test_incremental_gold_raises_on_concurrent_gold_commit(
@@ -253,10 +236,38 @@ def test_pre_dml_fold_links_untouched_partitions(spark, tmp_path):
     t.upsert_delta(
         _mk(spark, [(1, 1, "a", 0), (2, 1, "b", 1), (3, 1, "c", 2)]), **MOR
     )
-    v1 = _inodes(_current_dir(t))
+    v1 = _files(t)
     t.upsert_delta(_mk(spark, [(1, 2, "a2", 0)]), **MOR)  # delta in p=0 only
     t.delete_where(F.col("k") == 1)  # folds, then rewrites p=0
     assert _state(t) == [(2, "b"), (3, "c")]
-    now = _inodes(_current_dir(t))
-    untouched = {rel: ino for rel, ino in v1.items() if not rel.startswith("p=0")}
-    assert untouched and all(now.get(rel) == ino for rel, ino in untouched.items())
+    now = _files(t)
+    untouched = {p for p in v1 if not p.startswith("data/p=0/")}
+    assert untouched and untouched <= now  # the same files, not rewritten
+    assert not (v1 - untouched) & now
+
+
+def test_delta_commit_walks_and_links_no_base_file(spark, tmp_path, monkeypatch):
+    """An ``upsert_delta`` commit costs O(batch) on the filesystem: it
+    walks only its own staging dir, links only its log entry and lists no
+    directory — never the data tree, whatever its size."""
+    t = ParquetTable(spark, str(tmp_path / "t"))
+    t.upsert_delta(_mk(spark, [(k, 1, "a", k % 8) for k in range(64)]), **MOR)
+    calls = []
+    for name in ("walk", "link", "listdir"):
+        real = getattr(os, name)
+
+        def counted(path=".", *args, _name=name, _real=real, **kwargs):
+            calls.append((_name, os.path.abspath(path), args))
+            return _real(path, *args, **kwargs)
+
+        monkeypatch.setattr(os, name, counted)
+    t.upsert_delta(_mk(spark, [(1, 2, "b", 1)]), **MOR)  # one delta, no fold
+    monkeypatch.undo()
+    assert t._current_meta()["mor"]["pending"] == 1
+    root = os.path.abspath(t.root)
+    walks = [p for n, p, _a in calls if n == "walk"]
+    links = [a[0] for n, _p, a in calls if n == "link"]
+    listed = [p for n, p, _a in calls if n == "listdir"]
+    assert walks and all("/.s-" in p for p in walks), walks
+    assert links == [os.path.join(t.root, "_log", f"{2:020d}.json")], links
+    assert not [p for p in listed if p.startswith(root)], listed

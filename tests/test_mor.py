@@ -16,9 +16,6 @@ Contract under test:
 
 from __future__ import annotations
 
-import glob
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -39,6 +36,11 @@ def _mk(spark, rows):  # noqa: F811
 
 def _state(t):
     return sorted((r.k, r.val) for r in t.read().collect())
+
+
+def _delta_files(t):
+    """The merge-on-read delta files the current version lists."""
+    return [p for p in t._snapshot().files if p.startswith("_delta/")]
 
 
 def test_mor_matches_cow_merge(spark, tmp_path):  # noqa: F811
@@ -80,26 +82,21 @@ def test_mor_fold_clears_deltas_and_bounds_files(spark, table):  # noqa: F811
             _mk(spark, [(i % 7, i, f"v{i}", i % 3)]),
             keys=["k"], partition_by=["p"], order_by=["ts"], fold_after=8,
         )
-    vdir = table._version_dir(table.current_version())
-    meta = table._read_meta(vdir)
-    assert meta["mor"]["pending"] < 8
+    assert table._current_meta()["mor"]["pending"] < 8
     # pending delta files + base partition files stay bounded: never
     # grows with trigger count
     assert table.live_file_count() < 8 + 3 * 4
     assert _state(table) == sorted(
         (k, f"v{max(i for i in range(40) if i % 7 == k)}") for k in range(7)
     )
-    # drive to the next fold boundary: the fold version must carry no
-    # linked _delta files and reset pending to 0
-    while table._read_meta(
-        table._version_dir(table.current_version())
-    )["mor"]["pending"] != 0:
+    # drive to the next fold boundary: the fold version must list no
+    # _delta files and reset pending to 0
+    while table._current_meta()["mor"]["pending"] != 0:
         table.upsert_delta(
             _mk(spark, [(99, 99, "x", 0)]),
             keys=["k"], partition_by=["p"], order_by=["ts"], fold_after=8,
         )
-    vdir = table._version_dir(table.current_version())
-    assert not glob.glob(os.path.join(vdir, "_delta", "*"))
+    assert not _delta_files(table)
 
 
 def test_mor_time_travel_resolves_pending_version(spark, table):  # noqa: F811
@@ -133,10 +130,9 @@ def test_mor_direct_upsert_pruned_on_pending_folds(spark, table):  # noqa: F811
     table.upsert_pruned(_mk(spark, [(1, 9, "a2", 0)]),
                         keys=["k"], partition_by=["p"], order_by=["ts"])
     assert _state(table) == [(1, "a2"), (2, "b"), (3, "c")]
-    vdir = table._version_dir(table.current_version())
-    assert not glob.glob(os.path.join(vdir, "_delta", "*"))
+    assert not _delta_files(table)
     # read() of the folded version needs no resolution pass
-    assert not (table._read_meta(vdir).get("mor") or {}).get("pending")
+    assert not (table._current_meta().get("mor") or {}).get("pending")
 
 
 @pytest.mark.parametrize("merge", ["upsert_delta", "upsert_pruned"])

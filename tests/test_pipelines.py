@@ -545,8 +545,7 @@ def test_stream_trigger_that_folds_keeps_sinks_exact(spark, tmp_path):
             transform_bookings(rows)[0], keys=FACT_KEYS,
             partition_by=FACT_PARTITIONING, order_by=FACT_ORDER,
         )
-    pending = fact._read_meta(fact._version_dir(fact.current_version()))["mor"]
-    assert pending["pending"] == fold_after - 1
+    assert fact._current_meta()["mor"]["pending"] == fold_after - 1
     gold.overwrite(gold_booking_aggregation(fact.read(), dim))
 
     landing = tmp_path / "feed"
@@ -559,9 +558,8 @@ def test_stream_trigger_that_folds_keeps_sinks_exact(spark, tmp_path):
         dim=dim, gold=gold, incremental_gold=True, max_files_per_trigger=1,
     )
 
-    vdir = fact._version_dir(fact.current_version())
-    assert not os.path.exists(os.path.join(vdir, "_delta"))
-    assert fact._read_meta(vdir)["mor"]["pending"] == 0
+    assert not [p for p in fact._snapshot().files if p.startswith("_delta/")]
+    assert fact._current_meta()["mor"]["pending"] == 0
     good = [e for e in events if e["check_out_date"] >= e["check_in_date"]]
     want_fact = {e["booking_id"]: e["amount"] for e in good}  # ts is monotone
     got = fact.read().select("booking_id", "amount").collect()

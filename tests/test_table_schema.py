@@ -28,12 +28,20 @@ def test_reads_launch_no_job(spark, tmp_path):
     t.upsert_delta(_mk(spark, [(1, 1, "a", 0), (2, 1, "b", 1)]), **MOR)
     t.upsert_delta(_mk(spark, [(1, 2, "a2", 0), (3, 1, "c", 2)]), **MOR)
     assert t._current_meta()["mor"]["pending"] == 1
+    # more live files than Spark lists on the driver by default (32): a
+    # read that names each file must not list them in a Spark job
+    wide = ParquetTable(spark, str(tmp_path / "wide"))
+    wide.overwrite(_mk(spark, [(k, 1, "w", 0) for k in range(96)]).repartition(40))
+    assert wide.live_file_count() > 32
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     sc.setJobGroup("table-reads", "building table reads")
     try:
         before = set(tracker.getJobIdsForGroup("table-reads"))
-        reads = [t.read(), read_version(t, t.current_version())]
+        reads = [
+            t.read(), read_version(t, t.current_version()),
+            wide.read(), read_version(wide, wide.current_version()),
+        ]
         after = set(tracker.getJobIdsForGroup("table-reads"))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -41,6 +49,7 @@ def test_reads_launch_no_job(spark, tmp_path):
     assert sorted((r.k, r.val) for r in reads[1].collect()) == [
         (1, "a2"), (2, "b"), (3, "c"),
     ]
+    assert reads[3].count() == 96
 
 
 def test_append_with_new_column_shows_it_in_a_plain_read(spark, tmp_path):
@@ -80,8 +89,7 @@ def test_emptied_version_reads_as_zero_rows(spark, tmp_path):
     t = ParquetTable(spark, str(tmp_path / "t"))
     t.overwrite(_mk(spark, [(1, 1, "a", 0), (2, 1, "b", 1)]), partition_by=["p"])
     t.delete_where(F.lit(True))
-    vdir = t._version_dir(t.current_version())
-    assert not any(n.endswith(".parquet") for _d, _s, fs in os.walk(vdir) for n in fs)
+    assert t.live_file_count() == 0
     assert t.read().count() == 0 and t.read().columns == ["k", "ts", "val", "p"]
     t.upsert(_mk(spark, [(3, 1, "c", 1)]), keys=["k"])
     assert [(r.k, r.p) for r in t.read().collect()] == [(3, 1)]
@@ -90,12 +98,13 @@ def test_emptied_version_reads_as_zero_rows(spark, tmp_path):
 def test_version_without_recorded_schema_raises(spark, tmp_path):
     t = ParquetTable(spark, str(tmp_path / "t"))
     t.overwrite(_mk(spark, [(1, 1, "a", 0)]))
-    path = os.path.join(t._version_dir(t.current_version()), t._META)
+    path = t._entry_path(t.current_version())
     with open(path) as f:
-        meta = json.load(f)
-    del meta["schema"]
-    with open(path, "w") as f:
-        json.dump(meta, f)
+        entry = json.load(f)
+    del entry["meta"]["schema"]
+    with open(path + ".new", "w") as f:
+        json.dump(entry, f)
+    os.replace(path + ".new", path)
     with pytest.raises(ValueError, match=str(tmp_path / "t")):
         t.read()
 

@@ -1,38 +1,34 @@
 """ParquetTable scale paths: O(batch) append and partition-pruned upsert
-(hardlink-forward of untouched partitions)."""
+(the files of untouched partitions carried into the next version as they
+are)."""
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from azure_airbnb_cdc_ingestion_pipeline_spark.sources.tables import ParquetTable
 
 
-def _inodes(root: str) -> dict[str, int]:
-    out = {}
-    for dirpath, _d, files in os.walk(root):
-        for f in files:
-            if f.endswith(".parquet"):
-                p = os.path.join(dirpath, f)
-                out[os.path.relpath(p, root)] = os.stat(p).st_ino
-    return out
+def _files(t) -> set[str]:
+    """The files the current version lists, relative to the table root
+    (``data/<partition dirs>/<name>``)."""
+    return set(t._snapshot().files)
 
 
 def test_append_links_previous_version(spark, tmp_path):
     t = ParquetTable(spark, str(tmp_path / "t"))
     t.overwrite(spark.range(100).withColumn("v", F.col("id") * 2))
-    v1_dir = t._version_dir(t.current_version())
-    v1_inodes = _inodes(v1_dir)
+    v1 = _files(t)
 
     t.append(spark.range(100, 150).withColumn("v", F.col("id") * 2))
     assert t.read().count() == 150
-    v2_dir = t._version_dir(t.current_version())
-    v2_inodes = _inodes(v2_dir)
-    # every v1 file is present in v2 as a hardlink (same inode), plus new files
-    assert set(v1_inodes.values()) <= set(v2_inodes.values())
-    assert len(v2_inodes) > len(v1_inodes)
+    v2 = _files(t)
+    # every v1 file is in v2 as the same file, plus new files
+    assert v1 <= v2
+    assert len(v2) > len(v1)
 
 
 def test_upsert_pruned_rewrites_only_touched_partitions(spark, tmp_path):
@@ -44,8 +40,7 @@ def test_upsert_pruned_rewrites_only_touched_partitions(spark, tmp_path):
         F.col("id").cast("timestamp").alias("ts"),
     )
     t.upsert_pruned(base, keys=["k"], partition_by=["month"], order_by=["ts"])
-    v1_dir = t._version_dir(t.current_version())
-    v1 = _inodes(v1_dir)
+    v1 = _files(t)
 
     # batch touches ONLY month=2 (updates + one insert)
     batch = spark.range(0, 20).select(
@@ -60,14 +55,13 @@ def test_upsert_pruned_rewrites_only_touched_partitions(spark, tmp_path):
     assert out.filter("ver = 2").count() == 20
     assert out.filter("ver = 2").filter("month <> 2").count() == 0
 
-    v2_dir = t._version_dir(t.current_version())
-    v2 = _inodes(v2_dir)
-    # untouched months are hardlinks of v1 files; month=2 files are new
-    for rel, ino in v2.items():
+    v2 = _files(t)
+    # untouched months keep their v1 files; month=2 files are new
+    for rel in v2:
         if "month=1" in rel or "month=3" in rel:
-            assert ino in set(v1.values()), f"{rel} should be linked, not rewritten"
+            assert rel in v1, f"{rel} should be kept, not rewritten"
         elif "month=2" in rel:
-            assert ino not in set(v1.values()), f"{rel} should be rewritten"
+            assert rel not in v1, f"{rel} should be rewritten"
 
 
 def test_upsert_pruned_matches_full_upsert(spark, tmp_path):
@@ -102,20 +96,19 @@ def test_compact_reduces_file_count(spark, tmp_path):
     t.overwrite(spark.range(1000).repartition(16))
     for i in range(3):  # accumulate small files
         t.append(spark.range(1000 + i * 10, 1010 + i * 10).repartition(4))
-    before = len(_inodes(t._version_dir(t.current_version())))
+    before = t.live_file_count()
     assert before >= 20
     t.compact(target_rows_per_file=10_000)
-    vdir = t._version_dir(t.current_version())
-    assert len(_inodes(vdir)) == 1
+    assert t.live_file_count() == 1
     assert t.read().count() == 1030
 
 
 def test_upsert_pruned_null_partition_values_no_duplicates(spark, tmp_path):
     """A null partition value (e.g. malformed date → null year) must still
     merge: the eqNullSafe predicate selects the existing null-partition rows
-    and the hardlink pass must NOT also carry the old null-partition dir
-    forward (rel strings are derived from the written tree, so
-    __HIVE_DEFAULT_PARTITION__ matches)."""
+    and the rewrite must NOT also keep the old null-partition file (the
+    logged partition value of __HIVE_DEFAULT_PARTITION__ is null, as is
+    the string cast of a null value)."""
     t = ParquetTable(spark, str(tmp_path / "nullpart"))
     base = spark.createDataFrame(
         [(1, 2024, "a"), (2, 2024, "b"), (3, None, "c"), (4, None, "d")],
@@ -132,13 +125,13 @@ def test_upsert_pruned_null_partition_values_no_duplicates(spark, tmp_path):
     assert out.count() == 5  # no duplicated k=3/k=4
     assert out.filter("k = 3").select("payload").first()[0] == "c2"
     assert out.filter("year IS NULL").count() == 3
-    # untouched 2024 partition survived via hardlink
+    # untouched 2024 partition survived as it was
     assert {r[0] for r in out.filter("year = 2024").select("k").collect()} == {1, 2}
 
 
 def test_upsert_pruned_escaped_partition_values(spark, tmp_path):
     """Partition values containing chars Spark escapes in dir names
-    (':' → %3A) must not be duplicated by the hardlink pass."""
+    (':' → %3A) must not be duplicated: the logged value is unescaped."""
     t = ParquetTable(spark, str(tmp_path / "escpart"))
     base = spark.createDataFrame(
         [(1, "a:b", "x"), (2, "plain", "y")], "k int, part string, payload string"
@@ -153,8 +146,9 @@ def test_upsert_pruned_escaped_partition_values(spark, tmp_path):
 
 def test_concurrent_writer_fails_loudly(spark, tmp_path):
     """Optimistic-concurrency commit: a writer whose snapshot went stale
-    (another commit landed mid-write) raises instead of silently dropping
-    the winner's rows."""
+    (another commit landed mid-write) loses the put-if-absent create of
+    its entry and raises instead of silently dropping the winner's
+    rows."""
     import pytest
 
     from azure_airbnb_cdc_ingestion_pipeline_spark.sources.tables import (
@@ -163,32 +157,32 @@ def test_concurrent_writer_fails_loudly(spark, tmp_path):
 
     t = ParquetTable(spark, str(tmp_path / "race"))
     t.overwrite(spark.createDataFrame([(1, "a")], "k int, v string"))
-
-    base, ver = t._claim_version()
-    # interleaved second writer commits first
     t2 = ParquetTable(spark, str(tmp_path / "race"))
-    t2.upsert(spark.createDataFrame([(2, "b")], "k int, v string"), keys=["k"])
-    assert t2.read().count() == 2
 
-    spark.createDataFrame([(3, "c")], "k int, v string").write.mode(
-        "overwrite"
-    ).parquet(t._version_dir(ver))
+    def stale_write(snapshot):
+        # interleaved second writer commits after this write's snapshot read
+        t2.upsert(spark.createDataFrame([(2, "b")], "k int, v string"), keys=["k"])
+        assert t2.read().count() == 2
+        return snapshot.unionByName(
+            spark.createDataFrame([(3, "c")], "k int, v string")
+        )
+
     with pytest.raises(ConcurrentWriteError):
-        t._commit(ver, expected_base=base)
+        t.overwrite(stale_write)
     # the winner's committed version is intact
     assert t.read().count() == 2
 
 
 def test_upsert_routes_to_pruned_for_partitioned_tables(spark, tmp_path):
     """Default upsert() on a table written with partition_by must take the
-    O(affected-partitions) path: untouched partition files survive as
-    hardlinks (same inode), not rewrites."""
+    O(affected-partitions) path: untouched partition files stay in the
+    next version, not rewritten."""
     t = ParquetTable(spark, str(tmp_path / "route"))
     base = spark.createDataFrame(
         [(1, 1, "a"), (2, 2, "b"), (3, 3, "c")], "k int, m int, payload string"
     )
     t.overwrite(base, partition_by=["m"])
-    v1 = _inodes(t._version_dir(t.current_version()))
+    v1 = _files(t)
 
     t.upsert(
         spark.createDataFrame([(2, 2, "b2")], "k int, m int, payload string"),
@@ -197,9 +191,29 @@ def test_upsert_routes_to_pruned_for_partitioned_tables(spark, tmp_path):
     out = t.read()
     assert out.count() == 3
     assert out.filter("k = 2").select("payload").first()[0] == "b2"
-    v2 = _inodes(t._version_dir(t.current_version()))
-    untouched_v1 = {ino for rel, ino in v1.items() if "m=2" not in rel}
-    assert untouched_v1 <= set(v2.values())  # hardlinked, not rewritten
+    untouched_v1 = {rel for rel in v1 if "m=2" not in rel}
+    assert untouched_v1 <= _files(t)  # kept, not rewritten
+
+
+@pytest.mark.parametrize("merge", ["upsert", "upsert_pruned", "upsert_delta"])
+def test_merge_under_another_partition_spec_raises(spark, tmp_path, merge):
+    """A merge naming a partition spec other than the table's raises,
+    naming both, instead of rewriting under the new spec and dropping
+    the rows it does not touch; overwrite(partition_by=) changes it."""
+    schema = "k int, m int, v string"
+    t = ParquetTable(spark, str(tmp_path / "t"))
+    t.overwrite(spark.createDataFrame([(1, 1, "a"), (2, 2, "b")], schema))
+    batch = spark.createDataFrame([(2, 2, "b2")], schema)
+    with pytest.raises(ValueError, match=r"\[\].*\['m'\]"):
+        getattr(t, merge)(batch, keys=["k"], partition_by=["m"])
+    assert sorted((r.k, r.m, r.v) for r in t.read().collect()) == [
+        (1, 1, "a"), (2, 2, "b"),
+    ]
+    t.overwrite(t.read(), partition_by=["m"])
+    getattr(t, merge)(batch, keys=["k"], partition_by=["m"])
+    assert sorted((r.k, r.m, r.v) for r in t.read().collect()) == [
+        (1, 1, "a"), (2, 2, "b2"),
+    ]
 
 
 def test_bucketed_join_is_shuffle_free(spark, sf_dir, tmp_path):
@@ -269,8 +283,6 @@ def test_clustered_write_produces_disjoint_rowgroup_stats(spark, sf_dir, tmp_pat
     """Range-clustering must yield tight, near-disjoint per-file min/max on
     the cluster key (the stats parquet readers use for data skipping); an
     unclustered write of the same data has massively overlapping ranges."""
-    import glob
-
     import pyarrow.parquet as pq
 
     from azure_airbnb_cdc_ingestion_pipeline_spark.sources.tables import ParquetTable
@@ -280,9 +292,9 @@ def test_clustered_write_produces_disjoint_rowgroup_stats(spark, sf_dir, tmp_pat
     )
 
     def key_ranges(table):
-        v = table.current_version()
         spans = []
-        for f in glob.glob(os.path.join(table._version_dir(v), "*.parquet")):
+        for rel in _files(table):
+            f = os.path.join(table.root, rel)
             meta = pq.ParquetFile(f).metadata
             for rg in range(meta.num_row_groups):
                 col = meta.row_group(rg).column(0)  # o_orderkey
@@ -320,9 +332,9 @@ def test_read_pruned_skips_files_on_clustered_table(spark, sf_dir, tmp_path):
     )
     t = ParquetTable(spark, str(tmp_path / "t"))
     t.overwrite_clustered(orders, ["o_orderkey"], num_files=8)
-    # manifest written at commit time
-    assert os.path.exists(
-        os.path.join(t._version_dir(t.current_version()), "_file_stats.json")
+    # stats recorded at commit time, in every file's add record
+    assert all(
+        "o_orderkey" in add["stats"] for add in t._snapshot().files.values()
     )
 
     # a ~10%-of-keyspace slice must plan at most 2 of the 8 range files
@@ -414,7 +426,7 @@ def test_upsert_pruned_in_set_filter_many_partitions(spark, tmp_path):
     eqNullSafe terms overflows the planner's stack, the IN set plans as a
     static partition filter. Correctness: updates land, the null
     partition merges without duplicates, untouched partitions survive as
-    hardlinks."""
+    files kept as they were."""
     t = ParquetTable(spark, str(tmp_path / "wide"))
     # pm = id % 600, except the keys 0 and 600 of partition 0, whose pm
     # is null
@@ -426,7 +438,7 @@ def test_upsert_pruned_in_set_filter_many_partitions(spark, tmp_path):
         F.col("id").cast("timestamp").alias("ts"),
     )
     t.upsert_pruned(base, keys=["k"], partition_by=["pm"], order_by=["ts"])
-    v1 = _inodes(t._version_dir(t.current_version()))
+    v1 = _files(t)
 
     # batch touches partitions null, 1..499: 500 combos
     batch = spark.range(500).select(
@@ -444,11 +456,10 @@ def test_upsert_pruned_in_set_filter_many_partitions(spark, tmp_path):
     assert sorted(
         (r.k, r.ver) for r in out.filter("pm IS NULL").collect()
     ) == [(0, 2), (600, 1)]
-    # the 100 partitions the batch did not touch (pm 500..599) are
-    # hardlinked forward, not rewritten
-    v2 = _inodes(t._version_dir(t.current_version()))
-    linked = [r for r in v2 if v2[r] in set(v1.values())]
-    assert any(r.startswith("pm=5") for r in linked)
+    # the 100 partitions the batch did not touch (pm 500..599) keep
+    # their files, not rewritten
+    kept = _files(t) & v1
+    assert any(r.startswith("data/pm=5") for r in kept)
 
 
 def test_first_upsert_keeps_one_row_per_key(spark, tmp_path):
@@ -510,9 +521,9 @@ def test_pruned_files_type_mismatch_keeps_file(spark, tmp_path):
 
 def test_delete_where_prunes_and_handles_emptied_partition(spark, tmp_path):
     """DELETE rewrites only partitions containing matches; a partition
-    whose rows are ALL deleted must vanish (not resurrect via the
-    hardlink pass); untouched partitions hardlink forward; NULL-condition
-    rows are kept (SQL semantics)."""
+    whose rows are ALL deleted must vanish (not resurrect with its old
+    files); untouched partitions keep their files; NULL-condition rows
+    are kept (SQL semantics)."""
     t = ParquetTable(spark, str(tmp_path / "t"))
     df = spark.range(300).select(
         F.col("id").alias("k"),
@@ -522,7 +533,7 @@ def test_delete_where_prunes_and_handles_emptied_partition(spark, tmp_path):
         .alias("val"),
     )
     t.overwrite(df, partition_by=["pm"])
-    v1 = _inodes(t._version_dir(t.current_version()))
+    v1 = _files(t)
 
     # delete ALL of pm=2 and the high-val half of pm=1
     t.delete_where(
@@ -537,11 +548,11 @@ def test_delete_where_prunes_and_handles_emptied_partition(spark, tmp_path):
         (F.col("pm") == 1) & ~F.coalesce(F.col("val") > 150, F.lit(False))
     ).count()
     assert out.filter("pm = 1").count() == expect_pm1
-    # pm=0 untouched: hardlinked, not rewritten
-    v2 = _inodes(t._version_dir(t.current_version()))
-    pm0_links = [r for r in v2 if r.startswith("pm=0")]
-    assert pm0_links and all(v2[r] in set(v1.values()) for r in pm0_links)
-    assert not any(r.startswith("pm=2") for r in v2)
+    # pm=0 untouched: kept, not rewritten
+    v2 = _files(t)
+    pm0 = [r for r in v2 if r.startswith("data/pm=0/")]
+    assert pm0 and all(r in v1 for r in pm0)
+    assert not any(r.startswith("data/pm=2/") for r in v2)
 
 
 def test_update_where_original_row_semantics_and_pruning(spark, tmp_path):
@@ -558,7 +569,7 @@ def test_update_where_original_row_semantics_and_pruning(spark, tmp_path):
         (F.col("id") * 10.0).alias("b"),
     )
     t.overwrite(df, partition_by=["pm"])
-    v1 = _inodes(t._version_dir(t.current_version()))
+    v1 = _files(t)
 
     t.update_where(
         (F.col("pm") == 1) & (F.col("k") < 100),
@@ -570,10 +581,10 @@ def test_update_where_original_row_semantics_and_pruning(spark, tmp_path):
     r = out.filter("k = 151").first()  # pm=1, k>=100: untouched
     assert (r.a, r.b) == (151.0, 1510.0)
     assert out.count() == 200
-    # pm=0 hardlinked
-    v2 = _inodes(t._version_dir(t.current_version()))
-    pm0 = [r for r in v2 if r.startswith("pm=0")]
-    assert pm0 and all(v2[r] in set(v1.values()) for r in pm0)
+    # pm=0 kept as it was
+    v2 = _files(t)
+    pm0 = [r for r in v2 if r.startswith("data/pm=0/")]
+    assert pm0 and all(r in v1 for r in pm0)
     with _pytest.raises(ValueError):
         t.update_where(F.lit(True), {"pm": F.lit(9)})
 
@@ -675,9 +686,8 @@ def test_delete_all_preserves_partition_spec(spark, tmp_path):
     )
     t.upsert(batch, keys=["k"], order_by=["ts"])  # no explicit partition_by
     assert t.read().count() == 6
-    vdir = t._version_dir(t.current_version())
     assert any(
-        n.startswith("pm=") for n in os.listdir(vdir)
+        r.startswith("data/pm=") for r in _files(t)
     ), "upsert lost the partitioned layout"
 
 

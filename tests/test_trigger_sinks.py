@@ -1,5 +1,7 @@
-"""One CDC trigger's sinks: a crash right after any sink's commit replays
-to exact sinks, and nothing the pipeline caches outlives a trigger or the
+"""One CDC trigger's sinks: a crash at either point of any sink's commit —
+after its files land but before its log entry, or right after the entry —
+replays to exact sinks, a later commit reclaims the files a crashed
+writer left, and nothing the pipeline caches outlives a trigger or the
 query that ran it."""
 
 import json
@@ -20,15 +22,33 @@ from fixtures import gen_booking_events
 
 
 class _CrashAfterCommit(ParquetTable):
-    """Raises right after it commits the batch ``crash_batch`` (once)."""
+    """Raises at the commit of the batch ``crash_batch`` (once): right
+    after its log entry is created, or with ``before_entry`` after its
+    files landed but before the entry. ``crashed`` keeps that entry.
+    ``fold_after`` sets the fold cadence of the pipeline's fact merge."""
 
     crash_batch = None
+    before_entry = False
+    crashed = None
+    fold_after = None
 
-    def _commit(self, v, expected_base=None, txn=None):
-        super()._commit(v, expected_base=expected_base, txn=txn)
-        if txn is not None and txn[1] == self.crash_batch:
-            self.crash_batch = None
+    def _put_entry(self, v, entry):
+        crash = self.crash_batch is not None and any(
+            t["batch"] == self.crash_batch for t in entry["txns"].values()
+        )
+        if crash:
+            self.crash_batch, self.crashed = None, entry
+            if self.before_entry:
+                raise RuntimeError("injected crash before the log entry")
+        created = super()._put_entry(v, entry)
+        if crash:
             raise RuntimeError("injected crash after commit")
+        return created
+
+    def upsert_delta(self, *args, **kwargs):
+        if self.fold_after is not None:
+            kwargs.setdefault("fold_after", self.fold_after)
+        return super().upsert_delta(*args, **kwargs)
 
 
 def _dim(spark):
@@ -106,26 +126,27 @@ def _assert_cdc_gates(fact, quarantine, gold, dim, files, event_time_wins):
     assert r6(gold.read()) == r6(gold_booking_aggregation(fact.read(), dim))
 
 
-@pytest.mark.parametrize(
-    "event_time_wins", [False, True], ids=["arrival", "event_time"]
-)
-@pytest.mark.parametrize("sink", ["quarantine", "fact", "gold"])
-def test_crash_after_each_sink_commit_replays_to_exact_sinks(
-    spark, tmp_path, sink, event_time_wins
-):
-    """The second of two one-file triggers (the first incremental-gold
-    one) dies right after ``sink`` commits, before the checkpoint does.
-    The restarted stream replays it: every sink that committed skips it,
-    the others complete it, and all three CDC gates hold."""
+def _crash_and_replay(spark, tmp_path, sink, event_time_wins, before_entry):
+    """Drain one-file triggers whose last (an incremental-gold one) dies at
+    ``sink``'s commit, before the checkpoint commits; restart the stream
+    and apply the three CDC gates. ``sink="fold"`` is the fact sink on a
+    trigger that folds a pending delta (three files, fold every 2nd
+    merge). Returns the tables and the crashed commit's entry."""
     files = _two_files(event_time_wins)
     assert any(e["check_out_date"] < e["check_in_date"] for e in files[1])
+    if sink == "fold":
+        files = [files[0], files[1][:60], files[1][60:]]
+        assert any(e["check_out_date"] < e["check_in_date"] for e in files[2])
     landing = str(tmp_path / "feed")
     _write_files(landing, files)
     tables = {
         name: _CrashAfterCommit(spark, str(tmp_path / name))
         for name in ("fact", "quarantine", "gold")
     }
-    tables[sink].crash_batch = 1
+    crashing = tables["fact" if sink == "fold" else sink]
+    crashing.crash_batch, crashing.before_entry = len(files) - 1, before_entry
+    if sink == "fold":
+        crashing.fold_after = 2
     dim = _dim(spark)
 
     def drain():
@@ -138,9 +159,58 @@ def test_crash_after_each_sink_commit_replays_to_exact_sinks(
 
     with pytest.raises(Exception):  # StreamingQueryException wraps the cause
         drain()
-    assert tables[sink].crash_batch is None, "injection never fired"
-    assert tables[sink].applied(("booking_fact:" + str(tmp_path / "ckpt"), 1))
+    assert crashing.crash_batch is None, "injection never fired"
+    txn = ("booking_fact:" + str(tmp_path / "ckpt"), len(files) - 1)
+    assert crashing.applied(txn) != before_entry
+    entry = crashing.crashed
+    if sink == "fold":  # the crashed commit folds the pending delta
+        assert entry["meta"]["mor"]["pending"] == 0
+        assert any(p.startswith("_delta/") for p in entry["remove"])
     drain()
+    _assert_cdc_gates(
+        tables["fact"], tables["quarantine"], tables["gold"], dim, files,
+        event_time_wins,
+    )
+    return tables, dim, files, crashing, entry
+
+
+@pytest.mark.parametrize(
+    "event_time_wins", [False, True], ids=["arrival", "event_time"]
+)
+@pytest.mark.parametrize("sink", ["quarantine", "fact", "gold", "fold"])
+def test_crash_after_each_sink_commit_replays_to_exact_sinks(
+    spark, tmp_path, sink, event_time_wins
+):
+    """A trigger dies right after ``sink`` created its log entry: the
+    restarted stream replays it, every sink that committed skips it, the
+    others complete it, and all three CDC gates hold."""
+    _crash_and_replay(spark, tmp_path, sink, event_time_wins, before_entry=False)
+
+
+@pytest.mark.parametrize(
+    "event_time_wins", [False, True], ids=["arrival", "event_time"]
+)
+@pytest.mark.parametrize("sink", ["quarantine", "fact", "gold", "fold"])
+def test_crash_before_each_sink_entry_replays_and_reclaims(
+    spark, tmp_path, sink, event_time_wins
+):
+    """A trigger dies after ``sink``'s files landed but before its log
+    entry: no reader sees those files, the replay commits the batch once,
+    all three CDC gates hold, and a later commit's vacuum reclaims the
+    crashed writer's files without touching a live one."""
+    tables, dim, files, crashing, entry = _crash_and_replay(
+        spark, tmp_path, sink, event_time_wins, before_entry=True
+    )
+    orphans = [os.path.join(crashing.root, a["path"]) for a in entry["add"]]
+    assert orphans and all(os.path.exists(p) for p in orphans)
+    assert not {a["path"] for a in entry["add"]} & set(crashing._snapshot().files)
+    empty = crashing.read().limit(0)
+    for _ in range(2 * 10 + 1):  # a checkpoint commit sweeps
+        if not any(os.path.exists(p) for p in orphans):
+            break
+        crashing.append(empty)
+    assert not any(os.path.exists(p) for p in orphans), "orphans never reclaimed"
+    assert set(os.listdir(crashing.root)) <= {"_log", "data", "_delta"}
     _assert_cdc_gates(
         tables["fact"], tables["quarantine"], tables["gold"], dim, files,
         event_time_wins,
