@@ -44,28 +44,6 @@ def topk_per_group(
     return out if keep_rank else out.drop(rank_col)
 
 
-def argmax_per_group(
-    df: DataFrame,
-    group_by: Sequence[str],
-    order_by: Sequence[Column],
-    payload: Sequence[str],
-) -> DataFrame:
-    """Top-1-per-group as ONE hash aggregation (`max_by` over a struct
-    ordering key) instead of a window: `topk_per_group(k=1)` pays an
-    exchange + per-partition SORT of every candidate row; this pays the
-    same exchange but only a running max — the difference is a full
-    sort of n·candidates rows per stage, which is why the k=1 argmax
-    hot paths (semdedup's three assignment steps) use it. Struct
-    comparison is lexicographic over `order_by` in order, so ties must
-    be broken by a trailing unique column exactly as the window version
-    would — callers pass the identical ordering tuple. k>1 or
-    rank-carrying callers keep using `topk_per_group`."""
-    key = F.struct(*order_by)
-    val = F.struct(*[F.col(c) for c in payload])
-    agg = df.groupBy(*group_by).agg(F.max_by(val, key).alias("__best"))
-    return agg.select(*group_by, *[F.col(f"__best.{c}").alias(c) for c in payload])
-
-
 def global_rank(
     df: DataFrame,
     order_by: Sequence[str | Column],
@@ -90,7 +68,7 @@ def global_rank(
     offsets and the output see the SAME range boundaries (the range
     sampler is not guaranteed deterministic across recomputes).
 
-    DETERMINISM CONTRACT (same as ``argmax_per_group``): ``order_by``
+    DETERMINISM CONTRACT (same as ``topk_per_group``): ``order_by``
     must be a total order — break ties with a trailing unique column —
     otherwise ranks among tied rows are arbitrary.
 

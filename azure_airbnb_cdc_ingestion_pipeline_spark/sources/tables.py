@@ -11,9 +11,10 @@ transactional surface those sinks need on plain parquet:
 - keyed upsert (MERGE): ``upsert``, ``upsert_pruned`` and the
   merge-on-read ``upsert_delta`` are one path. An ``upsert_delta`` batch
   lands as a delta until its fold is due; the other two fold on every
-  batch. A fold merges the batch and the pending deltas into the base
-  through the one merge body, ``ParquetTable._merge_partitions``, over
-  the pure-DataFrame merge in ``operators.merge``.
+  batch. A read resolves the base and the pending deltas to one row per
+  key (``_mor_resolve_tagged``), and a fold
+  (``ParquetTable._merge_partitions``) writes that resolved read of the
+  partitions it touches, the batch resolved as one more delta.
 
 A table is a commit log over immutable parquet files (the put-if-absent
 log of Delta Lake, and the committed-file log Structured Streaming's
@@ -158,26 +159,22 @@ def _older(path: str, cutoff_ns: int) -> bool:
 
 def _mor_resolve_tagged(allf: DataFrame, mor: dict) -> DataFrame:
     """Resolve a PRE-TAGGED merge-on-read union (every row carries its
-    stack position as ``__seq``) to one row per key with ONE hash
-    aggregation.
+    stack position as ``__seq``) to one row per key, ``__seq`` dropped:
+    the :func:`operators.merge.latest_per_key` window over the union. A
+    read and a fold both resolve through this rule.
 
     Arrival-wins (the reference's upsert semantics): the highest __seq
     wins per key — each stack frame holds ≤ 1 row per key (writers apply
-    latest_per_key), so max_by(__seq) is exact. event_time_wins: max
-    event time wins with later-frame tie-break — the same `WHEN MATCHED
-    AND s.ts >= t.ts` source-wins contract
-    `operators.merge.resolve_event_time` enforces at write time."""
-    from ..operators.merge import known_unique
-    from ..operators.windows import argmax_per_group
+    latest_per_key), so the order is total. event_time_wins: max event
+    time wins with later-frame tie-break — the `WHEN MATCHED AND s.ts >=
+    t.ts` source-wins contract of `operators.merge.resolve_event_time`."""
+    from ..operators.merge import latest_per_key
 
-    keys = list(mor["keys"])
     order = (
-        [F.col(c) for c in (mor.get("order_by") or [])] + [F.col("__seq")]
-        if mor.get("event_time_wins")
-        else [F.col("__seq")]
+        [*(mor.get("order_by") or []), "__seq"]
+        if mor.get("event_time_wins") else ["__seq"]
     )
-    payload = [c for c in allf.columns if c not in set(keys) | {"__seq"}]
-    return known_unique(argmax_per_group(allf, keys, order, payload), keys)
+    return latest_per_key(allf, list(mor["keys"]), order).drop("__seq")
 
 
 def _mor_resolve_rows(tagged: pa.Table, mor: dict) -> pa.Table:
@@ -191,19 +188,6 @@ def _mor_resolve_rows(tagged: pa.Table, mor: dict) -> pa.Table:
         if mor.get("event_time_wins") else ["__seq"]
     )
     return latest_rows(tagged, list(mor["keys"]), order).drop_columns(["__seq"])
-
-
-def _null_filled(source: DataFrame, target: DataFrame) -> DataFrame:
-    """``source`` plus, as typed nulls, the ``target`` columns it lacks: a
-    batch without a column an ``append`` added merges as null there, as
-    an older file reads. ``source`` itself when it lacks none."""
-    have = set(source.columns)
-    missing = [f for f in target.schema.fields if f.name not in have]
-    if not missing:
-        return source
-    return source.select(
-        "*", *[F.lit(None).cast(f.dataType).alias(f.name) for f in missing]
-    )
 
 
 class ParquetTable:
@@ -545,11 +529,19 @@ class ParquetTable:
         return adds
 
     def _delete(self, paths) -> None:
+        """Remove ``paths``, and each ``_delta/d{seq:06d}`` dir this
+        empties. A delta writer keeps its staging dir inside the dir it
+        writes until its files are in place, so ``os.rmdir``, which fails
+        on a dir that is not empty, never takes a dir in use."""
+        delta = os.path.normpath(os.path.join(self.root, _DELTA))
         for p in paths:
-            try:
-                os.remove(os.path.join(self.root, p))
-            except FileNotFoundError:
-                pass
+            path = os.path.join(self.root, p)
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(path)
+            parent = os.path.dirname(path)
+            if os.path.normpath(os.path.dirname(parent)) == delta:
+                with contextlib.suppress(OSError):
+                    os.rmdir(parent)
 
     def _vacuum(self, base: _Snapshot, live: dict | None) -> None:
         """Drop what no retained version needs once a version committed
@@ -722,12 +714,13 @@ class ParquetTable:
             p for p in base
             if tuple(snap.files[p]["partition"].get(c) for c in parts) in combos
         ]
-        # repartition on the partition columns: each combo lands in ONE
-        # task → one file per partition instead of (shuffle.partitions ×
-        # combos) slivers; steady-state read/merge cost tracks partition
-        # count, not trigger count. (Huge single partitions at real
-        # scale: bound file size with spark.sql.files.maxRecordsPerFile.)
-        out = rewrite(self._scan(snap, affected)).repartition(*parts)
+        # rows hash-partitioned on the partition columns, which every
+        # rewrite keeps: each combo lands in ONE task → one file per
+        # partition instead of (shuffle.partitions × combos) slivers, and
+        # the fold's window reuses the exchange. (Huge single partitions
+        # at real scale: bound file size with
+        # spark.sql.files.maxRecordsPerFile.)
+        out = rewrite(self._scan(snap, affected).repartition(*parts))
         return self._write_files(out, parts), affected
 
     @staticmethod
@@ -738,6 +731,8 @@ class ParquetTable:
         conflict rule, so while any is pending a merge that changes either
         raises instead of resolving them under the wrong one; once
         nothing is pending, the next merge may change both."""
+        if event_time_wins and not order_by:
+            raise ValueError("event_time_wins requires order_by")
         if mor.get("pending") and (
             mor["keys"] != list(keys)
             or bool(mor.get("event_time_wins")) != bool(event_time_wins)
@@ -759,48 +754,45 @@ class ParquetTable:
         self,
         snap: _Snapshot,
         meta: dict,
-        source: DataFrame,
-        keys: list[str],
+        latest: DataFrame,
         partition_by: list[str],
-        order_by: list[str] | None,
-        event_time_wins: bool,
         spec: dict,
     ) -> tuple[list[dict], list[str]]:
         """Write step of the fold, the one merge body of every keyed
-        upsert: the MERGE of ``source`` into the partitions of the base it
-        touches (the whole base when ``partition_by`` is empty), through
-        :meth:`_rewrite_partitions`. Pending merge-on-read deltas fold in
-        first: one multi-path scan of the deltas ∪ the batch, which is
-        sequenced after every pending delta (``spec["seq"]``), resolves to
-        one source row per key, so the new version carries no deltas. With
-        nothing pending the merge-on-read spec stays as it was."""
-        from ..operators.merge import latest_per_key, merge_dataframes
-
-        src = latest_per_key(source, keys, order_by)
+        upsert: the resolved read of the base partitions that the batch
+        ``latest`` (one row per key) and the pending deltas touch (the
+        whole base when ``partition_by`` is empty), with the batch as one
+        more delta, sequenced after every pending one (``spec["seq"]``).
+        Base rows rank below every delta, and :func:`_mor_resolve_tagged`
+        picks each key's row by the rule a read uses, so the new version,
+        which carries no deltas, reads as the old one with the batch
+        pending would. With nothing pending the merge-on-read spec stays as
+        it was."""
+        change = latest.withColumn("__seq", F.lit(spec["seq"]))
         folded = []
         if (meta.get("mor") or {}).get("pending"):
-            # every column of the stack and the batch: a column only the
-            # pending deltas carry keeps their values for the keys the
-            # batch does not touch. The partition combos come from the
-            # unresolved rows (partition attrs are immutable per key).
-            source = self._delta_stack(snap).unionByName(
-                src.withColumn("__seq", F.lit(spec["seq"])),
-                allowMissingColumns=True,
+            change = self._delta_stack(snap).unionByName(
+                change, allowMissingColumns=True
             )
-            src = _mor_resolve_tagged(source, spec)
             meta["mor"] = {**spec, "pending": 0}
             folded = self._delta_files(snap)
+        # partition attrs are immutable per key (the pruned-merge
+        # precondition), so resolving on them as well picks the same rows
+        # and lets the window reuse the base's partitioning
+        keys = [*partition_by, *(k for k in spec["keys"] if k not in partition_by)]
+        hashed = change.repartition(*partition_by) if partition_by else change
+
+        def resolve(base: DataFrame) -> DataFrame:
+            allf = base.withColumn("__seq", F.lit(0)).unionByName(
+                hashed, allowMissingColumns=True
+            )
+            resolved = _mor_resolve_tagged(allf, {**spec, "keys": keys})
+            return resolved.select(*base.columns)
+
+        # partition combos from the unresolved change set: the same
+        # distinct set without a resolve in the peek job's lineage
         adds, removes = self._rewrite_partitions(
-            snap, partition_by,
-            lambda affected: merge_dataframes(
-                affected, _null_filled(src, affected), keys, order_by=order_by,
-                event_time_wins=event_time_wins,
-            ),
-            # partition combos from the unresolved source: identical
-            # distinct set (partition attrs are immutable per key — the
-            # pruned-merge precondition) without a resolve shuffle in the
-            # peek job's lineage.
-            lambda _tgt: source,
+            snap, partition_by, resolve, lambda _tgt: change
         )
         return adds, removes + folded
 
@@ -851,11 +843,12 @@ class ParquetTable:
         Delta-deletion-vector trade instead: per trigger, write ONLY the
         batch as a sequence-numbered delta file under
         ``_delta/d{seq:06d}/`` — O(batch) work regardless of table size.
-        Readers resolve base ∪ deltas to one row per key (one `max_by`
-        hash-agg — see `_mor_resolve_tagged`); every ``fold_after``-th
-        batch folds the pending deltas and the batch into the base with
-        the pruned copy-on-write merge (:meth:`_merge_partitions`),
-        bounding both the read tax and the file count.
+        Readers resolve base ∪ deltas to one row per key (one window
+        over the union — see `_mor_resolve_tagged`); every
+        ``fold_after``-th batch folds the pending deltas and the batch
+        into the base, rewriting the partitions they touch as that same
+        resolve (:meth:`_merge_partitions`), bounding both the read tax
+        and the file count.
 
         Conflict semantics: arrival-wins by delta sequence;
         ``event_time_wins`` resolves by max event time with source-wins
@@ -883,10 +876,7 @@ class ParquetTable:
             pending = int(spec.get("pending", 0)) + 1
             if pending >= fold_after:
                 # fold trigger: cost amortizes to merge/fold_after per trigger
-                return self._merge_partitions(
-                    snap, meta, source, keys, partition_by,
-                    order_by, event_time_wins, spec,
-                )
+                return self._merge_partitions(snap, meta, latest, partition_by, spec)
             meta["mor"] = {**spec, "pending": pending}
             # fast path: the batch IS the write. coalesce(1): a
             # trigger-bounded micro-batch emitting shuffle.partitions sliver
@@ -1121,7 +1111,8 @@ class ParquetTable:
             df = self._scan(snap)
             # the partition spec may change: partition columns read last
             meta["schema"] = _reader_schema(df.schema.fields, meta["partition_by"])
-            n_files = max(1, -(-df.count() // target_rows_per_file))
+            rows = sum(r["rows"] for r in snap.files.values())
+            n_files = max(1, -(-rows // target_rows_per_file))
             if cluster_by:
                 df = self._clustered(df, cluster_by, n_files)
             else:

@@ -14,8 +14,10 @@ Two conflict semantics, each checked against an executable model:
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from azure_airbnb_cdc_ingestion_pipeline_spark.operators.merge import (
     latest_per_key,
@@ -98,6 +100,28 @@ def test_merge_event_time_wins_matches_model(spark, batches):
     tagged = _tag_batches(batches)
     got = _run_merge(spark, tagged, event_time_wins=True)
     assert got == _model_event_time_wins(tagged)
+
+
+@pytest.mark.parametrize("event_time_wins", [False, True], ids=["arrival", "event_time"])
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(batches=_batches)
+def test_table_fold_matches_model(spark, tmp_path_factory, event_time_wins, batches):
+    """The same batches through ParquetTable.upsert_delta with a fold every
+    second batch, so folds land mid-sequence (partitioned on k % 2): the
+    resolved read equals the model after every batch."""
+    from azure_airbnb_cdc_ingestion_pipeline_spark.sources.tables import ParquetTable
+
+    model = _model_event_time_wins if event_time_wins else _model_arrival_wins
+    t = ParquetTable(spark, str(tmp_path_factory.mktemp("fold") / "t"))
+    tagged = _tag_batches(batches)
+    for bi, rows in enumerate(tagged):
+        t.upsert_delta(
+            _df(spark, rows, f"b{bi}").withColumn("p", F.col("k") % 2),
+            ["k"], ["p"], order_by=["ts", "seq"],
+            event_time_wins=event_time_wins, fold_after=2,
+        )
+        got = sorted(tuple(r) for r in t.read().drop("p").collect())
+        assert got == model(tagged[: bi + 1]), bi
 
 
 @settings(max_examples=6, deadline=None, suppress_health_check=[HealthCheck.too_slow])

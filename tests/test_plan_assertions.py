@@ -219,39 +219,6 @@ def test_adaptive_lsh_identity_below_threshold_grows_above():
         assert t <= 12  # table growth stays logarithmic-slow
 
 
-def test_argmax_per_group_matches_window_topk(spark):
-    """max_by(struct) argmax must agree with the window top-1 under the
-    identical ordering tuple — including ties broken by the trailing
-    unique key (the semdedup assignment contract)."""
-    import pyspark.sql.functions as F
-
-    from azure_airbnb_cdc_ingestion_pipeline_spark.operators.windows import (
-        argmax_per_group,
-        topk_per_group,
-    )
-
-    rows = [
-        # (grp, cand, score) with deliberate score ties inside groups
-        ("a", 1, 0.9), ("a", 2, 0.9), ("a", 3, 0.1),
-        ("b", 7, 0.5), ("b", 6, 0.5), ("b", 5, 0.5),
-        ("c", 9, 0.0),
-    ]
-    df = spark.createDataFrame(rows, ["grp", "cand", "score"])
-    via_window = {
-        (r.grp, r.cand)
-        for r in topk_per_group(
-            df, ["grp"], [F.col("score"), -F.col("cand")], k=1, descending=True
-        ).collect()
-    }
-    via_argmax = {
-        (r.grp, r.cand)
-        for r in argmax_per_group(
-            df, ["grp"], [F.col("score"), -F.col("cand")], ["cand", "score"]
-        ).collect()
-    }
-    assert via_argmax == via_window == {("a", 1), ("b", 5), ("c", 9)}
-
-
 def test_incremental_minhash_single_band_join_no_corpus_self_pair(
     spark, sf_dir
 ):
